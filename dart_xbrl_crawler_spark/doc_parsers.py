@@ -42,10 +42,12 @@ import zlib
 # the whole parse_document on mini-XBRL pages: zipfile's ZipFile/
 # ZipExtFile machinery costs ~100 µs per tiny archive).  STRICT: the
 # central directory is validated up front — any comment, zip64 marker,
-# multi-disk field, encryption flag, unsupported method or malformed
-# local header returns None and the stdlib path runs instead, so the
-# accepted-document set (and the failure semantics: corrupt data →
-# exception → (None, None)) is identical.  CRC is verified like
+# multi-disk field, encryption flag, unsupported method, malformed
+# local header or local name that differs from the central one returns
+# None and the stdlib path runs instead, so the accepted-document set
+# (and the failure semantics: corrupt data → exception → (None, None))
+# is identical.  A member whose inflated size differs from the central
+# directory's is re-read by zipfile.  CRC is verified like
 # zipfile._update_crc does.
 # ---------------------------------------------------------------------
 _EOCD = struct.Struct("<4H2LH")
@@ -53,8 +55,9 @@ _CDENT = struct.Struct("<6H3L5H2L")
 
 
 def _zip_entries_fast(data: bytes):
-    """[(name, (method, crc, csize, data_start))] in central-directory
-    order, or None when the archive needs the stdlib parser."""
+    """[(name, (method, crc, csize, usize, data_start))] in
+    central-directory order, or None when the archive needs the stdlib
+    parser."""
     if len(data) < 22 or data[-22:-18] != b"PK\x05\x06":
         return None  # archive comment / truncated → stdlib
     disk, cd_disk, n_disk, n_total, cd_size, cd_off, clen = _EOCD.unpack(
@@ -110,21 +113,26 @@ def _zip_entries_fast(data: bytes):
         if data[loff : loff + 4] != b"PK\x03\x04":
             return None
         lnlen, lelen = struct.unpack("<2H", data[loff + 26 : loff + 30])
+        if data[loff + 30 : loff + 30 + lnlen] != raw_name:
+            return None  # zipfile rejects a local/central name mismatch
         start = loff + 30 + lnlen + lelen
         if start + csize > len(data):
             return None
-        entries.append((name, (method, crc, csize, start)))
+        entries.append((name, (method, crc, csize, usize, start)))
         pos += 46 + nlen + elen + comlen
     return entries
 
 
-def _zip_read_member(data: bytes, meta) -> bytes:
+def _zip_read_member(data: bytes, meta) -> bytes | None:
     """Decompress + CRC-verify one member; raises (like zipfile's
     BadZipFile path) on corrupt data — parse_document's except turns
-    that into (None, None) exactly as before."""
-    method, crc, csize, start = meta
+    that into (None, None) exactly as before.  None when the inflated
+    size disagrees with the central directory: zipfile decides."""
+    method, crc, csize, usize, start = meta
     raw = data[start : start + csize]
     out = raw if method == 0 else zlib.decompress(raw, -15)
+    if len(out) != usize:
+        return None
     if zlib.crc32(out) & 0xFFFFFFFF != crc:
         raise ValueError("Bad CRC-32 for zip member")
     return out
@@ -324,7 +332,13 @@ def parse_document(html: bytes) -> tuple[str | None, dict | None]:
             # stdlib NameToInfo behavior
             by_name = dict(fast)
             namelist = [n for n, _ in fast]
-            read = lambda n: _zip_read_member(html, by_name[n])  # noqa: E731
+
+            def read(n):
+                out = _zip_read_member(html, by_name[n])
+                if out is None:
+                    return zipfile.ZipFile(io.BytesIO(html)).read(n)
+                return out
+
         names = sorted(n for n in namelist if n.endswith(".xbrl"))
         if not names:
             return None, None

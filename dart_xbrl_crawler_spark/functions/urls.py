@@ -192,7 +192,7 @@ _FAST_URL_RE = (
     r"(/[^#?%\s]*"  # path: no %-escapes, one '?' max, no whitespace
     r"(\?([A-Za-z0-9_.~\-]*(=[A-Za-z0-9_.~\-]*)?"  # _SAFE_QUERY and
     r"(&[A-Za-z0-9_.~\-]*(=[A-Za-z0-9_.~\-]*)?)*)?)?)?"  # ≤1 '=' per kv
-    r"(#\S*)?$"  # fragment (dropped) — never contains whitespace
+    r"(#\S*)?\z"  # fragment (dropped); \z: '$' would admit a final '\n'
 )
 
 
@@ -264,7 +264,9 @@ def with_url_canon_split(df: DataFrame, url_col: str = "url") -> DataFrame:
         .withColumn("host", host)
         .withColumn("url_hash", F.xxhash64("url_canon"))
     )
-    slow = with_url_canon(df.filter(~eligible), url_col)
+    # a NULL url is neither eligible nor ~eligible: send it to the UDF
+    # so it fails or passes exactly as in with_url_canon
+    slow = with_url_canon(df.filter(F.coalesce(~eligible, F.lit(True))), url_col)
     return fast.unionByName(slow)
 
 

@@ -1286,48 +1286,17 @@ def phash_near_dup_pairs(
     missed.  For guaranteed recall at radius r, call with
     n_bands ≥ r + 1 (e.g. 11 bands for r=10; 64/11-bit bands still
     join on equality)."""
+    from ..plans.catalog_text import banded_pairs, hamming_distance
+
     width = 64 // n_bands
     mask = (1 << width) - 1
-    # both join sides derive from `hashed`; checkpoint so the upstream
-    # (typically a full image DECODE in python) runs once, not per side
-    h = (
-        hashed.filter(F.col("phash").isNotNull())
-        .select("url", "phash")
-        .localCheckpoint(eager=True)
-    )
-    bands = h.select(
-        "url", "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col("phash"), i * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("url", "phash", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
-    a = bands.select(
-        F.col("url").alias("url_a"), F.col("phash").alias("ph_a"), "band", "key"
-    )
-    b = bands.select(
-        F.col("url").alias("url_b"), F.col("phash").alias("ph_b"), "band", "key"
-    )
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("url_a") < F.col("url_b"))
-        .select(
-            "url_a", "url_b",
-            F.bit_count(
-                F.col("ph_a").bitwiseXOR(F.col("ph_b"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    keys = [
+        F.shiftrightunsigned(F.col("phash"), i * width).bitwiseAND(F.lit(mask))
+        for i in range(n_bands)
+    ]
+    h = hashed.filter(F.col("phash").isNotNull()).select("url", "phash")
+    return banded_pairs(h, "url", "phash", keys, hamming_distance, max_hamming).select(
+        F.col("a_id").alias("url_a"), F.col("b_id").alias("url_b"), "hamming"
     )
 
 

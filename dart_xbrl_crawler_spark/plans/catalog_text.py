@@ -5,14 +5,18 @@ cosine top-k, LSH ANN, near-dup pairs).
 
 Same conventions as catalog.py.  The xxhash64-based production paths
 (q30 MinHash, q31/q43 SimHash, q33 ANN) are not DuckDB-portable and
-stay rows-only — but each has a HASH-VERIFIED twin running the
-identical pipeline in portable form: q47 (md5-MinHash-LSH), q48
-(md5-SimHash + hamming bands), q49 (ANN sign-LSH with the planes,
-bucket expression and multi-probe set expressed in SQL).  Only q40
-(approx_count_distinct — inherently approximate) has no exact oracle.
+stay rows-only.  Their code is still oracle-checked: q47 and q48 call
+the same signature builders and the same banded_pairs kernel with the
+md5 hash family _md5h in place of xxhash64, so their DuckDB parity
+verifies the code q30 and q43 run.  q49 is q33's ANN sign-LSH with the
+planes, bucket expression and multi-probe set expressed in SQL.  Only
+q40 (approx_count_distinct — inherently approximate) has no exact
+oracle.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -270,9 +274,70 @@ def q32(spark, sf):
 
 
 # =====================================================================
-# MinHash-LSH near-dup candidates (rows-only: xxhash64-based, not
-# portable to DuckDB). Word-5-gram shingles → 32 minhashes → 8 bands
-# of 4 → band-bucket self-join → candidate pairs w/ estimated Jaccard.
+# banded-pairs kernel — the one LSH self-join every near-dup path runs
+# (minhash q30/q47, simhash q43/q48, image phash q75)
+# =====================================================================
+def banded_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    sig_col: str,
+    band_keys: list[F.Column],
+    value: Callable[[F.Column, F.Column], F.Column],
+    max_value: int | None = None,
+) -> DataFrame:
+    """(a_id, b_id, value) near-dup pairs, a_id < b_id, one row per pair.
+
+    ``band_keys`` are expressions over ``sigs``; band i's key is
+    ``band_keys[i]``, and two rows become a candidate pair only when
+    they share a key in the same band — an equality join on
+    (band, key), never an all-pairs product.  ``value(a_sig, b_sig)``
+    is the named pair column (estimated Jaccard, hamming distance);
+    with ``max_value`` only pairs at or below it are kept.
+
+    ``sigs`` is localCheckpointed first: both join sides derive from
+    it, and without the checkpoint the caller's signature pipeline
+    (shingle explode + 32 minhash aggregates, token explode + 17
+    aggregates, a python image decode) executes once per side —
+    measured 12.8 s → ~3 s on q43 at sf0.1.  The value is functionally
+    determined by (a_id, b_id), so the projection and the filter run
+    BEFORE the pair-dedup: its shuffle carries (a_id, b_id, value)
+    rows, not signatures."""
+    sigs = sigs.localCheckpoint(eager=True)
+    keyed = F.array(
+        *[
+            F.struct(F.lit(i).alias("band"), k.alias("key"))
+            for i, k in enumerate(band_keys)
+        ]
+    )
+    bands = sigs.select(id_col, sig_col, F.explode(keyed).alias("bk")).select(
+        id_col, sig_col, "bk.band", "bk.key"
+    )
+    a = bands.select(
+        F.col(id_col).alias("a_id"), F.col(sig_col).alias("a_sig"), "band", "key"
+    )
+    b = bands.select(
+        F.col(id_col).alias("b_id"), F.col(sig_col).alias("b_sig"), "band", "key"
+    )
+    pairs = (
+        a.join(b, ["band", "key"])
+        .filter(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id", value(F.col("a_sig"), F.col("b_sig")))
+    )
+    if max_value is not None:
+        pairs = pairs.filter(F.col(pairs.columns[2]) <= max_value)
+    return pairs.dropDuplicates(["a_id", "b_id"])
+
+
+def hamming_distance(a: F.Column, b: F.Column) -> F.Column:
+    """The ``hamming`` pair column: set bits of a xor b."""
+    return F.bit_count(a.bitwiseXOR(b)).alias("hamming")
+
+
+# =====================================================================
+# MinHash-LSH near-dup candidates.  Word-5-gram shingles → 32 minhashes
+# → 8 bands of 4 → band-bucket self-join → candidate pairs w/ estimated
+# Jaccard.  q30 hashes with xxhash64 (rows-only, not DuckDB-portable);
+# q47 runs these same functions with the md5 family _md5h.
 # =====================================================================
 N_MINHASH = 32
 N_BANDS = 8
@@ -295,76 +360,39 @@ def _exploded_shingles(d: DataFrame, k: int = 5) -> DataFrame:
     return d.select("doc_id", F.explode(shingles).alias("sh"))
 
 
-def minhash_signatures(d: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
-    """doc_id + h0..h{n-1} minhash columns."""
-    ex = _exploded_shingles(d)
-    aggs = [
-        F.min(F.xxhash64("sh", F.lit(i))).alias(f"h{i}") for i in range(n_hashes)
-    ]
-    return ex.groupBy("doc_id").agg(*aggs)
+def _xxh_seeded(col: F.Column, seed: int) -> F.Column:
+    return F.xxhash64(col, F.lit(seed))
+
+
+def minhash_signatures(
+    d: DataFrame, hash_fn: Callable[[F.Column, int], F.Column] = _xxh_seeded
+) -> DataFrame:
+    """(doc_id, sig): sig[i] = min over the doc's shingles of
+    ``hash_fn(sh, i)``, for i < N_MINHASH."""
+    sig = F.array(*[F.min(hash_fn(F.col("sh"), i)) for i in range(N_MINHASH)])
+    return _exploded_shingles(d).groupBy("doc_id").agg(sig.alias("sig"))
+
+
+def _minhash_band(b: int) -> F.Column:
+    """Band b's minhashes joined into one string, ready for a bucket hash."""
+    per_band = N_MINHASH // N_BANDS
+    sig = F.col("sig")
+    return F.concat_ws(
+        ",", *[sig[b * per_band + j].cast("string") for j in range(per_band)]
+    )
+
+
+def _jaccard_est(a: F.Column, b: F.Column) -> F.Column:
+    agree = F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda z: z))
+    return F.round(agree.cast("double") / N_MINHASH, 4).alias("jaccard_est")
 
 
 def minhash_lsh_candidates(d: DataFrame) -> DataFrame:
     """(a_id, b_id, jaccard_est) banded-LSH candidate pairs over
-    d(doc_id, text).  Never all-pairs: docs meet only via equal band
-    buckets (8 bands × 4 rows), and the pair join is keyed on
-    (band, bucket).
-
-    The signature table is localCheckpointed before the self-join:
-    both join sides derive from it, and without the checkpoint the
-    whole shingle-explode + 32-minhash pipeline (the dominant cost —
-    millions of shingle rows) executes once per side (verified in the
-    physical plan: two identical Generate→HashAggregate subtrees).
-    The checkpoint materializes ~|docs| signature rows once and both
-    sides read those blocks; values are unchanged."""
-    sigs = minhash_signatures(d).localCheckpoint(eager=True)
-    per_band = N_MINHASH // N_BANDS
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"h{b * per_band + j}").cast("string")
-                        for j in range(per_band)
-                    ],
-                )
-            ).alias("bucket"),
-        )
-        for b in range(N_BANDS)
-    ]
-    sig_arr = F.array(*[F.col(f"h{i}") for i in range(N_MINHASH)])
-    bands = sigs.select(
-        "doc_id",
-        sig_arr.alias("sig"),
-        F.explode(F.array(*band_structs)).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"), "sig")
-    a = bands.select(
-        F.col("doc_id").alias("a_id"), "band", "bucket", F.col("sig").alias("a_sig")
-    )
-    b = bands.select(
-        F.col("doc_id").alias("b_id"), "band", "bucket", F.col("sig").alias("b_sig")
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("a_sig"), F.col("b_sig"), lambda x, y: x == y),
-                lambda z: z,
-            )
-        ).cast("double")
-        / N_MINHASH
-    )
-    # jaccard_est is functionally determined by (a_id, b_id): compute
-    # it BEFORE the pair-dedup so the dedup shuffle carries
-    # (a_id, b_id, est) instead of two 32-long signature arrays per
-    # candidate row (§2.3 shuffle-fewer-bytes); values unchanged
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", F.round(est, 4).alias("jaccard_est"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    d(doc_id, text), bucketed by xxhash64 of each band's minhashes."""
+    buckets = [F.xxhash64(_minhash_band(b)) for b in range(N_BANDS)]
+    sigs = minhash_signatures(d)
+    return banded_pairs(sigs, "doc_id", "sig", buckets, _jaccard_est)
 
 
 @query("q30_minhash_lsh", None)
@@ -377,23 +405,26 @@ def q30(spark, sf):
 
 
 # =====================================================================
-# SimHash (rows-only): 16-bit token-majority signature + hamming-band
-# candidate pairing — a signature alone dedups nothing
+# SimHash: 16-bit token-majority signature + hamming-band candidate
+# pairing — a signature alone dedups nothing.  q31/q43 hash tokens with
+# xxhash64 (rows-only); q48 runs these same functions with _md5h.
 # =====================================================================
 SIMHASH_BITS = 16
 SIMHASH_BANDS = 4  # 4 bands × 4 bits: hamming ≤ 3 ⇒ ≥1 untouched band
 
 
-def simhash_signatures(d: DataFrame) -> DataFrame:
-    """(doc_id, simhash16): relational simhash — explode distinct
-    tokens → per-doc majority vote per bit as 16 SUM aggregates (same
-    explode-don't-nest rule as minhash)."""
+def simhash_signatures(
+    d: DataFrame, hash_fn: Callable[[F.Column], F.Column] = F.xxhash64
+) -> DataFrame:
+    """(doc_id, simhash16): relational simhash over ``hash_fn(tok)`` —
+    explode distinct tokens → per-doc majority vote per bit as 16 SUM
+    aggregates (same explode-don't-nest rule as minhash)."""
     ex = d.select(
         "doc_id",
         F.explode(
             F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
         ).alias("tok"),
-    ).withColumn("th", F.xxhash64("tok"))
+    ).withColumn("th", hash_fn(F.col("tok")))
     aggs = [F.count("*").alias("n_tok")] + [
         F.sum(
             F.when(F.col("th").bitwiseAND(F.lit(int(2**i))) != 0, 1).otherwise(0)
@@ -413,56 +444,15 @@ def simhash_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(a_id, b_id, hamming) near-dup pairs from simhash signatures.
 
     Pigeonhole banding: split the 16 bits into 4 bands of 4; any pair
-    with hamming ≤ 3 differs in at most 3 bands, so it collides on at
-    least one band bucket — candidates come from equality joins on
-    (band, band_bits), NEVER an all-pairs product.  The exact hamming
-    distance (bit_count of xor) then filters candidates.
-
-    ``sigs`` is localCheckpointed first: both join sides derive from
-    it, and without the checkpoint the caller's signature pipeline
-    (token explode + 17 aggregates) executes once per side — same
-    single-pass fix as minhash_lsh_candidates, measured 12.8 s → ~3 s
-    on q43 at sf0.1.  Values unchanged."""
-    sigs = sigs.localCheckpoint(eager=True)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash16"), b * 4).bitwiseAND(F.lit(0xF)).alias(
-                "band_bits"
-            ),
-        )
+    with hamming ≤ 3 differs in at most 3 bands, so it shares at least
+    one band's bits.  The exact hamming distance (bit_count of xor)
+    then filters the candidates."""
+    keys = [
+        F.shiftright(F.col("simhash16"), b * 4).bitwiseAND(F.lit(0xF))
         for b in range(SIMHASH_BANDS)
     ]
-    bands = sigs.select(
-        "doc_id",
-        "simhash16",
-        F.explode(F.array(*band_structs)).alias("bb"),
-    ).select("doc_id", "simhash16", "bb.band", "bb.band_bits")
-    a = bands.select(
-        F.col("doc_id").alias("a_id"),
-        F.col("simhash16").alias("a_sig"),
-        "band",
-        "band_bits",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("b_id"),
-        F.col("simhash16").alias("b_sig"),
-        "band",
-        "band_bits",
-    )
-    hamming = F.bit_count(F.col("a_sig").bitwiseXOR(F.col("b_sig")))
-    # hamming is functionally determined by (a_id, b_id), so the
-    # distance filter and the narrow projection commute with the
-    # pair-dedup — applying them FIRST shrinks the dedup shuffle from
-    # every band collision (signatures included) to just the surviving
-    # (a_id, b_id, hamming) rows (§2.3 shuffle-fewer-bytes; measured
-    # 12.8 s → ~3 s on q43's collision-dense 5 k-doc corpus)
-    return (
-        a.join(b, ["band", "band_bits"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", hamming.cast("int").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["a_id", "b_id"])
+    return banded_pairs(
+        sigs, "doc_id", "simhash16", keys, hamming_distance, max_hamming
     )
 
 
@@ -909,15 +899,12 @@ def q42(spark, sf):
 
 
 # =====================================================================
-# MinHash-LSH, md5-hashed twin — the SAME shingle→signature→band→
-# candidate pipeline as q30, with every hash derived from md5 (first
-# 15 hex digits → 60-bit int) instead of xxhash64, so DuckDB can run
-# it verbatim and the driver can hash-verify the full banded-LSH
-# dataflow (q30 keeps the cheaper xxhash64 production path).
+# MinHash-LSH, md5 hash family — q47 runs q30's own functions
+# (minhash_signatures, _minhash_band, _jaccard_est, banded_pairs) with
+# every hash taken from md5 (first 15 hex digits → 60-bit int) instead
+# of xxhash64.  DuckDB can run that verbatim, so q47's oracle parity
+# hash-verifies the banded-LSH code q30 runs.
 # =====================================================================
-_PER_BAND = N_MINHASH // N_BANDS
-
-
 def _md5h(col, seed) -> F.Column:
     """Portable 60-bit hash: conv(substr(md5(x || '|seed'), 1, 15), 16, 10).
     15 hex digits keep the value positive inside a signed int64 on both
@@ -936,10 +923,11 @@ def _q47_sql() -> str:
     sig_cols = ",\n         ".join(
         f"MIN({h('sh', i)}) AS h{i}" for i in range(N_MINHASH)
     )
+    per_band = N_MINHASH // N_BANDS
     band_selects = []
     for b in range(N_BANDS):
         cat = " || ',' || ".join(
-            f"CAST(h{b * _PER_BAND + j} AS VARCHAR)" for j in range(_PER_BAND)
+            f"CAST(h{b * per_band + j} AS VARCHAR)" for j in range(per_band)
         )
         band_selects.append(
             f"SELECT doc_id, {b} AS band, {h('(' + cat + ')', 99)} AS bucket FROM sig"
@@ -984,67 +972,15 @@ def q47(spark, sf):
         .select("doc_id", "text")
         .repartition(par)
     )
-    ex = _exploded_shingles(d)
-    sigs = ex.groupBy("doc_id").agg(
-        *[F.min(_md5h(F.col("sh"), i)).alias(f"h{i}") for i in range(N_MINHASH)]
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            _md5h(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"h{b * _PER_BAND + j}").cast("string")
-                        for j in range(_PER_BAND)
-                    ],
-                ),
-                99,
-            ).alias("bucket"),
-        )
-        for b in range(N_BANDS)
-    ]
-    sig_arr = F.array(*[F.col(f"h{i}") for i in range(N_MINHASH)])
-    bands = sigs.select(
-        "doc_id", sig_arr.alias("sig"), F.explode(F.array(*band_structs)).alias("bb")
-    ).select(
-        "doc_id",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-        "sig",
-    )
-    a = bands.select(
-        F.col("doc_id").alias("a_id"), "band", "bucket", F.col("sig").alias("a_sig")
-    )
-    b = bands.select(
-        F.col("doc_id").alias("b_id"), "band", "bucket", F.col("sig").alias("b_sig")
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("a_sig"), F.col("b_sig"), lambda x, y: x == y),
-                lambda z: z,
-            )
-        ).cast("double")
-        / N_MINHASH
-    )
-    # jaccard_est is functionally determined by (a_id, b_id): compute
-    # it BEFORE the pair-dedup so the dedup shuffle carries
-    # (a_id, b_id, est) instead of two 32-long signature arrays per
-    # candidate row (§2.3 shuffle-fewer-bytes); values unchanged
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", F.round(est, 4).alias("jaccard_est"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    buckets = [_md5h(_minhash_band(b), 99) for b in range(N_BANDS)]
+    sigs = minhash_signatures(d, _md5h)
+    return banded_pairs(sigs, "doc_id", "sig", buckets, _jaccard_est)
 
 
 # =====================================================================
-# SimHash, md5-hashed twin — same 16-bit majority-vote signature and
-# pigeonhole hamming-band pairing as q31/q43, with the token hash
-# derived from md5 so DuckDB can verify the WHOLE pipeline by hash
-# (q31/q43 keep the cheaper xxhash64 production path).
+# SimHash, md5 hash family — q48 runs q31/q43's own simhash_signatures
+# and simhash_pairs with the token hash taken from md5, so DuckDB
+# hash-verifies the whole signature + hamming-band code q43 runs.
 # =====================================================================
 def _q48_sql() -> str:
     h = "CAST(CONCAT('0x', substr(md5(tok || '|0'),1,15)) AS BIGINT)"
@@ -1093,26 +1029,7 @@ def q48(spark, sf):
         .select("doc_id", "text")
         .repartition(par)
     )
-    ex = d.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
-        ).alias("tok"),
-    ).withColumn("th", _md5h(F.col("tok"), 0))
-    aggs = [F.count("*").alias("n_tok")] + [
-        F.sum(
-            F.when(F.col("th").bitwiseAND(F.lit(int(2**i))) != 0, 1).otherwise(0)
-        ).alias(f"b{i}")
-        for i in range(SIMHASH_BITS)
-    ]
-    per_doc = ex.groupBy("doc_id").agg(*aggs)
-    sim = F.lit(0).cast("long")
-    for i in range(SIMHASH_BITS):
-        sim = sim + F.when(
-            F.col(f"b{i}") * 2 > F.col("n_tok"), F.lit(int(2**i)).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    sigs = per_doc.select("doc_id", sim.alias("simhash16"))
-    return simhash_pairs(sigs)
+    return simhash_pairs(simhash_signatures(d, lambda tok: _md5h(tok, 0)))
 
 
 # =====================================================================

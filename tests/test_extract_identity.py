@@ -5,6 +5,7 @@ per url.  This is the north_rule invariant."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from dart_xbrl_crawler_spark import fixtures, oracle
 from dart_xbrl_crawler_spark.operators import extract as X
@@ -104,3 +105,34 @@ def test_corp_name_join_fallback(spark, fixture_bundle):
     for code, name in names.items():
         if code != dropped:
             assert name == mapped[code]
+
+
+def _patched_zip(field: str) -> bytes:
+    """A one-member mini-XBRL ZIP with one header field made to disagree
+    with the rest of the archive."""
+    import struct
+
+    doc = {"doc_format": "mini-xbrl-2", "columns": [], "rows": []}
+    data = bytearray(fixtures.build_mini_xbrl_zip("00000001", "20260101", doc))
+    if field == "local_name":  # the local header's copy of the name
+        assert data[30:36] == b"entity"
+        data[30:36] = b"ENTITY"
+    else:  # the central directory's uncompressed size, one byte short
+        cd_off = struct.unpack("<L", data[-6:-2])[0]
+        (usize,) = struct.unpack("<L", data[cd_off + 24 : cd_off + 28])
+        data[cd_off + 24 : cd_off + 28] = struct.pack("<L", usize - 1)
+    return bytes(data)
+
+
+@pytest.mark.parametrize("field", ["local_name", "usize"])
+def test_fast_zip_reader_defers_to_zipfile_on_mismatch(field):
+    """The fast ZIP reader must give parse_document's stdlib verdict on
+    archives whose headers disagree."""
+    from unittest import mock
+
+    from dart_xbrl_crawler_spark import doc_parsers
+
+    payload = _patched_zip(field)
+    with mock.patch.object(doc_parsers, "_zip_entries_fast", return_value=None):
+        want = doc_parsers.parse_document(payload)
+    assert doc_parsers.parse_document(payload) == want

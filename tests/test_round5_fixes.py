@@ -874,6 +874,10 @@ def test_charset_sniff_rules():
     # a meta tag beyond the 1024-byte prescan window is ignored
     far = b" " * 1100 + b'<meta charset="euc-kr">' + b"\xb0\xa1"
     assert sniff_charset(far) == "cp1252"
+    # odd lengths: the NUL-stripe check clamps its head to even length
+    assert sniff_charset(b"\x00") == "utf-8"
+    assert sniff_charset("hello".encode("utf-16-be")[:-1]) == "utf-16-be"
+    assert sniff_charset("hello".encode("utf-16-le")[:-1]) == "utf-16-le"
 
 
 def test_charset_decode_byte_identity():
