@@ -1,21 +1,29 @@
-"""URL-seen dedup: partitioned Bloom filter + exact confirmation.
+"""URL-seen dedup: a sharded Bloom or cuckoo filter + exact confirmation.
 
 Reference analog: re-download avoidance by directory existence
 (/root/reference/dart_api_manager.py:388-389) — a single-node trick that
-cannot scale.  Here (north_rule): a **sharded Bloom filter** keyed by
-``xxhash64(url_canon)``.
+cannot scale.  Here (north_rule): a **sharded seen filter** keyed by
+``xxhash64(url_canon)``, of one of two kinds — Bloom (add, test) or
+cuckoo (add, test, remove).
 
 Scale design (10^10 URLs): ``P`` shards keyed ``pmod(url_hash, P)``.
-Each shard's bitmap sizes for n/P keys — at 10^10 keys, 1% fpp,
-P=4096 → ~3 MB per shard; a probe task holds exactly one shard bitmap
-(cogroup-aligned), never the whole 12 GB filter.  Build is a partial
-aggregate per shard (OR-merge associative), probe is shard-aligned
-cogroup — no bitmap ever rides a broadcast or a row.
+Each shard sizes for n/P keys — at 10^10 keys, 1% fpp, P=4096 → a
+~3 MB Bloom bitmap per shard.  Every task holds exactly one shard
+(cogroup-aligned), never the whole 12 GB filter, and no shard ever
+rides a broadcast or a row:
 
-Exactness: Bloom has false positives, so ``dedup_urls`` uses the filter
-only as a *prefilter*: rows flagged maybe-seen get an exact left-anti
-join against the seen table.  No false negatives (property-tested) →
-the surviving set is exactly frontier − seen.
+- ``add_to_seen_filter`` / ``remove_from_seen_filter`` are the one
+  update plan (``_update_shards``): the batch's hashes cogroup with the
+  stored shards, and each task adds (or removes) its keys in its shard.
+  A shard is sized once, when it is created, so a batch always lands in
+  the geometry of the shard it meets.
+- ``probe_seen`` and ``dedup_urls`` test membership through the one
+  per-shard helper ``_shard_contains``, for either kind.
+
+Exactness: both kinds have false positives, so ``dedup_urls`` uses the
+filter only as a *prefilter*: rows flagged maybe-seen get an exact
+confirmation against the seen table.  No false negatives
+(property-tested) → the surviving set is exactly frontier − seen.
 """
 
 from __future__ import annotations
@@ -39,13 +47,14 @@ BLOOM_SCHEMA = T.StructType(
 )
 
 _LN2 = float(np.log(2.0))
+_BLOOM_FPP = 0.01
 
 
-def _bloom_params(n: int, fpp: float) -> tuple[int, int]:
-    """(m_bits, k_hashes) for n keys at target fpp; m rounded up to a
-    multiple of 64."""
+def _bloom_params(n: int) -> tuple[int, int]:
+    """(m_bits, k_hashes) for n keys at the target fpp; m rounded up to
+    a multiple of 64."""
     n = max(n, 1)
-    m = int(np.ceil(-n * np.log(fpp) / (_LN2 * _LN2)))
+    m = int(np.ceil(-n * np.log(_BLOOM_FPP) / (_LN2 * _LN2)))
     m = ((m + 63) // 64) * 64
     k = max(1, int(round(m / n * _LN2)))
     return m, k
@@ -80,80 +89,6 @@ def _test_bits(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return (word >> (pos & np.uint64(63))) & np.uint64(1) != 0
 
 
-def build_seen_filter(
-    seen: DataFrame,
-    n_shards: int = 64,
-    fpp: float = 0.01,
-    expected_keys: int | None = None,
-) -> DataFrame:
-    """seen(url_hash …) → bloom table, one row per shard.
-
-    ``expected_keys`` sizes the bitmaps (per-shard n = expected/P); when
-    None, each shard sizes for its actual batch (fine for build-once,
-    re-build-per-round usage; incremental union requires fixed sizing).
-    """
-    per_shard_n = (expected_keys // n_shards + 1) if expected_keys else None
-
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Per-partition partial build, one bitmap per shard present.
-        # Hashes accumulate across ALL Arrow chunks first; the bitmap is
-        # sized once at end of partition — sizing from the first ~2048-row
-        # chunk saturates the filter on large frontiers (fpp → 1).
-        chunks: dict[int, list[np.ndarray]] = {}
-        for pdf in it:
-            hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-            shards = pdf["shard"].to_numpy()
-            for s in np.unique(shards):
-                chunks.setdefault(int(s), []).append(hashes[shards == s])
-        rows = []
-        for s, parts in chunks.items():
-            hs = parts[0] if len(parts) == 1 else np.concatenate(parts)
-            m, k = _bloom_params(per_shard_n or len(hs), fpp)
-            bits = np.zeros(m // 64, dtype=np.uint64)
-            for pos in _positions(hs, m, k):
-                _set_bits(bits, pos)
-            rows.append((s, bits.tobytes(), m, k, len(hs)))
-        yield pd.DataFrame(
-            rows, columns=["shard", "bits", "m_bits", "k_hashes", "n_keys"]
-        )
-
-    with_shard = seen.select(
-        F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int").alias("shard"),
-        "url_hash",
-    ).repartition(n_shards, "shard")
-    # hash-partitioning on shard puts each shard wholly in ONE partition,
-    # and `build` emits one row per shard present — the result is already
-    # merged; a groupBy OR-merge here would only re-shuffle the bitmaps
-    # (use merge_seen_filters for incremental cross-round unions)
-    return with_shard.mapInPandas(build, schema=BLOOM_SCHEMA)
-
-
-def merge_seen_filters(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two bloom tables built with the SAME (n_shards,
-    expected_keys) sizing — the incremental path: union last round's
-    filter with the filter of this round's insert batch instead of
-    rebuilding from the full frontier."""
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        m = int(pdf["m_bits"].iloc[0])
-        k = int(pdf["k_hashes"].iloc[0])
-        assert (pdf["m_bits"] == m).all(), "shard bitmap sizes diverged"
-        out = np.zeros(m // 64, dtype=np.uint64)
-        for buf in pdf["bits"]:
-            out |= np.frombuffer(buf, dtype=np.uint64)
-        return pd.DataFrame(
-            {
-                "shard": [key[0]],
-                "bits": [out.tobytes()],
-                "m_bits": [m],
-                "k_hashes": [k],
-                "n_keys": [int(pdf["n_keys"].sum())],
-            }
-        )
-
-    return a.unionByName(b).groupBy("shard").applyInPandas(merge, BLOOM_SCHEMA)
-
-
 _VERDICT_SCHEMA = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), False),
@@ -165,7 +100,8 @@ _VERDICT_SCHEMA = T.StructType(
 def probe_seen(
     frontier: DataFrame, bloom: DataFrame, n_shards: int = 64
 ) -> DataFrame:
-    """frontier + ``seen_maybe`` boolean.
+    """frontier + ``seen_maybe`` boolean; ``bloom`` is either kind of
+    seen filter (BLOOM_SCHEMA or CUCKOO_SCHEMA rows).
 
     The python side sees ONLY (shard int, url_hash long) — pure numpy,
     no object churn (full string rows through the Arrow channel
@@ -175,21 +111,14 @@ def probe_seen(
     # distinct: one verdict row per hash, so the join back cannot
     # multiply frontier rows that share a hash
     keyed = frontier.select("url_hash").distinct().withColumn(
-        "shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
+        "shard", _shard_of(n_shards)
     )
 
     def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         hashes = left["url_hash"].to_numpy(dtype=np.int64)
-        if right.empty:
-            hit = np.zeros(len(hashes), dtype=bool)
-        else:
-            bits = np.frombuffer(right["bits"].iloc[0], dtype=np.uint64)
-            m = int(right["m_bits"].iloc[0])
-            k = int(right["k_hashes"].iloc[0])
-            hit = np.ones(len(hashes), dtype=bool)
-            for pos in _positions(hashes, m, k):
-                hit &= _test_bits(bits, pos)
-        return pd.DataFrame({"url_hash": hashes, "seen_maybe": hit})
+        return pd.DataFrame(
+            {"url_hash": hashes, "seen_maybe": _shard_contains(right, hashes)}
+        )
 
     verdict = (
         keyed.groupBy("shard")
@@ -202,7 +131,7 @@ def probe_seen(
 def dedup_urls(
     frontier: DataFrame,
     seen: DataFrame,
-    bloom: DataFrame | None = None,
+    bloom: DataFrame,
     n_shards: int = 64,
     max_confirmed_hint: int | None = None,
     broadcast_max_rows: int = 4_000_000,
@@ -210,13 +139,13 @@ def dedup_urls(
     """Exact frontier − seen.
 
     ``bloom`` accepts EITHER filter table — BLOOM_SCHEMA or
-    CUCKOO_SCHEMA rows (dispatch on columns inside the cogroup kernel);
+    CUCKOO_SCHEMA rows (``_shard_contains`` dispatches on the columns);
     the plan and exactness contract are identical for both.
 
-    With a filter: ONE shard-aligned numeric python stage does both the
-    approximate probe AND the exact confirmation — frontier hashes and seen
-    hashes are tagged, unioned, cogrouped with the bloom by shard; per
-    shard, numpy bloom-tests the frontier hashes and ``np.isin``-checks
+    ONE shard-aligned numeric python stage does both the approximate
+    probe AND the exact confirmation — frontier hashes and seen hashes
+    are tagged, unioned, cogrouped with the filter by shard; per shard,
+    numpy filter-tests the frontier hashes and ``np.isin``-checks
     the flagged ones against that shard's seen hashes.  The output
     (``confirmed``: hashes provably in seen) is bounded by the *batch*
     (true overlap + fpp·|new|), never by |seen| — broadcast it into a
@@ -237,42 +166,19 @@ def dedup_urls(
     flagged-semi-join-then-anti spent its time in driver broadcast
     jobs.  At 10^10 scale, store frontier + seen bucketed by
     pmod(url_hash, n_shards) (sources/bucketed.py) and this plan's one
-    union-shuffle disappears too.
-
-    Without a bloom: plain left-anti on url_hash."""
-    seen_hashes = seen.select("url_hash")
-    if bloom is None:
-        return frontier.join(seen_hashes.distinct(), "url_hash", "left_anti")
+    union-shuffle disappears too."""
     tagged = (
         frontier.select("url_hash", F.lit(False).alias("is_seen"))
-        .unionByName(seen_hashes.select("url_hash", F.lit(True).alias("is_seen")))
-        .withColumn(
-            "shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
-        )
+        .unionByName(seen.select("url_hash", F.lit(True).alias("is_seen")))
+        .withColumn("shard", _shard_of(n_shards))
     )
 
     def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         is_seen = left["is_seen"].to_numpy(dtype=bool)
         hashes = left["url_hash"].to_numpy(dtype=np.int64)
         front = hashes[~is_seen]
-        if right.empty:
-            confirmed = front[:0]
-        elif "bits" in right.columns:  # bloom shard
-            bits = np.frombuffer(right["bits"].iloc[0], dtype=np.uint64)
-            m = int(right["m_bits"].iloc[0])
-            k = int(right["k_hashes"].iloc[0])
-            hit = np.ones(len(front), dtype=bool)
-            for pos in _positions(front, m, k):
-                hit &= _test_bits(bits, pos)
-            flagged = front[hit]
-            confirmed = flagged[np.isin(flagged, hashes[is_seen])]
-        else:  # cuckoo shard (CUCKOO_SCHEMA)
-            m = int(right["m_buckets"].iloc[0])
-            table = np.frombuffer(
-                right["table"].iloc[0], dtype=np.uint16
-            ).reshape(m, _CUCKOO_SLOTS)
-            flagged = front[_cuckoo_contains(table, front)]
-            confirmed = flagged[np.isin(flagged, hashes[is_seen])]
+        flagged = front[_shard_contains(right, front)]
+        confirmed = flagged[np.isin(flagged, hashes[is_seen])]
         return pd.DataFrame(
             {
                 "url_hash": confirmed,
@@ -303,9 +209,9 @@ def dedup_urls(
 # cuckoo variant adds the one capability Bloom structurally lacks:
 # DELETION (frontier expiry / GC must be able to retire url_hashes from
 # the seen structure without a full rebuild).  Same scale shape as the
-# Bloom above: P shards keyed pmod(url_hash, P); each probe/insert/
-# delete task holds exactly one shard table (cogroup-aligned); tables
-# never ride a broadcast or a row.
+# Bloom above: P shards keyed pmod(url_hash, P); each probe/add/remove
+# task holds exactly one shard table (cogroup-aligned); tables never
+# ride a broadcast or a row.
 #
 # Per-shard layout (Fan et al., "Cuckoo Filter: Practically Better Than
 # Bloom", CoNEXT 2014 — public paper): m buckets (power of two) × 4
@@ -333,12 +239,13 @@ CUCKOO_SCHEMA = T.StructType(
 
 _CUCKOO_SLOTS = 4
 _CUCKOO_MAX_KICKS = 500
+_CUCKOO_LOAD = 0.84
 
 
-def _cuckoo_m(expected: int, load: float = 0.84) -> int:
+def _cuckoo_m(expected: int) -> int:
     """Bucket count: next power of two holding ``expected`` keys at the
     target load factor (0.84 keeps the kick residue tiny at 4 slots)."""
-    need = max(1, int(np.ceil(expected / (load * _CUCKOO_SLOTS))))
+    need = max(1, int(np.ceil(expected / (_CUCKOO_LOAD * _CUCKOO_SLOTS))))
     return 1 << int(np.ceil(np.log2(need)))
 
 
@@ -446,177 +353,158 @@ def _cuckoo_delete_keys(table: np.ndarray, hashes: np.ndarray) -> int:
     return missing
 
 
-def build_cuckoo_filter(
-    seen: DataFrame,
-    n_shards: int = 64,
-    expected_keys: int | None = None,
-    load: float = 0.84,
-) -> DataFrame:
-    """seen(url_hash …) → cuckoo table, one row per shard.  Sizing per
-    shard from ``expected_keys``/P (fixed for the table's lifetime so
-    incremental inserts keep the same bucket space — same contract as
-    the Bloom's expected_keys)."""
-    per_shard_n = (expected_keys // n_shards + 1) if expected_keys else None
-
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks: dict[int, list[np.ndarray]] = {}
-        for pdf in it:
-            hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-            shards = pdf["shard"].to_numpy()
-            for s in np.unique(shards):
-                chunks.setdefault(int(s), []).append(hashes[shards == s])
-        rows = []
-        for s, parts in chunks.items():
-            hs = parts[0] if len(parts) == 1 else np.concatenate(parts)
-            m = _cuckoo_m(per_shard_n or len(hs), load)
-            table = np.zeros((m, _CUCKOO_SLOTS), dtype=np.uint16)
-            failed = _cuckoo_insert_keys(table, hs, rng_seed=s)
-            if failed:
-                raise ValueError(
-                    f"cuckoo shard {s} over capacity ({failed} unplaced of "
-                    f"{len(hs)}; size expected_keys for the table lifetime)"
-                )
-            rows.append((s, table.tobytes(), m, len(hs)))
-        yield pd.DataFrame(rows, columns=["shard", "table", "m_buckets", "n_keys"])
-
-    with_shard = seen.select(
-        F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int").alias("shard"),
-        "url_hash",
-    ).repartition(n_shards, "shard")
-    return with_shard.mapInPandas(build, schema=CUCKOO_SCHEMA)
+# =====================================================================
+# One shard-update plan and one membership test for both kinds.  Each
+# kind is a small numpy adapter over one stored row: ``create`` a shard
+# sized for n keys, ``add`` keys, test keys (``contains``) and, cuckoo
+# only, ``remove`` keys.
+# =====================================================================
 
 
-def _cuckoo_update(
-    cuckoo: DataFrame,
-    keys: DataFrame,
-    n_shards: int,
-    op: str,
-    expected_per_shard: int | None = None,
-    default_m: int | None = None,
-) -> DataFrame:
-    """Shard-aligned cogroup applying ``op`` ('insert' | 'delete') of
-    keys(url_hash) to the stored tables — the incremental path.  Each
-    task rewrites one shard table (O(shard bytes) I/O, like the Bloom's
-    OR-merge); shards with no keys pass through untouched.  An insert
-    into a shard with no stored table yet (the seed batch never touched
-    it) creates one, sized from ``expected_per_shard``."""
+class _BloomShard:
+    schema = BLOOM_SCHEMA
 
-    keyed = keys.select("url_hash").withColumn(
-        "shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
-    )
+    def __init__(self, row) -> None:
+        self.shard = int(row["shard"])
+        self.m, self.k = int(row["m_bits"]), int(row["k_hashes"])
+        self.n_keys = int(row["n_keys"])
+        self.bits = np.frombuffer(row["bits"], dtype=np.uint64).copy()
 
-    def update(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if right.empty:
-            if op == "insert" and not left.empty:
-                hashes = left["url_hash"].to_numpy(dtype=np.int64)
-                s = int(left["shard"].iloc[0])
-                m = (
-                    _cuckoo_m(expected_per_shard)
-                    if expected_per_shard
-                    else (default_m or _cuckoo_m(len(hashes)))
-                )
-                table = np.zeros((m, _CUCKOO_SLOTS), dtype=np.uint16)
-                failed = _cuckoo_insert_keys(table, hashes, rng_seed=s)
-                if failed:
-                    raise ValueError(f"cuckoo shard {s} over capacity")
-                return pd.DataFrame(
-                    {
-                        "shard": [s],
-                        "table": [table.tobytes()],
-                        "m_buckets": [m],
-                        "n_keys": [len(hashes)],
-                    }
-                )
-            return pd.DataFrame(
-                {"shard": [], "table": [], "m_buckets": [], "n_keys": []}
-            ).astype({"shard": "int32", "m_buckets": "int64", "n_keys": "int64"})
-        m = int(right["m_buckets"].iloc[0])
-        table = (
-            np.frombuffer(right["table"].iloc[0], dtype=np.uint16)
-            .reshape(m, _CUCKOO_SLOTS)
+    @classmethod
+    def create(cls, shard: int, n: int) -> _BloomShard:
+        m, k = _bloom_params(n)
+        return cls({"shard": shard, "bits": bytes(m // 8), "m_bits": m,
+                    "k_hashes": k, "n_keys": 0})
+
+    def add(self, hashes: np.ndarray) -> None:
+        for pos in _positions(hashes, self.m, self.k):
+            _set_bits(self.bits, pos)
+        self.n_keys += len(hashes)
+
+    def contains(self, hashes: np.ndarray) -> np.ndarray:
+        hit = np.ones(len(hashes), dtype=bool)
+        for pos in _positions(hashes, self.m, self.k):
+            hit &= _test_bits(self.bits, pos)
+        return hit
+
+    def row(self) -> dict:
+        return {"shard": self.shard, "bits": self.bits.tobytes(),
+                "m_bits": self.m, "k_hashes": self.k, "n_keys": self.n_keys}
+
+
+class _CuckooShard:
+    schema = CUCKOO_SCHEMA
+
+    def __init__(self, row) -> None:
+        self.shard = int(row["shard"])
+        self.m, self.n_keys = int(row["m_buckets"]), int(row["n_keys"])
+        self.table = (
+            np.frombuffer(row["table"], dtype=np.uint16)
+            .reshape(self.m, _CUCKOO_SLOTS)
             .copy()
         )
-        n = int(right["n_keys"].iloc[0])
+
+    @classmethod
+    def create(cls, shard: int, n: int) -> _CuckooShard:
+        m = _cuckoo_m(n)
+        return cls({"shard": shard, "table": bytes(2 * m * _CUCKOO_SLOTS),
+                    "m_buckets": m, "n_keys": 0})
+
+    def add(self, hashes: np.ndarray) -> None:
+        failed = _cuckoo_insert_keys(self.table, hashes, rng_seed=self.shard)
+        if failed:
+            raise ValueError(
+                f"cuckoo shard {self.shard} over capacity ({failed} unplaced "
+                f"of {len(hashes)}; size expected_keys for the table lifetime)"
+            )
+        self.n_keys += len(hashes)
+
+    def contains(self, hashes: np.ndarray) -> np.ndarray:
+        return _cuckoo_contains(self.table, hashes)
+
+    def remove(self, hashes: np.ndarray) -> None:
+        self.n_keys -= len(hashes) - _cuckoo_delete_keys(self.table, hashes)
+
+    def row(self) -> dict:
+        return {"shard": self.shard, "table": self.table.tobytes(),
+                "m_buckets": self.m, "n_keys": self.n_keys}
+
+
+_KINDS = {"bloom": _BloomShard, "cuckoo": _CuckooShard}
+
+
+def _shard_of(n_shards: int):
+    return F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
+
+
+def _shard_contains(shard_pdf: pd.DataFrame, hashes: np.ndarray) -> np.ndarray:
+    """Membership of ``hashes`` in one stored shard of either kind; a
+    shard with no stored row holds nothing."""
+    if shard_pdf.empty:
+        return np.zeros(len(hashes), dtype=bool)
+    kind = _BloomShard if "bits" in shard_pdf.columns else _CuckooShard
+    return kind(shard_pdf.iloc[0]).contains(hashes)
+
+
+def _update_shards(
+    stored: DataFrame | None,
+    hashes: DataFrame,
+    kind: type,
+    n_shards: int,
+    op: str,
+    expected_keys: int | None = None,
+) -> DataFrame:
+    """The one plan that writes seen-filter shards: hashes(url_hash)
+    cogroup with the stored shards by shard id, and each task applies
+    ``op`` ('add' | 'remove') to one shard — O(shard bytes) per task.
+    Shards the batch does not touch pass through unchanged.  'add'
+    creates a shard with no stored row, sized for ``expected_keys``/P
+    keys (for the keys it receives when no size is given); a stored
+    shard keeps its size for the table's lifetime.  Duplicate hashes
+    are added as they come (the cuckoo's multiset contract)."""
+    if stored is None:
+        # from an RDD with no partitions: no task, so no Python worker
+        # (a local list would start a second worker pool to decode it)
+        spark = hashes.sparkSession
+        stored = spark.createDataFrame(spark.sparkContext.emptyRDD(), kind.schema)
+    per_shard_n = expected_keys // n_shards + 1 if expected_keys else None
+    keyed = hashes.select(_shard_of(n_shards).alias("shard"), "url_hash")
+
+    def update(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if not right.empty:
+            shard = kind(right.iloc[0])
+        elif op == "add":
+            shard = kind.create(int(left["shard"].iloc[0]), per_shard_n or len(left))
+        else:  # nothing stored to remove from
+            return pd.DataFrame()
         if not left.empty:
-            hashes = left["url_hash"].to_numpy(dtype=np.int64)
-            s = int(right["shard"].iloc[0])
-            if op == "insert":
-                failed = _cuckoo_insert_keys(table, hashes, rng_seed=s)
-                if failed:
-                    raise ValueError(f"cuckoo shard {s} over capacity")
-                n += len(hashes)
-            else:
-                missing = _cuckoo_delete_keys(table, hashes)
-                n -= len(hashes) - missing
-        return pd.DataFrame(
-            {
-                "shard": right["shard"].iloc[:1],
-                "table": [table.tobytes()],
-                "m_buckets": [m],
-                "n_keys": [n],
-            }
-        )
+            getattr(shard, op)(left["url_hash"].to_numpy(dtype=np.int64))
+        return pd.DataFrame([shard.row()])
 
     return (
         keyed.groupBy("shard")
-        .cogroup(cuckoo.groupBy("shard"))
-        .applyInPandas(update, schema=CUCKOO_SCHEMA)
+        .cogroup(stored.groupBy("shard"))
+        .applyInPandas(update, schema=kind.schema)
     )
 
 
-def cuckoo_insert(
-    cuckoo: DataFrame,
-    keys: DataFrame,
-    n_shards: int = 64,
-    expected_per_shard: int | None = None,
+def add_to_seen_filter(
+    stored: DataFrame | None,
+    hashes: DataFrame,
+    kind: str,
+    n_shards: int,
+    expected_keys: int | None = None,
 ) -> DataFrame:
-    """Without an ``expected_per_shard`` hint, a shard the seed build
-    never touched is sized to MATCH the existing shards' bucket count
-    (one tiny metadata aggregate) — sizing it from the current batch
-    alone would break the table-lifetime capacity contract and overflow
-    on the next insert."""
-    default_m = None
-    if expected_per_shard is None:
-        row = cuckoo.agg(F.max("m_buckets").alias("m")).first()
-        if row is not None and row["m"] is not None:
-            default_m = int(row["m"])
-    return _cuckoo_update(
-        cuckoo, keys, n_shards, "insert",
-        expected_per_shard=expected_per_shard, default_m=default_m,
+    """The filter table of ``kind`` ('bloom' | 'cuckoo') holding
+    ``stored`` (None: an empty filter) plus hashes(url_hash)."""
+    return _update_shards(
+        stored, hashes, _KINDS[kind], n_shards, "add", expected_keys
     )
 
 
-def cuckoo_delete(cuckoo: DataFrame, keys: DataFrame, n_shards: int = 64) -> DataFrame:
-    """Retire keys from the seen structure — what frontier expiry/GC
-    needs and what a Bloom filter structurally cannot do."""
-    return _cuckoo_update(cuckoo, keys, n_shards, "delete")
-
-
-def probe_seen_cuckoo(
-    frontier: DataFrame, cuckoo: DataFrame, n_shards: int = 64
+def remove_from_seen_filter(
+    stored: DataFrame, hashes: DataFrame, n_shards: int
 ) -> DataFrame:
-    """frontier + ``seen_maybe`` — same shape/contract as probe_seen
-    (bloom): numeric-only python stage, one shard table per task, the
-    verdict joins back JVM-side."""
-    keyed = frontier.select("url_hash").distinct().withColumn(
-        "shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
-    )
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        hashes = left["url_hash"].to_numpy(dtype=np.int64)
-        if right.empty:
-            hit = np.zeros(len(hashes), dtype=bool)
-        else:
-            m = int(right["m_buckets"].iloc[0])
-            table = np.frombuffer(
-                right["table"].iloc[0], dtype=np.uint16
-            ).reshape(m, _CUCKOO_SLOTS)
-            hit = _cuckoo_contains(table, hashes)
-        return pd.DataFrame({"url_hash": hashes, "seen_maybe": hit})
-
-    verdict = (
-        keyed.groupBy("shard")
-        .cogroup(cuckoo.groupBy("shard"))
-        .applyInPandas(probe, schema=_VERDICT_SCHEMA)
-    )
-    return frontier.join(verdict, "url_hash")
+    """The stored cuckoo table minus one copy of each of hashes(url_hash)
+    — what frontier expiry needs and a Bloom filter cannot do."""
+    return _update_shards(stored, hashes, _CuckooShard, n_shards, "remove")

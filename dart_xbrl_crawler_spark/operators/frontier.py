@@ -17,6 +17,9 @@ are counted, not inserted twice).
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -27,20 +30,30 @@ from . import dedup as D
 from . import politeness as P
 
 
+# the seen filter's settings, pinned in ``<path>_config.json`` at a
+# store's first write; the values used when neither the store nor the
+# caller gives one
+_FILTER_DEFAULTS = {"seen_filter": "bloom", "n_bloom_shards": 64,
+                    "expected_keys": 1 << 22}
+
+
 class FrontierStore:
-    """``expected_keys`` fixes the Bloom bitmap sizing for the table's
-    lifetime so per-insert filters OR-merge with the stored one (same
-    m_bits per shard) — the filter is a durable artifact built
-    incrementally from each batch, never rebuilt from the full frontier
-    (at 10^10 rows a rebuild is a full scan per insert).  Exactness
-    never depends on it: an overgrown filter only raises fpp, and every
-    flagged hash is exactly confirmed in the shard cogroup."""
+    """The URL-seen filter is a durable artifact: each insert adds its
+    batch's hashes into the stored shards (dedup.add_to_seen_filter),
+    never rebuilding it from the full frontier (at 10^10 rows a rebuild
+    is a full scan per insert).  ``n_bloom_shards`` and
+    ``expected_keys`` fix its geometry — the shard of every hash and
+    each shard's size — for the store's lifetime: they are pinned with
+    ``seen_filter`` at the first write, and a reopen adopts them.
+    Exactness never depends on the size: an overgrown filter only
+    raises fpp, and every flagged hash is exactly confirmed in the
+    shard cogroup."""
 
     def __init__(
         self,
         path: str,
-        n_bloom_shards: int = 64,
-        expected_keys: int = 1 << 22,
+        n_bloom_shards: int | None = None,
+        expected_keys: int | None = None,
         compact_every: int = 16,
         expire_keep_last: int | None = None,
         storage: str = "parquet",
@@ -76,19 +89,25 @@ class FrontierStore:
         self.host_metrics = SnapshotTable(path + "_host_metrics")
         self.metrics = SnapshotTable(path + "_metrics")
         self.bloom = SnapshotTable(path + "_bloom")
-        self.n_bloom_shards = n_bloom_shards
-        self.expected_keys = expected_keys
         # metrics chains grow one snapshot per round/insert; past this
         # many they fold into running sums (read_all stays O(1) files)
         self.metrics_compact_every = metrics_compact_every
-        # 'bloom' (OR-merge incremental) or 'cuckoo' (insert/delete
-        # incremental — supports retiring keys on expiry, which a Bloom
-        # structurally cannot); both probe through the same dedup plan.
-        # The choice is a STORE property, not a session one: it persists
-        # in a config sidecar so a later process (e.g. the CLI's expire)
-        # reopens the store with the right filter semantics; an explicit
+        # seen_filter: 'bloom' or 'cuckoo' (also retires keys on expiry,
+        # which a Bloom structurally cannot); both update and probe
+        # through the same dedup plans.  The kind and the geometry are
+        # STORE properties, not session ones: they persist in a config
+        # sidecar so a later process (e.g. the CLI's expire) reopens the
+        # store with the filter it was built with; an explicit
         # conflicting argument is an error, not a silent mix.
-        self.seen_filter = self._resolve_seen_filter(path, seen_filter)
+        cfg = self._resolve_config(
+            path,
+            seen_filter=seen_filter,
+            n_bloom_shards=n_bloom_shards,
+            expected_keys=expected_keys,
+        )
+        self.seen_filter = cfg["seen_filter"]
+        self.n_bloom_shards = cfg["n_bloom_shards"]
+        self.expected_keys = cfg["expected_keys"]
         # every filter commit is a FULL filter image (at the 10^10-url
         # design point ≈ 12 GB for the bloom) — an unbounded chain is a
         # real disk leak over a long crawl.  Keep the last few (enough
@@ -104,81 +123,65 @@ class FrontierStore:
         self._queued_correction: int | None = None
 
     @staticmethod
-    def _resolve_seen_filter(path: str, requested: str | None) -> str:
-        import json
-        import os
-
-        if requested is not None and requested not in ("bloom", "cuckoo"):
-            raise ValueError(f"unknown seen_filter {requested!r}")
+    def _read_config(path: str) -> dict:
         cfg_path = path + "_config.json"
-        stored = None
-        if os.path.exists(cfg_path):
-            with open(cfg_path) as f:
-                stored = json.load(f).get("seen_filter")
-        if stored is not None:
-            if requested is not None and requested != stored:
+        if not os.path.exists(cfg_path):
+            return {}
+        with open(cfg_path) as f:
+            return json.load(f)
+
+    @classmethod
+    def _resolve_config(cls, path: str, **requested) -> dict:
+        if requested["seen_filter"] not in (None, "bloom", "cuckoo"):
+            raise ValueError(f"unknown seen_filter {requested['seen_filter']!r}")
+        stored = cls._read_config(path)
+        cfg = {}
+        for key, default in _FILTER_DEFAULTS.items():
+            want, have = requested[key], stored.get(key)
+            if have is not None and want is not None and want != have:
                 raise ValueError(
-                    f"store at {path} was created with seen_filter="
-                    f"{stored!r}; cannot reopen as {requested!r}"
+                    f"store at {path} was created with {key}={have!r}; "
+                    f"cannot reopen with {want!r}"
                 )
-            return stored
-        # no stored config: resolve but do NOT stamp here — a read-only
-        # open (status/a pre-bootstrap probe) must not pin the filter
-        # kind.  The stamp happens at the first WRITE (_stamp_config
-        # from bootstrap/insert), so every created store is pinned and
-        # a later conflicting explicit reopen still errors.
-        return requested or "bloom"
+            cfg[key] = next(v for v in (have, want, default) if v is not None)
+        # no stored value: resolve but do NOT stamp here — a read-only
+        # open (status/a pre-bootstrap probe) must not pin the filter.
+        # The stamp happens at the first WRITE (_stamp_config from
+        # bootstrap/insert), so every created store is pinned and a
+        # later conflicting explicit reopen still errors.
+        return cfg
 
     def _stamp_config(self) -> None:
-        """Persist the resolved filter kind at store-creation time (the
-        first write path) if not already pinned."""
-        import json
-        import os
-
-        cfg_path = self.table_path + "_config.json"
-        if os.path.exists(cfg_path):
+        """Persist the resolved filter settings at the first write if
+        not already pinned (a store from before the geometry was pinned
+        gains it at its next write)."""
+        if _FILTER_DEFAULTS.keys() <= self._read_config(self.table_path).keys():
             return
+        cfg_path = self.table_path + "_config.json"
         os.makedirs(os.path.dirname(cfg_path) or ".", exist_ok=True)
         tmp = cfg_path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"seen_filter": self.seen_filter}, f)
+            json.dump({k: getattr(self, k) for k in _FILTER_DEFAULTS}, f)
         os.replace(tmp, cfg_path)
+
+    def _commit_filter(self, seen_filter: DataFrame, note: str) -> None:
+        self.bloom.commit(seen_filter, note=note)
+        self.bloom.expire(self.filter_keep_last)
 
     def _commit_bloom_batch(
         self, spark: SparkSession, hashes: DataFrame, note: str
     ) -> None:
-        """Fold a batch of url_hashes into the stored seen filter —
-        bloom: partial build + OR-merge; cuckoo: shard-aligned
-        incremental insert into the stored tables."""
-        self._stamp_config()  # first write pins the filter kind
-        if self.seen_filter == "cuckoo":
-            if self.bloom.snapshots():
-                merged = D.cuckoo_insert(
-                    self.bloom.read(spark),
-                    hashes,
-                    n_shards=self.n_bloom_shards,
-                    expected_per_shard=self.expected_keys // self.n_bloom_shards + 1,
-                )
-            else:
-                merged = D.build_cuckoo_filter(
-                    hashes,
-                    n_shards=self.n_bloom_shards,
-                    expected_keys=self.expected_keys,
-                )
-            self.bloom.commit(merged, note=note)
-            self.bloom.expire(self.filter_keep_last)
-            return
-        batch = D.build_seen_filter(
-            hashes,
-            n_shards=self.n_bloom_shards,
-            expected_keys=self.expected_keys,
+        """Add a batch of url_hashes into the stored seen filter (an
+        empty one at the store's first write)."""
+        self._stamp_config()  # first write pins the filter settings
+        stored = self.bloom.read(spark) if self.bloom.snapshots() else None
+        self._commit_filter(
+            D.add_to_seen_filter(
+                stored, hashes, self.seen_filter, self.n_bloom_shards,
+                self.expected_keys,
+            ),
+            note,
         )
-        if self.bloom.snapshots():
-            merged = D.merge_seen_filters(self.bloom.read(spark), batch)
-        else:
-            merged = batch
-        self.bloom.commit(merged, note=note)
-        self.bloom.expire(self.filter_keep_last)
 
     def retire_seen(self, spark: SparkSession, hashes: DataFrame) -> None:
         """Remove url_hashes from the seen filter (cuckoo only —
@@ -187,13 +190,12 @@ class FrontierStore:
         Commits a new filter snapshot."""
         if self.seen_filter != "cuckoo":
             raise ValueError("retire_seen requires seen_filter='cuckoo'")
-        self.bloom.commit(
-            D.cuckoo_delete(
-                self.bloom.read(spark), hashes, n_shards=self.n_bloom_shards
+        self._commit_filter(
+            D.remove_from_seen_filter(
+                self.bloom.read(spark), hashes, self.n_bloom_shards
             ),
-            note="retire",
+            "retire",
         )
-        self.bloom.expire(self.filter_keep_last)
 
     def _commit_insert_metrics(
         self, spark: SparkSession, fresh: DataFrame, n_fresh: int, n_dup: int
@@ -278,9 +280,9 @@ class FrontierStore:
         The batch is persisted once and every count comes off that
         cache — the round-1 version recomputed the canonicalizer +
         dedup lineage three times (canon.count, fresh.count, commit).
-        The Bloom filter is the STORED one, incrementally OR-merged with
-        this batch's filter afterwards — one O(|batch|) build per
-        insert, never a rebuild from the full frontier."""
+        The seen filter is the STORED one; the inserted hashes are
+        added into its shards afterwards — O(|batch|) keys per insert,
+        never a rebuild from the full frontier."""
         frontier = self.table.read(spark)
         batch = with_url_canon(urls).dropDuplicates(["url_hash"]).persist(
             StorageLevel.MEMORY_AND_DISK
@@ -725,164 +727,149 @@ class FrontierStore:
 
         summaries: list[dict] = []
         try:
-            self._crawl_loop(
-                spark, pages, robots, run_ts, max_rounds, round_ms,
-                salt_buckets, max_per_host, n_partitions, discover,
-                text_out, backoff_factor, priority_decay, extract_links,
-                summaries, broadcast_robots, respect_nofollow,
-                drop_traps, drop_assets,
-            )
+            for rid in range(max_rounds):
+                # compact the metrics chains BETWEEN rounds, never inside
+                # one: compaction rewrites the chains and GCs the old
+                # snapshot dirs, and a round's live frames (popped, fetched,
+                # the backoff-adjusted robots) all carry lazy lineage into
+                # those files — a lost cache block after an in-round
+                # compaction would recompute through deleted dirs and throw.
+                # Here nothing is live yet: the previous round's fetch cache
+                # is released first (its consumers all ran last iteration),
+                # and this round's robots frame is built AFTER the fold.
+                self.release()
+                self._maybe_compact_metrics(spark)
+                # O(|metrics|) queue check — never a frontier scan.  A store
+                # written before lineage metrics existed has no chain yet:
+                # fall back to the exact count once (its first round commits
+                # metrics and every later check is chain-based).
+                try:
+                    queued = self.lineage_counts(spark).get("queued", 0)
+                except FileNotFoundError:
+                    queued = self.state_counts(spark).get("queued", 0)
+                if queued == 0:
+                    break
+                robots_rid = robots
+                if backoff_factor is not None and rid > 0:
+                    # adaptive politeness: scale delays by the failure rates
+                    # observed in earlier rounds (per-host metrics chain)
+                    robots_rid = P.apply_backoff(
+                        robots, self.host_stats(spark), factor=backoff_factor,
+                        broadcast=broadcast_robots,
+                    )
+                snap, fetched_pages = self.run_round(
+                    spark,
+                    pages,
+                    robots_rid,
+                    run_ts,
+                    round_id=rid,
+                    round_ms=round_ms,
+                    salt_buckets=salt_buckets,
+                    max_per_host=max_per_host,
+                    n_partitions=n_partitions,
+                    broadcast_robots=broadcast_robots,
+                )
+                n_fetched = fetched_pages.count()
+                if text_out and n_fetched:
+                    # crawl → extract in one loop (the reference's
+                    # crawl-then-process orchestration): per-round text
+                    # extraction appended to a parquet sink.  ZIP payloads
+                    # run the XBRL kernel; generic html gets stripped text.
+                    # meta-robots-noindex pages are crawled (their links
+                    # still feed discovery) but stay out of the content sink
+                    from . import extract as X
+                    from ..functions.links import (
+                        decode_permissive,
+                        meta_robots_flags,
+                    )
+
+                    sink_pages = fetched_pages
+                    if respect_nofollow:
+                        sink_pages = sink_pages.filter(
+                            ~meta_robots_flags(
+                                decode_permissive(F.col("html"))
+                            )["noindex"]
+                        )
+                    X.extract_text(
+                        sink_pages.select("url", "html")
+                        .withColumn("report_nm", F.lit(None).cast("string"))
+                        .withColumn("rcept_dt", F.lit(None).cast("string")),
+                        run_ts,
+                    ).write.mode("append").parquet(text_out)
+                n_ins = n_dup = 0
+                if discover and n_fetched:
+                    # carry the parent's priority through the explode (no
+                    # join-back); a link found under several parents takes
+                    # the BEST parent minus one decay step
+                    links = extract_links(
+                        fetched_pages.select(
+                            "url", "url_canon", "host", "priority", "html"
+                        ),
+                        carry=("priority",),
+                        respect_nofollow=respect_nofollow,
+                    )
+                    # sitemap/feed pages are discovery channels too: their
+                    # <loc>/<link> entries join the edge set with the SAME
+                    # priority inheritance, carried through the explode
+                    # like extract_links does (no join-back).  All three
+                    # extractors are codegen regexp walks over the one
+                    # fetched frame — a non-sitemap page simply yields no
+                    # blocks, so this adds no extra scan and no python.
+                    from ..functions.links import (
+                        extract_feed_entries,
+                        extract_sitemap_entries,
+                    )
+
+                    src_pages = fetched_pages.select("url", "priority", "html")
+                    absolute = F.col("link").rlike("^https?://")
+                    sm = (
+                        extract_sitemap_entries(src_pages, carry=("priority",))
+                        .select("src_url", F.col("loc").alias("link"), "priority")
+                        .filter(absolute)  # locs are absolute by spec
+                    )
+                    fd = (
+                        extract_feed_entries(src_pages, carry=("priority",))
+                        .select("src_url", "link", "priority")
+                        .filter(absolute)
+                    )
+                    links = links.select(
+                        "src_url", "link", "priority"
+                    ).unionByName(sm).unionByName(fd)
+                    if drop_traps:
+                        # map-side gate BEFORE the dedup shuffle: trapped
+                        # urls never cost a shuffle write or a seen-probe
+                        from ..functions.traps import is_trap
+
+                        links = links.filter(~is_trap(F.col("link")))
+                    if drop_assets:
+                        from ..functions.traps import is_static_asset
+
+                        links = links.filter(~is_static_asset(F.col("link")))
+                    discovered = (
+                        links.groupBy(F.col("link").alias("url"))
+                        .agg(
+                            (F.max("priority") - F.lit(priority_decay)).alias(
+                                "priority"
+                            )
+                        )
+                    )
+                    _, n_ins, n_dup = self.insert(
+                        spark, discovered, run_ts, depth=rid + 1
+                    )
+                summaries.append(
+                    {
+                        "round_id": rid,
+                        "snapshot": snap,
+                        "fetched": n_fetched,
+                        "discovered_new": n_ins,
+                        "discovered_dup": n_dup,
+                    }
+                )
+                if n_fetched == 0 and n_ins == 0:
+                    break  # starved round and nothing new → stop
         finally:
             self.release()
         return summaries
-
-    def _crawl_loop(
-        self, spark, pages, robots, run_ts, max_rounds, round_ms,
-        salt_buckets, max_per_host, n_partitions, discover, text_out,
-        backoff_factor, priority_decay, extract_links, summaries,
-        broadcast_robots=True, respect_nofollow=True, drop_traps=True,
-        drop_assets=True,
-    ) -> None:
-        for rid in range(max_rounds):
-            # compact the metrics chains BETWEEN rounds, never inside
-            # one: compaction rewrites the chains and GCs the old
-            # snapshot dirs, and a round's live frames (popped, fetched,
-            # the backoff-adjusted robots) all carry lazy lineage into
-            # those files — a lost cache block after an in-round
-            # compaction would recompute through deleted dirs and throw.
-            # Here nothing is live yet: the previous round's fetch cache
-            # is released first (its consumers all ran last iteration),
-            # and this round's robots frame is built AFTER the fold.
-            self.release()
-            self._maybe_compact_metrics(spark)
-            # O(|metrics|) queue check — never a frontier scan.  A store
-            # written before lineage metrics existed has no chain yet:
-            # fall back to the exact count once (its first round commits
-            # metrics and every later check is chain-based).
-            try:
-                queued = self.lineage_counts(spark).get("queued", 0)
-            except FileNotFoundError:
-                queued = self.state_counts(spark).get("queued", 0)
-            if queued == 0:
-                break
-            robots_rid = robots
-            if backoff_factor is not None and rid > 0:
-                # adaptive politeness: scale delays by the failure rates
-                # observed in earlier rounds (per-host metrics chain)
-                robots_rid = P.apply_backoff(
-                    robots, self.host_stats(spark), factor=backoff_factor,
-                    broadcast=broadcast_robots,
-                )
-            snap, fetched_pages = self.run_round(
-                spark,
-                pages,
-                robots_rid,
-                run_ts,
-                round_id=rid,
-                round_ms=round_ms,
-                salt_buckets=salt_buckets,
-                max_per_host=max_per_host,
-                n_partitions=n_partitions,
-                broadcast_robots=broadcast_robots,
-            )
-            n_fetched = fetched_pages.count()
-            if text_out and n_fetched:
-                # crawl → extract in one loop (the reference's
-                # crawl-then-process orchestration): per-round text
-                # extraction appended to a parquet sink.  ZIP payloads
-                # run the XBRL kernel; generic html gets stripped text.
-                # meta-robots-noindex pages are crawled (their links
-                # still feed discovery) but stay out of the content sink
-                from . import extract as X
-                from ..functions.links import (
-                    decode_permissive,
-                    meta_robots_flags,
-                )
-
-                sink_pages = fetched_pages
-                if respect_nofollow:
-                    sink_pages = sink_pages.filter(
-                        ~meta_robots_flags(
-                            decode_permissive(F.col("html"))
-                        )["noindex"]
-                    )
-                X.extract_text(
-                    sink_pages.select("url", "html")
-                    .withColumn("report_nm", F.lit(None).cast("string"))
-                    .withColumn("rcept_dt", F.lit(None).cast("string")),
-                    run_ts,
-                ).write.mode("append").parquet(text_out)
-            n_ins = n_dup = 0
-            if discover and n_fetched:
-                # carry the parent's priority through the explode (no
-                # join-back); a link found under several parents takes
-                # the BEST parent minus one decay step
-                links = extract_links(
-                    fetched_pages.select(
-                        "url", "url_canon", "host", "priority", "html"
-                    ),
-                    carry=("priority",),
-                    respect_nofollow=respect_nofollow,
-                )
-                # sitemap/feed pages are discovery channels too: their
-                # <loc>/<link> entries join the edge set with the SAME
-                # priority inheritance, carried through the explode
-                # like extract_links does (no join-back).  All three
-                # extractors are codegen regexp walks over the one
-                # fetched frame — a non-sitemap page simply yields no
-                # blocks, so this adds no extra scan and no python.
-                from ..functions.links import (
-                    extract_feed_entries,
-                    extract_sitemap_entries,
-                )
-
-                src_pages = fetched_pages.select("url", "priority", "html")
-                absolute = F.col("link").rlike("^https?://")
-                sm = (
-                    extract_sitemap_entries(src_pages, carry=("priority",))
-                    .select("src_url", F.col("loc").alias("link"), "priority")
-                    .filter(absolute)  # locs are absolute by spec
-                )
-                fd = (
-                    extract_feed_entries(src_pages, carry=("priority",))
-                    .select("src_url", "link", "priority")
-                    .filter(absolute)
-                )
-                links = links.select(
-                    "src_url", "link", "priority"
-                ).unionByName(sm).unionByName(fd)
-                if drop_traps:
-                    # map-side gate BEFORE the dedup shuffle: trapped
-                    # urls never cost a shuffle write or a seen-probe
-                    from ..functions.traps import is_trap
-
-                    links = links.filter(~is_trap(F.col("link")))
-                if drop_assets:
-                    from ..functions.traps import is_static_asset
-
-                    links = links.filter(~is_static_asset(F.col("link")))
-                discovered = (
-                    links.groupBy(F.col("link").alias("url"))
-                    .agg(
-                        (F.max("priority") - F.lit(priority_decay)).alias(
-                            "priority"
-                        )
-                    )
-                )
-                _, n_ins, n_dup = self.insert(
-                    spark, discovered, run_ts, depth=rid + 1
-                )
-            summaries.append(
-                {
-                    "round_id": rid,
-                    "snapshot": snap,
-                    "fetched": n_fetched,
-                    "discovered_new": n_ins,
-                    "discovered_dup": n_dup,
-                }
-            )
-            if n_fetched == 0 and n_ins == 0:
-                break  # starved round and nothing new → stop
 
     def state_counts(self, spark: SparkSession) -> dict[str, int]:
         """EXACT per-state counts — one full scan of the merged table.

@@ -140,10 +140,11 @@ class CrawlBench:
     its own work:
 
       setup (UNTIMED)  — the durable artifacts a round inherits from
-        previous rounds: the seen-hash set and its incrementally-merged
+        previous rounds: the seen-hash set and its incrementally-grown
         Bloom filter.  Rebuilding them per measurement would charge the
         round for work the engine explicitly never repeats
-        (FrontierStore keeps the bloom as a durable OR-merged artifact).
+        (FrontierStore keeps the bloom as a durable, incrementally grown
+        artifact).
       insert (timed)   — discovery-side: canonicalize the batch (pandas
         UDF, persisted ONCE — unpersisted, multiple consumers race to
         compute the cache and 3×cores python workers oversubscribe the
@@ -172,8 +173,8 @@ class CrawlBench:
             with_url_canon(seen_urls).select("url_hash").persist(self._lvl)
         )
         self.seen.count()
-        self.bloom = D.build_seen_filter(
-            self.seen, n_shards=64, expected_keys=n_urls // 10
+        self.bloom = D.add_to_seen_filter(
+            None, self.seen, "bloom", n_shards=64, expected_keys=n_urls // 10
         ).persist(self._lvl)
         self.bloom.count()
         # small-host delay 5 ms: budget 40 k keeps the 211 small hosts

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from dart_xbrl_crawler_spark import fixtures, oracle
 from dart_xbrl_crawler_spark.functions.urls import canonicalize_one, with_url_canon
-from dart_xbrl_crawler_spark.operators import dedup as D
 from dart_xbrl_crawler_spark.operators import politeness as P
 from dart_xbrl_crawler_spark.operators import scheduler as S
 from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
@@ -86,32 +85,6 @@ def test_with_url_canon_spark(spark, fixture_bundle):
     n_urls = df.count()
     n_hashes = df.select("url_hash").distinct().count()
     assert n_hashes <= n_urls - 3
-
-
-# --------------------------------------------------------------- bloom
-def test_bloom_no_false_negatives_and_exact_dedup(spark):
-    seen_pd = pd.DataFrame({"url_hash": [i * 2_654_435_761 % 2**63 for i in range(5000)]})
-    new_pd = pd.DataFrame(
-        {"url_hash": list(seen_pd["url_hash"][:500]) + [-(i + 1) for i in range(4500)]}
-    )
-    seen = spark.createDataFrame(seen_pd, schema="url_hash long")
-    new = spark.createDataFrame(new_pd, schema="url_hash long")
-
-    bloom = D.build_seen_filter(seen, n_shards=8, fpp=0.01).cache()
-    probed = D.probe_seen(new, bloom, n_shards=8)
-    # no false negatives: every truly-seen row flags
-    truly_seen = set(seen_pd["url_hash"][:500])
-    flags = {r["url_hash"]: r["seen_maybe"] for r in probed.collect()}
-    assert all(flags[h] for h in truly_seen)
-
-    # exact dedup survives = frontier − seen exactly
-    out = D.dedup_urls(new, seen, bloom, n_shards=8)
-    got = {r["url_hash"] for r in out.collect()}
-    assert got == set(new_pd["url_hash"]) - set(seen_pd["url_hash"])
-
-    # fpp sanity: flagged unseen rows should be rare
-    unseen_flagged = sum(1 for h, f in flags.items() if f and h not in truly_seen)
-    assert unseen_flagged < 0.05 * 4500
 
 
 # ---------------------------------------------------------- politeness

@@ -140,29 +140,6 @@ def test_delta_commit_bytes_scale_with_round(spark, tmp_path):
     assert fetched.count() == 70
 
 
-def test_incremental_bloom_across_inserts(spark, tmp_path):
-    """The URL-seen filter is a durable artifact OR-merged per insert —
-    never rebuilt from the full frontier — and dedup stays exact."""
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-
-    store = FrontierStore(str(tmp_path / "fb"), n_bloom_shards=8)
-    mk = lambda lo, hi: spark.range(lo, hi).select(
-        F.concat(F.lit("https://b.example/"), F.col("id").cast("string")).alias("url"),
-        F.lit(0.0).alias("priority"),
-    )
-    store.bootstrap(mk(0, 1000), RUN_TS)
-    assert len(store.bloom.snapshots()) == 1
-    # overlapping insert: 500 dupes + 500 new
-    _, n_ins, n_dup = store.insert(spark, mk(500, 1500), RUN_TS)
-    assert (n_ins, n_dup) == (500, 500)
-    assert len(store.bloom.snapshots()) == 2  # ONE merged commit, no rebuild
-    # fully-duplicate insert → nothing enters, no bloom commit
-    _, n_ins2, n_dup2 = store.insert(spark, mk(0, 1500), RUN_TS)
-    assert (n_ins2, n_dup2) == (0, 1500)
-    assert len(store.bloom.snapshots()) == 2
-    assert store.state_counts(spark) == {"queued": 1500}
-
-
 def test_delta_resume_after_unpublished_write(spark, tmp_path):
     """A crashed round (delta written but never published) must be
     invisible to readers — resume sees the previous state."""

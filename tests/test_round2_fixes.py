@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dart_xbrl_crawler_spark import fixtures, oracle
-from dart_xbrl_crawler_spark.operators import dedup as D
 from dart_xbrl_crawler_spark.operators import extract as X
 from dart_xbrl_crawler_spark.plans import pipeline
 from dart_xbrl_crawler_spark.schemas import CORP_MAP, PAGES, SEEDS
@@ -177,25 +176,3 @@ def test_pages_with_meta_no_ambiguous_columns(spark, fixture_bundle):
     cm_df = spark.createDataFrame(corp_map, schema=CORP_MAP)
     facts = pipeline.run_extract(pages_df, seeds_df, cm_df, RUN_TS)
     assert facts.count() > 0
-
-
-# ---------------------------------------------------------------------
-# bloom: per-shard sizing must cover ALL Arrow chunks of a partition
-# ---------------------------------------------------------------------
-
-def test_bloom_sizing_spans_arrow_chunks(spark):
-    # 40k keys in 4 shards → ~10k keys/shard, far beyond one ~2048-row
-    # Arrow chunk; with the old first-chunk sizing, n_keys ≫ m/10 and
-    # the observed fpp explodes
-    n = 40_000
-    seen = spark.range(n).select((F.col("id") * 4).alias("url_hash"))
-    bloom = D.build_seen_filter(seen, n_shards=4).toPandas()
-    assert int(bloom["n_keys"].sum()) == n
-    for _, row in bloom.iterrows():
-        # sized for the full shard at fpp=0.01 → ≥9.5 bits/key
-        assert row["m_bits"] >= 9 * row["n_keys"]
-    # observed fpp on a disjoint probe set stays near the target
-    bloom_df = D.build_seen_filter(seen, n_shards=4)
-    probe = spark.range(n).select((F.col("id") * 4 + 1).alias("url_hash"))
-    fresh = D.dedup_urls(probe, seen, bloom_df, n_shards=4)
-    assert fresh.count() == n  # exactness: nothing falsely removed

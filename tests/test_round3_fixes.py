@@ -11,7 +11,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from dart_xbrl_crawler_spark.operators import dedup as D
 from dart_xbrl_crawler_spark.operators import politeness as P
 
 RUN_TS = "2026-01-16 00:00:00"
@@ -156,35 +155,6 @@ def test_pop_round_many_hosts_no_forced_broadcast(spark):
     assert _plan(small_gate).count("BroadcastHashJoin") > _plan(
         gated_off
     ).count("BroadcastHashJoin")
-
-
-# ------------------------------- adaptive broadcast: dedup confirmed
-def test_dedup_no_hint_large_overlap_no_forced_broadcast(spark):
-    """Without a caller bound and with overlap above broadcast_max_rows,
-    dedup must fall back to a non-broadcast anti-join — and stay exact."""
-    from dart_xbrl_crawler_spark.functions.urls import with_url_canon
-
-    canon = with_url_canon(
-        spark.range(4000).select(
-            F.concat(F.lit("https://d.example/"), F.col("id").cast("string")).alias(
-                "url"
-            ),
-            "id",
-        )
-    )
-    seen = canon.filter(F.col("id") % 2 == 0).select("url_hash")
-    bloom = D.build_seen_filter(seen, n_shards=8)
-    out = D.dedup_urls(
-        canon.drop("id"), seen, bloom, n_shards=8, broadcast_max_rows=100
-    )
-    assert out.count() == 2000  # exact: odd ids survive
-    assert "BroadcastHashJoin" not in _plan(out)
-    # with a fitting hint the broadcast fast path is kept
-    out2 = D.dedup_urls(
-        canon.drop("id"), seen, bloom, n_shards=8, max_confirmed_hint=4000
-    )
-    assert out2.count() == 2000
-    assert "BroadcastHashJoin" in _plan(out2)
 
 
 # ------------------------------------- lineage metrics from deltas

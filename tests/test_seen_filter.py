@@ -1,7 +1,8 @@
-"""Partitioned cuckoo filter (the north star's Bloom/cuckoo pairing):
-no false negatives, bounded fpp, shard-aligned incremental insert,
-DELETION (the capability Bloom lacks), dedup_urls interchangeability,
-and FrontierStore wiring."""
+"""The sharded URL-seen filters (the north star's Bloom/cuckoo pairing):
+no false negatives, bounded fpp, shard-aligned incremental adds,
+DELETION (the capability Bloom lacks), Bloom bytes against a numpy
+reference, dedup_urls interchangeability and exactness, and
+FrontierStore wiring (filter kind and geometry pinned per store)."""
 
 from __future__ import annotations
 
@@ -72,35 +73,35 @@ def test_cuckoo_filter_probe_and_incremental_insert(spark):
     fresh = np.setdiff1d(
         rng.randint(-(2**62), 2**62, size=5_000, dtype=np.int64), seen
     )
-    cf = D.build_cuckoo_filter(
-        _hashes_df(spark, seen), n_shards=8, expected_keys=40_000
+    cf = D.add_to_seen_filter(
+        None, _hashes_df(spark, seen), "cuckoo", n_shards=8, expected_keys=40_000
     )
-    probed = D.probe_seen_cuckoo(_hashes_df(spark, seen[:2000]), cf, n_shards=8)
+    probed = D.probe_seen(_hashes_df(spark, seen[:2000]), cf, n_shards=8)
     assert probed.filter(~F.col("seen_maybe")).count() == 0  # no false neg
-    miss = D.probe_seen_cuckoo(_hashes_df(spark, fresh), cf, n_shards=8)
+    miss = D.probe_seen(_hashes_df(spark, fresh), cf, n_shards=8)
     assert miss.filter(F.col("seen_maybe")).count() <= 5  # fpp tiny
 
     # incremental insert: new keys land, old keys stay, via the stored
     # tables (one cogroup task per shard)
-    cf2 = D.cuckoo_insert(
-        cf, _hashes_df(spark, fresh), n_shards=8, expected_per_shard=5_001
+    cf2 = D.add_to_seen_filter(
+        cf, _hashes_df(spark, fresh), "cuckoo", n_shards=8, expected_keys=40_000
     )
     both = np.concatenate([seen[:1000], fresh[:1000]])
-    probed2 = D.probe_seen_cuckoo(_hashes_df(spark, both), cf2, n_shards=8)
+    probed2 = D.probe_seen(_hashes_df(spark, both), cf2, n_shards=8)
     assert probed2.filter(~F.col("seen_maybe")).count() == 0
 
 
 def test_cuckoo_delete_spark(spark):
     rng = np.random.RandomState(11)
     keys = np.unique(rng.randint(-(2**62), 2**62, size=8_000, dtype=np.int64))
-    cf = D.build_cuckoo_filter(
-        _hashes_df(spark, keys), n_shards=4, expected_keys=16_000
+    cf = D.add_to_seen_filter(
+        None, _hashes_df(spark, keys), "cuckoo", n_shards=4, expected_keys=16_000
     )
     gone, keep = keys[::2], keys[1::2]
-    cf2 = D.cuckoo_delete(cf, _hashes_df(spark, gone), n_shards=4)
-    kept = D.probe_seen_cuckoo(_hashes_df(spark, keep), cf2, n_shards=4)
+    cf2 = D.remove_from_seen_filter(cf, _hashes_df(spark, gone), n_shards=4)
+    kept = D.probe_seen(_hashes_df(spark, keep), cf2, n_shards=4)
     assert kept.filter(~F.col("seen_maybe")).count() == 0
-    dropped = D.probe_seen_cuckoo(_hashes_df(spark, gone), cf2, n_shards=4)
+    dropped = D.probe_seen(_hashes_df(spark, gone), cf2, n_shards=4)
     assert dropped.filter(F.col("seen_maybe")).count() <= 4
 
 
@@ -116,10 +117,149 @@ def test_dedup_urls_with_cuckoo_filter_exact(spark):
     seen = with_url_canon(
         spark.createDataFrame(pd.DataFrame({"url": urls[:150] + ["https://cd.example/other"]}))
     ).select("url_hash")
-    cf = D.build_cuckoo_filter(seen, n_shards=8, expected_keys=1_000)
+    cf = D.add_to_seen_filter(None, seen, "cuckoo", n_shards=8, expected_keys=1_000)
     out = D.dedup_urls(frontier, seen, cf, n_shards=8, max_confirmed_hint=200)
     got = {r["url"] for r in out.select("url").collect()}
     assert got == set(urls[150:])
+
+
+def test_cuckoo_add_remove_membership_and_counts(spark):
+    """After two adds and a remove, every committed hash tests present,
+    every retired hash absent, and each shard's n_keys counts the keys
+    it still holds."""
+    rng = np.random.RandomState(5)
+    keys = np.unique(rng.randint(-(2**62), 2**62, size=3_000, dtype=np.int64))
+    cf = D.add_to_seen_filter(
+        None, _hashes_df(spark, keys[:2_000]), "cuckoo", 8, expected_keys=4_096
+    )
+    cf = D.add_to_seen_filter(
+        cf, _hashes_df(spark, keys[2_000:]), "cuckoo", 8, expected_keys=4_096
+    ).localCheckpoint()
+    retired = keys[::3]
+    kept = np.setdiff1d(keys, retired)
+    cf = D.remove_from_seen_filter(cf, _hashes_df(spark, retired), 8).localCheckpoint()
+    verdict = D.probe_seen(_hashes_df(spark, keys), cf, 8).toPandas()
+    seen_maybe = dict(zip(verdict["url_hash"], verdict["seen_maybe"]))
+    assert all(seen_maybe[h] for h in kept)
+    assert not any(seen_maybe[h] for h in retired)
+    n_keys = {r["shard"]: r["n_keys"] for r in cf.collect()}
+    assert n_keys == pd.Series(np.mod(kept, 8)).value_counts().to_dict()
+
+
+# ------------------------------------------------------------- bloom
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_bloom_no_false_negatives_and_exact_dedup(spark):
+    seen_pd = pd.DataFrame({"url_hash": [i * 2_654_435_761 % 2**63 for i in range(5000)]})
+    new_pd = pd.DataFrame(
+        {"url_hash": list(seen_pd["url_hash"][:500]) + [-(i + 1) for i in range(4500)]}
+    )
+    seen = spark.createDataFrame(seen_pd, schema="url_hash long")
+    new = spark.createDataFrame(new_pd, schema="url_hash long")
+
+    bloom = D.add_to_seen_filter(None, seen, "bloom", n_shards=8).cache()
+    probed = D.probe_seen(new, bloom, n_shards=8)
+    # no false negatives: every truly-seen row flags
+    truly_seen = set(seen_pd["url_hash"][:500])
+    flags = {r["url_hash"]: r["seen_maybe"] for r in probed.collect()}
+    assert all(flags[h] for h in truly_seen)
+
+    # exact dedup survives = frontier − seen exactly
+    out = D.dedup_urls(new, seen, bloom, n_shards=8)
+    got = {r["url_hash"] for r in out.collect()}
+    assert got == set(new_pd["url_hash"]) - set(seen_pd["url_hash"])
+
+    # fpp sanity: flagged unseen rows should be rare
+    unseen_flagged = sum(1 for h, f in flags.items() if f and h not in truly_seen)
+    assert unseen_flagged < 0.05 * 4500
+
+
+def test_bloom_sizing_spans_arrow_chunks(spark):
+    # 40k keys in 4 shards → ~10k keys/shard, far beyond one ~2048-row
+    # Arrow chunk; with the old first-chunk sizing, n_keys ≫ m/10 and
+    # the observed fpp explodes
+    n = 40_000
+    seen = spark.range(n).select((F.col("id") * 4).alias("url_hash"))
+    bloom = D.add_to_seen_filter(None, seen, "bloom", n_shards=4).toPandas()
+    assert int(bloom["n_keys"].sum()) == n
+    for _, row in bloom.iterrows():
+        # sized for the full shard at fpp=0.01 → ≥9.5 bits/key
+        assert row["m_bits"] >= 9 * row["n_keys"]
+    # observed fpp on a disjoint probe set stays near the target
+    bloom_df = D.add_to_seen_filter(None, seen, "bloom", n_shards=4)
+    probe = spark.range(n).select((F.col("id") * 4 + 1).alias("url_hash"))
+    fresh = D.dedup_urls(probe, seen, bloom_df, n_shards=4)
+    assert fresh.count() == n  # exactness: nothing falsely removed
+
+
+def test_dedup_no_hint_large_overlap_no_forced_broadcast(spark):
+    """Without a caller bound and with overlap above broadcast_max_rows,
+    dedup must fall back to a non-broadcast anti-join — and stay exact."""
+    from dart_xbrl_crawler_spark.functions.urls import with_url_canon
+
+    canon = with_url_canon(
+        spark.range(4000).select(
+            F.concat(F.lit("https://d.example/"), F.col("id").cast("string")).alias(
+                "url"
+            ),
+            "id",
+        )
+    )
+    seen = canon.filter(F.col("id") % 2 == 0).select("url_hash")
+    bloom = D.add_to_seen_filter(None, seen, "bloom", n_shards=8)
+    out = D.dedup_urls(
+        canon.drop("id"), seen, bloom, n_shards=8, broadcast_max_rows=100
+    )
+    assert out.count() == 2000  # exact: odd ids survive
+    assert "BroadcastHashJoin" not in _plan(out)
+    # with a fitting hint the broadcast fast path is kept
+    out2 = D.dedup_urls(
+        canon.drop("id"), seen, bloom, n_shards=8, max_confirmed_hint=4000
+    )
+    assert out2.count() == 2000
+    assert "BroadcastHashJoin" in _plan(out2)
+
+
+def _url_batch(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.concat(F.lit("https://b.example/"), F.col("id").cast("string")).alias("url"),
+        F.lit(0.0).alias("priority"),
+    )
+
+
+def _bloom_reference(hashes, n_shards, expected_keys):
+    """{shard: (bits, m_bits, k_hashes, n_keys)} built in numpy with the
+    Bloom kernels alone, one bitmap per shard sized for the store."""
+    m, k = D._bloom_params(expected_keys // n_shards + 1)
+    shards = np.mod(hashes, n_shards)
+    ref = {}
+    for s in np.unique(shards):
+        hs = hashes[shards == s]
+        bits = np.zeros(m // 64, dtype=np.uint64)
+        for pos in D._positions(hs, m, k):
+            D._set_bits(bits, pos)
+        ref[int(s)] = (bits.tobytes(), m, k, len(hs))
+    return ref
+
+
+def test_bloom_rows_match_numpy_reference(spark, tmp_path):
+    """A bootstrap and two overlapping inserts leave Bloom rows
+    byte-identical to a reference built from every committed hash."""
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    store = FrontierStore(str(tmp_path / "ref"), n_bloom_shards=8, expected_keys=4_096)
+    store.bootstrap(_url_batch(spark, 0, 600), RUN_TS)
+    assert store.insert(spark, _url_batch(spark, 400, 1000), RUN_TS)[1:] == (400, 200)
+    assert store.insert(spark, _url_batch(spark, 900, 1300), RUN_TS)[1:] == (300, 100)
+    committed = store.table.read(spark).select("url_hash").toPandas()["url_hash"]
+    assert len(committed) == 1300
+    got = {
+        r["shard"]: (bytes(r["bits"]), r["m_bits"], r["k_hashes"], r["n_keys"])
+        for r in store.bloom.read(spark).collect()
+    }
+    assert got == _bloom_reference(committed.to_numpy(), 8, 4_096)
 
 
 def test_frontier_store_cuckoo_end_to_end(spark, tmp_path):
@@ -168,7 +308,7 @@ def test_frontier_store_cuckoo_end_to_end(spark, tmp_path):
     # from the filter alone is not enough to re-insert while the table
     # row exists, so this asserts the FILTER state directly
     cf = store.bloom.read(spark)
-    probed = D.probe_seen_cuckoo(retire, cf, n_shards=4)
+    probed = D.probe_seen(retire, cf, n_shards=4)
     assert probed.filter(F.col("seen_maybe")).count() == 0
     del again
 
@@ -285,6 +425,51 @@ def test_store_remembers_filter_kind(spark, tmp_path):
     assert FrontierStore(p2).seen_filter == "bloom"
     with pytest.raises(ValueError):
         FrontierStore(p2, seen_filter="cuckoo")
+
+
+def test_reopen_adopts_pinned_filter_geometry(spark, tmp_path):
+    """n_bloom_shards and expected_keys are pinned at the first write:
+    a default reopen probes the shards the filter was built with (every
+    re-inserted url is a duplicate), and a conflicting explicit value is
+    an error instead of a probe against the wrong shards."""
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    p = str(tmp_path / "geo")
+    n = 200
+    FrontierStore(p, n_bloom_shards=8, expected_keys=4_096).bootstrap(
+        _url_batch(spark, 0, n), RUN_TS
+    )
+    store = FrontierStore(p)
+    assert (store.n_bloom_shards, store.expected_keys) == (8, 4_096)
+    assert store.insert(spark, _url_batch(spark, 0, n), RUN_TS)[1:] == (0, n)
+    with pytest.raises(ValueError):
+        FrontierStore(p, n_bloom_shards=4)
+    with pytest.raises(ValueError):
+        FrontierStore(p, expected_keys=1_024)
+
+
+def test_incremental_bloom_across_inserts(spark, tmp_path):
+    """The URL-seen filter is a durable artifact each insert adds its
+    hashes into — never rebuilt from the full frontier — and dedup
+    stays exact."""
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    store = FrontierStore(str(tmp_path / "fb"), n_bloom_shards=8)
+    mk = lambda lo, hi: spark.range(lo, hi).select(
+        F.concat(F.lit("https://b.example/"), F.col("id").cast("string")).alias("url"),
+        F.lit(0.0).alias("priority"),
+    )
+    store.bootstrap(mk(0, 1000), RUN_TS)
+    assert len(store.bloom.snapshots()) == 1
+    # overlapping insert: 500 dupes + 500 new
+    _, n_ins, n_dup = store.insert(spark, mk(500, 1500), RUN_TS)
+    assert (n_ins, n_dup) == (500, 500)
+    assert len(store.bloom.snapshots()) == 2  # ONE merged commit, no rebuild
+    # fully-duplicate insert → nothing enters, no bloom commit
+    _, n_ins2, n_dup2 = store.insert(spark, mk(0, 1500), RUN_TS)
+    assert (n_ins2, n_dup2) == (0, 1500)
+    assert len(store.bloom.snapshots()) == 2
+    assert store.state_counts(spark) == {"queued": 1500}
 
 
 def test_filter_chain_bounded(spark, tmp_path):
