@@ -161,12 +161,19 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
     spark = get_spark(f"cli-{args.cmd}")
 
+    if getattr(args, "store", None):
+        store = FrontierStore(args.store, seen_filter=getattr(args, "seen_filter", None))
+        if args.cmd in ("expand", "fetch", "recrawl", "expire"):
+            # bound the metrics chains the command is about to grow; fold
+            # BEFORE it runs, while no frame of it reads the chain files
+            # the fold deletes (crawl folds between its own rounds)
+            store._maybe_compact_metrics(spark)
+
     if args.cmd == "bootstrap":
         from pyspark.sql import functions as F
 
         from .operators.scheduler import date_window
 
-        store = FrontierStore(args.store, seen_filter=args.seen_filter)
         seeds = spark.read.parquet(args.seeds)
         if "url" in seeds.columns:
             # plain web seeds (url [, priority]) — bootstrap directly;
@@ -187,12 +194,10 @@ def main(argv: list[str] | None = None) -> int:
         snap = store.bootstrap(urls, args.run_ts)
         print(json.dumps({"snapshot": snap, "states": store.state_counts(spark)}))
     elif args.cmd == "expand":
-        store = FrontierStore(args.store)
         urls = spark.read.parquet(args.urls)
         snap, n_ins, n_dup = store.insert(spark, urls, args.run_ts)
         print(json.dumps({"snapshot": snap, "inserted": n_ins, "deduped": n_dup}))
     elif args.cmd == "fetch":
-        store = FrontierStore(args.store)
         pages = spark.read.parquet(args.pages)
         robots = spark.read.parquet(args.robots)
         snap, fetched = store.run_round(
@@ -213,7 +218,6 @@ def main(argv: list[str] | None = None) -> int:
             )
         )
     elif args.cmd == "crawl":
-        store = FrontierStore(args.store)
         rounds = store.run_crawl(
             spark,
             spark.read.parquet(args.pages),
@@ -237,7 +241,6 @@ def main(argv: list[str] | None = None) -> int:
         pipeline.write_facts(facts.drop("url"), args.out)
         print(json.dumps({"out": args.out}))
     elif args.cmd == "recrawl":
-        store = FrontierStore(args.store)
         if (args.before is None) == (args.hints is None):
             raise SystemExit("recrawl: exactly one of --before/--hints")
         if args.hints:
@@ -246,11 +249,9 @@ def main(argv: list[str] | None = None) -> int:
             n = store.recrawl(spark, args.before)
         print(json.dumps({"requeued": n, "states": store.state_counts(spark)}))
     elif args.cmd == "expire":
-        store = FrontierStore(args.store)
         n = store.expire(spark, args.before)
         print(json.dumps({"expired": n, "states": store.state_counts(spark)}))
     elif args.cmd == "status":
-        store = FrontierStore(args.store)
         print(json.dumps(store.state_counts(spark)))
     elif args.cmd == "curate":
         from .plans.webtext import curate

@@ -37,6 +37,51 @@ _FILTER_DEFAULTS = {"seen_filter": "bloom", "n_bloom_shards": 64,
                     "expected_keys": 1 << 22}
 
 
+def _lineage(df: DataFrame, round_id: int, key: str | None = None) -> DataFrame:
+    """Lineage counters for rows already in their new state:
+    (round_id, partition_id, state, n) per Spark partition, or
+    (round_id, <key>, state, n) per ``key`` value (the host chain).
+    O(|df|) — never a scan of the merged frontier."""
+    by = F.col(key) if key else F.spark_partition_id().alias("partition_id")
+    return (
+        df.groupBy(F.lit(round_id).alias("round_id"), by, "state")
+        .count()
+        .withColumnRenamed("count", "n")
+    )
+
+
+def _admit(urls: DataFrame, run_ts: str, depth: int) -> DataFrame:
+    """urls(url [, priority] [, seed_rcp_no]) → queued frontier rows,
+    one per canonical url_hash.  The survivor among spellings of one
+    url is first-wins by priority desc, then url asc — a choice that
+    never depends on the batch's row order or partitioning."""
+    canon = with_url_canon(urls)
+    if "seed_rcp_no" not in canon.columns:
+        canon = canon.withColumn("seed_rcp_no", F.lit(None).cast("string"))
+    if "priority" not in canon.columns:
+        canon = canon.withColumn("priority", F.lit(0.0))
+    first = Window.partitionBy("url_hash").orderBy(
+        F.col("priority").desc(), F.col("url").asc()
+    )
+    return (
+        canon.withColumn("_rn", F.row_number().over(first))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+        .withColumn("depth", F.lit(depth))
+        .withColumn("state", F.lit("queued"))
+        .withColumn("discovered_ts", F.to_timestamp(F.lit(run_ts)))
+        .withColumn("fetch_ts", F.lit(None).cast("timestamp"))
+        .withColumn("partition_salt", F.lit(0))
+    )
+
+
+def _requeued(stale: DataFrame) -> DataFrame:
+    """Rows flipped back to 'queued' for a refetch (recrawl)."""
+    return stale.withColumn("state", F.lit("queued")).withColumn(
+        "fetch_ts", F.lit(None).cast("timestamp")
+    )
+
+
 class FrontierStore:
     """The URL-seen filter is a durable artifact: each insert adds its
     batch's hashes into the stored shards (dedup.add_to_seen_filter),
@@ -204,17 +249,7 @@ class FrontierStore:
         the rows that entered + one 'deduped' counter (a lineage state,
         not a table state — duplicates are counted, never inserted).
         All inputs are already-materialized caches: O(|batch|)."""
-        parts = []
-        if n_fresh:
-            parts.append(
-                fresh.groupBy(
-                    F.lit(-1).alias("round_id"),
-                    F.spark_partition_id().alias("partition_id"),
-                    F.lit("queued").alias("state"),
-                )
-                .count()
-                .withColumnRenamed("count", "n")
-            )
+        parts = [_lineage(fresh, -1)] if n_fresh else []
         if n_dup:
             parts.append(
                 spark.createDataFrame(
@@ -233,30 +268,12 @@ class FrontierStore:
         """urls(url, priority [, seed_rcp_no]) → initial queued frontier.
         Canonicalize once, dedup within the batch (first-wins on the
         canonical hash — deterministic via priority desc, url asc)."""
-        canon = with_url_canon(urls)
-        if "seed_rcp_no" not in canon.columns:
-            canon = canon.withColumn("seed_rcp_no", F.lit(None).cast("string"))
-        ranked = canon.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("url_hash").orderBy(
-                    F.col("priority").desc(), F.col("url").asc()
-                )
-            ),
-        )
-        frontier = (
-            ranked.filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .withColumn("depth", F.lit(0))
-            .withColumn("state", F.lit("queued"))
-            .withColumn("discovered_ts", F.to_timestamp(F.lit(run_ts)))
-            .withColumn("fetch_ts", F.lit(None).cast("timestamp"))
-            .withColumn("partition_salt", F.lit(0))
-        )
         # bloom first (see insert() for the ordering argument); persist:
         # the canonicalizer UDF lineage feeds both the bloom build and
         # the base commit
-        frontier = frontier.persist(StorageLevel.MEMORY_AND_DISK)
+        frontier = _admit(urls, run_ts, depth=0).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         try:
             spark = urls.sparkSession
             self._commit_bloom_batch(
@@ -275,7 +292,8 @@ class FrontierStore:
         """Dedup incoming urls against the frontier (bloom prefilter +
         shard-aligned exact confirm), append survivors as a queued DELTA
         (O(|batch|) bytes).  Returns (snapshot_id, n_inserted,
-        n_deduped).
+        n_deduped).  Spellings of one url within the batch collapse to
+        bootstrap's survivor (priority desc, url asc).
 
         The batch is persisted once and every count comes off that
         cache — the round-1 version recomputed the canonicalizer +
@@ -284,15 +302,8 @@ class FrontierStore:
         added into its shards afterwards — O(|batch|) keys per insert,
         never a rebuild from the full frontier."""
         frontier = self.table.read(spark)
-        batch = with_url_canon(urls).dropDuplicates(["url_hash"]).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        batch = _admit(urls, run_ts, depth).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            canon = batch
-            if "seed_rcp_no" not in canon.columns:
-                canon = canon.withColumn("seed_rcp_no", F.lit(None).cast("string"))
-            if "priority" not in canon.columns:
-                canon = canon.withColumn("priority", F.lit(0.0))
             if self.bloom.snapshots():
                 bloom = self.bloom.read(spark)
             else:  # recovery / legacy store: rebuild once from the table
@@ -312,7 +323,7 @@ class FrontierStore:
                 seen = frontier.filter(F.col("state") != "expired")
             fresh = (
                 D.dedup_urls(
-                    canon,
+                    batch,
                     seen,
                     bloom,
                     self.n_bloom_shards,
@@ -320,11 +331,6 @@ class FrontierStore:
                     # broadcast plan whenever the batch itself is small
                     max_confirmed_hint=n_in,
                 )
-                .withColumn("depth", F.lit(depth))
-                .withColumn("state", F.lit("queued"))
-                .withColumn("discovered_ts", F.to_timestamp(F.lit(run_ts)))
-                .withColumn("fetch_ts", F.lit(None).cast("timestamp"))
-                .withColumn("partition_salt", F.lit(0))
                 .select("url_hash", *[c for c in frontier.columns if c != "url_hash"])
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
@@ -371,14 +377,14 @@ class FrontierStore:
         Metrics-chain compaction deliberately does NOT run here: the
         returned fetched_pages (and the incoming backoff-adjusted
         robots) carry lazy lineage into the chain files, and compaction
-        deletes them.  run_crawl folds the chains between rounds;
-        callers driving run_round directly over many rounds should call
-        ``_maybe_compact_metrics`` between rounds the same way."""
+        deletes them.  run_crawl folds the chains between rounds, and
+        the CLI folds them before each store-writing subcommand
+        (cli.main); callers driving run_round directly over many rounds
+        should call ``_maybe_compact_metrics`` between rounds the same
+        way."""
         # release the PREVIOUS round's fetch cache (it had to outlive
         # that round's return — fetched_pages derives from it)
-        if self._prev_fetched is not None:
-            self._prev_fetched.unpersist()
-            self._prev_fetched = None
+        self.release()
 
         frontier = self.table.read(spark)
         queued = frontier.filter(F.col("state") == "queued")
@@ -410,7 +416,6 @@ class FrontierStore:
         )
 
         ok = fetched.filter(F.col("html").isNotNull())
-        missing = fetched.filter(F.col("html").isNull())
 
         # state transitions → DELTA rows: only the touched frontier rows
         # are rewritten (append-only MERGE, SURVEY.md §2.9).  popped
@@ -425,20 +430,18 @@ class FrontierStore:
         # freshness loop's `fetch_ts < cutoff` predicates must be able
         # to select failed/blocked rows for retry/expiry; a NULL there
         # made those states permanently terminal (never matched)
-        changed = (
-            ok.withColumn("state", F.lit("fetched"))
-            .withColumn("fetch_ts", fetch_ts)
-            .select(*fcols)
-            .unionByName(
-                missing.withColumn("state", F.lit("failed"))
+        def to_state(df: DataFrame, state: str) -> DataFrame:
+            return (
+                df.withColumn("state", F.lit(state))
                 .withColumn("fetch_ts", fetch_ts)
                 .select(*fcols)
             )
+
+        changed = (
+            to_state(ok, "fetched")
+            .unionByName(to_state(fetched.filter(F.col("html").isNull()), "failed"))
             .unionByName(
-                popped.filter(F.col("robots_blocked"))
-                .withColumn("state", F.lit("robots_blocked"))
-                .withColumn("fetch_ts", fetch_ts)
-                .select(*fcols)
+                to_state(popped.filter(F.col("robots_blocked")), "robots_blocked")
             )
         )
         snap = self.table.commit_delta(spark, changed, note=f"round={round_id}")
@@ -447,23 +450,11 @@ class FrontierStore:
         # round's OWN delta (cached upstream frames) — O(|round|), never
         # a post-commit scan of the merged 10^10-row frontier.  Running
         # totals come from folding the metrics chain (lineage_counts).
-        metrics = (
-            changed.groupBy(
-                F.lit(round_id).alias("round_id"),
-                F.spark_partition_id().alias("partition_id"),
-                "state",
-            )
-            .count()
-            .withColumnRenamed("count", "n")
-        )
-        self.metrics.commit(metrics, note=f"round={round_id}")
+        self.metrics.commit(_lineage(changed, round_id), note=f"round={round_id}")
         # per-host outcome counters — the input to adaptive politeness
         # backoff (politeness.apply_backoff); O(|round| hosts) rows
         self.host_metrics.commit(
-            changed.groupBy(F.lit(round_id).alias("round_id"), "host", "state")
-            .count()
-            .withColumnRenamed("count", "n"),
-            note=f"round={round_id}",
+            _lineage(changed, round_id, key="host"), note=f"round={round_id}"
         )
 
         fetched_pages = ok.select(
@@ -501,29 +492,9 @@ class FrontierStore:
             F.col("state").isin(*states)
             & (F.col("fetch_ts") < F.to_timestamp(F.lit(before_ts)))
         )
-        # localCheckpoint, not persist: `changed` is consumed AFTER
-        # commit_delta flips these very rows to 'queued' — a lost cache
-        # block would recompute the filter over the post-commit frontier
-        # and silently see nothing; checkpointing truncates the lineage
-        # so the pre-commit selection is pinned (same pattern as
-        # dedup_urls' confirmed set)
-        changed = stale.withColumn("state", F.lit("queued")).withColumn(
-            "fetch_ts", F.lit(None).cast("timestamp")
-        ).localCheckpoint(eager=True)
-        n = changed.count()
-        if n:
-            self.table.commit_delta(spark, changed, note=f"recrawl<{before_ts}")
-            self.metrics.commit(
-                changed.groupBy(
-                    F.lit(-3).alias("round_id"),
-                    F.spark_partition_id().alias("partition_id"),
-                    F.lit("queued").alias("state"),
-                )
-                .count()
-                .withColumnRenamed("count", "n"),
-                note="recrawl lineage",
-            )
-        return n
+        return self._transition(
+            spark, _requeued(stale), f"recrawl<{before_ts}", "recrawl lineage"
+        )[1]
 
     def recrawl_hints(self, spark: SparkSession, hints) -> int:
         """Targeted freshness: re-queue exactly the urls a sitemap/feed
@@ -539,8 +510,6 @@ class FrontierStore:
         so the hint side shuffles, the base doesn't.  Lastmod accepts
         both W3C forms (date-only and full ISO 8601); unparseable
         hints are dropped, surfaced by the returned count only."""
-        from ..functions.urls import with_url_canon
-
         lastmod_ts = F.coalesce(
             F.try_to_timestamp(F.col("lastmod")),
             F.try_to_timestamp(
@@ -564,23 +533,9 @@ class FrontierStore:
             )
             .drop("_lastmod")
         )
-        changed = stale.withColumn("state", F.lit("queued")).withColumn(
-            "fetch_ts", F.lit(None).cast("timestamp")
-        ).localCheckpoint(eager=True)  # pin pre-commit selection
-        n = changed.count()
-        if n:
-            self.table.commit_delta(spark, changed, note="recrawl-hints")
-            self.metrics.commit(
-                changed.groupBy(
-                    F.lit(-3).alias("round_id"),
-                    F.spark_partition_id().alias("partition_id"),
-                    F.lit("queued").alias("state"),
-                )
-                .count()
-                .withColumnRenamed("count", "n"),
-                note="recrawl-hints lineage",
-            )
-        return n
+        return self._transition(
+            spark, _requeued(stale), "recrawl-hints", "recrawl-hints lineage"
+        )[1]
 
     def expire(
         self,
@@ -597,38 +552,43 @@ class FrontierStore:
         cleanup (/root/reference/dart_api_manager.py:582-602), as state
         data instead of filesystem deletes.  On a bloom-backed store the
         filter keeps the hash (deletions are impossible there) — expired
-        urls then stay deduped until a compaction rebuild; that asymmetry
-        is exactly why the cuckoo variant exists."""
+        urls then stay deduped (no compaction rebuilds the filter); that
+        asymmetry is exactly why the cuckoo variant exists."""
         frontier = self.table.read(spark)
         old = frontier.filter(
             F.col("state").isin(*states)
             & (F.col("fetch_ts") < F.to_timestamp(F.lit(before_ts)))
         )
-        # localCheckpoint, not persist: retire_seen reads `changed` AFTER
-        # commit_delta has flipped these rows to 'expired' — if a cache
-        # block were lost in between, the recomputed filter (state in
-        # `states`) would match nothing post-commit, retire_seen would
-        # delete nothing from the cuckoo filter, and the expired urls
-        # could never resurrect.  Checkpointing pins the pre-commit rows.
-        changed = old.withColumn("state", F.lit("expired")).localCheckpoint(
-            eager=True
+        changed, n = self._transition(
+            spark,
+            old.withColumn("state", F.lit("expired")),
+            f"expire<{before_ts}",
+            "expire lineage",
         )
+        if n and self.seen_filter == "cuckoo":
+            self.retire_seen(spark, changed.select("url_hash"))
+        return n
+
+    def _transition(
+        self, spark: SparkSession, changed: DataFrame, note: str, lineage_note: str
+    ) -> tuple[DataFrame, int]:
+        """Commit rows already in their new state as one O(|changed|)
+        delta plus their lineage counters; returns (changed, n).
+
+        localCheckpoint, not persist: callers read ``changed`` AFTER
+        commit_delta has flipped these very rows (the count, expire's
+        retire_seen) — a lost cache block would recompute the selection
+        over the post-commit frontier and silently see nothing: 0
+        re-queued, or no hash retired from the cuckoo filter so the
+        expired urls could never resurrect.  Checkpointing truncates the
+        lineage, so the pre-commit selection is pinned (same pattern as
+        dedup_urls' confirmed set)."""
+        changed = changed.localCheckpoint(eager=True)
         n = changed.count()
         if n:
-            self.table.commit_delta(spark, changed, note=f"expire<{before_ts}")
-            self.metrics.commit(
-                changed.groupBy(
-                    F.lit(-3).alias("round_id"),
-                    F.spark_partition_id().alias("partition_id"),
-                    F.lit("expired").alias("state"),
-                )
-                .count()
-                .withColumnRenamed("count", "n"),
-                note="expire lineage",
-            )
-            if self.seen_filter == "cuckoo":
-                self.retire_seen(spark, changed.select("url_hash"))
-        return n
+            self.table.commit_delta(spark, changed, note=note)
+            self.metrics.commit(_lineage(changed, -3), note=lineage_note)
+        return changed, n
 
     def _maybe_compact_metrics(self, spark: SparkSession) -> None:
         """Bound the metrics chains: past ``metrics_compact_every``
@@ -639,32 +599,21 @@ class FrontierStore:
         exact; only per-round detail beyond the fold point is dropped.
         Without this, host_stats re-reads O(rounds × hosts) files every
         round — fine for max_rounds=5, unbounded for a long crawl."""
-        if len(self.metrics.snapshots()) > self.metrics_compact_every:
-            folded = (
-                self.metrics.read_all(spark)
-                .groupBy("state")
-                .agg(F.sum("n").alias("n"))
-                .select(
-                    F.lit(-2).cast("int").alias("round_id"),
-                    F.lit(-2).cast("int").alias("partition_id"),
-                    "state",
-                    "n",
+        for chain, keys, note in (
+            (self.metrics, ["state"], "metrics compact"),
+            (self.host_metrics, ["host", "state"], "host metrics compact"),
+        ):
+            if len(chain.snapshots()) > self.metrics_compact_every:
+                m = chain.read_all(spark)
+                sums = m.groupBy(*keys).agg(F.sum("n").alias("n"))
+                # round_id (and partition_id) become the -2 fold marker
+                chain.rewrite(
+                    sums.select(*[
+                        c if c in sums.columns else F.lit(-2).cast("int").alias(c)
+                        for c in m.columns
+                    ]),
+                    note=note,
                 )
-            )
-            self.metrics.rewrite(folded, note="metrics compact")
-        if len(self.host_metrics.snapshots()) > self.metrics_compact_every:
-            folded = (
-                self.host_metrics.read_all(spark)
-                .groupBy("host", "state")
-                .agg(F.sum("n").alias("n"))
-                .select(
-                    F.lit(-2).cast("int").alias("round_id"),
-                    "host",
-                    "state",
-                    "n",
-                )
-            )
-            self.host_metrics.rewrite(folded, note="host metrics compact")
 
     def release(self) -> None:
         """Drop the last round's fetch cache.  Called when a crawl loop

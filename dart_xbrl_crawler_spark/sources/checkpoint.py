@@ -19,12 +19,34 @@ API (append/overwrite/commit semantics mapping to real snapshots).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+def _last_wins(
+    spark: SparkSession, table: SnapshotTable, snaps: list[dict], key: str
+) -> DataFrame:
+    """Merge the given snapshots of ``table`` last-wins per ``key``:
+    each row is tagged with its snapshot's commit seq, and every column
+    takes its value from the highest seq (``max_by`` aggregate — one
+    hash shuffle on the key)."""
+    allp = functools.reduce(
+        DataFrame.unionByName,
+        [
+            table.read(spark, s["id"]).withColumn("_seq", F.lit(int(s["seq"])))
+            for s in snaps
+        ],
+    )
+    cols = [c for c in allp.columns if c not in ("_seq", key)]
+    return allp.groupBy(key).agg(
+        *[F.max_by(F.col(c), F.col("_seq")).alias(c) for c in cols]
+    ).select(key, *cols)
 
 
 class SnapshotTable:
@@ -53,15 +75,19 @@ class SnapshotTable:
         ``kind`` is "base" (full table image) or "delta" (changed rows
         only — see MergeTable).  Returns the snapshot id."""
         snaps = self.snapshots()
+        entry = self._write(df, snaps, note, kind)
+        self._publish(snaps + [entry])
+        return entry["id"]
+
+    def _write(self, df: DataFrame, snaps: list[dict], note: str, kind: str) -> dict:
+        """Write df as the snapshot after ``snaps``; returns its
+        manifest entry (not yet published)."""
         # monotonic, NOT len(snaps): expiry trims the manifest front, and
         # a reused seq would corrupt MergeTable's last-wins-by-_seq merge
         seq = (snaps[-1]["seq"] + 1) if snaps else 0
         snap_id = f"snap-{seq:06d}-{uuid.uuid4().hex[:8]}"
-        snap_dir = os.path.join(self.path, snap_id)
-        df.write.mode("overwrite").parquet(snap_dir)
-        entry = {"id": snap_id, "seq": seq, "note": note, "kind": kind}
-        self._publish(snaps + [entry])
-        return snap_id
+        df.write.mode("overwrite").parquet(os.path.join(self.path, snap_id))
+        return {"id": snap_id, "seq": seq, "note": note, "kind": kind}
 
     def _publish(self, snaps: list[dict]) -> None:
         fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".manifest.tmp")
@@ -99,13 +125,10 @@ class SnapshotTable:
         double-counts fold + originals."""
         import shutil
 
-        snaps = self.snapshots()
-        seq = (snaps[-1]["seq"] + 1) if snaps else 0
-        snap_id = f"snap-{seq:06d}-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, snap_id))
-        self._publish([{"id": snap_id, "seq": seq, "note": note, "kind": "base"}])
+        entry = self._write(df, self.snapshots(), note, "base")
+        self._publish([entry])
         self._gc_orphans(shutil)
-        return snap_id
+        return entry["id"]
 
     def rollback_to(self, snapshot_id: str) -> None:
         snaps = self.snapshots()
@@ -209,35 +232,13 @@ class MergeTable:
         """Current state: base ∪ deltas, last-wins per key by commit
         sequence (``max_by`` aggregate — one hash shuffle on the key;
         zero-shuffle when the table is bucketed on the key)."""
-        from pyspark.sql import functions as F
-
         base = self._latest_base()
         if base is None:
             raise FileNotFoundError(f"no base snapshot at {self.table.path}")
-        parts = [
-            self.table.read(spark, base["id"]).withColumn(
-                "_seq", F.lit(int(base["seq"]))
-            )
-        ]
-        for s in self._deltas_since_base():
-            parts.append(
-                self.table.read(spark, s["id"]).withColumn(
-                    "_seq", F.lit(int(s["seq"]))
-                )
-            )
-        allp = parts[0]
-        for p in parts[1:]:
-            allp = allp.unionByName(p)
-        if len(parts) == 1:
-            return allp.drop("_seq")
-        cols = [c for c in allp.columns if c != "_seq" and c != self.key]
-        merged = allp.groupBy(self.key).agg(
-            *[
-                F.max_by(F.col(c), F.col("_seq")).alias(c)
-                for c in cols
-            ]
-        )
-        return merged.select(self.key, *cols)
+        deltas = self._deltas_since_base()
+        if not deltas:
+            return self.table.read(spark, base["id"])
+        return _last_wins(spark, self.table, [base, *deltas], self.key)
 
     def compact(
         self,
@@ -426,22 +427,8 @@ class BucketedMergeTable:
 
     # -- read (merge-on-read, base never shuffles) ----------------------
     def _latest_delta(self, spark: SparkSession) -> DataFrame | None:
-        from pyspark.sql import functions as F
-
         snaps = self.deltas.snapshots()
-        if not snaps:
-            return None
-        parts = [
-            self.deltas.read(spark, s["id"]).withColumn("_seq", F.lit(int(s["seq"])))
-            for s in snaps
-        ]
-        allp = parts[0]
-        for p in parts[1:]:
-            allp = allp.unionByName(p)
-        cols = [c for c in allp.columns if c not in ("_seq", self.key)]
-        return allp.groupBy(self.key).agg(
-            *[F.max_by(F.col(c), F.col("_seq")).alias(c) for c in cols]
-        ).select(self.key, *cols)
+        return _last_wins(spark, self.deltas, snaps, self.key) if snaps else None
 
     def read(self, spark: SparkSession) -> DataFrame:
         bases = self._bases()
@@ -548,8 +535,6 @@ class IcebergMergeTable:
     def commit_base(self, df: DataFrame, note: str = "") -> str:
         w = df.writeTo(self.ident).using("iceberg")
         if self.n_buckets:
-            from pyspark.sql import functions as F
-
             w = w.partitionedBy(F.bucket(self.n_buckets, self.key))
         w.createOrReplace()
         return str(self._current_snapshot_id())

@@ -1,5 +1,7 @@
-"""Frontier machinery: canonicalization properties, Bloom exactness,
-politeness budgets, crawl-ordering reproduction, kill-and-resume."""
+"""Frontier machinery: canonicalization properties, politeness
+budgets, crawl-ordering reproduction, kill-and-resume, and the
+FrontierStore lifecycle — admission, lineage counters, transitions
+under cache loss, fetch-cache release and metrics-chain folding."""
 
 from __future__ import annotations
 
@@ -16,6 +18,8 @@ from dart_xbrl_crawler_spark.operators import scheduler as S
 from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
 from dart_xbrl_crawler_spark.schemas import PAGES, ROBOTS, SEEDS
 
+RUN_TS = fixtures.RUN_TS
+LATER_TS = "2026-02-01 00:00:00"
 
 # ---------------------------------------------------------------- urls
 _url_strategy = st.builds(
@@ -238,6 +242,484 @@ def test_frontier_rounds_and_resume(spark, fixture_bundle, tmp_path):
     mdf = store.metrics.read(spark)
     states = {r["state"] for r in mdf.select("state").distinct().collect()}
     assert "fetched" in states
+
+
+# ------------------------------------- lineage metrics from deltas
+def test_lineage_counts_match_exact_state_counts(spark, fixture_bundle, tmp_path):
+    from dart_xbrl_crawler_spark import fixtures
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+    from dart_xbrl_crawler_spark.operators.scheduler import seeds_to_frontier
+    from dart_xbrl_crawler_spark.schemas import PAGES, ROBOTS, SEEDS
+
+    pages, seeds, _, robots = fixture_bundle
+    store = FrontierStore(str(tmp_path / "f"), n_bloom_shards=8)
+    seeds_df = spark.createDataFrame(seeds, schema=SEEDS)
+    store.bootstrap(seeds_to_frontier(seeds_df), fixtures.RUN_TS)
+    pages_df = spark.createDataFrame(pages, schema=PAGES)
+    robots_df = spark.createDataFrame(robots, schema=ROBOTS)
+    # duplicate insert contributes a 'deduped' lineage counter
+    _, n_ins, n_dup = store.insert(
+        spark, seeds_to_frontier(seeds_df).select("url", "priority"), fixtures.RUN_TS
+    )
+    for rid in range(2):
+        store.run_round(
+            spark, pages_df, robots_df, fixtures.RUN_TS, round_id=rid,
+            round_ms=120_000,
+        )
+    lineage = store.lineage_counts(spark)
+    exact = store.state_counts(spark)
+    deduped = lineage.pop("deduped", 0)
+    assert deduped == n_dup
+    assert lineage == {k: v for k, v in exact.items() if v}
+
+
+def test_run_round_releases_previous_fetch_cache(spark, fixture_bundle, tmp_path):
+    from dart_xbrl_crawler_spark import fixtures
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+    from dart_xbrl_crawler_spark.operators.scheduler import seeds_to_frontier
+    from dart_xbrl_crawler_spark.schemas import PAGES, ROBOTS, SEEDS
+
+    pages, seeds, _, robots = fixture_bundle
+    store = FrontierStore(str(tmp_path / "f2"), n_bloom_shards=8)
+    store.bootstrap(
+        seeds_to_frontier(spark.createDataFrame(seeds, schema=SEEDS)),
+        fixtures.RUN_TS,
+    )
+    pages_df = spark.createDataFrame(pages, schema=PAGES)
+    robots_df = spark.createDataFrame(robots, schema=ROBOTS)
+    store.run_round(spark, pages_df, robots_df, fixtures.RUN_TS, round_id=0)
+    first = store._prev_fetched
+    assert first is not None and first.storageLevel.useMemory
+    store.run_round(spark, pages_df, robots_df, fixtures.RUN_TS, round_id=1)
+    # the first round's cache is gone; the second round's is live
+    assert not first.storageLevel.useMemory
+    assert store._prev_fetched is not first
+
+
+# ------------------------------------- lineage clamp for legacy store
+def test_lineage_counts_legacy_store_never_negative(spark, tmp_path):
+    """A store whose metrics chain has transitions but no insert rows
+    (bootstrapped before insert metrics existed) reports queued from
+    the exact state scan, not a negative number — so run_crawl's drain
+    check still works."""
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    store = FrontierStore(str(tmp_path / "legacy"), n_bloom_shards=4)
+    seeds = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": [f"https://l.example/p{i}" for i in range(6)],
+                "priority": [0.0] * 6,
+            }
+        )
+    )
+    store.bootstrap(seeds, RUN_TS)
+    # simulate the legacy chain: drop the bootstrap 'queued' rows,
+    # keep only a transition commit
+    store.metrics._publish([])
+    store.metrics.commit(
+        spark.createDataFrame(
+            [(0, 0, "fetched", 2)],
+            schema="round_id int, partition_id int, state string, n long",
+        ),
+        note="legacy transition",
+    )
+    counts = store.lineage_counts(spark)
+    assert counts["queued"] >= 0
+    # falls back to the exact scan: all 6 rows are still queued in the
+    # table (no delta was committed)
+    assert counts["queued"] == 6
+
+
+# ----------------------------------------- run_crawl releases caches
+def test_run_crawl_releases_fetch_cache(spark, tmp_path):
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    pages = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": ["https://r.example/a"],
+                "html": [b"<html>end</html>"],
+                "warc_ts": [pd.Timestamp("2026-01-01")],
+            }
+        ),
+        schema="url string, html binary, warc_ts timestamp",
+    )
+    robots = spark.createDataFrame(
+        [("r.example", None, 100)],
+        schema="host string, disallow_prefix string, crawl_delay_ms long",
+    )
+    store = FrontierStore(str(tmp_path / "rel"), n_bloom_shards=4)
+    store.bootstrap(
+        spark.createDataFrame(
+            pd.DataFrame({"url": ["https://r.example/a"], "priority": [0.0]})
+        ),
+        RUN_TS,
+    )
+    store.run_crawl(spark, pages, robots, RUN_TS, max_rounds=3)
+    assert store._prev_fetched is None  # last round's cache released
+
+
+# --------------------------------------- metrics chain compaction
+def test_metrics_chain_compaction_bounded_and_exact(spark, tmp_path):
+    """A multi-round crawl with an aggressive compaction threshold
+    keeps the metrics chains bounded while lineage_counts/host_stats
+    stay EXACTLY equal to an uncompacted twin's."""
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    def page(name, link_to=None):
+        body = (
+            f'<html><a href="/{link_to}">n</a></html>' if link_to else "<html>e</html>"
+        )
+        return (f"https://c.example/{name}", body.encode(), pd.Timestamp("2026-01-01"))
+
+    pages = spark.createDataFrame(
+        pd.DataFrame(
+            [page("a", "b"), page("b", "c"), page("c", "d"), page("d")],
+            columns=["url", "html", "warc_ts"],
+        ),
+        schema="url string, html binary, warc_ts timestamp",
+    )
+    robots = spark.createDataFrame(
+        [("c.example", None, 100)],
+        schema="host string, disallow_prefix string, crawl_delay_ms long",
+    )
+    seeds = pd.DataFrame({"url": ["https://c.example/a"], "priority": [0.0]})
+
+    stores = {}
+    for tag, every in (("compacted", 2), ("plain", 1000)):
+        st = FrontierStore(
+            str(tmp_path / tag), n_bloom_shards=4, metrics_compact_every=every
+        )
+        st.bootstrap(spark.createDataFrame(seeds), RUN_TS)
+        st.run_crawl(spark, pages, robots, RUN_TS, max_rounds=6, round_ms=100_000)
+        stores[tag] = st
+
+    plain, comp = stores["plain"], stores["compacted"]
+    # chain bounded: ≤ threshold + the commits of one round (round
+    # metrics + host metrics + next insert) before the next fold
+    assert len(comp.metrics.snapshots()) <= 4
+    assert len(plain.metrics.snapshots()) > 4  # the twin actually grew
+    assert comp.lineage_counts(spark) == plain.lineage_counts(spark)
+    hs = lambda s: {
+        r["host"]: (r["n_fetched"], r["n_failed"], r["fail_rate"])
+        for r in s.host_stats(spark).collect()
+    }
+    assert hs(comp) == hs(plain)
+
+
+# ----------------------------- expire() survives cache loss mid-flight
+def _bootstrap_cuckoo_store(spark, path, urls):
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    store = FrontierStore(str(path), n_bloom_shards=4, seen_filter="cuckoo")
+    seeds = spark.createDataFrame(
+        pd.DataFrame({"url": urls, "priority": [0.0] * len(urls)})
+    )
+    store.bootstrap(seeds, RUN_TS)
+    return store
+
+
+def _mark_fetched(spark, store, ts):
+    """Flip every queued row to fetched via the normal delta path (the
+    round outcome, minus the fetch machinery the test doesn't need)."""
+    frontier = store.table.read(spark)
+    changed = (
+        frontier.filter(F.col("state") == "queued")
+        .withColumn("state", F.lit("fetched"))
+        .withColumn("fetch_ts", F.to_timestamp(F.lit(ts)))
+    )
+    store.table.commit_delta(spark, changed, note="test fetch")
+    store.metrics.commit(
+        changed.groupBy(
+            F.lit(0).alias("round_id"),
+            F.spark_partition_id().alias("partition_id"),
+            "state",
+        )
+        .count()
+        .withColumnRenamed("count", "n"),
+        note="test fetch",
+    )
+
+
+def test_expire_retires_seen_even_after_cache_loss(spark, tmp_path):
+    """expire() consumes its `changed` frame AFTER commit_delta flips
+    those rows to 'expired' — if the frame were a lazy persist over the
+    pre-commit frontier, losing the cache there would recompute an
+    EMPTY selection (post-commit no row matches state='fetched'), so
+    retire_seen would delete nothing and the url could never resurrect.
+    Simulate the loss at the worst moment: clear every SQL cache right
+    after the commit, then check the url still resurrects."""
+    url = "https://loss.example/a"
+    store = _bootstrap_cuckoo_store(spark, tmp_path / "f", [url])
+    _mark_fetched(spark, store, RUN_TS)
+
+    orig = store.table.commit_delta
+
+    def commit_then_lose_cache(spark_, df, note=""):
+        snap = orig(spark_, df, note=note)
+        spark.catalog.clearCache()
+        return snap
+
+    store.table.commit_delta = commit_then_lose_cache
+    try:
+        n = store.expire(spark, LATER_TS)
+    finally:
+        store.table.commit_delta = orig
+    assert n == 1
+    assert store.state_counts(spark).get("expired") == 1
+
+    # rediscovery must insert a fresh queued row (resurrection)
+    batch = spark.createDataFrame(pd.DataFrame({"url": [url]}))
+    _, n_fresh, n_dup = store.insert(spark, batch, LATER_TS)
+    assert (n_fresh, n_dup) == (1, 0)
+    assert store.state_counts(spark).get("queued") == 1
+
+
+@pytest.mark.parametrize("method", ["recrawl", "recrawl_hints"])
+def test_recrawl_counts_survive_cache_loss(spark, tmp_path, method):
+    """recrawl()'s and recrawl_hints()' count/metrics read `changed`
+    after the commit flips the rows to 'queued' — a recompute over the
+    post-commit frontier would report 0 re-queued.  Same cache-loss
+    simulation."""
+    urls = [f"https://re.example/{i}" for i in range(5)]
+    store = _bootstrap_cuckoo_store(spark, tmp_path / "f", urls)
+    _mark_fetched(spark, store, RUN_TS)
+    hints = spark.createDataFrame(
+        pd.DataFrame({"url": urls, "lastmod": [LATER_TS[:10]] * len(urls)})
+    )
+
+    orig = store.table.commit_delta
+
+    def commit_then_lose_cache(spark_, df, note=""):
+        snap = orig(spark_, df, note=note)
+        spark.catalog.clearCache()
+        return snap
+
+    store.table.commit_delta = commit_then_lose_cache
+    try:
+        if method == "recrawl":
+            n = store.recrawl(spark, LATER_TS)
+        else:
+            n = store.recrawl_hints(spark, hints)
+    finally:
+        store.table.commit_delta = orig
+    assert n == 5
+    assert store.state_counts(spark).get("queued") == 5
+
+
+# -------------------- cuckoo tombstones vs filter false positives
+def test_cuckoo_tombstone_fpp_cannot_permadedup(spark, tmp_path):
+    """A rediscovered expired url whose hash still hits the filter (a
+    ~1.2e-4 false positive at 16-bit tags — simulated here by
+    re-adding the hash) must NOT exact-confirm against its own expired
+    tombstone row: expire()'s contract is that later rediscovery
+    unconditionally resurrects."""
+    url = "https://fpp.example/a"
+    store = _bootstrap_cuckoo_store(spark, tmp_path / "f", [url])
+    _mark_fetched(spark, store, RUN_TS)
+    assert store.expire(spark, LATER_TS) == 1
+
+    # simulate the false positive: put the retired hash back into the
+    # filter while the frontier row stays an expired tombstone
+    store._commit_bloom_batch(
+        spark, store.table.read(spark).select("url_hash"), "fpp-sim"
+    )
+
+    batch = spark.createDataFrame(pd.DataFrame({"url": [url]}))
+    _, n_fresh, n_dup = store.insert(spark, batch, LATER_TS)
+    assert (n_fresh, n_dup) == (1, 0), "tombstone exact-confirmed a live url"
+    assert store.state_counts(spark).get("queued") == 1
+
+
+# ------------------------- metrics chain bounded over a long crawl
+def test_metrics_chain_bounded_over_100_rounds(spark, tmp_path):
+    """100 rounds of metrics/host-metrics commits with compaction keep
+    BOTH chains ≤ threshold+1 snapshots at every step, and the folded
+    running sums stay exactly equal to the arithmetic totals (fold
+    marker rows round_id=-2 must aggregate, not duplicate)."""
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    store = FrontierStore(
+        str(tmp_path / "f"), n_bloom_shards=4, metrics_compact_every=8
+    )
+    total_fetched = 0
+    host_fetched = {"a.example": 0, "b.example": 0}
+    for rid in range(100):
+        n = 1 + (rid % 3)
+        total_fetched += n
+        host = "a.example" if rid % 2 == 0 else "b.example"
+        host_fetched[host] += n
+        store.metrics.commit(
+            spark.createDataFrame(
+                # a queued (insert-side) row balancing each fetched row,
+                # as real rounds produce — lineage_counts' queue math
+                # needs the insert counters the crawl always commits
+                [(rid, 0, "queued", n), (rid, 0, "fetched", n)],
+                schema="round_id int, partition_id int, state string, n long",
+            ),
+            note=f"round={rid}",
+        )
+        store.host_metrics.commit(
+            spark.createDataFrame(
+                [(rid, host, "fetched", n)],
+                schema="round_id int, host string, state string, n long",
+            ),
+            note=f"round={rid}",
+        )
+        store._maybe_compact_metrics(spark)
+        assert len(store.metrics.snapshots()) <= 9, f"chain grew at round {rid}"
+        assert len(store.host_metrics.snapshots()) <= 9
+
+    assert store.lineage_counts(spark) == {"fetched": total_fetched}
+    hs = {
+        r["host"]: r["n_fetched"] for r in store.host_stats(spark).collect()
+    }
+    assert hs == host_fetched
+
+
+def test_recrawl_hints_requeues_only_advertised(spark, tmp_path):
+    """Sitemap-lastmod-driven freshness: only hinted urls whose fetch
+    predates the advertised lastmod flip back to queued; unparseable
+    lastmods and fresh rows stay put."""
+    import pandas as pd
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+    from dart_xbrl_crawler_spark import fixtures
+    from dart_xbrl_crawler_spark.schemas import PAGES, ROBOTS
+
+    urls = [f"https://r.ex/p{i}" for i in range(4)]
+    pages = spark.createDataFrame(
+        pd.DataFrame({
+            "url": urls,
+            "html": [f"<html>{i}</html>".encode() for i in range(4)],
+            "warc_ts": [pd.Timestamp("2026-01-01")] * 4,
+        }),
+        schema="url string, html binary, warc_ts timestamp",
+    )
+    robots = spark.createDataFrame(
+        [("r.ex", None, 1)],
+        schema="host string, disallow_prefix string, crawl_delay_ms long",
+    )
+    store = FrontierStore(str(tmp_path / "r"), n_bloom_shards=4)
+    store.bootstrap(
+        spark.createDataFrame(
+            pd.DataFrame({"url": urls, "priority": [0.0] * 4})
+        ),
+        "2026-01-02 00:00:00",
+    )
+    store.run_crawl(spark, pages, robots, "2026-01-02 00:00:00",
+                    max_rounds=1, discover=False)
+    assert store.state_counts(spark).get("fetched") == 4
+    hints = spark.createDataFrame(
+        [
+            (urls[0], "2026-02-01"),              # newer → requeue
+            (urls[1], "2026-02-01T09:30:00Z"),    # full ISO → requeue
+            (urls[2], "2025-12-01"),              # older than fetch → keep
+            (urls[3], "not-a-date"),              # unparseable → keep
+            ("https://r.ex/unknown", "2026-02-01"),  # not in frontier
+        ],
+        schema="url string, lastmod string",
+    )
+    n = store.recrawl_hints(spark, hints)
+    assert n == 2
+    counts = store.state_counts(spark)
+    assert counts.get("queued") == 2 and counts.get("fetched") == 2
+    queued = {
+        r["url_canon"]
+        for r in store.table.read(spark)
+        .filter(F.col("state") == "queued").select("url_canon").collect()
+    }
+    assert queued == {urls[0], urls[1]}
+    store.release()
+
+# --------------------------------------------------------- admission
+def test_insert_keeps_first_wins_survivor(spark, tmp_path):
+    """insert keeps bootstrap's survivor among spellings of one url —
+    the highest priority, then the smallest url — whatever the batch's
+    row order or partitioning (in run_crawl the priority drives pop
+    order, so the survivor decides when a url is crawled)."""
+    store = FrontierStore(str(tmp_path / "f"), n_bloom_shards=4)
+    store.bootstrap(
+        spark.createDataFrame(
+            pd.DataFrame({"url": ["https://seed.example/"], "priority": [0.0]})
+        ),
+        RUN_TS,
+    )
+    for n_parts in (1, 2):
+        def up(i):
+            return f"https://H{n_parts}{i}.EXAMPLE/x"
+
+        def low(i):
+            return f"https://h{n_parts}{i}.example/x"
+
+        rows = [
+            (up(0), 1.0), (low(0), 5.0),  # higher priority second
+            (low(1), 5.0), (up(1), 1.0),  # higher priority first
+            (low(2), 2.0), (up(2), 2.0),  # equal priorities: the smaller
+            (up(3), 2.0), (low(3), 2.0),  # url wins, in either order
+        ]
+        batch = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, n_parts),
+            "url string, priority double",
+        )
+        _, n_ins, n_dup = store.insert(spark, batch, RUN_TS)
+        assert (n_ins, n_dup) == (4, 0)
+        got = {
+            (r["url"], r["priority"])
+            for r in store.table.read(spark)
+            .filter(F.col("host").startswith(f"h{n_parts}"))
+            .collect()
+        }
+        assert got == {(low(0), 5.0), (low(1), 5.0), (up(2), 2.0), (up(3), 2.0)}
+
+
+# ------------------------------------------------------ cli store fold
+def test_cli_fetch_folds_metrics_chains(spark, tmp_path, monkeypatch):
+    """The store-writing CLI subcommands fold the metrics chains before
+    growing them, as run_crawl does between rounds: four `fetch` calls
+    keep both chains bounded, and the folded lineage counts stay exact."""
+    import functools
+
+    from dart_xbrl_crawler_spark import cli
+
+    # reuse the test session; the CLI normally owns (and stops) its own
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    monkeypatch.setattr(
+        cli, "FrontierStore", functools.partial(FrontierStore, metrics_compact_every=2)
+    )
+
+    urls = [f"https://f.example/p{i}" for i in range(8)]
+    paths = {k: str(tmp_path / k) for k in ("seeds", "pages", "robots", "store")}
+    spark.createDataFrame(
+        pd.DataFrame({"url": urls, "priority": [0.0] * len(urls)})
+    ).write.parquet(paths["seeds"])
+    spark.createDataFrame(
+        pd.DataFrame({
+            "url": urls,
+            "html": [b"<html>p</html>"] * len(urls),
+            "warc_ts": [pd.Timestamp("2026-01-01")] * len(urls),
+        }),
+        schema="url string, html binary, warc_ts timestamp",
+    ).write.parquet(paths["pages"])
+    # budget 60 000 / 20 000 = 3 pages per round: every fetch does work
+    spark.createDataFrame(
+        [("f.example", None, 20_000)],
+        schema="host string, disallow_prefix string, crawl_delay_ms long",
+    ).write.parquet(paths["robots"])
+
+    def run(*argv):
+        assert cli.main(["--run-ts", RUN_TS, *argv, "--store", paths["store"]]) == 0
+
+    run("bootstrap", "--seeds", paths["seeds"])
+    store = FrontierStore(paths["store"])
+    for rid in range(4):
+        run("fetch", "--pages", paths["pages"], "--robots", paths["robots"],
+            "--round-id", str(rid))
+        assert len(store.metrics.snapshots()) <= 3, f"chain grew at fetch {rid}"
+        assert len(store.host_metrics.snapshots()) <= 3
+    assert store.state_counts(spark) == {"fetched": len(urls)}
+    assert store.lineage_counts(spark) == {"fetched": len(urls)}
 
 
 if __name__ == "__main__":

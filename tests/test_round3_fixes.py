@@ -1,7 +1,6 @@
 """Round-3 fixes: crawl-delay clamping, RFC 9309 wildcard rules,
 adaptive broadcasts (dedup confirmed-set + politeness host counts),
-delta-derived lineage metrics, snapshot retention + orphan GC, and
-round-cache release."""
+and snapshot retention + orphan GC."""
 
 from __future__ import annotations
 
@@ -155,58 +154,6 @@ def test_pop_round_many_hosts_no_forced_broadcast(spark):
     assert _plan(small_gate).count("BroadcastHashJoin") > _plan(
         gated_off
     ).count("BroadcastHashJoin")
-
-
-# ------------------------------------- lineage metrics from deltas
-def test_lineage_counts_match_exact_state_counts(spark, fixture_bundle, tmp_path):
-    from dart_xbrl_crawler_spark import fixtures
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-    from dart_xbrl_crawler_spark.operators.scheduler import seeds_to_frontier
-    from dart_xbrl_crawler_spark.schemas import PAGES, ROBOTS, SEEDS
-
-    pages, seeds, _, robots = fixture_bundle
-    store = FrontierStore(str(tmp_path / "f"), n_bloom_shards=8)
-    seeds_df = spark.createDataFrame(seeds, schema=SEEDS)
-    store.bootstrap(seeds_to_frontier(seeds_df), fixtures.RUN_TS)
-    pages_df = spark.createDataFrame(pages, schema=PAGES)
-    robots_df = spark.createDataFrame(robots, schema=ROBOTS)
-    # duplicate insert contributes a 'deduped' lineage counter
-    _, n_ins, n_dup = store.insert(
-        spark, seeds_to_frontier(seeds_df).select("url", "priority"), fixtures.RUN_TS
-    )
-    for rid in range(2):
-        store.run_round(
-            spark, pages_df, robots_df, fixtures.RUN_TS, round_id=rid,
-            round_ms=120_000,
-        )
-    lineage = store.lineage_counts(spark)
-    exact = store.state_counts(spark)
-    deduped = lineage.pop("deduped", 0)
-    assert deduped == n_dup
-    assert lineage == {k: v for k, v in exact.items() if v}
-
-
-def test_run_round_releases_previous_fetch_cache(spark, fixture_bundle, tmp_path):
-    from dart_xbrl_crawler_spark import fixtures
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-    from dart_xbrl_crawler_spark.operators.scheduler import seeds_to_frontier
-    from dart_xbrl_crawler_spark.schemas import PAGES, ROBOTS, SEEDS
-
-    pages, seeds, _, robots = fixture_bundle
-    store = FrontierStore(str(tmp_path / "f2"), n_bloom_shards=8)
-    store.bootstrap(
-        seeds_to_frontier(spark.createDataFrame(seeds, schema=SEEDS)),
-        fixtures.RUN_TS,
-    )
-    pages_df = spark.createDataFrame(pages, schema=PAGES)
-    robots_df = spark.createDataFrame(robots, schema=ROBOTS)
-    store.run_round(spark, pages_df, robots_df, fixtures.RUN_TS, round_id=0)
-    first = store._prev_fetched
-    assert first is not None and first.storageLevel.useMemory
-    store.run_round(spark, pages_df, robots_df, fixtures.RUN_TS, round_id=1)
-    # the first round's cache is gone; the second round's is live
-    assert not first.storageLevel.useMemory
-    assert store._prev_fetched is not first
 
 
 # --------------------------------------- retention / expiry / orphan GC

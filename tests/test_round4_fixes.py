@@ -1,7 +1,6 @@
 """Round-4 fixes: href quoting recall, backoff coverage for hosts
-outside the robots dim, lineage clamp for legacy stores, crawl-loop
-cache release, priority inheritance in discovery, and bucketed-store
-cross-session durability."""
+outside the robots dim, priority inheritance in discovery, and
+bucketed-store cross-session durability."""
 
 from __future__ import annotations
 
@@ -81,70 +80,6 @@ def test_backoff_applies_to_hosts_missing_from_robots(spark):
     )
     # budget 20000 / 5000 = 4 of 8 — the backoff actually bites
     assert popped.filter(F.col("selected")).count() == 4
-
-
-# ------------------------------------- lineage clamp for legacy store
-def test_lineage_counts_legacy_store_never_negative(spark, tmp_path):
-    """A store whose metrics chain has transitions but no insert rows
-    (bootstrapped before insert metrics existed) reports queued from
-    the exact state scan, not a negative number — so run_crawl's drain
-    check still works."""
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-
-    store = FrontierStore(str(tmp_path / "legacy"), n_bloom_shards=4)
-    seeds = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "url": [f"https://l.example/p{i}" for i in range(6)],
-                "priority": [0.0] * 6,
-            }
-        )
-    )
-    store.bootstrap(seeds, RUN_TS)
-    # simulate the legacy chain: drop the bootstrap 'queued' rows,
-    # keep only a transition commit
-    store.metrics._publish([])
-    store.metrics.commit(
-        spark.createDataFrame(
-            [(0, 0, "fetched", 2)],
-            schema="round_id int, partition_id int, state string, n long",
-        ),
-        note="legacy transition",
-    )
-    counts = store.lineage_counts(spark)
-    assert counts["queued"] >= 0
-    # falls back to the exact scan: all 6 rows are still queued in the
-    # table (no delta was committed)
-    assert counts["queued"] == 6
-
-
-# ----------------------------------------- run_crawl releases caches
-def test_run_crawl_releases_fetch_cache(spark, tmp_path):
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-
-    pages = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "url": ["https://r.example/a"],
-                "html": [b"<html>end</html>"],
-                "warc_ts": [pd.Timestamp("2026-01-01")],
-            }
-        ),
-        schema="url string, html binary, warc_ts timestamp",
-    )
-    robots = spark.createDataFrame(
-        [("r.example", None, 100)],
-        schema="host string, disallow_prefix string, crawl_delay_ms long",
-    )
-    store = FrontierStore(str(tmp_path / "rel"), n_bloom_shards=4)
-    store.bootstrap(
-        spark.createDataFrame(
-            pd.DataFrame({"url": ["https://r.example/a"], "priority": [0.0]})
-        ),
-        RUN_TS,
-    )
-    store.run_crawl(spark, pages, robots, RUN_TS, max_rounds=3)
-    assert store._prev_fetched is None  # last round's cache released
 
 
 # ------------------------------------- priority inheritance (decay)
@@ -478,54 +413,6 @@ def test_extract_image_stats_real_pixels(spark):
     x = px.astype(np.float64)
     assert abs(r["mean"] - x.mean()) < 1e-9
     assert abs(r["std"] - x.std()) < 1e-9
-
-
-# --------------------------------------- metrics chain compaction
-def test_metrics_chain_compaction_bounded_and_exact(spark, tmp_path):
-    """A multi-round crawl with an aggressive compaction threshold
-    keeps the metrics chains bounded while lineage_counts/host_stats
-    stay EXACTLY equal to an uncompacted twin's."""
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-
-    def page(name, link_to=None):
-        body = (
-            f'<html><a href="/{link_to}">n</a></html>' if link_to else "<html>e</html>"
-        )
-        return (f"https://c.example/{name}", body.encode(), pd.Timestamp("2026-01-01"))
-
-    pages = spark.createDataFrame(
-        pd.DataFrame(
-            [page("a", "b"), page("b", "c"), page("c", "d"), page("d")],
-            columns=["url", "html", "warc_ts"],
-        ),
-        schema="url string, html binary, warc_ts timestamp",
-    )
-    robots = spark.createDataFrame(
-        [("c.example", None, 100)],
-        schema="host string, disallow_prefix string, crawl_delay_ms long",
-    )
-    seeds = pd.DataFrame({"url": ["https://c.example/a"], "priority": [0.0]})
-
-    stores = {}
-    for tag, every in (("compacted", 2), ("plain", 1000)):
-        st = FrontierStore(
-            str(tmp_path / tag), n_bloom_shards=4, metrics_compact_every=every
-        )
-        st.bootstrap(spark.createDataFrame(seeds), RUN_TS)
-        st.run_crawl(spark, pages, robots, RUN_TS, max_rounds=6, round_ms=100_000)
-        stores[tag] = st
-
-    plain, comp = stores["plain"], stores["compacted"]
-    # chain bounded: ≤ threshold + the commits of one round (round
-    # metrics + host metrics + next insert) before the next fold
-    assert len(comp.metrics.snapshots()) <= 4
-    assert len(plain.metrics.snapshots()) > 4  # the twin actually grew
-    assert comp.lineage_counts(spark) == plain.lineage_counts(spark)
-    hs = lambda s: {
-        r["host"]: (r["n_fetched"], r["n_failed"], r["fail_rate"])
-        for r in s.host_stats(spark).collect()
-    }
-    assert hs(comp) == hs(plain)
 
 
 # --------------------------------------------- real Iceberg path (opt)

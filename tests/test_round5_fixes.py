@@ -1,7 +1,5 @@
-"""Round-5 fixes: derived fetch-stage partition count, lineage-safe
-expire/recrawl (cache loss between commit and retire_seen), cuckoo
-tombstone resurrection under filter false positives, and the metrics
-chain staying bounded over a 100-round crawl."""
+"""Round-5 fixes: derived fetch-stage partition count, and the
+content, discovery and image kernels added that round."""
 
 from __future__ import annotations
 
@@ -10,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 RUN_TS = "2026-01-16 00:00:00"
-LATER_TS = "2026-02-01 00:00:00"
 
 
 # ------------------------------------- derived fetch partition count
@@ -37,168 +34,6 @@ def test_fetch_partition_count_scales_with_selected(spark):
     # an explicit caller override still wins
     forced = fetch_partitioning(selected(10_000), n_partitions=7)
     assert forced.rdd.getNumPartitions() == 7
-
-
-# ----------------------------- expire() survives cache loss mid-flight
-def _bootstrap_cuckoo_store(spark, path, urls):
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-
-    store = FrontierStore(str(path), n_bloom_shards=4, seen_filter="cuckoo")
-    seeds = spark.createDataFrame(
-        pd.DataFrame({"url": urls, "priority": [0.0] * len(urls)})
-    )
-    store.bootstrap(seeds, RUN_TS)
-    return store
-
-
-def _mark_fetched(spark, store, ts):
-    """Flip every queued row to fetched via the normal delta path (the
-    round outcome, minus the fetch machinery the test doesn't need)."""
-    frontier = store.table.read(spark)
-    changed = (
-        frontier.filter(F.col("state") == "queued")
-        .withColumn("state", F.lit("fetched"))
-        .withColumn("fetch_ts", F.to_timestamp(F.lit(ts)))
-    )
-    store.table.commit_delta(spark, changed, note="test fetch")
-    store.metrics.commit(
-        changed.groupBy(
-            F.lit(0).alias("round_id"),
-            F.spark_partition_id().alias("partition_id"),
-            "state",
-        )
-        .count()
-        .withColumnRenamed("count", "n"),
-        note="test fetch",
-    )
-
-
-def test_expire_retires_seen_even_after_cache_loss(spark, tmp_path):
-    """expire() consumes its `changed` frame AFTER commit_delta flips
-    those rows to 'expired' — if the frame were a lazy persist over the
-    pre-commit frontier, losing the cache there would recompute an
-    EMPTY selection (post-commit no row matches state='fetched'), so
-    retire_seen would delete nothing and the url could never resurrect.
-    Simulate the loss at the worst moment: clear every SQL cache right
-    after the commit, then check the url still resurrects."""
-    url = "https://loss.example/a"
-    store = _bootstrap_cuckoo_store(spark, tmp_path / "f", [url])
-    _mark_fetched(spark, store, RUN_TS)
-
-    orig = store.table.commit_delta
-
-    def commit_then_lose_cache(spark_, df, note=""):
-        snap = orig(spark_, df, note=note)
-        spark.catalog.clearCache()
-        return snap
-
-    store.table.commit_delta = commit_then_lose_cache
-    try:
-        n = store.expire(spark, LATER_TS)
-    finally:
-        store.table.commit_delta = orig
-    assert n == 1
-    assert store.state_counts(spark).get("expired") == 1
-
-    # rediscovery must insert a fresh queued row (resurrection)
-    batch = spark.createDataFrame(pd.DataFrame({"url": [url]}))
-    _, n_fresh, n_dup = store.insert(spark, batch, LATER_TS)
-    assert (n_fresh, n_dup) == (1, 0)
-    assert store.state_counts(spark).get("queued") == 1
-
-
-def test_recrawl_counts_survive_cache_loss(spark, tmp_path):
-    """recrawl()'s count/metrics read `changed` after the commit flips
-    the rows to 'queued' — a recompute over the post-commit frontier
-    would report 0 re-queued.  Same cache-loss simulation."""
-    urls = [f"https://re.example/{i}" for i in range(5)]
-    store = _bootstrap_cuckoo_store(spark, tmp_path / "f", urls)
-    _mark_fetched(spark, store, RUN_TS)
-
-    orig = store.table.commit_delta
-
-    def commit_then_lose_cache(spark_, df, note=""):
-        snap = orig(spark_, df, note=note)
-        spark.catalog.clearCache()
-        return snap
-
-    store.table.commit_delta = commit_then_lose_cache
-    try:
-        n = store.recrawl(spark, LATER_TS)
-    finally:
-        store.table.commit_delta = orig
-    assert n == 5
-    assert store.state_counts(spark).get("queued") == 5
-
-
-# -------------------- cuckoo tombstones vs filter false positives
-def test_cuckoo_tombstone_fpp_cannot_permadedup(spark, tmp_path):
-    """A rediscovered expired url whose hash still hits the filter (a
-    ~1.2e-4 false positive at 16-bit tags — simulated here by
-    re-adding the hash) must NOT exact-confirm against its own expired
-    tombstone row: expire()'s contract is that later rediscovery
-    unconditionally resurrects."""
-    url = "https://fpp.example/a"
-    store = _bootstrap_cuckoo_store(spark, tmp_path / "f", [url])
-    _mark_fetched(spark, store, RUN_TS)
-    assert store.expire(spark, LATER_TS) == 1
-
-    # simulate the false positive: put the retired hash back into the
-    # filter while the frontier row stays an expired tombstone
-    store._commit_bloom_batch(
-        spark, store.table.read(spark).select("url_hash"), "fpp-sim"
-    )
-
-    batch = spark.createDataFrame(pd.DataFrame({"url": [url]}))
-    _, n_fresh, n_dup = store.insert(spark, batch, LATER_TS)
-    assert (n_fresh, n_dup) == (1, 0), "tombstone exact-confirmed a live url"
-    assert store.state_counts(spark).get("queued") == 1
-
-
-# ------------------------- metrics chain bounded over a long crawl
-def test_metrics_chain_bounded_over_100_rounds(spark, tmp_path):
-    """100 rounds of metrics/host-metrics commits with compaction keep
-    BOTH chains ≤ threshold+1 snapshots at every step, and the folded
-    running sums stay exactly equal to the arithmetic totals (fold
-    marker rows round_id=-2 must aggregate, not duplicate)."""
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-
-    store = FrontierStore(
-        str(tmp_path / "f"), n_bloom_shards=4, metrics_compact_every=8
-    )
-    total_fetched = 0
-    host_fetched = {"a.example": 0, "b.example": 0}
-    for rid in range(100):
-        n = 1 + (rid % 3)
-        total_fetched += n
-        host = "a.example" if rid % 2 == 0 else "b.example"
-        host_fetched[host] += n
-        store.metrics.commit(
-            spark.createDataFrame(
-                # a queued (insert-side) row balancing each fetched row,
-                # as real rounds produce — lineage_counts' queue math
-                # needs the insert counters the crawl always commits
-                [(rid, 0, "queued", n), (rid, 0, "fetched", n)],
-                schema="round_id int, partition_id int, state string, n long",
-            ),
-            note=f"round={rid}",
-        )
-        store.host_metrics.commit(
-            spark.createDataFrame(
-                [(rid, host, "fetched", n)],
-                schema="round_id int, host string, state string, n long",
-            ),
-            note=f"round={rid}",
-        )
-        store._maybe_compact_metrics(spark)
-        assert len(store.metrics.snapshots()) <= 9, f"chain grew at round {rid}"
-        assert len(store.host_metrics.snapshots()) <= 9
-
-    assert store.lineage_counts(spark) == {"fetched": total_fetched}
-    hs = {
-        r["host"]: r["n_fetched"] for r in store.host_stats(spark).collect()
-    }
-    assert hs == host_fetched
 
 
 # ------------------------ presentation linkbase → class1..3 hierarchy
@@ -1972,61 +1807,6 @@ def test_crawl_discovers_sitemap_and_feed_children(spark, tmp_path):
     fd_child = next(v for u, v in rows.items() if "from-feed" in u)
     an_child = next(v for u, v in rows.items() if "from-anchor" in u)
     assert (sm_child, fd_child, an_child) == (4.0, 3.0, 2.0)
-
-
-def test_recrawl_hints_requeues_only_advertised(spark, tmp_path):
-    """Sitemap-lastmod-driven freshness: only hinted urls whose fetch
-    predates the advertised lastmod flip back to queued; unparseable
-    lastmods and fresh rows stay put."""
-    import pandas as pd
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-    from dart_xbrl_crawler_spark import fixtures
-    from dart_xbrl_crawler_spark.schemas import PAGES, ROBOTS
-
-    urls = [f"https://r.ex/p{i}" for i in range(4)]
-    pages = spark.createDataFrame(
-        pd.DataFrame({
-            "url": urls,
-            "html": [f"<html>{i}</html>".encode() for i in range(4)],
-            "warc_ts": [pd.Timestamp("2026-01-01")] * 4,
-        }),
-        schema="url string, html binary, warc_ts timestamp",
-    )
-    robots = spark.createDataFrame(
-        [("r.ex", None, 1)],
-        schema="host string, disallow_prefix string, crawl_delay_ms long",
-    )
-    store = FrontierStore(str(tmp_path / "r"), n_bloom_shards=4)
-    store.bootstrap(
-        spark.createDataFrame(
-            pd.DataFrame({"url": urls, "priority": [0.0] * 4})
-        ),
-        "2026-01-02 00:00:00",
-    )
-    store.run_crawl(spark, pages, robots, "2026-01-02 00:00:00",
-                    max_rounds=1, discover=False)
-    assert store.state_counts(spark).get("fetched") == 4
-    hints = spark.createDataFrame(
-        [
-            (urls[0], "2026-02-01"),              # newer → requeue
-            (urls[1], "2026-02-01T09:30:00Z"),    # full ISO → requeue
-            (urls[2], "2025-12-01"),              # older than fetch → keep
-            (urls[3], "not-a-date"),              # unparseable → keep
-            ("https://r.ex/unknown", "2026-02-01"),  # not in frontier
-        ],
-        schema="url string, lastmod string",
-    )
-    n = store.recrawl_hints(spark, hints)
-    assert n == 2
-    counts = store.state_counts(spark)
-    assert counts.get("queued") == 2 and counts.get("fetched") == 2
-    queued = {
-        r["url_canon"]
-        for r in store.table.read(spark)
-        .filter(F.col("state") == "queued").select("url_canon").collect()
-    }
-    assert queued == {urls[0], urls[1]}
-    store.release()
 
 
 def test_main_content_kernel_rules():
