@@ -101,35 +101,21 @@ class FrontierStore:
         expected_keys: int | None = None,
         compact_every: int = 16,
         expire_keep_last: int | None = None,
-        storage: str = "parquet",
-        n_buckets: int = 64,
+        n_buckets: int | None = None,
         metrics_compact_every: int = 64,
         seen_filter: str | None = None,
         filter_keep_last: int = 4,
     ):
-        if storage == "bucketed":
-            # 10^10-row layout: base bucketed by url_hash → merge-on-read
-            # and every url_hash join reuse the bucket layout instead of
-            # shuffling the frontier (sources/checkpoint.BucketedMergeTable)
-            import re as _re
-
-            from ..sources.checkpoint import BucketedMergeTable
-
-            prefix = _re.sub(r"[^A-Za-z0-9_]", "_", path.strip("/"))[-48:].lstrip("_")
-            self.table = BucketedMergeTable(
-                path,
-                table_prefix=f"frontier_{prefix}",
-                key="url_hash",
-                n_buckets=n_buckets,
-                compact_every=compact_every,
-            )
-        else:
-            self.table = MergeTable(
-                path,
-                key="url_hash",
-                compact_every=compact_every,
-                expire_keep_last=expire_keep_last,
-            )
+        # n_buckets: store new frontier bases bucketed by url_hash (the
+        # 10^10-row layout); None keeps the latest base's layout, so a
+        # reopen needs no layout argument
+        self.table = MergeTable(
+            path,
+            key="url_hash",
+            compact_every=compact_every,
+            expire_keep_last=expire_keep_last,
+            n_buckets=n_buckets,
+        )
         self.table_path = path
         self.host_metrics = SnapshotTable(path + "_host_metrics")
         self.metrics = SnapshotTable(path + "_metrics")
@@ -505,11 +491,14 @@ class FrontierStore:
         Shape: canonicalize the hint urls (one Arrow batch over
         O(|hints|) rows), one equality join on url_hash against the
         frontier, flip rows whose fetch predates the advertised
-        lastmod.  The commit is an O(|stale|) delta; the frontier scan
-        is the join's build side at 10^10 rows — bucketed on url_hash,
-        so the hint side shuffles, the base doesn't.  Lastmod accepts
-        both W3C forms (date-only and full ISO 8601); unparseable
-        hints are dropped, surfaced by the returned count only."""
+        lastmod.  The commit is an O(|stale|) delta.  With a bucketed
+        base (``n_buckets``) and no deltas pending, the join leaves the
+        base in place (its buckets are a Murmur3 hash of url_hash) and
+        shuffles only the hint side; with deltas pending the merged
+        frontier is a union and shuffles like a parquet base.  Lastmod
+        accepts both W3C forms (date-only and full ISO 8601);
+        unparseable hints are dropped, surfaced by the returned count
+        only."""
         lastmod_ts = F.coalesce(
             F.try_to_timestamp(F.col("lastmod")),
             F.try_to_timestamp(

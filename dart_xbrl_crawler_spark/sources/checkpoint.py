@@ -12,16 +12,24 @@ in this environment, so the same contract is implemented directly:
   committed),
 * resume = read latest snapshot (or any pinned snapshot-id).
 
-Swap point: ``IcebergTable`` below gates on the Spark catalog having
-Iceberg support; when the jar is present it takes over with the same
-API (append/overwrite/commit semantics mapping to real snapshots).
+A snapshot is plain parquet or, when committed with ``bucket_by``, an
+external bucketed table at the same dir (Iceberg's ``bucket(N, key)``
+hidden partitioning expressed through Spark's bucketed-table catalog);
+the layout is a field of its manifest entry, so one MergeTable serves
+both and a store reopens without being told which it is.
+
+Swap point: ``IcebergMergeTable`` below gates on the Spark catalog
+having Iceberg support; when the jar is present it takes over with the
+same API (append/overwrite/commit semantics mapping to real snapshots).
 """
 
 from __future__ import annotations
 
 import functools
+import hashlib
 import json
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -29,24 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _last_wins(
-    spark: SparkSession, table: SnapshotTable, snaps: list[dict], key: str
-) -> DataFrame:
-    """Merge the given snapshots of ``table`` last-wins per ``key``:
-    each row is tagged with its snapshot's commit seq, and every column
-    takes its value from the highest seq (``max_by`` aggregate — one
-    hash shuffle on the key)."""
-    allp = functools.reduce(
-        DataFrame.unionByName,
-        [
-            table.read(spark, s["id"]).withColumn("_seq", F.lit(int(s["seq"])))
-            for s in snaps
-        ],
-    )
-    cols = [c for c in allp.columns if c not in ("_seq", key)]
-    return allp.groupBy(key).agg(
-        *[F.max_by(F.col(c), F.col("_seq")).alias(c) for c in cols]
-    ).select(key, *cols)
+def _catalog_name(snap_dir: str) -> str:
+    """Catalog name of a bucketed snapshot dir: a hash of its absolute
+    path, so no two stores (or snapshots) can share an entry."""
+    digest = hashlib.sha256(os.path.abspath(snap_dir).encode()).hexdigest()
+    return f"snap_{digest[:24]}"
 
 
 class SnapshotTable:
@@ -70,24 +65,50 @@ class SnapshotTable:
         snaps = self.snapshots()
         return snaps[-1]["id"] if snaps else None
 
-    def commit(self, df: DataFrame, note: str = "", kind: str = "base") -> str:
+    def commit(
+        self,
+        df: DataFrame,
+        note: str = "",
+        kind: str = "base",
+        bucket_by: tuple[str, int] | None = None,
+    ) -> str:
         """Write df as a new immutable snapshot; atomically publish it.
         ``kind`` is "base" (full table image) or "delta" (changed rows
-        only — see MergeTable).  Returns the snapshot id."""
+        only — see MergeTable); ``bucket_by=(key, n_buckets)`` writes it
+        bucketed.  Returns the snapshot id."""
         snaps = self.snapshots()
-        entry = self._write(df, snaps, note, kind)
+        entry = self._write(df, snaps, note, kind, bucket_by)
         self._publish(snaps + [entry])
         return entry["id"]
 
-    def _write(self, df: DataFrame, snaps: list[dict], note: str, kind: str) -> dict:
+    def _write(
+        self,
+        df: DataFrame,
+        snaps: list[dict],
+        note: str,
+        kind: str,
+        bucket_by: tuple[str, int] | None = None,
+    ) -> dict:
         """Write df as the snapshot after ``snaps``; returns its
         manifest entry (not yet published)."""
         # monotonic, NOT len(snaps): expiry trims the manifest front, and
         # a reused seq would corrupt MergeTable's last-wins-by-_seq merge
         seq = (snaps[-1]["seq"] + 1) if snaps else 0
         snap_id = f"snap-{seq:06d}-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, snap_id))
-        return {"id": snap_id, "seq": seq, "note": note, "kind": kind}
+        loc = os.path.join(self.path, snap_id)
+        entry = {"id": snap_id, "seq": seq, "note": note, "kind": kind}
+        if bucket_by is None:
+            df.write.mode("overwrite").parquet(loc)
+            return entry
+        # EXTERNAL table at the snapshot dir: without Hive support the
+        # catalog entry dies with the session, so the entry records the
+        # bucket spec and schema read() re-registers it from
+        key, n_buckets = bucket_by
+        (df.write.mode("overwrite").bucketBy(n_buckets, key).sortBy(key)
+         .option("path", os.path.abspath(loc)).format("parquet")
+         .saveAsTable(_catalog_name(loc)))
+        return {**entry, "bucket_key": key, "buckets": n_buckets,
+                "schema_ddl": df.schema.toDDL()}
 
     def _publish(self, snaps: list[dict]) -> None:
         fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".manifest.tmp")
@@ -101,9 +122,25 @@ class SnapshotTable:
             raise FileNotFoundError(f"no committed snapshots at {self.path}")
         if snapshot_id is None:
             snapshot_id = snaps[-1]["id"]
-        elif snapshot_id not in {s["id"] for s in snaps}:
+        entry = next((s for s in snaps if s["id"] == snapshot_id), None)
+        if entry is None:
             raise KeyError(f"unknown snapshot {snapshot_id}")
-        return spark.read.parquet(os.path.join(self.path, snapshot_id))
+        loc = os.path.join(self.path, snapshot_id)
+        if "buckets" not in entry:
+            return spark.read.parquet(loc)
+        name = _catalog_name(loc)
+        if not spark.catalog.tableExists(name):
+            # a later session: re-register from the manifest.  The
+            # CLUSTERED BY spec must match the writer's exactly, or Spark
+            # treats the files as unbucketed and shuffles every join
+            key = entry["bucket_key"]
+            spark.sql(
+                f"CREATE TABLE {name} ({entry['schema_ddl']}) USING parquet "
+                f"CLUSTERED BY ({key}) SORTED BY ({key} ASC) "
+                f"INTO {entry['buckets']} BUCKETS "
+                f"LOCATION '{os.path.abspath(loc)}'"
+            )
+        return spark.table(name)
 
     def read_all(self, spark: SparkSession) -> DataFrame:
         """Union of EVERY committed snapshot (append-only chains like
@@ -123,11 +160,9 @@ class SnapshotTable:
         then the manifest flips to reference ONLY it — a crash before
         the flip leaves an orphan dir (GC'd later), never a chain that
         double-counts fold + originals."""
-        import shutil
-
         entry = self._write(df, self.snapshots(), note, "base")
         self._publish([entry])
-        self._gc_orphans(shutil)
+        self._gc_orphans()
         return entry["id"]
 
     def rollback_to(self, snapshot_id: str) -> None:
@@ -148,19 +183,23 @@ class SnapshotTable:
         FIRST, dirs second — a crash in between leaves unreferenced
         dirs (cleaned by the next expire), never a dangling manifest
         entry.  Returns the ids whose dirs were removed."""
-        import shutil
-
         snaps = self.snapshots()
         if keep_last > 0 and len(snaps) > keep_last:
             self._publish(snaps[-keep_last:])
-        return self._gc_orphans(shutil)
+        return self._gc_orphans()
 
-    def _gc_orphans(self, shutil) -> list[str]:
+    def _gc_orphans(self) -> list[str]:
         live = {s["id"] for s in self.snapshots()}
+        spark = SparkSession.getActiveSession()
         removed = []
         for d in os.listdir(self.path):
             if d.startswith("snap-") and d not in live:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+                loc = os.path.join(self.path, d)
+                # a bucketed dir's catalog entry goes before its files
+                name = _catalog_name(loc)
+                if spark is not None and spark.catalog.tableExists(name):
+                    spark.sql(f"DROP TABLE {name}")
+                shutil.rmtree(loc, ignore_errors=True)
                 removed.append(d)
         return removed
 
@@ -173,11 +212,19 @@ class MergeTable:
     This is the scale-critical difference from full-rewrite snapshots
     (SURVEY.md §2.9): a crawl round touches |round| rows of a 10^10-row
     frontier, so the round commit must write O(|round|) bytes, not
-    O(|frontier|).  Readers merge base+deltas with one last-wins
-    aggregate per key — at scale the frontier is stored bucketed by
-    pmod(url_hash, B) (Iceberg ``bucket(url_hash)`` hidden partitioning)
-    and that merge needs no shuffle; compaction folds deltas back into a
-    new base every ``compact_every`` deltas to bound read amplification.
+    O(|frontier|).  read() is ``base LEFT ANTI latest-delta keys ∪
+    latest-delta rows``: a delta side under the broadcast threshold is
+    broadcast, and with ``n_buckets`` — the base stored bucketed and
+    sorted by the key (Iceberg ``bucket(N, key)`` hidden partitioning)
+    — a shuffle join leaves the base in place too, so only the pending
+    deltas move.  Compaction folds deltas back into a new base every
+    ``compact_every`` deltas to bound read amplification.
+
+    A bucketed base is an external table whose catalog entry is
+    re-registered from the manifest in a later session; retention GC
+    deletes snapshot dirs by path.  On a shared Hive/Glue metastore,
+    point ``path`` at storage this table exclusively owns; the Iceberg
+    path (IcebergMergeTable below) delegates GC to the catalog instead.
     """
 
     def __init__(
@@ -186,16 +233,23 @@ class MergeTable:
         key: str = "url_hash",
         compact_every: int = 16,
         expire_keep_last: int | None = None,
+        n_buckets: int | None = None,
     ):
         self.table = SnapshotTable(path)
         self.key = key
         self.compact_every = compact_every
         # retention applied after each auto-compaction; None = keep all
         self.expire_keep_last = expire_keep_last
+        # bucket count of new bases; None = the latest base's layout
+        self.n_buckets = n_buckets
 
     # -- commits ---------------------------------------------------------
     def commit_base(self, df: DataFrame, note: str = "") -> str:
-        return self.table.commit(df, note=note, kind="base")
+        n_buckets = self.n_buckets
+        if n_buckets is None:
+            n_buckets = (self._latest_base() or {}).get("buckets")
+        bucket_by = (self.key, n_buckets) if n_buckets else None
+        return self.table.commit(df, note=note, kind="base", bucket_by=bucket_by)
 
     def commit_delta(self, spark: SparkSession, df: DataFrame, note: str = "") -> str:
         """Append changed/new FULL rows (same schema as base); last
@@ -229,16 +283,31 @@ class MergeTable:
 
     # -- read (merge-on-read) ---------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame:
-        """Current state: base ∪ deltas, last-wins per key by commit
-        sequence (``max_by`` aggregate — one hash shuffle on the key;
-        zero-shuffle when the table is bucketed on the key)."""
+        """Current state: the base, minus every key a pending delta
+        rewrites, plus each such key's row from its latest delta
+        (``max_by`` commit seq over the deltas only).  With deltas
+        pending the key column comes first, as the USING join puts it."""
         base = self._latest_base()
         if base is None:
             raise FileNotFoundError(f"no base snapshot at {self.table.path}")
+        rows = self.table.read(spark, base["id"])
         deltas = self._deltas_since_base()
         if not deltas:
-            return self.table.read(spark, base["id"])
-        return _last_wins(spark, self.table, [base, *deltas], self.key)
+            return rows
+        tagged = functools.reduce(
+            DataFrame.unionByName,
+            [
+                self.table.read(spark, s["id"]).withColumn("_seq", F.lit(int(s["seq"])))
+                for s in deltas
+            ],
+        )
+        cols = [c for c in tagged.columns if c not in ("_seq", self.key)]
+        latest = tagged.groupBy(self.key).agg(
+            *[F.max_by(F.col(c), F.col("_seq")).alias(c) for c in cols]
+        )
+        return rows.join(latest.select(self.key), self.key, "left_anti").unionByName(
+            latest.select(*rows.columns)
+        )
 
     def compact(
         self,
@@ -264,8 +333,6 @@ class MergeTable:
         second.  Reference analog: the 7-day download-retention cleanup
         (/root/reference/dart_api_manager.py:582-602), as snapshot
         retention instead of mtime deletes."""
-        import shutil
-
         snaps = self.table.snapshots()
         base_idx = None
         for i, s in enumerate(snaps):
@@ -276,7 +343,7 @@ class MergeTable:
         cut = min(base_idx, max(0, len(snaps) - keep_last))
         if cut > 0:
             self.table._publish(snaps[cut:])
-        return self.table._gc_orphans(shutil)
+        return self.table._gc_orphans()
 
     # -- snapshot surface (time travel works on the delta chain too:
     # rollback truncates the manifest; read() then merges the latest
@@ -296,174 +363,6 @@ class MergeTable:
             for root, _, files in os.walk(d)
             for f in files
         )
-
-
-class BucketedMergeTable:
-    """MergeTable semantics with the BASE stored as a bucketed table
-    (bucketBy(n_buckets, key), sorted by key) — the 10^10-row layout:
-
-    * merge-on-read never shuffles the base.  read() is
-      ``base LEFT ANTI latest_delta_keys ∪ latest_delta_rows``: the
-      base side scans its bucket layout in place (EnsureRequirements
-      shuffles only the small delta side to match the base's
-      HashPartitioning), and the delta chain — O(rounds × |round|)
-      rows between compactions — is the only thing that ever moves.
-      The plain MergeTable's groupBy-max_by formulation instead
-      re-shuffles the FULL table on every read.
-    * deltas stay an append-only SnapshotTable chain (O(|round|) bytes
-      per commit, crash-safe manifest), exactly as before.
-    * compact() folds everything into a fresh bucketed base and resets
-      the delta chain.
-
-    Iceberg analog: ``bucket(N, url_hash)`` hidden partitioning with
-    merge-on-read deletes + storage-partitioned joins; this is the same
-    layout expressed through Spark's bucketed-table catalog.
-
-    Warehouse-layout contract (real-metastore deployments): the base
-    is registered as an EXTERNAL bucketed table at an explicit
-    ``location`` under ``self.path`` (recorded in the manifest, so
-    ``_ensure_registered`` re-registers after catalog loss — e.g. a
-    fresh session with a default in-memory catalog).  ``expire``/
-    ``compact`` GC by DELETING those location directories directly;
-    with a shared Hive/Glue metastore, point ``path`` at storage this
-    store exclusively owns — the store assumes nothing else writes
-    under it, and a catalog-managed (non-external) table of the same
-    name would not survive its warehouse-side deletes.  The Iceberg
-    deployment path avoids hand-managed locations entirely:
-    IcebergMergeTable below delegates GC to the catalog's own
-    snapshot expiry."""
-
-    def __init__(
-        self,
-        path: str,
-        table_prefix: str,
-        key: str = "url_hash",
-        n_buckets: int = 64,
-        compact_every: int = 16,
-    ):
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-        self.table_prefix = table_prefix
-        self.key = key
-        self.n_buckets = n_buckets
-        self.compact_every = compact_every
-        self.deltas = SnapshotTable(os.path.join(path, "deltas"))
-
-    @property
-    def _bases_path(self) -> str:
-        return os.path.join(self.path, "BASES.json")
-
-    def _bases(self) -> list[dict]:
-        if not os.path.exists(self._bases_path):
-            return []
-        with open(self._bases_path) as f:
-            return json.load(f)["bases"]
-
-    def _publish_bases(self, bases: list[dict]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".bases.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump({"bases": bases}, f, indent=1)
-        os.replace(tmp, self._bases_path)
-
-    # -- commits --------------------------------------------------------
-    def commit_base(self, df: DataFrame, note: str = "") -> str:
-        from .bucketed import write_bucketed
-
-        bases = self._bases()
-        seq = (bases[-1]["seq"] + 1) if bases else 0
-        tbl = f"{self.table_prefix}_base_{seq:06d}"
-        # EXTERNAL table under the store path + schema recorded in the
-        # manifest: the in-memory catalog entry dies with the session,
-        # so read() re-registers from (location, schema_ddl, bucket
-        # spec) — this is what makes kill-anywhere/resume hold for the
-        # bucketed layout, not just the parquet MergeTable.
-        loc = os.path.join(self.path, "bases", tbl)
-        df.sparkSession.sql(f"DROP TABLE IF EXISTS {tbl}")
-        write_bucketed(
-            df, tbl, key=self.key, n_buckets=self.n_buckets,
-            sorted_by=self.key, path=loc,
-        )
-        self._publish_bases(
-            bases
-            + [{
-                "table": tbl,
-                "seq": seq,
-                "note": note,
-                "location": loc,
-                "schema_ddl": df.schema.toDDL(),
-            }]
-        )
-        # base published → the delta chain it supersedes resets
-        self.deltas._publish([])
-        self.deltas._gc_orphans(__import__("shutil"))
-        return tbl
-
-    def _ensure_registered(self, spark: SparkSession, base: dict) -> None:
-        from .bucketed import register_bucketed
-
-        if spark.catalog.tableExists(base["table"]):
-            return
-        if "location" not in base:  # legacy managed-table manifest entry
-            raise FileNotFoundError(
-                f"base table {base['table']} was written as a managed "
-                "table by an earlier version and is not recoverable "
-                "across sessions; re-bootstrap the store"
-            )
-        register_bucketed(
-            spark,
-            base["table"],
-            base["location"],
-            base["schema_ddl"],
-            key=self.key,
-            n_buckets=self.n_buckets,
-            sorted_by=self.key,
-        )
-
-    def commit_delta(self, spark: SparkSession, df: DataFrame, note: str = "") -> str:
-        snap = self.deltas.commit(df, note=note, kind="delta")
-        if len(self.deltas.snapshots()) > self.compact_every:
-            self.compact(spark, note=f"auto-compact after {note}")
-        return snap
-
-    # -- read (merge-on-read, base never shuffles) ----------------------
-    def _latest_delta(self, spark: SparkSession) -> DataFrame | None:
-        snaps = self.deltas.snapshots()
-        return _last_wins(spark, self.deltas, snaps, self.key) if snaps else None
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        bases = self._bases()
-        if not bases:
-            raise FileNotFoundError(f"no base snapshot at {self.path}")
-        self._ensure_registered(spark, bases[-1])
-        base = spark.table(bases[-1]["table"])
-        latest = self._latest_delta(spark)
-        if latest is None:
-            return base
-        # base-side zero Exchange: the anti-join reuses the bucket
-        # layout; only `latest` (small) shuffles to match it
-        return base.join(
-            latest.select(self.key), self.key, "left_anti"
-        ).unionByName(latest.select(*base.columns))
-
-    def compact(self, spark: SparkSession, note: str = "compact") -> str:
-        import shutil
-
-        tbl = self.commit_base(self.read(spark), note=note)
-        # retention: drop superseded base tables (keep the new one).
-        # Data is deleted BY PATH — DROP TABLE alone would silently
-        # no-op in a later session (no catalog entry) and leak the
-        # superseded bucket files under the store path forever.
-        bases = self._bases()
-        self._publish_bases(bases[-1:])  # manifest first, dirs second
-        for b in bases[:-1]:
-            spark.sql(f"DROP TABLE IF EXISTS {b['table']}")
-            if "location" in b:
-                shutil.rmtree(b["location"], ignore_errors=True)
-        return tbl
-
-    def snapshots(self) -> list[dict]:
-        return [dict(kind="base", id=b["table"], **{k: b[k] for k in ("seq", "note")})
-                for b in self._bases()] + self.deltas.snapshots()
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -495,10 +394,10 @@ class IcebergMergeTable:
       snapshots    → the table's ``.snapshots`` metadata table
       rollback_to  → system.rollback_to_snapshot procedure
     Bucketed layout: ``bucket(N, key)`` hidden partitioning at create,
-    so merge-on-read and key joins reuse the layout (the
-    BucketedMergeTable analog) without a catalog bucket spec.
+    so merge-on-read and key joins reuse the layout (the analog of
+    MergeTable's ``n_buckets`` base) without a catalog bucket spec.
 
-    Exercised by tests/test_round4_fixes.py::test_iceberg_merge_table
+    Exercised by tests/test_checkpoint.py::test_iceberg_merge_table
     when SPARK_GRAFT_ICEBERG=1 (skipped cleanly in this sandbox)."""
 
     _IDENT_RE = None  # compiled lazily; class-level to share

@@ -177,32 +177,6 @@ def test_reference_crawl_ordering(spark, fixture_bundle):
     assert len(visited_heavy) <= 5
 
 
-def test_snapshot_crash_safety(spark, tmp_path):
-    """A writer killed mid-snapshot leaves an unpublished dir; readers
-    never see it, and the next commit proceeds normally."""
-    import os
-
-    from dart_xbrl_crawler_spark.sources.checkpoint import SnapshotTable
-
-    t = SnapshotTable(str(tmp_path / "t"))
-    df1 = spark.range(10).withColumnRenamed("id", "k")
-    s1 = t.commit(df1, note="first")
-
-    # simulate a crashed writer: half-written snapshot dir, no manifest entry
-    orphan = os.path.join(t.path, "snap-999999-deadbeef")
-    os.makedirs(orphan)
-    with open(os.path.join(orphan, "part-00000.parquet"), "wb") as f:
-        f.write(b"garbage not parquet")
-
-    assert t.latest_snapshot_id() == s1
-    assert t.read(spark).count() == 10  # orphan invisible
-
-    s2 = t.commit(spark.range(20).withColumnRenamed("id", "k"), note="second")
-    assert t.read(spark).count() == 20
-    assert t.read(spark, s1).count() == 10  # time travel intact
-    assert [s["id"] for s in t.snapshots()] == [s1, s2]
-
-
 # ------------------------------------------------------ frontier store
 def test_frontier_rounds_and_resume(spark, fixture_bundle, tmp_path):
     pages, seeds, corp_map, robots = fixture_bundle
@@ -242,6 +216,78 @@ def test_frontier_rounds_and_resume(spark, fixture_bundle, tmp_path):
     mdf = store.metrics.read(spark)
     states = {r["state"] for r in mdf.select("state").distinct().collect()}
     assert "fetched" in states
+
+
+# ------------------------------------------------ bucketed base layout
+def test_frontier_store_bucketed_storage_e2e(spark, fixture_bundle, tmp_path):
+    """FrontierStore on bucketed storage reproduces the parquet-backed
+    behavior across bootstrap + rounds."""
+    from dart_xbrl_crawler_spark.operators.scheduler import seeds_to_frontier
+
+    pages, seeds, _, robots = fixture_bundle
+    seeds_df = spark.createDataFrame(seeds, schema=SEEDS)
+    pages_df = spark.createDataFrame(pages, schema=PAGES)
+    robots_df = spark.createDataFrame(robots, schema=ROBOTS)
+
+    stores = {}
+    for n_buckets in (None, 8):
+        store = FrontierStore(
+            str(tmp_path / str(n_buckets)), n_bloom_shards=8, n_buckets=n_buckets,
+        )
+        store.bootstrap(seeds_to_frontier(seeds_df), fixtures.RUN_TS)
+        for rid in range(2):
+            store.run_round(
+                spark, pages_df, robots_df, fixtures.RUN_TS, round_id=rid,
+                round_ms=120_000,
+            )
+        stores[n_buckets] = store
+    assert stores[None].state_counts(spark) == stores[8].state_counts(spark)
+
+
+def test_bucketed_stores_never_share_tables(spark, tmp_path):
+    """Two bucketed stores whose paths differ only in '/' vs '_' each
+    read back only their own urls."""
+    stores = {}
+    for path, host, n in ((tmp_path / "a" / "b", "a.example", 5),
+                          (tmp_path / "a_b", "b.example", 7)):
+        store = FrontierStore(str(path), n_bloom_shards=8, n_buckets=8)
+        urls = [f"https://{host}/p{i}" for i in range(n)]
+        store.bootstrap(
+            spark.createDataFrame(pd.DataFrame({"url": urls, "priority": [0.0] * n})),
+            RUN_TS,
+        )
+        stores[host] = (store, n)
+    for host, (store, n) in stores.items():
+        got = [r["host"] for r in store.table.read(spark).select("host").collect()]
+        assert got == [host] * n
+
+
+def test_bucketed_store_reopens_without_layout_argument(spark, fixture_bundle, tmp_path):
+    """The CLI opens every store as FrontierStore(path): a bucketed
+    store reopens, counts and runs a round without being told its
+    layout, and its compacted base stays bucketed."""
+    from dart_xbrl_crawler_spark.operators.scheduler import seeds_to_frontier
+
+    pages, seeds, _, robots = fixture_bundle
+    path = str(tmp_path / "f")
+    store = FrontierStore(path, n_bloom_shards=8, n_buckets=8)
+    store.bootstrap(
+        seeds_to_frontier(spark.createDataFrame(seeds, schema=SEEDS)), RUN_TS
+    )
+    counts = store.state_counts(spark)
+
+    reopened = FrontierStore(path, compact_every=0)  # compacts every round
+    assert reopened.state_counts(spark) == counts
+    reopened.run_round(
+        spark, spark.createDataFrame(pages, schema=PAGES),
+        spark.createDataFrame(robots, schema=ROBOTS), RUN_TS, round_id=1,
+        round_ms=120_000,
+    )
+    base = reopened.table._latest_base()
+    assert base["note"] == "auto-compact after round=1"
+    assert base["buckets"] == 8 and base["bucket_key"] == "url_hash"
+    after = reopened.state_counts(spark)
+    assert sum(after.values()) == sum(counts.values()) and after != counts
 
 
 # ------------------------------------- lineage metrics from deltas

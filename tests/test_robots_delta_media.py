@@ -160,26 +160,6 @@ def test_delta_resume_after_unpublished_write(spark, tmp_path):
     assert after == before
 
 
-def test_merge_table_compaction(spark, tmp_path):
-    from dart_xbrl_crawler_spark.sources.checkpoint import MergeTable
-
-    mt = MergeTable(str(tmp_path / "m"), key="k", compact_every=3)
-    base = spark.createDataFrame([(i, "a") for i in range(10)], "k long, v string")
-    mt.commit_base(base)
-    for j in range(5):  # exceeds compact_every → auto-compact folds chain
-        mt.commit_delta(
-            spark,
-            spark.createDataFrame([(j, f"v{j}")], "k long, v string"),
-            note=f"d{j}",
-        )
-    got = {r["k"]: r["v"] for r in mt.read(spark).collect()}
-    assert len(got) == 10
-    for j in range(5):
-        assert got[j] == f"v{j}"  # last-wins applied
-    kinds = [s.get("kind") for s in mt.table.snapshots()]
-    assert kinds.count("base") >= 2  # compaction produced a new base
-
-
 # ---------------------------------------------------------------------
 # multimodal: real header metadata from raw bytes
 # ---------------------------------------------------------------------

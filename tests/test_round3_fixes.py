@@ -1,10 +1,7 @@
 """Round-3 fixes: crawl-delay clamping, RFC 9309 wildcard rules,
-adaptive broadcasts (dedup confirmed-set + politeness host counts),
-and snapshot retention + orphan GC."""
+and adaptive broadcasts (dedup confirmed-set + politeness host counts)."""
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 import pytest
@@ -156,61 +153,6 @@ def test_pop_round_many_hosts_no_forced_broadcast(spark):
     ).count("BroadcastHashJoin")
 
 
-# --------------------------------------- retention / expiry / orphan GC
-def test_merge_table_expiry_bounds_disk_and_resume(spark, tmp_path):
-    from dart_xbrl_crawler_spark.sources.checkpoint import MergeTable
-
-    path = str(tmp_path / "m")
-    mt = MergeTable(path, key="k", compact_every=3, expire_keep_last=4)
-    mt.commit_base(
-        spark.createDataFrame([(i, "a") for i in range(50)], "k long, v string")
-    )
-    for j in range(12):  # several auto-compactions with retention
-        mt.commit_delta(
-            spark,
-            spark.createDataFrame([(j % 50, f"v{j}")], "k long, v string"),
-            note=f"d{j}",
-        )
-    snaps = mt.snapshots()
-    assert len(snaps) <= 4 + 1  # bounded manifest
-    on_disk = [d for d in os.listdir(path) if d.startswith("snap-")]
-    assert sorted(on_disk) == sorted(s["id"] for s in snaps)  # no orphans
-    # seqs stay strictly monotonic across expiry
-    seqs = [s["seq"] for s in snaps]
-    assert seqs == sorted(seqs) and len(set(seqs)) == len(seqs)
-    # resume (fresh handle) reproduces last-wins state
-    mt2 = MergeTable(path, key="k")
-    rows = {r["k"]: r["v"] for r in mt2.read(spark).collect()}
-    assert len(rows) == 50
-    for j in range(12):
-        assert rows[j % 50] != "a" or (j % 50) > 11
-    # a new commit after expiry gets a fresh, higher seq
-    mt2.commit_delta(
-        spark, spark.createDataFrame([(0, "zz")], "k long, v string")
-    )
-    assert mt2.snapshots()[-1]["seq"] > seqs[-1]
-    assert {r["v"] for r in mt2.read(spark).filter(F.col("k") == 0).collect()} == {
-        "zz"
-    }
-
-
-def test_expire_never_drops_reachable_state(spark, tmp_path):
-    """expire_snapshots keeps the latest base + every delta after it even
-    when keep_last is smaller."""
-    from dart_xbrl_crawler_spark.sources.checkpoint import MergeTable
-
-    mt = MergeTable(str(tmp_path / "m2"), key="k", compact_every=100)
-    mt.commit_base(spark.createDataFrame([(1, "a")], "k long, v string"))
-    for j in range(5):
-        mt.commit_delta(
-            spark, spark.createDataFrame([(1, f"v{j}")], "k long, v string")
-        )
-    mt.expire_snapshots(keep_last=1)
-    # base + 5 deltas all survive (they reconstruct current state)
-    assert len(mt.snapshots()) == 6
-    assert mt.read(spark).collect()[0]["v"] == "v4"
-
-
 if __name__ == "__main__":
     pytest.main([__file__, "-x", "-q"])
 
@@ -310,86 +252,6 @@ def test_xbrl_xml_byte_identity_through_kernel(spark):
     rows = X.extract_text(df, RUN_TS).collect()
     assert len(rows) == 1 and rows[0]["parse_ok"]
     assert rows[0]["text"] == golden
-
-
-# ------------------------------------------------ bucketed MergeTable
-def test_bucketed_merge_table_last_wins_and_no_base_shuffle(spark, tmp_path):
-    from dart_xbrl_crawler_spark.sources.checkpoint import BucketedMergeTable
-
-    prefix = "t" + str(abs(hash(str(tmp_path))) % 10**8)
-    bt = BucketedMergeTable(
-        str(tmp_path / "b"), table_prefix=prefix, key="k", n_buckets=8,
-        compact_every=100,
-    )
-    base = spark.createDataFrame([(i, "a") for i in range(500)], "k long, v string")
-    bt.commit_base(base, note="base")
-    bt.commit_delta(
-        spark, spark.createDataFrame([(i, "b") for i in range(50)], "k long, v string")
-    )
-    bt.commit_delta(
-        spark,
-        spark.createDataFrame([(0, "c"), (600, "new")], "k long, v string"),
-    )
-    merged = bt.read(spark)
-    rows = {r["k"]: r["v"] for r in merged.collect()}
-    assert len(rows) == 501
-    assert rows[0] == "c" and rows[1] == "b" and rows[499] == "a" and rows[600] == "new"
-    # plan shape under a forced shuffle join (disable broadcast so the
-    # 10^10-row-scale strategy is the one planned): the base scan keeps
-    # its bucket layout and is never re-shuffled — every Exchange in
-    # the plan belongs to the small delta subtree (union of delta scans
-    # → groupBy, → join-side distribution).
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = bt.read(spark)._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-    assert "Bucketed: true" in plan
-    base_scan = [
-        ln for ln in plan.splitlines() if prefix in ln and "Scan parquet" in ln
-    ]
-    assert base_scan, plan
-    n_exchange = plan.count("Exchange hashpartitioning")
-    assert n_exchange <= 2, plan
-
-    # compaction folds into a fresh bucketed base and drops old tables
-    bt.compact(spark)
-    assert len(bt.deltas.snapshots()) == 0
-    rows2 = {r["k"]: r["v"] for r in bt.read(spark).collect()}
-    assert rows2 == rows
-
-
-def test_frontier_store_bucketed_storage_e2e(spark, fixture_bundle, tmp_path):
-    """FrontierStore on bucketed storage reproduces the parquet-backed
-    behavior across bootstrap + rounds."""
-    from dart_xbrl_crawler_spark import fixtures
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-    from dart_xbrl_crawler_spark.operators.scheduler import seeds_to_frontier
-    from dart_xbrl_crawler_spark.schemas import PAGES, ROBOTS, SEEDS
-
-    pages, seeds, _, robots = fixture_bundle
-    seeds_df = spark.createDataFrame(seeds, schema=SEEDS)
-    pages_df = spark.createDataFrame(pages, schema=PAGES)
-    robots_df = spark.createDataFrame(robots, schema=ROBOTS)
-
-    stores = {}
-    for storage in ("parquet", "bucketed"):
-        store = FrontierStore(
-            str(tmp_path / storage), n_bloom_shards=8, storage=storage,
-            n_buckets=8,
-        )
-        store.bootstrap(seeds_to_frontier(seeds_df), fixtures.RUN_TS)
-        for rid in range(2):
-            store.run_round(
-                spark, pages_df, robots_df, fixtures.RUN_TS, round_id=rid,
-                round_ms=120_000,
-            )
-        stores[storage] = store
-    assert (
-        stores["parquet"].state_counts(spark)
-        == stores["bucketed"].state_counts(spark)
-    )
 
 
 # ----------------------------------------------------- wav PCM decode

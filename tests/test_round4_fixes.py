@@ -1,6 +1,5 @@
 """Round-4 fixes: href quoting recall, backoff coverage for hosts
-outside the robots dim, priority inheritance in discovery, and
-bucketed-store cross-session durability."""
+outside the robots dim, and priority inheritance in discovery."""
 
 from __future__ import annotations
 
@@ -141,76 +140,6 @@ def test_discovery_priority_inheritance(spark, tmp_path):
     )
     sel = [r["url_canon"] for r in popped.filter(F.col("selected")).collect()]
     assert sel == ["https://p.example/hot-child"]
-
-
-# ------------------------- bucketed store cross-session durability
-def test_bucketed_base_survives_catalog_loss(spark, tmp_path):
-    """Without Hive support the catalog is in-memory per session: a new
-    process sees BASES.json but no table entry.  The base is external
-    (data under the store path) and read() re-registers it from the
-    manifest — simulate the new session by dropping the catalog entry
-    and prove read() still reconstructs, WITHOUT re-shuffling the base."""
-    from dart_xbrl_crawler_spark.sources.checkpoint import BucketedMergeTable
-
-    t = BucketedMergeTable(
-        str(tmp_path / "bm"), table_prefix="t_r4_durable", key="k", n_buckets=8
-    )
-    base = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    tbl = t.commit_base(base, note="b0")
-    t.commit_delta(
-        spark,
-        spark.range(5).select(
-            F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
-        ),
-        note="d0",
-    )
-    before = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    # simulate a fresh session: the in-memory catalog entry is gone
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    t2 = BucketedMergeTable(
-        str(tmp_path / "bm"), table_prefix="t_r4_durable", key="k", n_buckets=8
-    )
-    after = {r["k"]: r["v"] for r in t2.read(spark).collect()}
-    assert after == before
-    assert after[3] == -1 and after[50] == 100
-    # the re-registered base still carries its bucket spec: under a
-    # forced shuffle join (the 10^10-row strategy) the base scan keeps
-    # its bucket layout — every Exchange belongs to the delta subtree
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = t2.read(spark)._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-    assert "Bucketed: true" in plan
-    assert plan.count("Exchange hashpartitioning") <= 2, plan
-
-
-def test_bucketed_compact_removes_superseded_base_dirs(spark, tmp_path):
-    import os
-
-    from dart_xbrl_crawler_spark.sources.checkpoint import BucketedMergeTable
-
-    t = BucketedMergeTable(
-        str(tmp_path / "bc"), table_prefix="t_r4_compact", key="k", n_buckets=4
-    )
-    t.commit_base(
-        spark.range(50).select(F.col("id").alias("k"), F.lit(1).alias("v")),
-        note="b0",
-    )
-    old_loc = t._bases()[-1]["location"]
-    t.commit_delta(
-        spark,
-        spark.range(3).select(F.col("id").alias("k"), F.lit(2).alias("v")),
-        note="d",
-    )
-    t.compact(spark)
-    assert len(t._bases()) == 1
-    assert not os.path.exists(old_loc)  # superseded base data deleted
-    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got[0] == 2 and got[10] == 1 and len(got) == 50
 
 
 # ------------------------------------- XBRL label linkbases from ZIP
@@ -413,40 +342,6 @@ def test_extract_image_stats_real_pixels(spark):
     x = px.astype(np.float64)
     assert abs(r["mean"] - x.mean()) < 1e-9
     assert abs(r["std"] - x.std()) < 1e-9
-
-
-# --------------------------------------------- real Iceberg path (opt)
-def test_iceberg_merge_table(spark):
-    """Maps commit_base/commit_delta/read/rollback onto a REAL Iceberg
-    table.  Needs the Iceberg Spark runtime jar + an 'ice' catalog
-    (see IcebergMergeTable docstring) — run with SPARK_GRAFT_ICEBERG=1
-    on a cluster that has them; skipped cleanly in this sandbox."""
-    import os
-
-    import pytest
-
-    from dart_xbrl_crawler_spark.sources.checkpoint import (
-        IcebergMergeTable,
-        iceberg_available,
-    )
-
-    if os.environ.get("SPARK_GRAFT_ICEBERG") != "1":
-        pytest.skip("SPARK_GRAFT_ICEBERG not set")
-    if not iceberg_available(spark):
-        pytest.skip("Iceberg runtime jar not on the classpath")
-
-    t = IcebergMergeTable(spark, "ice.db.frontier_t", key="k")
-    base = spark.range(100).select(F.col("id").alias("k"), F.lit("a").alias("v"))
-    snap0 = t.commit_base(base)
-    t.commit_delta(
-        spark,
-        spark.range(5).select(F.col("id").alias("k"), F.lit("b").alias("v")),
-    )
-    rows = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert len(rows) == 100 and rows[0] == "b" and rows[50] == "a"
-    assert len(t.snapshots()) == 2
-    t.rollback_to(snap0)
-    assert {r["v"] for r in t.read(spark).collect()} == {"a"}
 
 
 # ------------------------------- web-scale dims: no forced broadcast
