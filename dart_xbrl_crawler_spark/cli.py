@@ -16,11 +16,11 @@ Subcommands (each one pure DataFrame job over the frontier store):
   fetch --pages <parquet> --robots <parquet> --store <dir> [--round-ms N]
       one politeness-bounded crawl round; prints lineage counts
   crawl --pages <parquet> --robots <parquet> --store <dir> [--max-rounds N]
-      [--text-out <dir>] [--backoff-factor F] [--priority-decay D]
-      [--no-discover]
+      [--text-out <dir> [--seeds <parquet>]] [--backoff-factor F]
+      [--priority-decay D] [--no-discover]
       full loop: budgeted rounds + link discovery (with priority
       inheritance) until the queue drains; optional per-round text
-      extraction and adaptive backoff
+      extraction (with the seeds' XBRL meta) and adaptive backoff
   extract --pages <parquet> --seeds <parquet> --corp-map <parquet> --out <dir>
       extract kernel + corp join → partitioned facts sink
   recrawl --store <dir> (--before <ts> | --hints <parquet>)
@@ -103,6 +103,9 @@ def main(argv: list[str] | None = None) -> int:
                    help="skip link discovery between rounds")
     c.add_argument("--text-out", default=None,
                    help="append per-round extracted text to this parquet dir")
+    c.add_argument("--seeds", default=None,
+                   help="seed list parquet: gives --text-out the DART "
+                        "pages' report_nm/rcept_dt, so XBRL ZIPs parse")
     c.add_argument("--backoff-factor", type=float, default=None,
                    help="adaptive politeness: delay x (1 + f*fail_rate)")
     c.add_argument("--priority-decay", type=float, default=1.0,
@@ -231,6 +234,7 @@ def main(argv: list[str] | None = None) -> int:
             priority_decay=args.priority_decay,
             drop_traps=not args.keep_traps,
             drop_assets=not args.keep_assets,
+            seeds=spark.read.parquet(args.seeds) if args.seeds else None,
         )
         print(json.dumps({"rounds": rounds, "states": store.state_counts(spark)}))
     elif args.cmd == "extract":

@@ -466,7 +466,7 @@ def _update_shards(
     are added as they come (the cuckoo's multiset contract)."""
     if stored is None:
         # from an RDD with no partitions: no task, so no Python worker
-        # (a local list would start a second worker pool to decode it)
+        # (a Python worker decodes a frame built from a local list)
         spark = hashes.sparkSession
         stored = spark.createDataFrame(spark.sparkContext.emptyRDD(), kind.schema)
     per_shard_n = expected_keys // n_shards + 1 if expected_keys else None

@@ -237,10 +237,14 @@ class FrontierStore:
         All inputs are already-materialized caches: O(|batch|)."""
         parts = [_lineage(fresh, -1)] if n_fresh else []
         if n_dup:
+            # built JVM-side: a frame from a local list is decoded by a
+            # Python worker every time it is evaluated
             parts.append(
-                spark.createDataFrame(
-                    [(-1, -1, "deduped", n_dup)],
-                    schema="round_id int, partition_id int, state string, n long",
+                spark.range(1).select(
+                    F.lit(-1).alias("round_id"),
+                    F.lit(-1).alias("partition_id"),
+                    F.lit("deduped").alias("state"),
+                    F.lit(n_dup).cast("long").alias("n"),
                 )
             )
         if parts:
@@ -632,6 +636,7 @@ class FrontierStore:
         respect_nofollow: bool = True,
         drop_traps: bool = True,
         drop_assets: bool = True,
+        seeds: DataFrame | None = None,
     ) -> list[dict]:
         """The reference's main orchestration loop (crawl → extract →
         repeat, /root/reference/lambda_function.py:133-221) as a
@@ -660,7 +665,12 @@ class FrontierStore:
         ``drop_assets`` (default on, CCBot-style) drops discovered
         links whose path ends in a static-asset extension (css/js/
         media/archives — functions.traps.is_static_asset); a text
-        crawl would fetch those bytes only to discard them."""
+        crawl would fetch those bytes only to discard them.
+
+        ``seeds`` (the SEEDS table) gives the ``text_out`` sink each DART
+        page's report_nm/rcept_dt through ``pipeline.pages_with_meta``,
+        as ``run_extract`` does; without it every page is extracted with
+        null meta, so an XBRL ZIP lands as ``parse_ok=False``."""
         from ..functions.links import extract_links
 
         summaries: list[dict] = []
@@ -728,12 +738,19 @@ class FrontierStore:
                                 decode_permissive(F.col("html"))
                             )["noindex"]
                         )
-                    X.extract_text(
-                        sink_pages.select("url", "html")
-                        .withColumn("report_nm", F.lit(None).cast("string"))
-                        .withColumn("rcept_dt", F.lit(None).cast("string")),
-                        run_ts,
-                    ).write.mode("append").parquet(text_out)
+                    sink_pages = sink_pages.select("url", "html")
+                    if seeds is None:
+                        sink_pages = sink_pages.withColumns({
+                            "report_nm": F.lit(None).cast("string"),
+                            "rcept_dt": F.lit(None).cast("string"),
+                        })
+                    else:
+                        from ..plans.pipeline import pages_with_meta
+
+                        sink_pages = pages_with_meta(sink_pages, seeds)
+                    X.extract_text(sink_pages, run_ts).write.mode(
+                        "append"
+                    ).parquet(text_out)
                 n_ins = n_dup = 0
                 if discover and n_fetched:
                     # carry the parent's priority through the explode (no

@@ -54,12 +54,21 @@ def run_extract(
     return X.attach_corp_name(facts, corp_map)
 
 
+_SINK_PARTITIONS = ("year", "mm", "corp_code", "report_type")
+
+
 def write_facts(facts: DataFrame, path: str) -> None:
     """Partitioned sink mirroring the reference's Hive layout
     (s3_uploader.py:141-149); Spark drops partition cols from payload
-    automatically (the reference does it by hand, s3_uploader.py:184)."""
+    automatically (the reference does it by hand, s3_uploader.py:184).
+
+    The rows are rebalanced by the partition columns first, so one task
+    writes each partition dir and the sink holds one file per dir (AQE
+    splits a dir only past its advisory partition size).  Without it
+    every task wrote a file into every dir it had rows for."""
     (
-        facts.write.mode("overwrite")
-        .partitionBy("year", "mm", "corp_code", "report_type")
+        facts.hint("rebalance", *_SINK_PARTITIONS)
+        .write.mode("overwrite")
+        .partitionBy(*_SINK_PARTITIONS)
         .parquet(path)
     )

@@ -4,6 +4,16 @@ Local-mode defaults mirror what we would set on a 1000-executor cluster:
 AQE on (runtime re-plan + skew-join splitting), shuffle partitions sized
 to the parallelism level, Arrow enabled for every pandas-UDF boundary,
 UTC session timezone so DuckDB oracle comparisons are stable.
+
+One Python worker pool per session: PySpark keys its worker daemons by
+the worker environment, and the SQL runners (pandas UDFs, mapInPandas)
+add ``SPARK_SIMPLIFIED_TRACEBACK=1`` to it while the RDD runner that
+decodes a DataFrame built from a local list does not.  With simplified
+tracebacks on, a job that touches both (the extract sink joins a
+list-built corp map) forks a second daemon whose fresh workers
+re-import pandas, pyarrow and the engine.  So the setting is off; the
+price is that a failing UDF shows the full worker traceback (its
+exception type and message are unchanged).
 """
 
 from __future__ import annotations
@@ -51,6 +61,9 @@ def get_spark(
     ``cores=None`` → ``local[*]``; otherwise ``local[cores]``.  On a real
     cluster the master comes from spark-submit and these local settings
     are ignored — everything else below applies unchanged.
+
+    UDF tracebacks are not simplified, so SQL and RDD Python runners
+    share one worker factory (see the module docstring).
     """
     if cores is None:
         env_cores = os.environ.get("SPARK_GRAFT_CPUS")
@@ -70,6 +83,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", _ARROW_MAX_RECORDS
+        )
+        # one worker environment for SQL and RDD runners → one daemon
+        .config(
+            "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false"
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")

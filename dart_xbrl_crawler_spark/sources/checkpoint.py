@@ -44,6 +44,17 @@ def _catalog_name(snap_dir: str) -> str:
     return f"snap_{digest[:24]}"
 
 
+def _reader(spark: SparkSession, entries: list[dict]):
+    """A parquet reader for these snapshots: with the schema their
+    manifest entries record when all record the same one, else one that
+    infers it from a footer (a one-task Spark job; entries written
+    before the schema was recorded)."""
+    ddls = {e.get("schema_ddl") for e in entries}
+    if len(ddls) == 1 and None not in ddls:
+        return spark.read.schema(ddls.pop())
+    return spark.read
+
+
 class SnapshotTable:
     """Append-only snapshot-versioned parquet table."""
 
@@ -96,19 +107,21 @@ class SnapshotTable:
         seq = (snaps[-1]["seq"] + 1) if snaps else 0
         snap_id = f"snap-{seq:06d}-{uuid.uuid4().hex[:8]}"
         loc = os.path.join(self.path, snap_id)
-        entry = {"id": snap_id, "seq": seq, "note": note, "kind": kind}
+        # the schema as a parquet reader sees it (all nullable): read()
+        # passes it to the reader, which then runs no footer job
+        entry = {"id": snap_id, "seq": seq, "note": note, "kind": kind,
+                 "schema_ddl": df.schema.toNullable().toDDL()}
         if bucket_by is None:
             df.write.mode("overwrite").parquet(loc)
             return entry
         # EXTERNAL table at the snapshot dir: without Hive support the
         # catalog entry dies with the session, so the entry records the
-        # bucket spec and schema read() re-registers it from
+        # bucket spec read() re-registers it from
         key, n_buckets = bucket_by
         (df.write.mode("overwrite").bucketBy(n_buckets, key).sortBy(key)
          .option("path", os.path.abspath(loc)).format("parquet")
          .saveAsTable(_catalog_name(loc)))
-        return {**entry, "bucket_key": key, "buckets": n_buckets,
-                "schema_ddl": df.schema.toDDL()}
+        return {**entry, "bucket_key": key, "buckets": n_buckets}
 
     def _publish(self, snaps: list[dict]) -> None:
         fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".manifest.tmp")
@@ -127,7 +140,7 @@ class SnapshotTable:
             raise KeyError(f"unknown snapshot {snapshot_id}")
         loc = os.path.join(self.path, snapshot_id)
         if "buckets" not in entry:
-            return spark.read.parquet(loc)
+            return _reader(spark, [entry]).parquet(loc)
         name = _catalog_name(loc)
         if not spark.catalog.tableExists(name):
             # a later session: re-register from the manifest.  The
@@ -148,7 +161,7 @@ class SnapshotTable:
         snaps = self.snapshots()
         if not snaps:
             raise FileNotFoundError(f"no committed snapshots at {self.path}")
-        return spark.read.parquet(
+        return _reader(spark, snaps).parquet(
             *[os.path.join(self.path, s["id"]) for s in snaps]
         )
 

@@ -107,6 +107,51 @@ def test_corp_name_join_fallback(spark, fixture_bundle):
             assert name == mapped[code]
 
 
+def test_write_facts_one_file_per_partition_dir(spark, fixture_bundle, tmp_path):
+    """The facts sink reads back equal to run_extract's rows (partition
+    columns come back as strings, so corp_code keeps its zero padding),
+    holds exactly one parquet file per partition dir, and no file
+    carries a partition column in its payload."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from dart_xbrl_crawler_spark.schemas import CORP_MAP
+
+    pages, seeds, corp_map, robots = fixture_bundle
+    facts = pipeline.run_extract(
+        # spread over tasks as a multi-file scan would be: two pages of
+        # one partition dir land in different tasks
+        _spark_pages(spark, pages).repartition(8, "url"),
+        spark.createDataFrame(seeds, schema=SEEDS),
+        spark.createDataFrame(corp_map, schema=CORP_MAP),
+        fixtures.RUN_TS,
+    ).drop("url")
+    out = str(tmp_path / "facts")
+    pipeline.write_facts(facts, out)
+
+    cols = facts.columns
+    want = facts.toPandas()
+    got = spark.read.parquet(out).select(*cols).toPandas()
+    assert len(want) > 0 and len(got) == len(want)
+    want = want.sort_values(cols).reset_index(drop=True)
+    got = got.sort_values(cols).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+    part_cols = {"year", "mm", "corp_code", "report_type"}
+    dirs = {}
+    for root, _, files in os.walk(out):
+        for f in files:
+            if f.endswith(".parquet"):
+                dirs.setdefault(os.path.relpath(root, out), []).append(f)
+                names = set(pq.read_schema(os.path.join(root, f)).names)
+                assert not names & part_cols, (root, f)
+    assert dirs
+    assert all(len(d.split(os.sep)) == 4 for d in dirs), sorted(dirs)
+    many = {d: len(fs) for d, fs in dirs.items() if len(fs) != 1}
+    assert not many, many
+
+
 def _patched_zip(field: str) -> bytes:
     """A one-member mini-XBRL ZIP with one header field made to disagree
     with the rest of the archive."""

@@ -406,6 +406,35 @@ def test_run_crawl_releases_fetch_cache(spark, tmp_path):
     assert store._prev_fetched is None  # last round's cache released
 
 
+def test_run_crawl_text_out_carries_seed_meta(spark, fixture_bundle, tmp_path):
+    """run_crawl(seeds=...) extracts each fetched XBRL ZIP with its seed's
+    report_nm/rcept_dt: text and parse verdict equal the oracle's, where
+    null meta left every ZIP at parse_ok=False."""
+    pages, seeds, *_ = fixture_bundle
+    seeds_df = spark.createDataFrame(seeds, schema=SEEDS)
+    # the seed list's own DART pages: no respelled variant competes for
+    # a seed url's bytes in the fetch join
+    seed_urls = "https://dart.fss.or.kr/api/fnlttXbrl.xml?rcept_no=" + seeds["rcept_no"]
+    dart = pages[pages["url"].isin(set(seed_urls))]
+    store = FrontierStore(str(tmp_path / "f"), n_bloom_shards=4)
+    store.bootstrap(S.seeds_to_frontier(seeds_df), RUN_TS)
+    robots = spark.createDataFrame([("dart.fss.or.kr", None, 1)], schema=ROBOTS)
+    out = str(tmp_path / "texts")
+    store.run_crawl(
+        spark, spark.createDataFrame(dart, schema=PAGES), robots, RUN_TS,
+        max_rounds=1, discover=False, text_out=out, seeds=seeds_df,
+    )
+    got = {r["url"]: (r["text"], r["parse_ok"])
+           for r in spark.read.parquet(out).collect()}
+    zips = {
+        p["url"]: (p["text"], oracle.parse_mini_xbrl(p["html"])[1] is not None)
+        for p in dart.to_dict("records")
+        if p["url"] in got and p["html"][:2] == b"PK"
+    }
+    assert zips and all(ok for _, ok in zips.values())
+    assert {u: got[u] for u in zips} == zips
+
+
 # --------------------------------------- metrics chain compaction
 def test_metrics_chain_compaction_bounded_and_exact(spark, tmp_path):
     """A multi-round crawl with an aggressive compaction threshold
