@@ -16,7 +16,7 @@ Subcommands (each one pure DataFrame job over the frontier store):
   fetch --pages <parquet> --robots <parquet> --store <dir> [--round-ms N]
       one politeness-bounded crawl round; prints lineage counts
   crawl --pages <parquet> --robots <parquet> --store <dir> [--max-rounds N]
-      [--text-out <dir> [--seeds <parquet>]] [--backoff-factor F]
+      [--text-out <dir> --seeds <parquet>] [--backoff-factor F]
       [--priority-decay D] [--no-discover]
       full loop: budgeted rounds + link discovery (with priority
       inheritance) until the queue drains; optional per-round text
@@ -53,6 +53,7 @@ import sys
 from .operators.frontier import FrontierStore
 from .operators.scheduler import seeds_to_frontier
 from .plans import pipeline
+from .schemas import SEEDS
 from .session import get_spark
 
 RUN_TS_DEFAULT = "2026-01-16 00:00:00"
@@ -104,8 +105,9 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--text-out", default=None,
                    help="append per-round extracted text to this parquet dir")
     c.add_argument("--seeds", default=None,
-                   help="seed list parquet: gives --text-out the DART "
-                        "pages' report_nm/rcept_dt, so XBRL ZIPs parse")
+                   help="seed list parquet, required with --text-out: gives "
+                        "the DART pages their report_nm/rcept_dt, so XBRL "
+                        "ZIPs parse (plain web seeds carry no meta)")
     c.add_argument("--backoff-factor", type=float, default=None,
                    help="adaptive politeness: delay x (1 + f*fail_rate)")
     c.add_argument("--priority-decay", type=float, default=1.0,
@@ -162,6 +164,8 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     args = p.parse_args(argv)
+    if args.cmd == "crawl" and args.text_out and not args.seeds:
+        p.error("crawl --text-out requires --seeds")
     spark = get_spark(f"cli-{args.cmd}")
 
     if getattr(args, "store", None):
@@ -221,6 +225,10 @@ def main(argv: list[str] | None = None) -> int:
             )
         )
     elif args.cmd == "crawl":
+        seeds = spark.read.parquet(args.seeds) if args.text_out else None
+        if seeds is not None and "url" in seeds.columns:
+            # plain web seeds (see bootstrap): no page carries XBRL meta
+            seeds = spark.createDataFrame([], SEEDS)
         rounds = store.run_crawl(
             spark,
             spark.read.parquet(args.pages),
@@ -234,7 +242,7 @@ def main(argv: list[str] | None = None) -> int:
             priority_decay=args.priority_decay,
             drop_traps=not args.keep_traps,
             drop_assets=not args.keep_assets,
-            seeds=spark.read.parquet(args.seeds) if args.seeds else None,
+            seeds=seeds,
         )
         print(json.dumps({"rounds": rounds, "states": store.state_counts(spark)}))
     elif args.cmd == "extract":

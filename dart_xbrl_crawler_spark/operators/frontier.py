@@ -667,11 +667,15 @@ class FrontierStore:
         media/archives — functions.traps.is_static_asset); a text
         crawl would fetch those bytes only to discard them.
 
-        ``seeds`` (the SEEDS table) gives the ``text_out`` sink each DART
-        page's report_nm/rcept_dt through ``pipeline.pages_with_meta``,
-        as ``run_extract`` does; without it every page is extracted with
-        null meta, so an XBRL ZIP lands as ``parse_ok=False``."""
+        ``text_out`` requires ``seeds`` (the SEEDS table; empty for a
+        crawl with no DART seeds): the sink gets each DART page's
+        report_nm/rcept_dt through ``pipeline.pages_with_meta``, as
+        ``run_extract`` does.  An XBRL ZIP extracted without its meta
+        would land as ``parse_ok=False``."""
         from ..functions.links import extract_links
+
+        if text_out and seeds is None:
+            raise ValueError("run_crawl(text_out=...) requires seeds")
 
         summaries: list[dict] = []
         try:
@@ -730,6 +734,7 @@ class FrontierStore:
                         decode_permissive,
                         meta_robots_flags,
                     )
+                    from ..plans.pipeline import pages_with_meta
 
                     sink_pages = fetched_pages
                     if respect_nofollow:
@@ -738,16 +743,9 @@ class FrontierStore:
                                 decode_permissive(F.col("html"))
                             )["noindex"]
                         )
-                    sink_pages = sink_pages.select("url", "html")
-                    if seeds is None:
-                        sink_pages = sink_pages.withColumns({
-                            "report_nm": F.lit(None).cast("string"),
-                            "rcept_dt": F.lit(None).cast("string"),
-                        })
-                    else:
-                        from ..plans.pipeline import pages_with_meta
-
-                        sink_pages = pages_with_meta(sink_pages, seeds)
+                    sink_pages = pages_with_meta(
+                        sink_pages.select("url", "html"), seeds
+                    )
                     X.extract_text(sink_pages, run_ts).write.mode(
                         "append"
                     ).parquet(text_out)

@@ -9,11 +9,19 @@ One Python worker pool per session: PySpark keys its worker daemons by
 the worker environment, and the SQL runners (pandas UDFs, mapInPandas)
 add ``SPARK_SIMPLIFIED_TRACEBACK=1`` to it while the RDD runner that
 decodes a DataFrame built from a local list does not.  With simplified
-tracebacks on, a job that touches both (the extract sink joins a
-list-built corp map) forks a second daemon whose fresh workers
-re-import pandas, pyarrow and the engine.  So the setting is off; the
-price is that a failing UDF shows the full worker traceback (its
-exception type and message are unchanged).
+tracebacks on, a session that touches both forks a second daemon whose
+fresh workers re-import pandas, pyarrow and the engine.  The flagship
+frontier job ``__spark_entry__.entry`` is such a job: it gates the
+canonicalizer pandas UDF's output with a list-built robots table.
+So does any library caller that hands the engine list-built inputs.
+Frames read from parquet are decoded in the JVM and start no worker.
+So the setting is off; the price is that a failing UDF shows the full
+worker traceback (its exception type and message are unchanged).
+
+Driver heap: ``SPARK_DRIVER_MEM`` if set, else half the machine's
+memory, at most 48g.  A heap allowed to grow past the machine's memory
+is collected so lazily that a long-lived local JVM outgrows the machine
+and is OOM-killed.
 """
 
 from __future__ import annotations
@@ -50,6 +58,14 @@ def _local_dir() -> str:
     return tempfile.gettempdir()
 
 
+def _driver_mem() -> str:
+    """Driver heap (see the module docstring)."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_DRIVER_MEM"]
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(2, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "dart_xbrl_crawler_spark",
     cores: int | None = None,
@@ -63,7 +79,8 @@ def get_spark(
     are ignored — everything else below applies unchanged.
 
     UDF tracebacks are not simplified, so SQL and RDD Python runners
-    share one worker factory (see the module docstring).
+    share one worker factory; the driver heap is capped at half the
+    machine's memory (see the module docstring for both).
     """
     if cores is None:
         env_cores = os.environ.get("SPARK_GRAFT_CPUS")
@@ -88,7 +105,7 @@ def get_spark(
         .config(
             "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false"
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.ui.enabled", "false")
         # no \r progress spam on stdout: harness output is parsed from
         # the process tail — progress bars can push the result line out

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
@@ -12,21 +11,9 @@ sys.path.insert(0, str(REPO))
 from dart_xbrl_crawler_spark.session import get_spark  # noqa: E402
 
 
-def _heap_conf() -> dict[str, str]:
-    """The suite's JVM heap: half the machine's memory, unless
-    SPARK_DRIVER_MEM sets it.  The session default (48g) exceeds a small
-    machine's memory, and a heap allowed to grow past it is collected so
-    lazily that on a 15 GB, 4-core VM the suite's JVM outgrew the
-    machine and was OOM-killed mid-run."""
-    if "SPARK_DRIVER_MEM" in os.environ:
-        return {}
-    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return {"spark.driver.memory": f"{min(48, max(2, phys // 2**31))}g"}
-
-
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cores=8, shuffle_partitions=8, extra_conf=_heap_conf())
+    s = get_spark("tests", cores=8, shuffle_partitions=8)
     yield s
     s.stop()
 

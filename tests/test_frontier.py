@@ -435,6 +435,21 @@ def test_run_crawl_text_out_carries_seed_meta(spark, fixture_bundle, tmp_path):
     assert {u: got[u] for u in zips} == zips
 
 
+def test_run_crawl_text_out_requires_seeds(spark, tmp_path):
+    """text_out without seeds is refused before any round runs, by
+    run_crawl and by `cli crawl`: the sink would extract every XBRL ZIP
+    without its meta."""
+    store = FrontierStore(str(tmp_path / "f"), n_bloom_shards=4)
+    with pytest.raises(ValueError, match="requires seeds"):
+        store.run_crawl(spark, None, None, RUN_TS, text_out=str(tmp_path / "t"))
+    from dart_xbrl_crawler_spark import cli
+
+    with pytest.raises(SystemExit) as exit_:
+        cli.main(["crawl", "--pages", "p", "--robots", "r", "--store", "s",
+                  "--text-out", str(tmp_path / "t")])
+    assert exit_.value.code == 2  # argparse usage error, no session started
+
+
 # --------------------------------------- metrics chain compaction
 def test_metrics_chain_compaction_bounded_and_exact(spark, tmp_path):
     """A multi-round crawl with an aggressive compaction threshold

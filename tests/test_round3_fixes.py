@@ -694,6 +694,7 @@ def test_run_crawl_text_out_matches_oracle(spark, tmp_path):
     sink, byte-identical to the row-at-a-time oracle extractor."""
     from dart_xbrl_crawler_spark import oracle
     from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+    from dart_xbrl_crawler_spark.schemas import SEEDS
 
     def page(name, link_to=None):
         body = (
@@ -721,7 +722,10 @@ def test_run_crawl_text_out_matches_oracle(spark, tmp_path):
         RUN_TS,
     )
     out = str(tmp_path / "texts")
-    store.run_crawl(spark, pages, robots, RUN_TS, max_rounds=4, text_out=out)
+    store.run_crawl(
+        spark, pages, robots, RUN_TS, max_rounds=4, text_out=out,
+        seeds=spark.createDataFrame([], SEEDS),  # no DART seeds
+    )
     got = {
         r["url"]: r["text"] for r in spark.read.parquet(out).collect()
     }

@@ -34,6 +34,12 @@ def _cmdline(pid: int) -> list[str]:
         return []
 
 
+def _worker_daemons() -> list[int]:
+    """The ``pyspark.daemon`` processes the session's JVM forked."""
+    jvm = SparkContext._gateway.proc.pid
+    return [p for p in _children(jvm) if "pyspark.daemon" in _cmdline(p)]
+
+
 def test_sql_and_rdd_runners_share_one_worker_daemon(spark):
     """A pandas UDF (SQL runner) and a DataFrame built from a local list
     (decoded by the RDD runner) run on the same ``pyspark.daemon``: the
@@ -45,6 +51,16 @@ def test_sql_and_rdd_runners_share_one_worker_daemon(spark):
 
     assert spark.range(4).select(plus_one("id")).collect()
     assert spark.createDataFrame([(1, "a")], "k int, v string").collect()
-    jvm = SparkContext._gateway.proc.pid
-    daemons = [p for p in _children(jvm) if "pyspark.daemon" in _cmdline(p)]
+    daemons = _worker_daemons()
+    assert len(daemons) == 1, daemons
+
+
+def test_flagship_entry_runs_on_one_worker_daemon(spark):
+    """``__spark_entry__.entry``, the flagship frontier job, touches both
+    runners in one job (list-built robots, canonicalizer pandas UDF) and
+    still leaves one daemon."""
+    import __spark_entry__ as E
+
+    assert E.entry(spark).collect()
+    daemons = _worker_daemons()
     assert len(daemons) == 1, daemons
