@@ -19,12 +19,16 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.urls import with_url_canon
+from ..schemas import CRAWL_METRICS
 from ..sources.checkpoint import MergeTable, SnapshotTable
 from . import dedup as D
 from . import politeness as P
@@ -37,17 +41,47 @@ _FILTER_DEFAULTS = {"seen_filter": "bloom", "n_bloom_shards": 64,
                     "expected_keys": 1 << 22}
 
 
-def _lineage(df: DataFrame, round_id: int, key: str | None = None) -> DataFrame:
-    """Lineage counters for rows already in their new state:
-    (round_id, partition_id, state, n) per Spark partition, or
-    (round_id, <key>, state, n) per ``key`` value (the host chain).
-    O(|df|) — never a scan of the merged frontier."""
-    by = F.col(key) if key else F.spark_partition_id().alias("partition_id")
+# the states a frontier row can hold
+_STATES = ("queued", "fetched", "failed", "robots_blocked", "expired")
+_METRICS_ARROW = to_arrow_schema(CRAWL_METRICS)
+
+
+def _lineage(df: DataFrame, round_id: int) -> DataFrame:
+    """The host chain's counters for rows already in their new state:
+    (round_id, host, state, n) — a Spark aggregate, as it has one row
+    per host the round touched.  O(|df|), never a scan of the merged
+    frontier.  The per-state chain needs no job: see _observe_states."""
     return (
-        df.groupBy(F.lit(round_id).alias("round_id"), by, "state")
+        df.groupBy(F.lit(round_id).alias("round_id"), "host", "state")
         .count()
         .withColumnRenamed("count", "n")
     )
+
+
+def _observe_states(df: DataFrame, obs: Observation) -> DataFrame:
+    """``df``, counting its rows per state into ``obs`` inside whatever
+    job first runs it (a write, an eager checkpoint): lineage counters
+    that cost no job of their own."""
+    return df.observe(
+        obs, *[F.count_if(F.col("state") == s).alias(s) for s in _STATES]
+    )
+
+
+def _moved(left: dict[str, int], to: str) -> dict[str, int]:
+    """Lineage of rows that left the states counted in ``left`` for
+    ``to``: each state's net change.  The queue is implicit —
+    lineage_counts derives it as the 'queued' rows minus every live
+    (non-expired) state — so 'queued' counts admissions to the live
+    frontier: a move out of 'expired' adds one, a move into it takes
+    one away."""
+    net: Counter = Counter()
+    for s, n in left.items():
+        net[s] -= n
+        net[to] += n
+    net["queued"] = sum(
+        n * ((to != "expired") - (s != "expired")) for s, n in left.items()
+    )
+    return {s: n for s, n in net.items() if n}
 
 
 def _admit(urls: DataFrame, run_ts: str, depth: int) -> DataFrame:
@@ -72,13 +106,6 @@ def _admit(urls: DataFrame, run_ts: str, depth: int) -> DataFrame:
         .withColumn("discovered_ts", F.to_timestamp(F.lit(run_ts)))
         .withColumn("fetch_ts", F.lit(None).cast("timestamp"))
         .withColumn("partition_salt", F.lit(0))
-    )
-
-
-def _requeued(stale: DataFrame) -> DataFrame:
-    """Rows flipped back to 'queued' for a refetch (recrawl)."""
-    return stale.withColumn("state", F.lit("queued")).withColumn(
-        "fetch_ts", F.lit(None).cast("timestamp")
     )
 
 
@@ -149,6 +176,9 @@ class FrontierStore:
         # (fetched_pages derives from it) but not the NEXT round —
         # released at the following run_round / release()
         self._prev_fetched: DataFrame | None = None
+        # the last run_round's per-state row counts, observed on its
+        # delta write (run_crawl's fetched count)
+        self.last_round: dict[str, int] = {}
         # legacy-store queue undercount (see lineage_counts) — measured
         # once per process by an exact scan, then applied as an offset
         self._queued_correction: int | None = None
@@ -228,30 +258,31 @@ class FrontierStore:
             "retire",
         )
 
+    def _commit_lineage(self, round_id: int, counts: dict[str, int], note: str) -> None:
+        """One metrics snapshot of per-state counters, written from the
+        driver (no Spark job): a (round_id, -1, state, n) row per
+        nonzero count.  partition_id is a marker: -1 here, -2 on folded
+        sums (_maybe_compact_metrics)."""
+        rows = [
+            {"round_id": round_id, "partition_id": -1, "state": s, "n": n}
+            for s, n in counts.items()
+            if n
+        ]
+        if rows:
+            self.metrics.commit_arrow(
+                pa.Table.from_pylist(rows, schema=_METRICS_ARROW), note=note
+            )
+
     def _commit_insert_metrics(
         self, spark: SparkSession, fresh: DataFrame, n_fresh: int, n_dup: int
     ) -> None:
-        """Lineage rows for an insert: per-partition queued counts for
-        the rows that entered + one 'deduped' counter (a lineage state,
-        not a table state — duplicates are counted, never inserted).
-        All inputs are already-materialized caches: O(|batch|)."""
-        parts = [_lineage(fresh, -1)] if n_fresh else []
-        if n_dup:
-            # built JVM-side: a frame from a local list is decoded by a
-            # Python worker every time it is evaluated
-            parts.append(
-                spark.range(1).select(
-                    F.lit(-1).alias("round_id"),
-                    F.lit(-1).alias("partition_id"),
-                    F.lit("deduped").alias("state"),
-                    F.lit(n_dup).cast("long").alias("n"),
-                )
-            )
-        if parts:
-            m = parts[0]
-            for p in parts[1:]:
-                m = m.unionByName(p)
-            self.metrics.commit(m, note="insert lineage")
+        """Lineage rows for an insert: the ``n_fresh`` rows of ``fresh``
+        that entered, all 'queued', + one 'deduped' counter (a lineage
+        state, not a table state — duplicates are counted, never
+        inserted).  The counts are the caller's; no Spark job runs."""
+        self._commit_lineage(
+            -1, {"queued": n_fresh, "deduped": n_dup}, "insert lineage"
+        )
 
     # -- bootstrap -----------------------------------------------------
     def bootstrap(self, urls: DataFrame, run_ts: str) -> str:
@@ -269,8 +300,14 @@ class FrontierStore:
             self._commit_bloom_batch(
                 spark, frontier.select("url_hash"), "bootstrap"
             )
-            snap = self.table.commit_base(frontier, note="bootstrap")
-            self._commit_insert_metrics(spark, frontier, frontier.count(), 0)
+            # the base write counts the rows it admits (all queued)
+            admitted = Observation()
+            snap = self.table.commit_base(
+                _observe_states(frontier, admitted), note="bootstrap"
+            )
+            self._commit_insert_metrics(
+                spark, frontier, admitted.get["queued"], 0
+            )
             return snap
         finally:
             frontier.unpersist()
@@ -288,6 +325,10 @@ class FrontierStore:
         The batch is persisted once and every count comes off that
         cache — the round-1 version recomputed the canonicalizer +
         dedup lineage three times (canon.count, fresh.count, commit).
+        Both counts stay eager jobs, not observations, because the plan
+        needs them before it runs: ``batch.count`` bounds the confirm
+        (``max_confirmed_hint``), and ``fresh.count`` decides whether
+        the seen filter is committed before the delta.
         The seen filter is the STORED one; the inserted hashes are
         added into its shards afterwards — O(|batch|) keys per insert,
         never a rebuild from the full frontier."""
@@ -364,6 +405,13 @@ class FrontierStore:
         Returns (snapshot_id, fetched pages DataFrame ready for the
         extract stage).
 
+        The round touches its O(|round|) rows once, at the fetch
+        stage's width: only the pop's selected and robots-blocked rows
+        are cached, and the delta is written in as many tasks (and
+        files) as the fetch has.  Its per-state counts are observed on
+        that write (``last_round``) and committed from the driver; only
+        the per-host chain, one row per host, is a Spark aggregate.
+
         Metrics-chain compaction deliberately does NOT run here: the
         returned fetched_pages (and the incoming backoff-adjusted
         robots) carry lazy lineage into the chain files, and compaction
@@ -379,20 +427,26 @@ class FrontierStore:
         frontier = self.table.read(spark)
         queued = frontier.filter(F.col("state") == "queued")
 
-        # popped feeds three consumers (fetch set, robots transitions,
-        # lineage) → materialize once
-        popped = P.pop_round(
-            queued,
-            robots,
-            round_ms=round_ms,
-            salt_buckets=salt_buckets,
-            max_per_host=max_per_host,
-            n_hosts_hint=n_hosts_hint,
-            broadcast_robots=broadcast_robots,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # popped feeds two consumers (fetch set, robots transitions) →
+        # materialize once, and only the rows they read: the pop returns
+        # the whole queue, which a round must never cache
+        popped = (
+            P.pop_round(
+                queued,
+                robots,
+                round_ms=round_ms,
+                salt_buckets=salt_buckets,
+                max_per_host=max_per_host,
+                n_hosts_hint=n_hosts_hint,
+                broadcast_robots=broadcast_robots,
+            )
+            .filter(F.col("selected") | F.col("robots_blocked"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
 
         selected = popped.filter(F.col("selected"))
-        fetch_in = P.fetch_partitioning(selected, n_partitions)
+        width = P.fetch_width(selected, n_partitions)
+        fetch_in = P.fetch_partitioning(selected, width)
 
         # fetch = equi-join bytes by canonical url (pages keyed the same
         # way once, at ingest)
@@ -427,24 +481,32 @@ class FrontierStore:
                 .select(*fcols)
             )
 
+        # the three branches read cached frames, so narrowing their
+        # union to the fetch width is a coalesce, not a shuffle: the
+        # delta and every later reader of it (the host counters, the
+        # compaction scan) run `width` tasks, not one per branch partition
         changed = (
             to_state(ok, "fetched")
             .unionByName(to_state(fetched.filter(F.col("html").isNull()), "failed"))
             .unionByName(
                 to_state(popped.filter(F.col("robots_blocked")), "robots_blocked")
             )
+            .coalesce(width)
         )
-        snap = self.table.commit_delta(spark, changed, note=f"round={round_id}")
-
-        # per-partition lineage counters (north_rule): derived from the
-        # round's OWN delta (cached upstream frames) — O(|round|), never
-        # a post-commit scan of the merged 10^10-row frontier.  Running
-        # totals come from folding the metrics chain (lineage_counts).
-        self.metrics.commit(_lineage(changed, round_id), note=f"round={round_id}")
+        # lineage counters (north_rule): the round's own delta, counted
+        # per state by its write — O(|round|), never a post-commit scan
+        # of the merged 10^10-row frontier.  Running totals come from
+        # folding the metrics chain (lineage_counts).
+        moved = Observation()
+        snap = self.table.commit_delta(
+            spark, _observe_states(changed, moved), note=f"round={round_id}"
+        )
+        self.last_round = {s: n for s, n in moved.get.items() if n}
+        self._commit_lineage(round_id, self.last_round, f"round={round_id}")
         # per-host outcome counters — the input to adaptive politeness
         # backoff (politeness.apply_backoff); O(|round| hosts) rows
         self.host_metrics.commit(
-            _lineage(changed, round_id, key="host"), note=f"round={round_id}"
+            _lineage(changed, round_id), note=f"round={round_id}"
         )
 
         fetched_pages = ok.select(
@@ -483,7 +545,7 @@ class FrontierStore:
             & (F.col("fetch_ts") < F.to_timestamp(F.lit(before_ts)))
         )
         return self._transition(
-            spark, _requeued(stale), f"recrawl<{before_ts}", "recrawl lineage"
+            spark, stale, "queued", f"recrawl<{before_ts}", "recrawl lineage"
         )[1]
 
     def recrawl_hints(self, spark: SparkSession, hints) -> int:
@@ -527,7 +589,7 @@ class FrontierStore:
             .drop("_lastmod")
         )
         return self._transition(
-            spark, _requeued(stale), "recrawl-hints", "recrawl-hints lineage"
+            spark, stale, "queued", "recrawl-hints", "recrawl-hints lineage"
         )[1]
 
     def expire(
@@ -553,34 +615,45 @@ class FrontierStore:
             & (F.col("fetch_ts") < F.to_timestamp(F.lit(before_ts)))
         )
         changed, n = self._transition(
-            spark,
-            old.withColumn("state", F.lit("expired")),
-            f"expire<{before_ts}",
-            "expire lineage",
+            spark, old, "expired", f"expire<{before_ts}", "expire lineage"
         )
         if n and self.seen_filter == "cuckoo":
             self.retire_seen(spark, changed.select("url_hash"))
         return n
 
     def _transition(
-        self, spark: SparkSession, changed: DataFrame, note: str, lineage_note: str
+        self,
+        spark: SparkSession,
+        rows: DataFrame,
+        state: str,
+        note: str,
+        lineage_note: str,
     ) -> tuple[DataFrame, int]:
-        """Commit rows already in their new state as one O(|changed|)
-        delta plus their lineage counters; returns (changed, n).
+        """Move the selected frontier ``rows`` to ``state`` (a requeued
+        row also loses its fetch_ts) as one O(|rows|) delta plus their
+        lineage counters; returns (changed, n).  The counters are each
+        state's net change: the rows' old states are counted by an
+        observation on the checkpoint below, so lineage_counts stays
+        exact after a transition and no job runs for them.
 
         localCheckpoint, not persist: callers read ``changed`` AFTER
-        commit_delta has flipped these very rows (the count, expire's
-        retire_seen) — a lost cache block would recompute the selection
-        over the post-commit frontier and silently see nothing: 0
-        re-queued, or no hash retired from the cuckoo filter so the
-        expired urls could never resurrect.  Checkpointing truncates the
-        lineage, so the pre-commit selection is pinned (same pattern as
-        dedup_urls' confirmed set)."""
+        commit_delta has flipped these very rows (expire's retire_seen)
+        — a lost cache block would recompute the selection over the
+        post-commit frontier and silently see nothing: no hash retired
+        from the cuckoo filter, so the expired urls could never
+        resurrect.  Checkpointing truncates the lineage, so the
+        pre-commit selection is pinned (same pattern as dedup_urls'
+        confirmed set)."""
+        left = Observation()
+        changed = _observe_states(rows, left).withColumn("state", F.lit(state))
+        if state == "queued":
+            changed = changed.withColumn("fetch_ts", F.lit(None).cast("timestamp"))
         changed = changed.localCheckpoint(eager=True)
-        n = changed.count()
+        counts = left.get
+        n = sum(counts.values())
         if n:
             self.table.commit_delta(spark, changed, note=note)
-            self.metrics.commit(_lineage(changed, -3), note=lineage_note)
+            self._commit_lineage(-3, _moved(counts, state), lineage_note)
         return changed, n
 
     def _maybe_compact_metrics(self, spark: SparkSession) -> None:
@@ -721,7 +794,7 @@ class FrontierStore:
                     n_partitions=n_partitions,
                     broadcast_robots=broadcast_robots,
                 )
-                n_fetched = fetched_pages.count()
+                n_fetched = self.last_round.get("fetched", 0)
                 if text_out and n_fetched:
                     # crawl → extract in one loop (the reference's
                     # crawl-then-process orchestration): per-round text
@@ -860,7 +933,12 @@ class FrontierStore:
         rows read, NEVER a frontier scan (at 10^10 rows the scan this
         replaces was the one remaining per-round full-table cost).
         'deduped' is a lineage counter (duplicates counted at insert,
-        never inserted); queued = inserts − transitions."""
+        never inserted).  Every other row is a state's net change — a
+        transition records the states its rows leave (_moved) — and
+        queued = the 'queued' rows (admissions to the live frontier)
+        minus the live states.  A chain written before transitions
+        recorded the states they leave still counts recrawled and
+        expired rows in their old state as well."""
         m = self.metrics.read_all(spark)
         agg = {
             r["state"]: int(r["n"])
@@ -868,8 +946,8 @@ class FrontierStore:
         }  # raises FileNotFoundError for a pre-metrics legacy store
         queued_in = agg.pop("queued", 0)
         out = {k: v for k, v in agg.items() if v}
-        # 'deduped' is an insert-side counter and 'expired' transitions
-        # FROM already-terminal states — neither consumes a queue slot
+        # 'deduped' is an insert-side counter and expired rows are out
+        # of the live frontier — neither holds a queue slot
         n_trans = sum(v for k, v in agg.items() if k not in ("deduped", "expired"))
         if self._queued_correction is None and queued_in < n_trans:
             # store bootstrapped before insert metrics existed: the

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -413,9 +413,14 @@ def pop_round(
     Returns the frontier columns + ``robots_blocked`` + ``host_rank`` +
     ``selected`` + ``partition_salt`` so the caller can transition
     states (selected → fetch; robots_blocked → terminal) and
-    repartition by (host, partition_salt) for the fetch stage.
-    ``broadcast_robots=False`` for a web-scale rules dim (see
-    apply_robots).
+    repartition by (host, partition_salt) for the fetch stage.  Every
+    input row comes back, most with neither flag set: a caller that
+    keeps the output should keep only the flagged rows, the round's
+    O(|round|) share of the queue.  ``broadcast_robots=False`` for a
+    web-scale rules dim (see apply_robots).
+
+    Without ``n_hosts_hint`` the host counts run as one eager
+    checkpoint whose rows are counted in that same job.
     """
     gated = apply_robots(
         frontier, robots, broadcast_robots=broadcast_robots
@@ -440,10 +445,11 @@ def pop_round(
     # a few thousand at DART shape but up to 10^8 on the open web, so
     # the broadcast is GATED on the true cardinality: the aggregate is
     # materialized once (localCheckpoint truncates the lineage so the
-    # count and the join reuse the same blocks; cleanup rides the
-    # ContextCleaner), counted, and only broadcast when it fits —
-    # otherwise a plain shuffle join with AQE skew-split takes over
-    # instead of OOMing the driver on a forced 10^8-row broadcast.
+    # join reuses the same blocks; cleanup rides the ContextCleaner),
+    # its rows counted by an observation on that checkpoint's own job,
+    # and only broadcast when it fits — otherwise a plain shuffle join
+    # with AQE skew-split takes over instead of OOMing the driver on a
+    # forced 10^8-row broadcast.
     counts = (
         gated.filter(~F.col("robots_blocked"))
         .groupBy("host")
@@ -456,11 +462,12 @@ def pop_round(
             F.broadcast(counts) if n_hosts_hint <= broadcast_hosts_max else counts
         )
     else:
-        counts = counts.localCheckpoint(eager=True)
+        hosts = Observation()
+        counts = counts.observe(hosts, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
         counts_side = (
-            F.broadcast(counts)
-            if counts.count() <= broadcast_hosts_max
-            else counts
+            F.broadcast(counts) if hosts.get["n"] <= broadcast_hosts_max else counts
         )
     gated = gated.join(counts_side, "host", "left").withColumn(
         "_n_cand", F.coalesce("_n_cand", F.lit(0))
@@ -575,10 +582,23 @@ def fetch_partitioning(
     politeness budget gets proportionally more fetch tasks without the
     caller re-tuning a constant.  The count is an aggregation over the
     pop's already-persisted output, never a second frontier scan."""
-    if n_partitions is None:
-        n = selected.count()
-        n_partitions = max(
-            -(-n // target_rows_per_task),
-            selected.sparkSession.sparkContext.defaultParallelism,
-        )
-    return selected.repartition(n_partitions, "host", "partition_salt")
+    return selected.repartition(
+        fetch_width(selected, n_partitions, target_rows_per_task),
+        "host", "partition_salt",
+    )
+
+
+def fetch_width(
+    selected: DataFrame,
+    n_partitions: int | None = None,
+    target_rows_per_task: int = 5_000,
+) -> int:
+    """The fetch stage's task count (see fetch_partitioning):
+    ``n_partitions`` when given, else one ``count`` of ``selected``."""
+    if n_partitions is not None:
+        return n_partitions
+    n = selected.count()
+    return max(
+        -(-n // target_rows_per_task),
+        selected.sparkSession.sparkContext.defaultParallelism,
+    )

@@ -147,8 +147,11 @@ FACTS_PRE_JOIN = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# crawl_metrics — per-round per-partition lineage counters (north_rule:
-# fetched / deduped / failed / robots_blocked).
+# crawl_metrics — per-round lineage counters (north_rule: fetched /
+# deduped / failed / robots_blocked), one row per state and commit, each
+# a state's net change.  partition_id is a marker: -1 on a commit's rows,
+# -2 on folded sums (stores written before the counters were observed
+# per state hold one row per Spark partition).
 # ---------------------------------------------------------------------------
 CRAWL_METRICS = T.StructType(
     [

@@ -33,8 +33,11 @@ import shutil
 import tempfile
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 
 def _catalog_name(snap_dir: str) -> str:
@@ -102,15 +105,8 @@ class SnapshotTable:
     ) -> dict:
         """Write df as the snapshot after ``snaps``; returns its
         manifest entry (not yet published)."""
-        # monotonic, NOT len(snaps): expiry trims the manifest front, and
-        # a reused seq would corrupt MergeTable's last-wins-by-_seq merge
-        seq = (snaps[-1]["seq"] + 1) if snaps else 0
-        snap_id = f"snap-{seq:06d}-{uuid.uuid4().hex[:8]}"
-        loc = os.path.join(self.path, snap_id)
-        # the schema as a parquet reader sees it (all nullable): read()
-        # passes it to the reader, which then runs no footer job
-        entry = {"id": snap_id, "seq": seq, "note": note, "kind": kind,
-                 "schema_ddl": df.schema.toNullable().toDDL()}
+        entry = self._entry(snaps, df.schema, note, kind)
+        loc = os.path.join(self.path, entry["id"])
         if bucket_by is None:
             df.write.mode("overwrite").parquet(loc)
             return entry
@@ -122,6 +118,31 @@ class SnapshotTable:
          .option("path", os.path.abspath(loc)).format("parquet")
          .saveAsTable(_catalog_name(loc)))
         return {**entry, "bucket_key": key, "buckets": n_buckets}
+
+    def _entry(self, snaps: list[dict], schema, note: str, kind: str) -> dict:
+        """The manifest entry of the snapshot after ``snaps``."""
+        # monotonic, NOT len(snaps): expiry trims the manifest front, and
+        # a reused seq would corrupt MergeTable's last-wins-by-_seq merge
+        seq = (snaps[-1]["seq"] + 1) if snaps else 0
+        # the schema as a parquet reader sees it (all nullable): read()
+        # passes it to the reader, which then runs no footer job
+        return {"id": f"snap-{seq:06d}-{uuid.uuid4().hex[:8]}", "seq": seq,
+                "note": note, "kind": kind,
+                "schema_ddl": schema.toNullable().toDDL()}
+
+    def commit_arrow(self, table: pa.Table, note: str = "") -> str:
+        """Write a driver-side Arrow table as a new snapshot with no
+        Spark job: the few rows of a counter chain, whose values the
+        driver already holds.  Its entry records the schema Spark would
+        record for the same columns, so it reads alongside Spark-written
+        snapshots of the chain without a schema-inference job."""
+        snaps = self.snapshots()
+        entry = self._entry(snaps, from_arrow_schema(table.schema), note, "base")
+        loc = os.path.join(self.path, entry["id"])
+        os.makedirs(loc)
+        pq.write_table(table, os.path.join(loc, "part-00000.parquet"))
+        self._publish(snaps + [entry])
+        return entry["id"]
 
     def _publish(self, snaps: list[dict]) -> None:
         fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".manifest.tmp")

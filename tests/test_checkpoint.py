@@ -58,18 +58,7 @@ def test_snapshot_crash_safety(spark, tmp_path):
     assert [s["id"] for s in t.snapshots()] == [s1, s2]
 
 
-def _jobs_to_plan(spark, group: str, plan) -> int:
-    """Spark jobs run while ``plan()`` builds (not executes) a frame."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        plan().schema
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_snapshot_read_takes_schema_from_manifest(spark, tmp_path):
+def test_snapshot_read_takes_schema_from_manifest(spark, tmp_path, count_jobs):
     """Every manifest entry records its schema, so planning a read or a
     read_all runs no footer schema-inference job.  An entry without one
     (written before schemas were recorded) still reads, by inference."""
@@ -77,13 +66,13 @@ def test_snapshot_read_takes_schema_from_manifest(spark, tmp_path):
     df = spark.range(5).select(F.col("id").alias("k"), F.lit("x").alias("v"))
     t.commit(df, note="a")
     t.commit(df, note="b")
-    assert _jobs_to_plan(spark, "ckpt_read", lambda: t.read(spark)) == 0
-    assert _jobs_to_plan(spark, "ckpt_read_all", lambda: t.read_all(spark)) == 0
+    assert count_jobs(lambda: t.read(spark).schema)[1] == 0
+    assert count_jobs(lambda: t.read_all(spark).schema)[1] == 0
     assert t.read_all(spark).count() == 10
 
     snaps = t.snapshots()
     t._publish([{k: v for k, v in s.items() if k != "schema_ddl"} for s in snaps])
-    assert _jobs_to_plan(spark, "ckpt_infer", lambda: t.read(spark)) > 0
+    assert count_jobs(lambda: t.read(spark).schema)[1] > 0
     assert sorted(t.read(spark).collect()) == sorted(df.collect())
 
 

@@ -5,6 +5,8 @@ under cache loss, fetch-cache release and metrics-chain folding."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from hypothesis import given, settings
@@ -292,31 +294,115 @@ def test_bucketed_store_reopens_without_layout_argument(spark, fixture_bundle, t
 
 # ------------------------------------- lineage metrics from deltas
 def test_lineage_counts_match_exact_state_counts(spark, fixture_bundle, tmp_path):
-    from dart_xbrl_crawler_spark import fixtures
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-    from dart_xbrl_crawler_spark.operators.scheduler import seeds_to_frontier
-    from dart_xbrl_crawler_spark.schemas import PAGES, ROBOTS, SEEDS
+    """The metrics chain folds to the exact per-state counts after every
+    kind of commit: bootstrap, insert, rounds, recrawl and expire (the
+    transitions record the states their rows leave)."""
+    pages, seeds, _, robots = fixture_bundle
+    store = FrontierStore(str(tmp_path / "f"), n_bloom_shards=8, seen_filter="cuckoo")
+    seeds_df = spark.createDataFrame(seeds, schema=SEEDS)
+    pages_df = spark.createDataFrame(pages, schema=PAGES)
+    robots_df = spark.createDataFrame(robots, schema=ROBOTS)
 
+    def assert_lineage_exact(n_dup):
+        lineage = store.lineage_counts(spark)
+        assert lineage.pop("deduped", 0) == n_dup
+        assert lineage == {k: v for k, v in store.state_counts(spark).items() if v}
+
+    store.bootstrap(S.seeds_to_frontier(seeds_df), RUN_TS)
+    assert_lineage_exact(0)
+    # duplicate insert contributes a 'deduped' lineage counter
+    _, _, n_dup = store.insert(
+        spark, S.seeds_to_frontier(seeds_df).select("url", "priority"), RUN_TS
+    )
+    assert n_dup > 0
+    assert_lineage_exact(n_dup)
+    for rid in range(2):
+        store.run_round(
+            spark, pages_df, robots_df, RUN_TS, round_id=rid, round_ms=120_000
+        )
+        assert_lineage_exact(n_dup)
+    assert store.recrawl(spark, LATER_TS) > 0
+    assert_lineage_exact(n_dup)
+    store.run_round(spark, pages_df, robots_df, RUN_TS, round_id=2, round_ms=120_000)
+    assert store.expire(spark, LATER_TS) > 0
+    assert_lineage_exact(n_dup)
+
+
+def test_driver_written_lineage_reads_like_spark_written(spark, tmp_path, count_jobs):
+    """Lineage rows written from the driver record the schema Spark
+    records, so a chain that mixes them with an older store's
+    Spark-written per-partition rows plans with no inference job, and
+    folds and sums like one chain."""
+    store = FrontierStore(
+        str(tmp_path / "f"), n_bloom_shards=4, metrics_compact_every=2
+    )
+    store.metrics.commit(
+        spark.createDataFrame(
+            [(-1, 0, "queued", 5), (-1, 1, "queued", 4)],
+            schema="round_id int, partition_id int, state string, n long",
+        ),
+        note="insert lineage",
+    )
+    store._commit_lineage(
+        0, {"fetched": 2, "failed": 1, "robots_blocked": 0}, "round=0"
+    )
+    store._commit_lineage(-1, {"queued": 3, "deduped": 2}, "insert lineage")
+    assert len({s["schema_ddl"] for s in store.metrics.snapshots()}) == 1
+    _, n_jobs = count_jobs(lambda: store.metrics.read_all(spark).schema)
+    assert n_jobs == 0
+    want = {"queued": 9, "fetched": 2, "failed": 1, "deduped": 2}
+    assert store.lineage_counts(spark) == want
+    store._maybe_compact_metrics(spark)  # 3 snapshots > 2: fold
+    assert len(store.metrics.snapshots()) == 1
+    assert store.lineage_counts(spark) == want
+
+
+def test_bootstrap_and_round_job_count(spark, fixture_bundle, tmp_path, count_jobs):
+    """A cold bootstrap plus one compacting run_round runs a pinned
+    number of Spark jobs: lineage counters are observed on the writes
+    that already run, never jobs of their own."""
+    pages, seeds, _, robots = fixture_bundle
+    seeds_df = S.seeds_to_frontier(spark.createDataFrame(seeds, schema=SEEDS))
+    pages_df = spark.createDataFrame(pages, schema=PAGES)
+    robots_df = spark.createDataFrame(robots, schema=ROBOTS)
+    store = FrontierStore(str(tmp_path / "f"), n_bloom_shards=8, compact_every=0)
+
+    def bootstrap_and_round():
+        store.bootstrap(seeds_df, RUN_TS)
+        store.run_round(
+            spark, pages_df, robots_df, RUN_TS, round_id=1, round_ms=120_000
+        )
+
+    _, n_jobs = count_jobs(bootstrap_and_round)
+    assert store.table._latest_base()["note"] == "auto-compact after round=1"
+    assert n_jobs == 35
+
+
+def test_round_delta_written_at_fetch_width(spark, fixture_bundle, tmp_path):
+    """run_round writes its delta in at most as many files as the fetch
+    stage has tasks, and commits one lineage row per state whose counts
+    are the delta's own."""
     pages, seeds, _, robots = fixture_bundle
     store = FrontierStore(str(tmp_path / "f"), n_bloom_shards=8)
     seeds_df = spark.createDataFrame(seeds, schema=SEEDS)
-    store.bootstrap(seeds_to_frontier(seeds_df), fixtures.RUN_TS)
-    pages_df = spark.createDataFrame(pages, schema=PAGES)
-    robots_df = spark.createDataFrame(robots, schema=ROBOTS)
-    # duplicate insert contributes a 'deduped' lineage counter
-    _, n_ins, n_dup = store.insert(
-        spark, seeds_to_frontier(seeds_df).select("url", "priority"), fixtures.RUN_TS
+    store.bootstrap(S.seeds_to_frontier(seeds_df), RUN_TS)
+    # bytes for every other page only: the round fetches some, fails some
+    snap, _ = store.run_round(
+        spark, spark.createDataFrame(pages.iloc[::2], schema=PAGES),
+        spark.createDataFrame(robots, schema=ROBOTS), RUN_TS, round_id=1,
+        round_ms=120_000, n_partitions=2,
     )
-    for rid in range(2):
-        store.run_round(
-            spark, pages_df, robots_df, fixtures.RUN_TS, round_id=rid,
-            round_ms=120_000,
-        )
-    lineage = store.lineage_counts(spark)
-    exact = store.state_counts(spark)
-    deduped = lineage.pop("deduped", 0)
-    assert deduped == n_dup
-    assert lineage == {k: v for k, v in exact.items() if v}
+    files = os.listdir(os.path.join(store.table.table.path, snap))
+    assert 0 < len([f for f in files if f.endswith(".parquet")]) <= 2
+    delta = {
+        r["state"]: r["count"]
+        for r in store.table.table.read(spark, snap).groupBy("state").count().collect()
+    }
+    lineage = store.metrics.read(spark).collect()
+    assert {r["partition_id"] for r in lineage} == {-1}
+    assert len(lineage) == len(delta)
+    assert {r["state"]: r["n"] for r in lineage} == delta == store.last_round
+    assert set(delta) == {"fetched", "failed"}
 
 
 def test_run_round_releases_previous_fetch_cache(spark, fixture_bundle, tmp_path):
