@@ -1,9 +1,9 @@
-"""Document-parser seam: format sniff → parser registry.
+"""Document parsers: format sniff → one of two built-in parsers.
 
 The extract kernel's unpivot consumes ONE wide-document shape
 (``mini-xbrl-2``: tuple-labeled period columns × concept rows — the
 shape of the reference's pandas frame, xbrl_processor.py:458-503).
-Which bytes produce that shape is pluggable here:
+Two formats produce that shape:
 
 * ``mini-xbrl-2`` JSON members (the synthetic fixture format);
 * real XBRL 2.1 instance XML members, parsed by a minimal pure-Python
@@ -14,8 +14,7 @@ Which bytes produce that shape is pluggable here:
   namespaced facts; labels come from a built-in concept table where
   known, falling back to the concept localname).
 
-``register_parser`` lets deployments plug further formats (e.g. a real
-dart_fss adapter on a cluster that has it) without touching the kernel.
+``parse_document`` tries the two (sniff, parse) pairs in order.
 Everything here is plain-python and runs INSIDE the Arrow batch UDF —
 no Spark imports.
 """
@@ -26,7 +25,6 @@ import io
 import json
 import re
 import zipfile
-from collections.abc import Callable
 from xml.etree import ElementTree
 
 try:  # optional fast path; byte-identical accepted documents
@@ -139,62 +137,8 @@ def _zip_read_member(data: bytes, meta) -> bytes | None:
 
 _ENTITY_RE = re.compile(r"entity(\d{8})")
 
-# sniff(body) -> bool, parse(body, aux) -> doc dict | None, where aux
-# carries sidecar context from the surrounding ZIP (today: 'labels',
-# the concept→lang→label map parsed from label-linkbase members)
-_REGISTRY: list[tuple[Callable[[bytes], bool], Callable[..., dict | None]]] = []
-
 _LAB_MEMBER_RE = re.compile(r"_lab(-[a-z]{2})?\.xml$", re.IGNORECASE)
 _PRE_MEMBER_RE = re.compile(r"_pre(-[a-z]{2})?\.xml$", re.IGNORECASE)
-
-
-def register_parser(
-    sniff: Callable[[bytes], bool], parse: Callable[..., dict | None]
-) -> None:
-    """Prepend a (sniff, parse) pair — later registrations win.
-    ``parse`` may take (body) or (body, aux); the calling convention is
-    resolved ONCE here from the signature so every shape keeps working:
-      * two required positional params (incl. positional-only aux and
-        *args) → called positionally parse(body, aux);
-      * a named ``aux`` param or **kwargs → called parse(body, aux=aux);
-      * anything else (1-arg parsers, incl. ones with unrelated
-        defaulted options like parse(body, strict=False)) → aux is
-        DROPPED, never passed where an option lives."""
-    import inspect
-
-    inner = parse
-    try:
-        params = inspect.signature(parse).parameters
-        required = [
-            p
-            for p in params.values()
-            if p.default is inspect.Parameter.empty
-            and p.kind
-            in (
-                inspect.Parameter.POSITIONAL_ONLY,
-                inspect.Parameter.POSITIONAL_OR_KEYWORD,
-            )
-        ]
-        var_pos = any(
-            p.kind == inspect.Parameter.VAR_POSITIONAL for p in params.values()
-        )
-        var_kw = any(
-            p.kind == inspect.Parameter.VAR_KEYWORD for p in params.values()
-        )
-        if len(required) >= 2 or var_pos:
-            def parse(body, aux=None, _inner=inner):  # noqa: ANN001
-                return _inner(body, aux)
-        elif "aux" in params or var_kw:
-            def parse(body, aux=None, _inner=inner):  # noqa: ANN001
-                return _inner(body, aux=aux)
-        else:
-            def parse(body, aux=None, _inner=inner):  # noqa: ANN001
-                return _inner(body)
-    except (TypeError, ValueError):
-        def parse(body, aux=None, _inner=inner):  # noqa: ANN001
-            return _inner(body)
-
-    _REGISTRY.insert(0, (sniff, parse))
 
 
 def parse_label_linkbase(body: bytes) -> dict[str, dict[str, str]]:
@@ -579,6 +523,8 @@ def _parse_xbrl_xml(body: bytes, aux: dict | None = None) -> dict | None:
     return {"doc_format": "mini-xbrl-2", "statements": stmts}
 
 
-_REGISTRY.extend(
-    [(_sniff_mini, _parse_mini), (_sniff_xbrl_xml, _parse_xbrl_xml)]
-)
+# sniff(body) -> bool, parse(body, aux) -> doc dict | None, where aux
+# carries sidecar context from the surrounding ZIP ('labels', the
+# concept→lang→label map parsed from label-linkbase members, and
+# 'presentation', the display order); the first sniff that matches wins
+_REGISTRY = ((_sniff_mini, _parse_mini), (_sniff_xbrl_xml, _parse_xbrl_xml))

@@ -193,23 +193,6 @@ def extract_links(
     )
 
 
-def extract_sitemap_locs(pages: DataFrame, html_col: str = "html") -> DataFrame:
-    """sitemap.xml / sitemapindex pages → (src_url, loc): every <loc>
-    entry, extracted JVM-side (regexp over the decoded body — sitemaps
-    are flat enough that a full XML parse buys nothing).  Works for both
-    urlset leaves (page urls → frontier seeds) and sitemapindex nodes
-    (child sitemap urls → fetch next)."""
-    locs = F.regexp_extract_all(
-        decode_permissive(F.col(html_col)),
-        F.lit(r"<loc>\s*([^<]+?)\s*</loc>"),
-        F.lit(1),
-    )
-    return pages.select(
-        F.col("url").alias("src_url"),
-        F.explode(F.array_distinct(locs)).alias("loc"),
-    )
-
-
 def extract_sitemap_entries(
     pages: DataFrame, html_col: str = "html", carry: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -373,18 +356,6 @@ def extract_feed_links(pages: DataFrame, html_col: str = "html") -> DataFrame:
         )
         .select("src_url", F.col("e.feed_url").alias("feed_url"),
                 F.col("e.feed_type").alias("feed_type"))
-    )
-
-
-def sitemap_urls_from_robots(robots_txt: DataFrame) -> DataFrame:
-    """(host, robots_txt) → (host, sitemap_url): the 'Sitemap:' lines
-    REP files advertise (RFC 9309 §2.3 'other records') — the standard
-    entry point into a site's sitemap tree.  Pure Catalyst."""
-    urls = F.regexp_extract_all(
-        F.col("robots_txt"), F.lit(r"(?mi)^\s*sitemap:\s*(\S+)"), F.lit(1)
-    )
-    return robots_txt.select(
-        "host", F.explode(F.array_distinct(urls)).alias("sitemap_url")
     )
 
 

@@ -1,4 +1,4 @@
-"""Distributed BPE (byte-pair-encoding) vocabulary induction + apply.
+"""Distributed BPE (byte-pair-encoding) vocabulary induction.
 
 The tokenizer-training step of a pretraining data pipeline (Sennrich
 et al. 2016).  The scale observation that makes BPE tractable on a
@@ -21,10 +21,6 @@ list is a pure function of the corpus — any run, any partitioning,
 any cluster size produces the identical vocabulary (pinned against an
 independent single-process reference implementation in tests).
 
-``apply_bpe`` then encodes documents with the learned ranks (greedy
-lowest-rank-first, the standard BPE encode) to produce per-doc token
-counts — the real token accounting a data mix is budgeted with.
-
 Reference analog: none (the reference has no tokenizer concept);
 SURVEY §"token counting" names the BPE-ish regex as the baseline —
 this is the real learned-merge version.
@@ -32,13 +28,11 @@ this is the real learned-merge version.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["word_freq_table", "train_bpe", "apply_bpe"]
+__all__ = ["word_freq_table", "train_bpe"]
 
 
 def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -126,54 +120,3 @@ def train_bpe(
         if (it + 1) % 4 == 0:
             words = words.localCheckpoint()
     return merges
-
-
-def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> int:
-    """Greedy standard BPE encode; returns the token count."""
-    syms = list(word)
-    while len(syms) >= 2:
-        best_rank = None
-        best_i = -1
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank, best_i = r, i
-        if best_i < 0:
-            break
-        syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-    return len(syms)
-
-
-def apply_bpe(
-    docs: DataFrame,
-    merges: list[tuple[str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-doc BPE token counts under the learned merge ranks.
-
-    The ranks dict is closure-captured into the Arrow-batched kernel —
-    a few MB at vocab scale, shipped once per executor (the same
-    small-model-broadcast shape as the IVF centroids)."""
-    ranks = {(a, b): i for i, (a, b, _) in enumerate(merges)}
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, int] = {}
-        for pdf in it:
-            counts = []
-            for text in pdf[text_col]:
-                total = 0
-                for w in (text or "").split():
-                    c = cache.get(w)
-                    if c is None:
-                        c = _encode_word(w, ranks)
-                        cache[w] = c
-                    total += c
-                counts.append(total)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "n_tokens": counts}
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(
-        _batches, schema=f"{id_col} long, n_tokens long"
-    )

@@ -77,19 +77,6 @@ def connected_components(
     return labels
 
 
-def canonical_docs(
-    pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_id"
-) -> DataFrame:
-    """pairs → (doc_id, canonical_id): every doc in a near-dup cluster
-    maps to the cluster's min doc id (the keep-one dedup decision);
-    docs that appear in no pair are their own canonical doc and are
-    simply absent here (identity mapping needs no rows)."""
-    comp = connected_components(pairs, a_col, b_col)
-    return comp.select(
-        F.col("node").alias("doc_id"), F.col("component").alias("canonical_id")
-    )
-
-
 def pagerank(
     edges: DataFrame,
     n_iter: int = 5,

@@ -43,21 +43,6 @@ TEXT_OUT = T.StructType(
 
 _META_COLS = ["url", "html", "report_nm", "rcept_dt"]
 
-_EMPTY_LONG_COLS = [
-    "doc_idx",
-    "report_type",
-    "order_no",
-    "account_id",
-    "account_name",
-    "account_name_en",
-    "class1",
-    "class2",
-    "class3",
-    "period_raw",
-    "fs",
-    "amount",
-]
-
 
 def _parse_batch(pdf: pd.DataFrame, run_ts: str) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Parse a batch of pages.

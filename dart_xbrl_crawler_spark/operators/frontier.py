@@ -276,10 +276,11 @@ class FrontierStore:
     def _commit_insert_metrics(
         self, spark: SparkSession, fresh: DataFrame, n_fresh: int, n_dup: int
     ) -> None:
-        """Lineage rows for an insert: the ``n_fresh`` rows of ``fresh``
-        that entered, all 'queued', + one 'deduped' counter (a lineage
-        state, not a table state — duplicates are counted, never
-        inserted).  The counts are the caller's; no Spark job runs."""
+        """Lineage rows for an admission that resurrects nothing
+        (bootstrap): the ``n_fresh`` rows of ``fresh`` that entered, all
+        'queued', + one 'deduped' counter (a lineage state, not a table
+        state — duplicates are counted, never inserted).  The counts
+        are the caller's; no Spark job runs."""
         self._commit_lineage(
             -1, {"queued": n_fresh, "deduped": n_dup}, "insert lineage"
         )
@@ -328,7 +329,9 @@ class FrontierStore:
         Both counts stay eager jobs, not observations, because the plan
         needs them before it runs: ``batch.count`` bounds the confirm
         (``max_confirmed_hint``), and ``fresh.count`` decides whether
-        the seen filter is committed before the delta.
+        the seen filter is committed before the delta.  A cuckoo store
+        runs one more count, of the fresh keys that resurrect an
+        expired row, for their lineage.
         The seen filter is the STORED one; the inserted hashes are
         added into its shards afterwards — O(|batch|) keys per insert,
         never a rebuild from the full frontier."""
@@ -366,6 +369,16 @@ class FrontierStore:
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
             n_fresh = fresh.count()
+            # a fresh key that lands on an expired row resurrects it, so
+            # that row leaves 'expired' (cuckoo only: a bloom store keeps
+            # expired hashes in its filter, and they stay deduped)
+            n_back = 0
+            if n_fresh and self.seen_filter == "cuckoo":
+                n_back = fresh.join(
+                    frontier.filter(F.col("state") == "expired").select("url_hash"),
+                    "url_hash",
+                    "left_semi",
+                ).count()
             # bloom FIRST, frontier delta second: a crash in between
             # leaves extra bloom keys (harmless — exact confirm rejects
             # them), while the reverse order could leave a frontier row
@@ -378,7 +391,11 @@ class FrontierStore:
             snap = self.table.commit_delta(
                 spark, fresh, note=f"insert depth={depth}"
             )
-            self._commit_insert_metrics(spark, fresh, n_fresh, n_in - n_fresh)
+            self._commit_lineage(
+                -1,
+                {"queued": n_fresh, "deduped": n_in - n_fresh, "expired": -n_back},
+                "insert lineage",
+            )
             fresh.unpersist()
             return snap, n_fresh, n_in - n_fresh
         finally:

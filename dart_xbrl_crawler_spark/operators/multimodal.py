@@ -1,25 +1,18 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed
-metadata, with real Spark plumbing (schema, partitioning, Arrow batch
-shape).
+"""Image near-dup keys: magic-byte media typing, REAL pixel decoders
+and a 64-bit DCT perceptual hash — the path q75 runs.
 
-Decode status per modality: audio/wav has a REAL PCM decoder
-(decode_wav — stdlib wave + numpy sample stats); image/png has a REAL
-pixel decoder (decode_png — stdlib zlib + per-row unfilter, filters
-0-4, color types 0/2/3/4/6 at depth 8); image/jpeg has a REAL baseline
-DCT decoder (decode_jpeg — T.81 marker parse, canonical huffman,
-dequantize + numpy IDCT, 4:2:0/4:4:4, restart markers); image/gif has
-a REAL first-frame decoder (decode_gif — LZW with dynamic code width,
-global/local color tables, interlace); video has a REAL MJPEG-in-AVI
-frame decoder (parse_avi + decode_avi_frames — RIFF chunk walk,
-'##dc'/'##db' movi frames fed through decode_jpeg) and REAL MP4
-container metadata (parse_mp4 — ISO-BMFF box walk: mvhd duration,
-tkhd track dimensions); only non-MJPEG video BITSTREAM decode (H.264
-etc.) remains out of scope — no entropy-codec implementation here,
-and `extract_video_stats` reports those rows with container metadata
-plus null frame stats (the error path is data, not an exception).
-Everything around the codecs (mapInPandas signatures, header metadata
-from magic bytes, batch sizing, partition-by-media-type layout) is
-real and tested.
+``sniff_media`` types the binary column with built-in expressions (no
+UDF), so non-image rows are filtered JVM-side before Arrow.  The
+decoders are pure Python + numpy with no codec library: PNG (stdlib
+zlib + per-row unfilter, filters 0-4, color types 0/2/3/4/6 at depth
+8), baseline JPEG (T.81 marker parse, canonical huffman, dequantize +
+numpy IDCT, 4:2:0/4:4:4, restart markers) and GIF (first frame, LZW
+with dynamic code width, global/local color tables, interlace).  A
+payload outside the decoded envelope yields None — the error path is
+data, not an exception.  ``extract_phash`` decodes → resizes → hashes;
+``phash_near_dup_pairs`` pairs the hashes through the shared
+banded-LSH kernel.  ``encode_png`` writes the deterministic image
+fixtures q75 decodes.
 """
 
 from __future__ import annotations
@@ -31,23 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_META = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("magic_hex", T.StringType(), True),
-    ]
-)
-
-FEATURE_OUT = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField("feature", T.ArrayType(T.FloatType()), True),
-    ]
-)
 
 _MAGIC = {
     b"\x89PNG": "image/png",
@@ -77,203 +53,6 @@ def sniff_media(df: DataFrame, binary_col: str = "html") -> DataFrame:
     return df.withColumn("media_type", mt).withColumn(
         "n_bytes", F.octet_length(F.col(binary_col)).cast("long")
     )
-
-
-HEADER_META = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_channels", T.IntegerType(), True),
-    ]
-)
-
-
-def parse_header(payload: bytes, media_type: str | None) -> dict:
-    """REAL container-header metadata in pure Python — no codec library:
-    PNG IHDR width/height, JPEG SOFn dimensions (marker walk), WAV fmt
-    chunk sample-rate/channels.  Only pixel/sample DECODE stays stubbed
-    (decode_stub below)."""
-    out = {"width": None, "height": None, "sample_rate": None, "n_channels": None}
-    try:
-        if media_type == "image/png" and len(payload) >= 24:
-            # 8-byte signature, IHDR length+type, then width/height u32be
-            if payload[12:16] == b"IHDR":
-                out["width"] = int.from_bytes(payload[16:20], "big")
-                out["height"] = int.from_bytes(payload[20:24], "big")
-        elif media_type == "image/jpeg":
-            i = 2
-            n = len(payload)
-            while i + 9 < n:
-                if payload[i] != 0xFF:
-                    i += 1
-                    continue
-                marker = payload[i + 1]
-                if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                    i += 2
-                    continue
-                seg_len = int.from_bytes(payload[i + 2 : i + 4], "big")
-                # SOF0..SOF15 except DHT(C4)/JPG(C8)/DAC(CC)
-                if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                    out["height"] = int.from_bytes(payload[i + 5 : i + 7], "big")
-                    out["width"] = int.from_bytes(payload[i + 7 : i + 9], "big")
-                    break
-                i += 2 + seg_len
-        elif media_type == "audio/wav" and len(payload) >= 36:
-            # RIFF....WAVE then chunk walk to 'fmt '
-            if payload[8:12] == b"WAVE":
-                i = 12
-                n = len(payload)
-                while i + 8 <= n:
-                    cid = payload[i : i + 4]
-                    clen = int.from_bytes(payload[i + 4 : i + 8], "little")
-                    if cid == b"fmt " and i + 16 <= n:
-                        out["n_channels"] = int.from_bytes(
-                            payload[i + 10 : i + 12], "little"
-                        )
-                        out["sample_rate"] = int.from_bytes(
-                            payload[i + 12 : i + 16], "little"
-                        )
-                        break
-                    i += 8 + clen + (clen & 1)
-    except Exception:
-        pass  # malformed header → nulls (error path is data)
-    return out
-
-
-def extract_header_meta(df: DataFrame, binary_col: str = "html") -> DataFrame:
-    """mapInPandas header-metadata extraction: (url, media_type, width,
-    height, sample_rate, n_channels).  Pure-Python byte slicing per
-    payload — no decode, no codec dependency."""
-    src = sniff_media(df, binary_col).select("url", binary_col, "media_type")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [
-                parse_header(bytes(p) if p is not None else b"", mt)
-                for p, mt in zip(pdf[binary_col], pdf["media_type"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "media_type": pdf["media_type"],
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int32"
-                    ),
-                    "sample_rate": pd.array(
-                        [m["sample_rate"] for m in metas], dtype="Int32"
-                    ),
-                    "n_channels": pd.array(
-                        [m["n_channels"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
-
-    return src.mapInPandas(run, schema=HEADER_META)
-
-
-AUDIO_STATS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_channels", T.IntegerType(), True),
-        T.StructField("duration_s", T.DoubleType(), True),
-        T.StructField("n_samples", T.LongType(), True),
-        T.StructField("rms", T.DoubleType(), True),
-        T.StructField("peak", T.DoubleType(), True),
-    ]
-)
-
-
-def decode_wav(payload: bytes) -> dict | None:
-    """REAL PCM sample decode — stdlib ``wave`` + numpy, no codec
-    library.  Returns sample-level stats (duration, RMS, peak) or None
-    for non-PCM/malformed payloads (the error path is data).  This is
-    the audio modality's real decoder; image/video decode stays behind
-    decode_stub (no codec libs in this container)."""
-    import io
-    import wave
-
-    try:
-        with wave.open(io.BytesIO(payload)) as w:
-            nch = w.getnchannels()
-            sw = w.getsampwidth()
-            fr = w.getframerate()
-            nf = w.getnframes()
-            raw = w.readframes(nf)
-    except Exception:
-        return None
-    if fr <= 0 or nch <= 0:
-        return None
-    if sw == 2:
-        x = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-    elif sw == 1:  # 8-bit WAV is unsigned
-        x = (np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-    elif sw == 4:
-        x = np.frombuffer(raw, dtype="<i4").astype(np.float64) / 2147483648.0
-    else:
-        return None
-    return {
-        "sample_rate": fr,
-        "n_channels": nch,
-        "duration_s": nf / fr,
-        "n_samples": int(len(x)),
-        "rms": float(np.sqrt(np.mean(x * x))) if len(x) else 0.0,
-        "peak": float(np.max(np.abs(x))) if len(x) else 0.0,
-    }
-
-
-def extract_audio_stats(df: DataFrame, binary_col: str = "html") -> DataFrame:
-    """mapInPandas PCM decode over audio/wav payloads: (url,
-    sample_rate, n_channels, duration_s, n_samples, rms, peak).
-    Non-wav rows are filtered JVM-side BEFORE the Arrow channel — only
-    audio bytes ride to python."""
-    src = (
-        sniff_media(df, binary_col)
-        .filter(F.col("media_type") == "audio/wav")
-        .select("url", binary_col)
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf[binary_col]):
-                s = decode_wav(bytes(payload) if payload is not None else b"")
-                s = s or {
-                    "sample_rate": None,
-                    "n_channels": None,
-                    "duration_s": None,
-                    "n_samples": None,
-                    "rms": None,
-                    "peak": None,
-                }
-                rows.append({"url": url, **s})
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "url",
-                    "sample_rate",
-                    "n_channels",
-                    "duration_s",
-                    "n_samples",
-                    "rms",
-                    "peak",
-                ],
-            )
-            for c, dt in (
-                ("sample_rate", "Int32"),
-                ("n_channels", "Int32"),
-                ("n_samples", "Int64"),
-            ):
-                out[c] = pd.array(out[c], dtype=dt)
-            yield out
-
-    return src.mapInPandas(run, schema=AUDIO_STATS)
 
 
 def decode_png(payload: bytes) -> np.ndarray | None:
@@ -384,16 +163,16 @@ _ZIGZAG = np.array(
 )  # index-in-zigzag-order → natural (row-major) index
 
 
-def _dct_basis() -> np.ndarray:
-    """Orthonormal 8x8 DCT-II basis A: spatial = A.T @ coeffs @ A."""
-    k = np.arange(8).reshape(8, 1)
-    n = np.arange(8).reshape(1, 8)
-    a = np.cos((2 * n + 1) * k * np.pi / 16.0) * 0.5
+def _dct_basis(n: int) -> np.ndarray:
+    """Orthonormal NxN DCT-II basis A: spatial = A.T @ coeffs @ A."""
+    k = np.arange(n).reshape(n, 1)
+    m = np.arange(n).reshape(1, n)
+    a = np.cos((2 * m + 1) * k * np.pi / (2.0 * n)) * np.sqrt(2.0 / n)
     a[0, :] *= 1.0 / np.sqrt(2.0)
     return a
 
 
-_DCT_A = _dct_basis()
+_DCT_A = _dct_basis(8)
 
 
 class _HuffTable:
@@ -793,356 +572,9 @@ def _gif_lzw(data: bytes, min_code: int, limit: int) -> list[int] | None:
     return out
 
 
-def decode_stub(payload: bytes, media_type: str | None) -> np.ndarray:
-    """Codec dispatch: image/png, image/jpeg, image/gif and MJPEG-AVI
-    video decode REAL pixels (decode_png / decode_jpeg / decode_gif /
-    decode_avi_frames first frame) and features are per-channel means
-    over the 8-bin row partition of the image; remaining media types
-    keep the deterministic 64-byte-header stub (no bitstream codec for
-    H.264/audio-mp3 in this container — swap for ffmpeg when
-    available)."""
-    if media_type is None:
-        raise NotImplementedError("unknown media type — no codec registered")
-    if media_type in ("image/png", "image/jpeg", "image/gif",
-                      "video/x-msvideo"):
-        if media_type == "video/x-msvideo":
-            frames = decode_avi_frames(payload, max_frames=1)
-            px = frames[0] if frames else None
-        else:
-            dec = {"image/png": decode_png, "image/jpeg": decode_jpeg,
-                   "image/gif": decode_gif}[media_type]
-            px = dec(payload)
-        if px is not None:
-            gray = px.astype(np.float32).mean(axis=2) / 255.0
-            bins = np.array_split(gray, 8, axis=0)
-            return np.array([b.mean() if b.size else 0.0 for b in bins],
-                            dtype=np.float32)
-    h = np.frombuffer(payload[:64].ljust(64, b"\0"), dtype=np.uint8)
-    return (h.reshape(8, 8).sum(axis=1) / 255.0).astype(np.float32)
-
-
-IMAGE_STATS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_channels", T.IntegerType(), True),
-        T.StructField("mean", T.DoubleType(), True),
-        T.StructField("std", T.DoubleType(), True),
-    ]
-)
-
-
-def extract_image_stats(df: DataFrame, binary_col: str = "html") -> DataFrame:
-    """mapInPandas REAL pixel decode over image/png AND image/jpeg
-    payloads: (url, width, height, n_channels, mean, std).  Non-image
-    rows are filtered JVM-side BEFORE the Arrow channel — only image
-    bytes ride to python; undecodable payloads yield null stats (error
-    path is data)."""
-    src = (
-        sniff_media(df, binary_col)
-        .filter(F.col("media_type").isin("image/png", "image/jpeg", "image/gif"))
-        .select("url", binary_col, "media_type")
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for url, payload, mt in zip(
-                pdf["url"], pdf[binary_col], pdf["media_type"]
-            ):
-                dec = {"image/png": decode_png, "image/jpeg": decode_jpeg,
-                       "image/gif": decode_gif}[mt]
-                px = dec(bytes(payload) if payload is not None else b"")
-                if px is None:
-                    rows.append(
-                        {"url": url, "width": None, "height": None,
-                         "n_channels": None, "mean": None, "std": None}
-                    )
-                else:
-                    x = px.astype(np.float64)
-                    rows.append(
-                        {
-                            "url": url,
-                            "width": int(px.shape[1]),
-                            "height": int(px.shape[0]),
-                            "n_channels": int(px.shape[2]),
-                            "mean": float(x.mean()),
-                            "std": float(x.std()),
-                        }
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=["url", "width", "height", "n_channels", "mean", "std"],
-            )
-            for c in ("width", "height", "n_channels"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
-
-    return src.mapInPandas(run, schema=IMAGE_STATS)
-
-
-def extract_features(df: DataFrame, binary_col: str = "html") -> DataFrame:
-    """mapInPandas feature extraction over binary payloads — real Arrow
-    plumbing, stub decode.  Unknown media types yield null features
-    (the error path is data, not an exception)."""
-    src = sniff_media(df, binary_col).select("url", binary_col, "media_type")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = []
-            for payload, mt in zip(pdf[binary_col], pdf["media_type"]):
-                if mt is None or payload is None:
-                    feats.append(None)
-                else:
-                    feats.append(
-                        [float(x) for x in decode_stub(bytes(payload), mt)]
-                    )
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "media_type": pdf["media_type"],
-                    "feature": feats,
-                }
-            )
-
-    return src.mapInPandas(run, schema=FEATURE_OUT)
-
-
 # =====================================================================
-# video: REAL MJPEG-in-AVI frame decode + MP4 container metadata.
-#
-# Reference analog: the reference pipeline has no video path at all
-# (it is a filings crawler); a Common-Crawl-style training-data
-# pipeline does, so these are additive operators.  AVI is a RIFF
-# container (chunk walk identical in spirit to the WAV fmt walk
-# above); an MJPEG video stream ('MJPG' fccHandler) stores each frame
-# as a complete baseline JPEG in '##dc'/'##db' movi chunks, which
-# decode_jpeg above handles.  MP4 (ISO/IEC 14496-12) is a box tree;
-# we surface mvhd duration and tkhd track dimensions — bitstream
-# decode of H.264 et al. is explicitly out of scope (no entropy
-# codec), reported as null frame stats.
-# =====================================================================
-def _riff_chunks(buf: bytes, start: int, end: int):
-    """Yield (fourcc, list_type|None, payload_lo, payload_hi) for each
-    chunk in buf[start:end).  LIST/RIFF chunks report their list type
-    and the range of their *contents* (past the type fourcc)."""
-    i = start
-    n = min(end, len(buf))
-    while i + 8 <= n:
-        cid = buf[i : i + 4]
-        clen = int.from_bytes(buf[i + 4 : i + 8], "little")
-        lo = i + 8
-        hi = min(lo + clen, n)
-        if cid in (b"RIFF", b"LIST") and hi - lo >= 4:
-            yield cid, buf[lo : lo + 4], lo + 4, hi
-        else:
-            yield cid, None, lo, hi
-        i = lo + clen + (clen & 1)  # chunks are word-aligned
-
-
-def parse_avi(payload: bytes) -> dict | None:
-    """AVI container metadata + MJPEG frame ranges, pure Python.
-
-    Returns {width, height, usec_per_frame, n_frames, codec,
-    frames: [(lo, hi), ...]} or None if not an AVI.  `frames` are the
-    byte ranges of '##dc'/'##db' movi chunks in stream order; for an
-    MJPEG stream each range is one complete JPEG."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        return None
-    out = {
-        "width": None, "height": None, "usec_per_frame": None,
-        "n_frames": None, "codec": None, "frames": [],
-    }
-
-    def walk(lo: int, hi: int) -> None:
-        for cid, ltype, clo, chi in _riff_chunks(payload, lo, hi):
-            if cid == b"LIST":
-                walk(clo, chi)
-            elif cid == b"avih" and chi - clo >= 40:
-                out["usec_per_frame"] = int.from_bytes(
-                    payload[clo : clo + 4], "little"
-                )
-                out["n_frames"] = int.from_bytes(
-                    payload[clo + 16 : clo + 20], "little"
-                )
-                out["width"] = int.from_bytes(
-                    payload[clo + 32 : clo + 36], "little"
-                )
-                out["height"] = int.from_bytes(
-                    payload[clo + 36 : clo + 40], "little"
-                )
-            elif cid == b"strh" and chi - clo >= 8:
-                if payload[clo : clo + 4] == b"vids":
-                    out["codec"] = (
-                        payload[clo + 4 : clo + 8].decode("ascii", "replace")
-                    )
-            elif len(cid) == 4 and cid[2:4] in (b"dc", b"db") and chi > clo:
-                out["frames"].append((clo, chi))
-
-    walk(12, len(payload))
-    return out
-
-
-def decode_avi_frames(
-    payload: bytes, every_k: int = 1, max_frames: int = 8
-) -> list[np.ndarray] | None:
-    """Decode every k-th MJPEG frame of an AVI to HxWx3 uint8 arrays
-    (frame-sampling: a training pipeline rarely wants all frames).
-    Returns None when the container isn't AVI or the stream isn't
-    MJPEG (no bitstream codec for H.264 etc. — honest null, not a
-    fake)."""
-    meta = parse_avi(payload)
-    if meta is None or not meta["frames"]:
-        return None
-    if meta["codec"] is not None and meta["codec"].upper() not in (
-        "MJPG", "MJPEG", "DMB1"
-    ):
-        return None
-    out = []
-    for lo, hi in meta["frames"][:: max(1, every_k)][:max_frames]:
-        px = decode_jpeg(payload[lo:hi])
-        if px is not None:
-            out.append(px)
-    return out or None
-
-
-def parse_mp4(payload: bytes) -> dict | None:
-    """ISO-BMFF (MP4) box walk: {duration_s, width, height, brand}.
-    Fixed-point 16.16 tkhd dimensions; mvhd version 0 (u32) and 1
-    (u64) both handled.  Metadata only — no sample decode."""
-    if len(payload) < 12 or payload[4:8] != b"ftyp":
-        return None
-    out = {"duration_s": None, "width": None, "height": None,
-           "brand": payload[8:12].decode("ascii", "replace")}
-
-    def walk(lo: int, hi: int) -> None:
-        i = lo
-        n = min(hi, len(payload))
-        while i + 8 <= n:
-            size = int.from_bytes(payload[i : i + 4], "big")
-            btype = payload[i + 4 : i + 8]
-            body = i + 8
-            if size == 1 and i + 16 <= n:  # 64-bit largesize
-                size = int.from_bytes(payload[i + 8 : i + 16], "big")
-                body = i + 16
-            elif size == 0:
-                size = n - i
-            if size < 8:
-                return
-            end = min(i + size, n)
-            if btype in (b"moov", b"trak"):
-                walk(body, end)
-            elif btype == b"mvhd" and end - body >= 20:
-                ver = payload[body]
-                if ver == 1 and end - body >= 28:
-                    scale = int.from_bytes(payload[body + 20 : body + 24], "big")
-                    dur = int.from_bytes(payload[body + 24 : body + 32], "big")
-                else:
-                    scale = int.from_bytes(payload[body + 12 : body + 16], "big")
-                    dur = int.from_bytes(payload[body + 16 : body + 20], "big")
-                if scale:
-                    out["duration_s"] = dur / scale
-            elif btype == b"tkhd" and end - body >= 84:
-                # width/height are the LAST two u32 (16.16 fixed) of tkhd
-                w = int.from_bytes(payload[end - 8 : end - 4], "big") >> 16
-                h = int.from_bytes(payload[end - 4 : end], "big") >> 16
-                if w and h and out["width"] is None:
-                    out["width"], out["height"] = w, h
-            i += size
-
-    walk(0, len(payload))
-    return out
-
-
-VIDEO_STATS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("duration_s", T.DoubleType(), True),
-        T.StructField("codec", T.StringType(), True),
-        T.StructField("n_decoded", T.IntegerType(), True),
-        T.StructField("frame_mean", T.DoubleType(), True),
-        T.StructField("frame_std", T.DoubleType(), True),
-    ]
-)
-
-
-def extract_video_stats(
-    df: DataFrame,
-    binary_col: str = "html",
-    every_k: int = 1,
-    max_frames: int = 8,
-) -> DataFrame:
-    """mapInPandas video metadata + sampled-frame pixel stats.
-
-    AVI/MJPEG rows decode REAL pixels (decode_avi_frames → mean/std
-    over the sampled frames); MP4 rows carry container metadata with
-    null frame stats (no bitstream codec — the gap is surfaced as
-    data).  Non-video rows are filtered JVM-side before the Arrow
-    channel, so only video bytes cross into python."""
-    src = (
-        sniff_media(df, binary_col)
-        .filter(F.col("media_type").isin("video/x-msvideo", "video/mp4"))
-        .select("url", binary_col, "media_type")
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for url, payload, mt in zip(
-                pdf["url"], pdf[binary_col], pdf["media_type"]
-            ):
-                buf = bytes(payload) if payload is not None else b""
-                row = {
-                    "url": url, "media_type": mt, "width": None,
-                    "height": None, "n_frames": None, "duration_s": None,
-                    "codec": None, "n_decoded": None, "frame_mean": None,
-                    "frame_std": None,
-                }
-                if mt == "video/x-msvideo":
-                    meta = parse_avi(buf)
-                    if meta is not None:
-                        row["width"] = meta["width"]
-                        row["height"] = meta["height"]
-                        row["n_frames"] = meta["n_frames"]
-                        if meta["usec_per_frame"] and meta["n_frames"]:
-                            row["duration_s"] = (
-                                meta["usec_per_frame"] * meta["n_frames"] / 1e6
-                            )
-                        row["codec"] = meta["codec"]
-                        frames = decode_avi_frames(buf, every_k, max_frames)
-                        if frames:
-                            px = np.concatenate(
-                                [f.astype(np.float64).ravel() for f in frames]
-                            )
-                            row["n_decoded"] = len(frames)
-                            row["frame_mean"] = float(px.mean())
-                            row["frame_std"] = float(px.std())
-                elif mt == "video/mp4":
-                    meta = parse_mp4(buf)
-                    if meta is not None:
-                        row["width"] = meta["width"]
-                        row["height"] = meta["height"]
-                        row["duration_s"] = meta["duration_s"]
-                        row["codec"] = meta["brand"]
-                rows.append(row)
-            out = pd.DataFrame(rows, columns=[f.name for f in VIDEO_STATS])
-            for c in ("width", "height", "n_frames", "n_decoded"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
-
-    return src.mapInPandas(run, schema=VIDEO_STATS)
-
-
-# =====================================================================
-# image resize + perceptual hash — the remaining named multimodal
-# pipeline steps (SURVEY brief: "decode / feature-extract / resize /
-# frame-sample"): a deterministic numpy resize (model-input prep) and
-# a REAL 64-bit DCT pHash over decoded pixels, the standard image
+# image resize + perceptual hash: a deterministic numpy resize and a
+# REAL 64-bit DCT pHash over decoded pixels, the standard image
 # near-dup key (same shape as SimHash text dedup: banded equality
 # join, exact hamming confirm — never an all-pairs distance).
 #
@@ -1183,16 +615,7 @@ def resize_image(
     return np.clip(np.rint(out), 0, 255).astype(np.uint8)
 
 
-def _dct_basis_n(n: int) -> np.ndarray:
-    """Orthonormal NxN DCT-II basis (the 8x8 JPEG basis generalized)."""
-    k = np.arange(n).reshape(n, 1)
-    m = np.arange(n).reshape(1, n)
-    a = np.cos((2 * m + 1) * k * np.pi / (2.0 * n)) * np.sqrt(2.0 / n)
-    a[0, :] *= 1.0 / np.sqrt(2.0)
-    return a
-
-
-_PHASH_A = _dct_basis_n(32)
+_PHASH_A = _dct_basis(32)
 
 
 def phash64(px: np.ndarray) -> int:
@@ -1300,67 +723,9 @@ def phash_near_dup_pairs(
     )
 
 
-THUMB_OUT = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_channels", T.IntegerType(), True),
-        T.StructField("pixels", T.BinaryType(), True),
-    ]
-)
-
-
-def extract_thumbnails(
-    df: DataFrame, out_h: int, out_w: int, binary_col: str = "html",
-    method: str = "bilinear",
-) -> DataFrame:
-    """Model-input prep: REAL decode → deterministic resize →
-    row-major uint8 tensor bytes (H·W·C), dims surfaced as columns so
-    a reader reshapes without sniffing.  Undecodable payloads yield
-    null pixels (error path is data); non-images never cross Arrow."""
-    src = (
-        sniff_media(df, binary_col)
-        .filter(F.col("media_type").isin("image/png", "image/jpeg", "image/gif"))
-        .select("url", binary_col, "media_type")
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dec = {"image/png": decode_png, "image/jpeg": decode_jpeg,
-               "image/gif": decode_gif}
-        for pdf in it:
-            rows = []
-            for url, payload, mt in zip(
-                pdf["url"], pdf[binary_col], pdf["media_type"]
-            ):
-                px = dec[mt](bytes(payload) if payload is not None else b"")
-                if px is None:
-                    rows.append({"url": url, "media_type": mt, "width": None,
-                                 "height": None, "n_channels": None,
-                                 "pixels": None})
-                else:
-                    t = resize_image(px, out_h, out_w, method)
-                    rows.append({
-                        "url": url, "media_type": mt,
-                        "width": int(t.shape[1]), "height": int(t.shape[0]),
-                        "n_channels": int(t.shape[2]),
-                        "pixels": t.tobytes(),
-                    })
-            out = pd.DataFrame(
-                rows, columns=["url", "media_type", "width", "height",
-                               "n_channels", "pixels"],
-            )
-            for c in ("width", "height", "n_channels"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
-
-    return src.mapInPandas(run, schema=THUMB_OUT)
-
-
 def encode_png(px: np.ndarray) -> bytes:
     """Minimal PNG writer (8-bit gray/RGB/RGBA, filter 0, one zlib
-    IDAT) — the inverse of decode_png for thumbnail sinks and
+    IDAT) — the inverse of decode_png for
     deterministic image fixtures.  Round-trips exactly: decode_png(
     encode_png(px)) == px."""
     import struct

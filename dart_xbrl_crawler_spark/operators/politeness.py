@@ -201,53 +201,6 @@ def robots_rules_from_txt(
     return robots_txt.mapInPandas(parse, schema=ROBOTS_RULES_WILD_SCHEMA)
 
 
-def robots_from_pages(
-    pages: DataFrame, user_agent: str = "dart-xbrl-crawler"
-) -> DataFrame:
-    """Derive the parsed-rules dim from fetched ``/robots.txt`` pages —
-    closes the crawl loop: round N's fetches feed round N+1's gating.
-
-    Selection is pure Catalyst (path == '/robots.txt' on the canonical
-    url; latest fetch per host wins by warc_ts then url_hash); only the
-    tiny robots subset reaches the python parser.  Output matches
-    ROBOTS_RULES_WILD_SCHEMA and broadcasts in apply_robots."""
-    from ..functions.urls import with_url_canon
-
-    src = pages if "url_canon" in pages.columns else with_url_canon(pages)
-    path = F.parse_url(F.col("url_canon"), F.lit("PATH"))
-    robots_pages = src.filter(path == "/robots.txt").select(
-        "host",
-        F.col("html").cast("binary").alias("body"),
-        F.col("warc_ts") if "warc_ts" in src.columns else F.lit(None).cast(
-            "timestamp"
-        ).alias("warc_ts"),
-        F.col("url_hash") if "url_hash" in src.columns else F.lit(0).alias(
-            "url_hash"
-        ),
-    )
-    latest = (
-        robots_pages.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("host").orderBy(
-                    F.col("warc_ts").desc_nulls_last(), F.col("url_hash").asc()
-                )
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        # permissive decode: a server that answers /robots.txt with
-        # binary garbage must not kill the round (links.decode_permissive
-        # contract) — invalid bytes become U+FFFD and match no REP rule
-        .select(
-            "host",
-            F.make_valid_utf8(F.col("body").cast("string")).alias(
-                "robots_txt"
-            ),
-        )
-    )
-    return robots_rules_from_txt(latest.sparkSession, latest, user_agent)
-
-
 def _eval_rules(path):
     """Longest-match REP evaluation as ONE Catalyst expression over the
     broadcast rules array — no row multiplication, no UDF.  Struct

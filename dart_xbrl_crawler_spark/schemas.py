@@ -24,29 +24,6 @@ PAGES = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# frontier — engine-owned crawl state (SURVEY.md §1.3).  At the 10^10-URL
-# design point this is an Iceberg table partitioned by bucket(url_hash);
-# locally it is a snapshot-checkpointed parquet table (sources/checkpoint).
-# ---------------------------------------------------------------------------
-FRONTIER_STATES = ("queued", "fetched", "failed", "robots_blocked", "deduped")
-
-FRONTIER = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("url_canon", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("priority", T.DoubleType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("seed_rcp_no", T.StringType(), True),
-        T.StructField("state", T.StringType(), False),
-        T.StructField("discovered_ts", T.TimestampType(), True),
-        T.StructField("fetch_ts", T.TimestampType(), True),
-        T.StructField("partition_salt", T.IntegerType(), False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
 # seeds — rcp_no seed list (first-class input; the reference's missing
 # corp_list.json / corp_codes targeting, xbrl_batch_processor.py:466).
 # ---------------------------------------------------------------------------
@@ -85,34 +62,6 @@ ROBOTS = T.StructType(
         T.StructField("crawl_delay_ms", T.LongType(), True),
     ]
 )
-
-# ---------------------------------------------------------------------------
-# facts — the long output table (reference README.md:169-191,
-# xbrl_processor.py:786-969).  Column order matters for byte-identity.
-# ---------------------------------------------------------------------------
-FACTS_COLUMNS = [
-    "order_no",
-    "year",
-    "mm",
-    "receipt_ymd",
-    "corp_code",
-    "corp_name",
-    "report_type",
-    "report_name",
-    "account_id",
-    "account_name",
-    "account_name_en",
-    "class1",
-    "class2",
-    "class3",
-    "class1_id",
-    "class2_id",
-    "class3_id",
-    "fs_type",
-    "period",
-    "amount",
-    "crawl_time",
-]
 
 FACTS = T.StructType(
     [
@@ -161,8 +110,3 @@ CRAWL_METRICS = T.StructType(
         T.StructField("n", T.LongType(), False),
     ]
 )
-
-
-def ddl(schema: T.StructType) -> str:
-    """Schema as a DDL string (for mapInPandas / applyInPandas)."""
-    return schema.simpleString()[len("struct<") : -1].replace(":", " ")

@@ -4,25 +4,16 @@ The reference loads ``corp_list.json`` from four hard-coded paths with a
 ``Corp_{code}`` fallback on failure (/root/reference/xbrl_processor.py:
 213-236,305) and fetches the map over HTTP from a second Lambda
 (/root/reference/dart_api_manager.py:118-169).  Here the corp map is an
-explicit input: a JSON (or parquet) file read with a FIXED schema (no
-inference), null-filtered, LPAD-normalized and deduplicated once — the
-Athena query's semantics (fixed_corp_map_lambda.py:76-190) as one
-DataFrame expression.
+explicit input table with the fixed ``CORP_MAP`` schema (no inference),
+null-filtered, LPAD-normalized and deduplicated once — the Athena
+query's semantics (fixed_corp_map_lambda.py:76-190) as one DataFrame
+expression.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..schemas import CORP_MAP
-
-
-def read_corp_map_json(spark: SparkSession, path: str) -> DataFrame:
-    """corp_list.json → normalized dimension.  Explicit schema: a
-    malformed file yields nulls (then filtered), never a schema guess."""
-    raw = spark.read.schema(CORP_MAP).json(path)
-    return normalize_corp_map(raw)
 
 
 def normalize_corp_map(raw: DataFrame) -> DataFrame:

@@ -5,7 +5,8 @@ from __future__ import annotations
 import json
 
 from dart_xbrl_crawler_spark import fixtures
-from dart_xbrl_crawler_spark.sources.corp_map import read_corp_map_json
+from dart_xbrl_crawler_spark.schemas import CORP_MAP
+from dart_xbrl_crawler_spark.sources.corp_map import normalize_corp_map
 
 
 def test_read_corp_map_json(spark, tmp_path):
@@ -15,7 +16,8 @@ def test_read_corp_map_json(spark, tmp_path):
         for rec in cm.to_dict("records"):
             f.write(json.dumps(rec, ensure_ascii=False) + "\n")
 
-    out = read_corp_map_json(spark, str(p)).toPandas()
+    # explicit schema: a malformed file yields nulls, never a schema guess
+    out = normalize_corp_map(spark.read.schema(CORP_MAP).json(str(p))).toPandas()
     # null-code row filtered, duplicate collapsed
     assert out["dart_corp_code"].notna().all()
     assert out["dart_corp_code"].is_unique

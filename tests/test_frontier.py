@@ -295,8 +295,9 @@ def test_bucketed_store_reopens_without_layout_argument(spark, fixture_bundle, t
 # ------------------------------------- lineage metrics from deltas
 def test_lineage_counts_match_exact_state_counts(spark, fixture_bundle, tmp_path):
     """The metrics chain folds to the exact per-state counts after every
-    kind of commit: bootstrap, insert, rounds, recrawl and expire (the
-    transitions record the states their rows leave)."""
+    kind of commit: bootstrap, insert, rounds, recrawl, expire (the
+    transitions record the states their rows leave) and an insert that
+    resurrects expired urls."""
     pages, seeds, _, robots = fixture_bundle
     store = FrontierStore(str(tmp_path / "f"), n_bloom_shards=8, seen_filter="cuckoo")
     seeds_df = spark.createDataFrame(seeds, schema=SEEDS)
@@ -325,6 +326,13 @@ def test_lineage_counts_match_exact_state_counts(spark, fixture_bundle, tmp_path
     assert_lineage_exact(n_dup)
     store.run_round(spark, pages_df, robots_df, RUN_TS, round_id=2, round_ms=120_000)
     assert store.expire(spark, LATER_TS) > 0
+    assert_lineage_exact(n_dup)
+    # re-inserting expired urls resurrects their rows: they leave 'expired'
+    back = (
+        store.table.read(spark).filter(F.col("state") == "expired")
+        .orderBy("url_hash").limit(2).select("url", F.lit(1.0).alias("priority"))
+    )
+    assert store.insert(spark, back, RUN_TS)[1:] == (2, 0)
     assert_lineage_exact(n_dup)
 
 
@@ -376,6 +384,14 @@ def test_bootstrap_and_round_job_count(spark, fixture_bundle, tmp_path, count_jo
     _, n_jobs = count_jobs(bootstrap_and_round)
     assert store.table._latest_base()["note"] == "auto-compact after round=1"
     assert n_jobs == 35
+    # a bloom store's insert runs no resurrection count (cuckoo only)
+    new = spark.createDataFrame(
+        [("https://new.example/a", 1.0), ("https://new.example/b", 1.0)],
+        schema="url string, priority double",
+    )
+    batch = seeds_df.select("url", "priority").unionByName(new)
+    (_, n_ins, _), n_jobs = count_jobs(lambda: store.insert(spark, batch, RUN_TS))
+    assert n_ins == 2 and n_jobs == 27
 
 
 def test_round_delta_written_at_fetch_width(spark, fixture_bundle, tmp_path):

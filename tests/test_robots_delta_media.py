@@ -1,14 +1,9 @@
 """Round-2 features: real robots.txt semantics, delta frontier commits
-(O(|round|) bytes), multimodal header metadata."""
+(O(|round|) bytes)."""
 
 from __future__ import annotations
 
-import io
-import struct
-import zipfile
-
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from dart_xbrl_crawler_spark.operators import politeness as P
@@ -158,55 +153,3 @@ def test_delta_resume_after_unpublished_write(spark, tmp_path):
     store.table.table.read(spark).limit(5).write.parquet(crash_dir)
     after = store.state_counts(spark)
     assert after == before
-
-
-# ---------------------------------------------------------------------
-# multimodal: real header metadata from raw bytes
-# ---------------------------------------------------------------------
-
-def _png(w, h):
-    sig = b"\x89PNG\r\n\x1a\n"
-    ihdr = struct.pack(">I", 13) + b"IHDR" + struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00" + b"\x00" * 4
-    return sig + ihdr
-
-
-def _jpeg(w, h):
-    # SOI, APP0 stub, SOF0 with dims, EOI
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = b"\xff\xc0" + struct.pack(">H", 11) + b"\x08" + struct.pack(">HH", h, w) + b"\x01\x11\x00"
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
-def _wav(rate, ch):
-    fmt = b"fmt " + struct.pack("<I", 16) + struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
-    data = b"data" + struct.pack("<I", 0)
-    body = b"WAVE" + fmt + data
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_multimodal_header_metadata(spark):
-    from dart_xbrl_crawler_spark.operators import multimodal as M
-
-    rows = [
-        ("u1", _png(640, 480)),
-        ("u2", _jpeg(1920, 1080)),
-        ("u3", _wav(44100, 2)),
-        ("u4", b"\x89PNG\r\n\x1a\nbroken"),  # malformed → nulls
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame({"url": [r[0] for r in rows], "html": [r[1] for r in rows]})
-    )
-    got = {r["url"]: r.asDict() for r in M.extract_header_meta(df).collect()}
-    assert (got["u1"]["width"], got["u1"]["height"]) == (640, 480)
-    assert got["u1"]["media_type"] == "image/png"
-    assert (got["u2"]["width"], got["u2"]["height"]) == (1920, 1080)
-    assert got["u2"]["media_type"] == "image/jpeg"
-    assert (got["u3"]["sample_rate"], got["u3"]["n_channels"]) == (44100, 2)
-    assert got["u4"]["width"] is None and got["u4"]["height"] is None
-
-
-def test_decode_stub_still_gated():
-    from dart_xbrl_crawler_spark.operators import multimodal as M
-
-    with pytest.raises(NotImplementedError):
-        M.decode_stub(b"xx", None)

@@ -254,52 +254,6 @@ def test_xbrl_xml_byte_identity_through_kernel(spark):
     assert rows[0]["text"] == golden
 
 
-# ----------------------------------------------------- wav PCM decode
-def test_extract_audio_stats_real_pcm(spark):
-    import io
-    import math
-    import wave
-
-    import numpy as np
-
-    from dart_xbrl_crawler_spark.operators import multimodal as MM
-
-    def wav_bytes(freq, sr=8000, dur=0.25, amp=0.5):
-        n = int(sr * dur)
-        x = (amp * np.sin(2 * np.pi * freq * np.arange(n) / sr) * 32767).astype(
-            "<i2"
-        )
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(sr)
-            w.writeframes(x.tobytes())
-        return buf.getvalue()
-
-    rows = pd.DataFrame(
-        {
-            "url": ["w1", "w2", "png1"],
-            "html": [
-                wav_bytes(440.0),
-                wav_bytes(220.0, dur=0.5),
-                b"\x89PNG\r\n\x1a\n" + b"\0" * 32,
-            ],
-        }
-    )
-    out = {
-        r["url"]: r
-        for r in MM.extract_audio_stats(
-            spark.createDataFrame(rows, schema="url string, html binary")
-        ).collect()
-    }
-    assert set(out) == {"w1", "w2"}  # png filtered JVM-side
-    assert abs(out["w1"]["duration_s"] - 0.25) < 1e-9
-    assert abs(out["w2"]["duration_s"] - 0.5) < 1e-9
-    assert abs(out["w1"]["rms"] - 0.5 / math.sqrt(2)) < 0.01
-    assert out["w1"]["sample_rate"] == 8000 and out["w1"]["n_channels"] == 1
-
-
 def test_run_round_reads_table_exactly_once(spark, fixture_bundle, tmp_path, monkeypatch):
     """The only O(|frontier|) work in a round is the pop's own scan:
     run_round must call table.read exactly once (round 1 re-read the
@@ -372,66 +326,6 @@ def test_cli_bootstrap_date_window(spark, fixture_bundle, tmp_path, monkeypatch)
         for r in store.table.read(spark).select("seed_rcp_no").collect()
     }
     assert got == set(want) and got  # windowed, non-empty
-
-
-def test_robots_from_pages_closes_the_loop(spark):
-    """Fetched /robots.txt pages become next round's rules dim: latest
-    fetch per host wins; non-robots pages never reach the parser."""
-    rows = pd.DataFrame(
-        {
-            "url": [
-                "https://a.example/robots.txt",
-                "https://a.example/robots.txt",   # older duplicate
-                "https://b.example/robots.txt",
-                "https://a.example/page.html",    # not robots
-            ],
-            "html": [
-                b"User-agent: *\nDisallow: /new\nCrawl-delay: 2\n",
-                b"User-agent: *\nDisallow: /old\n",
-                b"User-agent: *\nDisallow: /*.pdf$\n",
-                b"<html>hi</html>",
-            ],
-            "warc_ts": pd.to_datetime(
-                ["2026-01-02", "2026-01-01", "2026-01-01", "2026-01-02"]
-            ),
-        }
-    )
-    pages = spark.createDataFrame(
-        rows, schema="url string, html binary, warc_ts timestamp"
-    )
-    dim = {r["host"]: r for r in P.robots_from_pages(pages).collect()}
-    assert set(dim) == {"a.example", "b.example"}
-    a = dim["a.example"]
-    assert [ru["prefix"] for ru in a["rules"]] == ["/new"]  # latest wins
-    assert a["crawl_delay_ms"] == 2000
-    b = dim["b.example"]
-    assert b["rules"][0]["pattern"] is not None  # wildcard rule compiled
-
-    # and the dim gates a frontier end-to-end
-    from dart_xbrl_crawler_spark.functions.urls import with_url_canon
-
-    frontier = with_url_canon(
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "url": [
-                        "https://a.example/new/x",
-                        "https://a.example/okay",
-                        "https://b.example/doc.pdf",
-                    ]
-                }
-            )
-        )
-    )
-    got = {
-        r["url"]: r["robots_blocked"]
-        for r in P.apply_robots(frontier, P.robots_from_pages(pages)).collect()
-    }
-    assert got == {
-        "https://a.example/new/x": True,
-        "https://a.example/okay": False,
-        "https://b.example/doc.pdf": True,
-    }
 
 
 # -------------------------------------- link discovery + crawl loop
@@ -551,122 +445,9 @@ def test_resolve_href_matches_urljoin_property(spark):
     assert not bad, bad[:8]
 
 
-# ------------------------------------------- WARC source / sink
-def test_warc_roundtrip_and_gz(spark, tmp_path):
-    import gzip
-
-    from dart_xbrl_crawler_spark.sources import warc as W
-
-    recs = [
-        ("https://w.example/a", "2026-01-16T00:00:00Z", b"<html>A</html>"),
-        ("https://w.example/b", "2026-01-16T00:01:00Z", b"<html>B</html>"),
-    ]
-    raw = W.warc_bytes(recs)
-    d = tmp_path / "warcs"
-    d.mkdir()
-    (d / "seg0.warc").write_bytes(raw)
-    (d / "seg1.warc.gz").write_bytes(gzip.compress(W.warc_bytes(recs[:1])))
-    df = W.read_warc(spark, str(d))
-    rows = df.orderBy("source_file", "url").collect()
-    assert len(rows) == 3
-    got = {(r["url"], bytes(r["html"])) for r in rows}
-    assert ("https://w.example/a", b"<html>A</html>") in got
-    assert ("https://w.example/b", b"<html>B</html>") in got
-    assert all(r["warc_type"] == "response" for r in rows)
-    assert str(rows[0]["warc_ts"]).startswith("2026-01-16")
-
-    # archival sink → read back identical bodies
-    out = str(tmp_path / "arch")
-    W.write_warc(df.select("url", "warc_ts", "html"), out)
-    back = W.read_warc(spark, out)
-    assert {
-        (r["url"], bytes(r["html"])) for r in back.collect()
-    } == got
-
-
-def test_warc_feeds_crawl_pipeline(spark, tmp_path):
-    """WARC segments are a first-class pages source: read_warc output
-    drives the same canonicalize→extract-links path as parquet pages."""
-    from dart_xbrl_crawler_spark.functions.links import extract_links
-    from dart_xbrl_crawler_spark.sources import warc as W
-
-    raw = W.warc_bytes(
-        [
-            (
-                "https://w.example/dir/p.html",
-                "2026-01-16T00:00:00Z",
-                b'<a href="/x">1</a><a href="q.html">2</a>',
-            )
-        ]
-    )
-    d = tmp_path / "w2"
-    d.mkdir()
-    (d / "s.warc").write_bytes(raw)
-    pages = W.read_warc(spark, str(d))
-    links = {r["link"] for r in extract_links(pages).collect()}
-    assert links == {
-        "https://w.example/x",
-        "https://w.example/dir/q.html",
-    }
-
-
-# ---------------------------------------------- sitemap ingestion
-def test_sitemap_extraction(spark):
-    from dart_xbrl_crawler_spark.functions.links import (
-        extract_sitemap_locs,
-        sitemap_urls_from_robots,
-    )
-
-    sm = (
-        b'<?xml version="1.0"?><urlset>'
-        b"<url><loc> https://s.example/a </loc></url>"
-        b"<url><loc>https://s.example/b</loc></url></urlset>"
-    )
-    idx = (
-        b"<sitemapindex><sitemap><loc>https://s.example/sitemap-1.xml</loc>"
-        b"</sitemap></sitemapindex>"
-    )
-    pages = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "url": ["https://s.example/sitemap.xml", "https://s.example/si.xml"],
-                "html": [sm, idx],
-            }
-        ),
-        schema="url string, html binary",
-    )
-    locs = {(r["src_url"], r["loc"]) for r in extract_sitemap_locs(pages).collect()}
-    assert locs == {
-        ("https://s.example/sitemap.xml", "https://s.example/a"),
-        ("https://s.example/sitemap.xml", "https://s.example/b"),
-        ("https://s.example/si.xml", "https://s.example/sitemap-1.xml"),
-    }
-
-    robots = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "host": ["s.example"],
-                "robots_txt": [
-                    "User-agent: *\nDisallow: /x\n"
-                    "Sitemap: https://s.example/sitemap.xml\n"
-                    "sitemap: https://s.example/sitemap2.xml\n"
-                ],
-            }
-        )
-    )
-    sm_urls = {r["sitemap_url"] for r in sitemap_urls_from_robots(robots).collect()}
-    assert sm_urls == {
-        "https://s.example/sitemap.xml",
-        "https://s.example/sitemap2.xml",
-    }
-
-
 # --------------------------------- connected components / dedup clusters
 def test_connected_components_planted_clusters(spark):
-    from dart_xbrl_crawler_spark.operators.components import (
-        canonical_docs,
-        connected_components,
-    )
+    from dart_xbrl_crawler_spark.operators.components import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (21, 20), (30, 31), (31, 32), (32, 33),
@@ -683,10 +464,6 @@ def test_connected_components_planted_clusters(spark):
         20: 20, 21: 20,
         30: 30, 31: 30, 32: 30, 33: 30, 34: 30,
     }
-    canon = {
-        r["doc_id"]: r["canonical_id"] for r in canonical_docs(pairs).collect()
-    }
-    assert canon[34] == 30 and canon[3] == 1
 
 
 def test_run_crawl_text_out_matches_oracle(spark, tmp_path):

@@ -318,32 +318,6 @@ def test_decode_png_all_filters_roundtrip():
     assert decode_png(b"not a png") is None
 
 
-def test_extract_image_stats_real_pixels(spark):
-    """Planted PNG flows through the JVM-side media filter into the
-    Arrow decode batch; stats match the known pixel array exactly."""
-    import numpy as np
-
-    from dart_xbrl_crawler_spark.operators.multimodal import extract_image_stats
-
-    rng = np.random.RandomState(11)
-    px = rng.randint(0, 256, size=(8, 5, 3), dtype=np.uint8)
-    payload = _png_encode(px, filters=[0, 1, 2, 3, 4, 1, 2, 4])
-    rows = pd.DataFrame(
-        {
-            "url": ["https://m.example/a.png", "https://m.example/page.html"],
-            "html": [payload, b"<html>not media</html>"],
-        }
-    )
-    df = spark.createDataFrame(rows, schema="url string, html binary")
-    got = {r["url"]: r for r in extract_image_stats(df).collect()}
-    assert list(got) == ["https://m.example/a.png"]  # non-png filtered JVM-side
-    r = got["https://m.example/a.png"]
-    assert (r["width"], r["height"], r["n_channels"]) == (5, 8, 3)
-    x = px.astype(np.float64)
-    assert abs(r["mean"] - x.mean()) < 1e-9
-    assert abs(r["std"] - x.std()) < 1e-9
-
-
 # ------------------------------- web-scale dims: no forced broadcast
 def test_robots_and_backoff_no_forced_broadcast(spark):
     """With broadcast gating OFF (a 10^7+-host dim would OOM the driver
@@ -393,54 +367,3 @@ def test_robots_and_backoff_no_forced_broadcast(spark):
         frontier, robots
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" in plan_default
-
-
-# ----------------------------- parser registry calling conventions
-def test_register_parser_calling_conventions():
-    """Every historical and current parse signature keeps working:
-    1-arg, defaulted-option, keyword aux, positional aux, **kwargs."""
-    from dart_xbrl_crawler_spark import doc_parsers as DP
-
-    seen = {}
-
-    def reg(name, fn):
-        DP.register_parser(lambda b, _n=name: b == _n.encode(), fn)
-
-    reg("one", lambda body: seen.setdefault("one", "noaux") or {"doc_format": "x"})
-
-    def with_option(body, strict=False):
-        seen["opt"] = strict  # must stay False — aux must NOT land here
-        return {"doc_format": "x"}
-
-    reg("opt", with_option)
-
-    def with_aux_kw(body, aux=None):
-        seen["kw"] = aux
-        return {"doc_format": "x"}
-
-    reg("kw", with_aux_kw)
-
-    def with_aux_pos(body, ctx):
-        seen["pos"] = ctx
-        return {"doc_format": "x"}
-
-    reg("pos", with_aux_pos)
-
-    def with_kwargs(body, **kwargs):
-        seen["var"] = kwargs.get("aux")
-        return {"doc_format": "x"}
-
-    reg("var", with_kwargs)
-
-    try:
-        aux = {"labels": {"c": {"ko": "라벨"}}}
-        for name in ("one", "opt", "kw", "pos", "var"):
-            for sniff, parse in DP._REGISTRY:
-                if sniff(name.encode()):
-                    parse(name.encode(), aux=aux)
-                    break
-        assert seen["one"] == "noaux"
-        assert seen["opt"] is False
-        assert seen["kw"] == aux and seen["pos"] == aux and seen["var"] == aux
-    finally:
-        del DP._REGISTRY[:5]  # restore the registry

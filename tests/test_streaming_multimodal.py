@@ -1,106 +1,10 @@
-"""Streaming ingest + multimodal plumbing smoke tests."""
+"""Magic-byte media typing smoke test."""
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
-from dart_xbrl_crawler_spark import fixtures
 from dart_xbrl_crawler_spark.operators import multimodal as M
-from dart_xbrl_crawler_spark.schemas import PAGES
-from dart_xbrl_crawler_spark.streaming import ingest
-
-
-def test_streaming_discovery_counts(spark, fixture_bundle, tmp_path):
-    pages, *_ = fixture_bundle
-    src = str(tmp_path / "pages_stream")
-    spark.createDataFrame(pages, schema=PAGES).repartition(4).write.parquet(src)
-
-    out = ingest.run_discovery_smoke(spark, src, "disc_smoke")
-    total_streamed = out.agg(F.sum("n_discovered")).collect()[0][0]
-    assert total_streamed == len(pages)
-    hosts = {r["host"] for r in out.select("host").distinct().collect()}
-    assert "dart.fss.or.kr" in hosts
-
-
-def test_stateful_host_fetch_tracking(spark, fixture_bundle, tmp_path):
-    """applyInPandasWithState: per-host cumulative counters must
-    accumulate ACROSS micro-batches (state survives batch boundaries)."""
-    pages, *_ = fixture_bundle
-    src = str(tmp_path / "pages_state")
-    pdf1 = pages.iloc[: len(pages) // 2]
-    pdf2 = pages.iloc[len(pages) // 2 :]
-    spark.createDataFrame(pdf1, schema=PAGES).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(PAGES).option(
-        "maxFilesPerTrigger", 100
-    ).parquet(src)
-    out = ingest.track_host_fetch_state(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("host_state")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(pdf2, schema=PAGES).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT * FROM host_state").collect()
-    # memory sink in update mode appends one row per (host, batch);
-    # the LAST total per host must equal its true page count
-    latest: dict = {}
-    for r in rows:
-        latest[r["host"]] = max(
-            latest.get(r["host"], 0), r["total_fetched"]
-        )
-    from dart_xbrl_crawler_spark.functions.urls import canonicalize_one
-
-    truth: dict = {}
-    for u in pages["url"]:
-        h = canonicalize_one(u)[1]
-        truth[h] = truth.get(h, 0) + 1
-    assert latest == truth
-    # at least one host saw rows in BOTH batches → its updates show a
-    # strictly growing total (state carried across batches)
-    grew = any(
-        len({r["total_fetched"] for r in rows if r["host"] == h}) > 1
-        for h in latest
-    )
-    assert grew
-
-
-def test_stream_into_frontier_dedups(spark, fixture_bundle, tmp_path):
-    pages, seeds, *_ = fixture_bundle
-    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
-    from dart_xbrl_crawler_spark.operators.scheduler import seeds_to_frontier
-    from dart_xbrl_crawler_spark.schemas import SEEDS
-
-    src = str(tmp_path / "pages_stream2")
-    spark.createDataFrame(pages, schema=PAGES).repartition(2).write.parquet(src)
-
-    store = FrontierStore(str(tmp_path / "front"), n_bloom_shards=8)
-    seeds_df = spark.createDataFrame(seeds, schema=SEEDS)
-    store.bootstrap(seeds_to_frontier(seeds_df), fixtures.RUN_TS)
-    n0 = store.state_counts(spark)["queued"]
-
-    ingest.stream_into_frontier(spark, src, store, fixtures.RUN_TS)
-    counts = store.state_counts(spark)
-    n_urls = (
-        spark.read.parquet(src).select("url").distinct().count()
-    )
-    # every distinct page url enters exactly once; seed urls already
-    # present stay deduped (fixture pages' DART urls overlap seeds)
-    assert counts["queued"] <= n0 + n_urls
-    # re-run the same stream → no growth (idempotent replay)
-    import shutil
-
-    src2 = str(tmp_path / "pages_stream3")
-    shutil.copytree(src, src2)
-    ingest.stream_into_frontier(spark, src2, store, fixtures.RUN_TS)
-    assert store.state_counts(spark) == counts
 
 
 def test_multimodal_sniff_and_features(spark):
@@ -124,9 +28,3 @@ def test_multimodal_sniff_and_features(spark):
     assert sniffed["u3"] == "application/zip"
     assert sniffed["u4"] is None
 
-    feats = {r["url"]: r["feature"] for r in M.extract_features(df).collect()}
-    assert feats["u4"] is None
-    assert len(feats["u0"]) == 8
-    # deterministic: same payload → same feature
-    feats2 = {r["url"]: r["feature"] for r in M.extract_features(df).collect()}
-    assert feats == feats2

@@ -1,11 +1,8 @@
-"""Round-5 additions, part 2: real MJPEG-in-AVI video frame decode,
-MP4 container metadata, anchor-text extraction, SURT keys / CDX
-records, repetition quality signals, hash-stratified sampling.
+"""Round-5 additions, part 2: AVI-vs-WAV media sniffing, SURT keys,
+anchor-text extraction, IVF ANN.
 
-Video fixtures are built by an independent test-side AVI muxer / MP4
-box writer (spec-derived: AVI RIFF per the Microsoft AVI RIFF form,
-MP4 per ISO/IEC 14496-12) so the decoder is never tested against its
-own output."""
+The AVI fixture is built by an independent test-side muxer
+(spec-derived: the Microsoft AVI RIFF form)."""
 
 from __future__ import annotations
 
@@ -59,83 +56,12 @@ def _avi_encode(
     return b"RIFF" + len(body).to_bytes(4, "little") + body
 
 
-def _box(btype: bytes, body: bytes) -> bytes:
-    return (8 + len(body)).to_bytes(4, "big") + btype + body
-
-
-def _mp4_encode(duration_s: float, timescale: int, w: int, h: int) -> bytes:
-    mvhd = (
-        bytes(4)  # version 0 + flags
-        + bytes(8)  # ctime/mtime
-        + timescale.to_bytes(4, "big")
-        + int(duration_s * timescale).to_bytes(4, "big")
-        + bytes(80)
-    )
-    tkhd = bytes(4 + 4 + 4 + 4 + 4 + 4 + 8 + 2 + 2 + 2 + 2 + 36) + (
-        w << 16
-    ).to_bytes(4, "big") + (h << 16).to_bytes(4, "big")
-    moov = _box(b"moov", _box(b"mvhd", mvhd) + _box(b"trak", _box(b"tkhd", tkhd)))
-    return _box(b"ftyp", b"isom" + bytes(8)) + moov
-
-
 def _frame(shift: int) -> np.ndarray:
     px = np.zeros((16, 16, 3), dtype=np.uint8)
     px[:, :, 0] = (np.arange(16)[None, :] * 16 + shift) % 256
     px[:, :, 1] = 128
     px[:, :, 2] = 255 - shift
     return px
-
-
-def test_parse_avi_metadata_and_frames():
-    from dart_xbrl_crawler_spark.operators.multimodal import parse_avi
-
-    frames = [_jpeg_encode(_frame(s)) for s in (0, 40, 80)]
-    avi = _avi_encode(frames, 16, 16, usec_per_frame=33_333)
-    meta = parse_avi(avi)
-    assert meta is not None
-    assert (meta["width"], meta["height"]) == (16, 16)
-    assert meta["n_frames"] == 3
-    assert meta["usec_per_frame"] == 33_333
-    assert meta["codec"] == "MJPG"
-    # the frame ranges slice back to exactly the muxed JPEGs
-    assert [avi[lo:hi] for lo, hi in meta["frames"]] == frames
-    assert parse_avi(b"RIFF\x04\x00\x00\x00WAVE") is None
-    assert parse_avi(b"junk") is None
-
-
-def test_decode_avi_frames_real_pixels():
-    from dart_xbrl_crawler_spark.operators.multimodal import (
-        decode_avi_frames,
-        decode_jpeg,
-    )
-
-    raw = [_frame(s) for s in (0, 40, 80, 120)]
-    avi = _avi_encode([_jpeg_encode(p) for p in raw], 16, 16)
-    got = decode_avi_frames(avi)
-    assert got is not None and len(got) == 4
-    for g, p in zip(got, raw):
-        assert g.shape == (16, 16, 3)
-        # JPEG is lossy: compare to the decoder's own single-image path
-        ref = decode_jpeg(_jpeg_encode(p))
-        assert np.array_equal(g, ref)
-    # frame sampling: every 2nd frame, capped
-    sampled = decode_avi_frames(avi, every_k=2, max_frames=1)
-    assert len(sampled) == 1 and np.array_equal(sampled[0], got[0])
-    # non-MJPEG stream → honest None, not fake pixels
-    h264 = _avi_encode([b"\x00\x00\x01\x65notjpeg"], 16, 16, handler=b"H264")
-    assert decode_avi_frames(h264) is None
-
-
-def test_parse_mp4_metadata():
-    from dart_xbrl_crawler_spark.operators.multimodal import parse_mp4
-
-    mp4 = _mp4_encode(12.5, 1000, 640, 360)
-    meta = parse_mp4(mp4)
-    assert meta is not None
-    assert meta["duration_s"] == pytest.approx(12.5)
-    assert (meta["width"], meta["height"]) == (640, 360)
-    assert meta["brand"] == "isom"
-    assert parse_mp4(b"\xff\xd8\xffnot an mp4") is None
 
 
 def test_sniff_discriminates_avi_from_wav(spark):
@@ -151,43 +77,6 @@ def test_sniff_discriminates_avi_from_wav(spark):
         for r in sniff_media(df).select("url", "media_type").collect()
     }
     assert got == {"u1": "video/x-msvideo", "u2": "audio/wav"}
-
-
-def test_extract_video_stats_e2e(spark):
-    from dart_xbrl_crawler_spark.operators.multimodal import (
-        decode_jpeg,
-        extract_video_stats,
-    )
-
-    raw = [_frame(s) for s in (10, 50)]
-    avi = _avi_encode([_jpeg_encode(p) for p in raw], 16, 16,
-                      usec_per_frame=40_000)
-    mp4 = _mp4_encode(3.0, 600, 320, 240)
-    df = spark.createDataFrame(
-        [
-            Row(url="a.avi", html=bytearray(avi)),
-            Row(url="b.mp4", html=bytearray(mp4)),
-            Row(url="c.txt", html=bytearray(b"hello, not a video")),
-        ]
-    )
-    rows = {r["url"]: r for r in extract_video_stats(df).collect()}
-    assert set(rows) == {"a.avi", "b.mp4"}  # non-video filtered JVM-side
-
-    a = rows["a.avi"]
-    assert (a["width"], a["height"], a["n_frames"]) == (16, 16, 2)
-    assert a["duration_s"] == pytest.approx(0.08)
-    assert a["codec"] == "MJPG" and a["n_decoded"] == 2
-    exp = np.concatenate(
-        [decode_jpeg(_jpeg_encode(p)).astype(np.float64).ravel() for p in raw]
-    )
-    assert a["frame_mean"] == pytest.approx(exp.mean())
-    assert a["frame_std"] == pytest.approx(exp.std())
-
-    b = rows["b.mp4"]
-    assert (b["width"], b["height"]) == (320, 240)
-    assert b["duration_s"] == pytest.approx(3.0)
-    assert b["codec"] == "isom"
-    assert b["n_decoded"] is None and b["frame_mean"] is None
 
 
 # ------------------------------------------------- SURT key edge rules
@@ -348,19 +237,3 @@ def test_ivf_partial_probe_prunes_and_recalls(spark):
         assert scanned < indexed.count()
     finally:
         indexed.unpersist()
-
-
-def test_decode_stub_routes_avi_to_real_first_frame():
-    from dart_xbrl_crawler_spark.operators.multimodal import (
-        decode_avi_frames,
-        decode_stub,
-    )
-
-    avi = _avi_encode([_jpeg_encode(_frame(s)) for s in (30, 90)], 16, 16)
-    feat = decode_stub(avi, "video/x-msvideo")
-    first = decode_avi_frames(avi, max_frames=1)[0]
-    gray = first.astype(np.float32).mean(axis=2) / 255.0
-    exp = np.array(
-        [b.mean() for b in np.array_split(gray, 8, axis=0)], dtype=np.float32
-    )
-    assert np.allclose(feat, exp)
