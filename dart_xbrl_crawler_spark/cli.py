@@ -14,13 +14,18 @@ Subcommands (each one pure DataFrame job over the frontier store):
   expand --urls <parquet> --store <dir>
       insert newly-discovered urls (bloom + exact dedup)
   fetch --pages <parquet> --robots <parquet> --store <dir> [--round-ms N]
-      one politeness-bounded crawl round; prints lineage counts
+      one politeness-bounded crawl round; prints lineage counts.
+      --robots is either a rules table (host, disallow_prefix |
+      rules, crawl_delay_ms) or robots.txt bodies (host, robots_txt),
+      which are parsed per RFC 9309 ('*'/'$' wildcards, longest match,
+      crawl-delay); the columns tell which
   crawl --pages <parquet> --robots <parquet> --store <dir> [--max-rounds N]
       [--text-out <dir> --seeds <parquet>] [--backoff-factor F]
       [--priority-decay D] [--no-discover]
       full loop: budgeted rounds + link discovery (with priority
       inheritance) until the queue drains; optional per-round text
-      extraction (with the seeds' XBRL meta) and adaptive backoff
+      extraction (with the seeds' XBRL meta) and adaptive backoff;
+      --robots as for fetch
   extract --pages <parquet> --seeds <parquet> --corp-map <parquet> --out <dir>
       extract kernel + corp join → partitioned facts sink
   recrawl --store <dir> (--before <ts> | --hints <parquet>)
@@ -51,12 +56,24 @@ import json
 import sys
 
 from .operators.frontier import FrontierStore
+from .operators.politeness import robots_rules_from_txt
 from .operators.scheduler import seeds_to_frontier
 from .plans import pipeline
 from .schemas import SEEDS
 from .session import get_spark
 
 RUN_TS_DEFAULT = "2026-01-16 00:00:00"
+ROBOTS_HELP = ("parquet of robots rules (host, disallow_prefix | rules, "
+               "crawl_delay_ms) or of robots.txt bodies (host, robots_txt)")
+
+
+def _read_robots(spark, path: str):
+    """The robots dim ``--robots`` names: robots.txt bodies are parsed
+    into wildcard rules, a rules table passes through as is."""
+    robots = spark.read.parquet(path)
+    if "robots_txt" in robots.columns:
+        robots = robots_rules_from_txt(robots)
+    return robots
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -83,7 +100,7 @@ def main(argv: list[str] | None = None) -> int:
 
     f = sub.add_parser("fetch")
     f.add_argument("--pages", required=True)
-    f.add_argument("--robots", required=True)
+    f.add_argument("--robots", required=True, help=ROBOTS_HELP)
     f.add_argument("--store", required=True)
     f.add_argument("--round-ms", type=int, default=60_000)
     f.add_argument("--round-id", type=int, default=0)
@@ -96,7 +113,7 @@ def main(argv: list[str] | None = None) -> int:
 
     c = sub.add_parser("crawl")
     c.add_argument("--pages", required=True)
-    c.add_argument("--robots", required=True)
+    c.add_argument("--robots", required=True, help=ROBOTS_HELP)
     c.add_argument("--store", required=True)
     c.add_argument("--max-rounds", type=int, default=5)
     c.add_argument("--round-ms", type=int, default=60_000)
@@ -205,12 +222,10 @@ def main(argv: list[str] | None = None) -> int:
         snap, n_ins, n_dup = store.insert(spark, urls, args.run_ts)
         print(json.dumps({"snapshot": snap, "inserted": n_ins, "deduped": n_dup}))
     elif args.cmd == "fetch":
-        pages = spark.read.parquet(args.pages)
-        robots = spark.read.parquet(args.robots)
         snap, fetched = store.run_round(
             spark,
-            pages,
-            robots,
+            spark.read.parquet(args.pages),
+            _read_robots(spark, args.robots),
             args.run_ts,
             round_id=args.round_id,
             round_ms=args.round_ms,
@@ -232,7 +247,7 @@ def main(argv: list[str] | None = None) -> int:
         rounds = store.run_crawl(
             spark,
             spark.read.parquet(args.pages),
-            spark.read.parquet(args.robots),
+            _read_robots(spark, args.robots),
             args.run_ts,
             max_rounds=args.max_rounds,
             round_ms=args.round_ms,

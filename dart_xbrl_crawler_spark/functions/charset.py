@@ -38,7 +38,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 __all__ = ["sniff_charset", "decode_bytes", "decode_html"]
 
@@ -137,13 +136,9 @@ def decode_bytes(data: bytes | None) -> tuple[str, str]:
     return (codec, raw.decode(codec, "replace"))
 
 
-def decode_html(
-    pages: DataFrame,
-    src: str = "html",
-    text_col: str = "text",
-    charset_col: str = "charset",
-) -> DataFrame:
-    """Attach decoded text + detected charset columns to ``pages``.
+def decode_html(pages: DataFrame) -> DataFrame:
+    """Attach decoded ``text`` + detected ``charset`` columns to
+    ``pages``, decoded from its ``html`` bytes.
 
     Arrow-batched ``mapInPandas``: the html bytes stream through once,
     each batch emits only the two new columns alongside the input —
@@ -152,14 +147,14 @@ def decode_html(
     out_fields = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in pages.schema.fields
     )
-    schema = f"{out_fields}, `{charset_col}` string, `{text_col}` string"
+    schema = f"{out_fields}, `charset` string, `text` string"
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            decoded = [decode_bytes(v) for v in pdf[src]]
+            decoded = [decode_bytes(v) for v in pdf["html"]]
             pdf = pdf.copy()
-            pdf[charset_col] = [c for c, _ in decoded]
-            pdf[text_col] = [t for _, t in decoded]
+            pdf["charset"] = [c for c, _ in decoded]
+            pdf["text"] = [t for _, t in decoded]
             yield pdf
 
     return pages.mapInPandas(_batches, schema=schema)

@@ -124,7 +124,6 @@ def resolve_href(href: Column, scheme: Column, host: Column, base_dir: Column):
 
 def extract_links(
     pages: DataFrame,
-    html_col: str = "html",
     carry: tuple[str, ...] = (),
     respect_nofollow: bool = False,
 ) -> DataFrame:
@@ -144,13 +143,13 @@ def extract_links(
 
     keep = [
         c for c in ("url", "url_canon", "host") if c in pages.columns
-    ] + list(carry) + [html_col]
+    ] + list(carry) + ["html"]
     src = pages.select(*keep)
     if "url_canon" not in src.columns:
         # fetched pages already carry url_canon/host — don't re-run the
         # canonicalizer python stage over them
         src = with_url_canon(src)
-    html_text = decode_permissive(F.col(html_col))
+    html_text = decode_permissive(F.col("html"))
     scheme = F.regexp_extract(F.col("url_canon"), r"^([a-z][a-z0-9+.-]*):", 1)
     host = F.col("host")
     path = F.coalesce(
@@ -194,7 +193,7 @@ def extract_links(
 
 
 def extract_sitemap_entries(
-    pages: DataFrame, html_col: str = "html", carry: tuple[str, ...] = ()
+    pages: DataFrame, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """sitemap.xml urlset pages → (src_url, loc, lastmod): the per-url
     ``<lastmod>`` that sitemaps.org defines next to each ``<loc>`` — the
@@ -208,7 +207,7 @@ def extract_sitemap_entries(
     a full XML parse buys nothing over the block walk.  ``carry``
     passes extra page columns through per entry (extract_links'
     contract — cheaper than a join-back on src_url)."""
-    body = decode_permissive(F.col(html_col))
+    body = decode_permissive(F.col("html"))
     blocks = F.regexp_extract_all(
         body, F.lit(r"(?is)<(?:url|sitemap)>(.*?)</(?:url|sitemap)>"), F.lit(1)
     )
@@ -239,7 +238,7 @@ def extract_sitemap_entries(
 
 
 def extract_feed_entries(
-    pages: DataFrame, html_col: str = "html", carry: tuple[str, ...] = ()
+    pages: DataFrame, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """RSS/Atom feed pages → (src_url, link, published): the OTHER
     standing discovery channel next to sitemaps — feeds advertise new
@@ -251,7 +250,7 @@ def extract_feed_entries(
     blocks yield ``<link href="…">`` (any quote style) + optional
     ``<updated>``/``<published>``.  Missing timestamps surface as
     null."""
-    body = decode_permissive(F.col(html_col))
+    body = decode_permissive(F.col("html"))
     blocks = F.regexp_extract_all(
         body, F.lit(r"(?is)<(?:item|entry)[\s>](.*?)</(?:item|entry)>"),
         F.lit(1),
@@ -314,26 +313,26 @@ def _rel_link_href(html_text: Column, rel_pat: str, extra: str = "") -> Column:
     return out
 
 
-def extract_canonical(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def extract_canonical(pages: DataFrame) -> DataFrame:
     """(url, canonical): the page's advertised ``<link rel="canonical">``
     target (RFC 6596) — the dedup/indexing key every crawler honors
     (parameterized and mirrored spellings of one page all point at one
     canonical url; group content by it before the sink, exactly like
     redirect resolution canonicalizes the fetch side).  Null when the
     page advertises none.  One regexp in codegen."""
-    href = _rel_link_href(decode_permissive(F.col(html_col)), "canonical")
+    href = _rel_link_href(decode_permissive(F.col("html")), "canonical")
     return pages.select(
         "url", F.nullif(href, F.lit("")).alias("canonical")
     )
 
 
-def extract_feed_links(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def extract_feed_links(pages: DataFrame) -> DataFrame:
     """(src_url, feed_url, feed_type): RSS/Atom AUTODISCOVERY — the
     ``<link rel="alternate" type="application/rss+xml|atom+xml">``
     head elements html pages use to advertise their feeds; the
     discovered feed urls then fetch through the normal loop and
     extract_feed_entries takes over.  Pure Catalyst."""
-    body = decode_permissive(F.col(html_col))
+    body = decode_permissive(F.col("html"))
     rows = []
     for ftype, mime in (("rss", "rss"), ("atom", "atom")):
         href = _rel_link_href(
@@ -365,9 +364,7 @@ def extract_feed_links(pages: DataFrame, html_col: str = "html") -> DataFrame:
 _ANCHOR_RE = r"(?is)(<a\s[^>]*>[^<]*</a>)"
 
 
-def extract_anchor_texts(
-    pages: DataFrame, html_col: str = "html"
-) -> DataFrame:
+def extract_anchor_texts(pages: DataFrame) -> DataFrame:
     """pages(url, html, …) → (src_url, link, anchor): resolved absolute
     link + trimmed anchor text per <a> element.  Pure Catalyst (no
     UDF): one regexp_extract_all pass pulls whole anchor elements,
@@ -381,10 +378,10 @@ def extract_anchor_texts(
     from .urls import with_url_canon
 
     keep = [c for c in ("url", "url_canon", "host") if c in pages.columns]
-    src = pages.select(*keep, html_col)
+    src = pages.select(*keep, "html")
     if "url_canon" not in src.columns:
         src = with_url_canon(src)
-    html_text = decode_permissive(F.col(html_col))
+    html_text = decode_permissive(F.col("html"))
     scheme = F.regexp_extract(F.col("url_canon"), r"^([a-z][a-z0-9+.-]*):", 1)
     host = F.col("host")
     path = F.coalesce(

@@ -10,9 +10,8 @@ Simplified-jusText contract (deterministic, documented):
      (p/div/section/article/li/td/h1-h6/br/tr/ul/ol/table/header/
      footer/nav/aside);
   3. per block: visible words, link words (inside <a>…</a>);
-  4. a block is BODY iff words ≥ ``min_words`` (default 10) and
-     link_word_fraction ≤ ``max_link_frac`` (default 0.35) — nav bars
-     and footers are short and link-dense, prose is neither;
+  4. a block is BODY iff words ≥ 10 and link_word_fraction ≤ 0.35 —
+     nav bars and footers are short and link-dense, prose is neither;
   5. main_text = body blocks joined by '\\n', whitespace-collapsed;
      block counts surfaced so a caller can threshold page quality
      (a page with 0 body blocks is boilerplate-only).
@@ -33,7 +32,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _DROP_RE = re.compile(
@@ -46,6 +44,11 @@ _BLOCK_SPLIT_RE = re.compile(
 _A_RE = re.compile(r"(?is)<a\b[^>]*>(.*?)</a\s*>")
 _TAG_RE = re.compile(r"(?s)<[^>]*>")
 _WS_RE = re.compile(r"\s+")
+
+# a body block has at least this many words, at most this share of them
+# inside links
+_MIN_WORDS = 10
+_MAX_LINK_FRAC = 0.35
 
 # the WET module's core entities, kept in sync deliberately small
 _ENTITIES = (
@@ -68,9 +71,7 @@ def _block_text(fragment: str) -> tuple[str, int, int]:
     return text, len(text.split()), link_words
 
 
-def main_content(
-    html: str, min_words: int = 10, max_link_frac: float = 0.35
-) -> tuple[str, int, int]:
+def main_content(html: str) -> tuple[str, int, int]:
     """(main_text, n_blocks, n_body_blocks) for one document."""
     cleaned = _DROP_RE.sub(" ", html)
     blocks = _BLOCK_SPLIT_RE.split(cleaned)
@@ -81,7 +82,7 @@ def main_content(
         if n_words == 0:
             continue
         n_blocks += 1
-        if n_words >= min_words and link_words / n_words <= max_link_frac:
+        if n_words >= _MIN_WORDS and link_words / n_words <= _MAX_LINK_FRAC:
             body.append(text)
     return "\n".join(body), n_blocks, len(body)
 
@@ -96,12 +97,7 @@ MAIN_TEXT_OUT = T.StructType(
 )
 
 
-def extract_main_content(
-    df: DataFrame,
-    html_col: str = "html",
-    min_words: int = 10,
-    max_link_frac: float = 0.35,
-) -> DataFrame:
+def extract_main_content(df: DataFrame) -> DataFrame:
     """pages(url, html:binary, …) → (url, main_text, n_blocks,
     n_body_blocks), Arrow-batched.  Binary payloads decode with
     errors=replace (the decode_permissive contract) and simply yield
@@ -111,13 +107,13 @@ def extract_main_content(
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             texts, nb, ng = [], [], []
-            for payload in pdf[html_col]:
+            for payload in pdf["html"]:
                 html = (
                     bytes(payload).decode("utf-8", errors="replace")
                     if payload is not None
                     else ""
                 )
-                t, b, g = main_content(html, min_words, max_link_frac)
+                t, b, g = main_content(html)
                 texts.append(t)
                 nb.append(b)
                 ng.append(g)
@@ -130,4 +126,4 @@ def extract_main_content(
                 }
             )
 
-    return df.select("url", html_col).mapInPandas(run, schema=MAIN_TEXT_OUT)
+    return df.select("url", "html").mapInPandas(run, schema=MAIN_TEXT_OUT)

@@ -14,11 +14,11 @@ Semantics are deliberately regex-backreference-free (DuckDB's RE2 has
 no backrefs) so the DuckDB oracle runs the IDENTICAL array logic:
 segments = split(path, '/'); a trap is
 
-  * path depth  > ``max_depth``           (endless calendar descent)
-  * any segment appearing > ``max_seg_repeat`` times in the path
+  * path depth  > ``MAX_DEPTH``           (endless calendar descent)
+  * any segment appearing > ``MAX_SEG_REPEAT`` times in the path
     (self-similar loop — catches /a/b/a/b/a and /x/x/x alike)
-  * query params > ``max_params``          (facet grid)
-  * total length > ``max_len``             (session-id accretion)
+  * query params > ``MAX_PARAMS``          (facet grid)
+  * total length > ``MAX_LEN``             (session-id accretion)
 
 The flag is surfaced as DATA (``trap_reason`` nullable string), not a
 silent drop: ``run_crawl(drop_traps=True)`` filters flagged links at
@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# defaults follow Heritrix's TooManyPathSegmentsDecideRule (20) and
+# thresholds follow Heritrix's TooManyPathSegmentsDecideRule (20) and
 # TooManyHopsDecideRule spirit, tightened for api-shaped frontiers
 MAX_DEPTH = 12
 MAX_SEG_REPEAT = 3
@@ -39,14 +39,7 @@ MAX_PARAMS = 10
 MAX_LEN = 512
 
 
-def trap_features(
-    url_canon: Column,
-    *,
-    max_depth: int = MAX_DEPTH,
-    max_seg_repeat: int = MAX_SEG_REPEAT,
-    max_params: int = MAX_PARAMS,
-    max_len: int = MAX_LEN,
-) -> dict[str, Column]:
+def trap_features(url_canon: Column) -> dict[str, Column]:
     """Per-URL trap feature columns; ``trap_reason`` is null for clean
     urls, else the FIRST tripped rule in fixed precedence order
     (depth > repeat > params > length) so the reason is deterministic.
@@ -81,10 +74,10 @@ def trap_features(
     n_params = F.when(q_str == "", F.lit(0)).otherwise(F.size(F.split(q_str, "&")))
     url_len = F.length(url_canon)
     reason = (
-        F.when(depth > max_depth, F.lit("depth"))
-        .when(seg_rep > max_seg_repeat, F.lit("segment_repeat"))
-        .when(n_params > max_params, F.lit("params"))
-        .when(url_len > max_len, F.lit("length"))
+        F.when(depth > MAX_DEPTH, F.lit("depth"))
+        .when(seg_rep > MAX_SEG_REPEAT, F.lit("segment_repeat"))
+        .when(n_params > MAX_PARAMS, F.lit("params"))
+        .when(url_len > MAX_LEN, F.lit("length"))
         .otherwise(F.lit(None).cast("string"))
     )
     return {
@@ -96,9 +89,9 @@ def trap_features(
     }
 
 
-def is_trap(url_canon: Column, **kw) -> Column:
+def is_trap(url_canon: Column) -> Column:
     """Boolean gate: any trap rule tripped."""
-    return trap_features(url_canon, **kw)["trap_reason"].isNotNull()
+    return trap_features(url_canon)["trap_reason"].isNotNull()
 
 
 # the extensions a text-focused crawler (CCBot-style) skips at
@@ -115,14 +108,12 @@ ASSET_EXTENSIONS = (
 )
 
 
-def is_static_asset(
-    url_canon: Column, extensions: tuple[str, ...] = ASSET_EXTENSIONS
-) -> Column:
+def is_static_asset(url_canon: Column) -> Column:
     """True when the url PATH ends in a static-asset extension (query
     string ignored — ``/app.js?v=3`` is still an asset).  One rlike in
     codegen; the extension test is case-insensitive and anchored at
     path end so ``/essay.zipper.html`` never matches."""
-    alts = "|".join(extensions)
+    alts = "|".join(ASSET_EXTENSIONS)
     return F.lower(
         F.substring_index(F.substring_index(url_canon, "?", 1), "#", 1)
     ).rlike(rf"\.({alts})$")

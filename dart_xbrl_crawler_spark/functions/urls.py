@@ -158,8 +158,9 @@ def _canonicalize_udf(urls: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"url_canon": canons, "host": hosts})
 
 
-def with_url_canon(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Add url_canon, host, url_hash columns.  xxhash64 stays JVM-side.
+def with_url_canon(df: DataFrame) -> DataFrame:
+    """Add url_canon, host, url_hash columns for the ``url`` column.
+    xxhash64 stays JVM-side.
 
     Single-pass pandas-UDF form: safe for any upstream (the input frame
     is scanned exactly once).  Hot paths whose upstream is cheap to
@@ -168,7 +169,7 @@ def with_url_canon(df: DataFrame, url_col: str = "url") -> DataFrame:
     shape entirely in Catalyst codegen and falls back to this UDF only
     for rows that need the general parser."""
     return (
-        df.withColumn("_c", _canonicalize_udf(F.col(url_col)))
+        df.withColumn("_c", _canonicalize_udf(F.col("url")))
         .withColumn("url_canon", F.col("_c.url_canon"))
         .withColumn("host", F.col("_c.host"))
         .drop("_c")
@@ -196,7 +197,7 @@ _FAST_URL_RE = (
 )
 
 
-def _canon_fast_exprs(url_col: str) -> tuple[F.Column, F.Column]:
+def _canon_fast_exprs() -> tuple[F.Column, F.Column]:
     """(url_canon, host) as pure Catalyst expressions — valid ONLY for
     rows matching _FAST_URL_RE (whitespace-free, so strip is a no-op).
 
@@ -211,7 +212,7 @@ def _canon_fast_exprs(url_col: str) -> tuple[F.Column, F.Column]:
     every character the safe-query charset allows, so plain binary
     sort_array orders exactly like python's (key, value) tuple sort),
     then the separator is translated back."""
-    u = F.col(url_col)
+    u = F.col("url")
     scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
     netloc = F.lower(F.regexp_extract(u, r"^[^:]+://([^/#]+)", 1))
     host = F.substring_index(netloc, ":", 1)
@@ -245,7 +246,7 @@ def _canon_fast_exprs(url_col: str) -> tuple[F.Column, F.Column]:
     return canon, host
 
 
-def with_url_canon_split(df: DataFrame, url_col: str = "url") -> DataFrame:
+def with_url_canon_split(df: DataFrame) -> DataFrame:
     """with_url_canon via a Catalyst fast path: rows matching
     _FAST_URL_RE are canonicalized in whole-stage codegen (no python
     worker, no Arrow transfer — the JVM path also scales past the
@@ -256,8 +257,8 @@ def with_url_canon_split(df: DataFrame, url_col: str = "url") -> DataFrame:
     upstream is cheap to recompute (generated batches, column-pruned
     scans); keep plain with_url_canon over expensive upstreams like
     link-extraction output."""
-    eligible = F.col(url_col).rlike(_FAST_URL_RE)
-    canon, host = _canon_fast_exprs(url_col)
+    eligible = F.col("url").rlike(_FAST_URL_RE)
+    canon, host = _canon_fast_exprs()
     fast = (
         df.filter(eligible)
         .withColumn("url_canon", canon)
@@ -266,7 +267,7 @@ def with_url_canon_split(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
     # a NULL url is neither eligible nor ~eligible: send it to the UDF
     # so it fails or passes exactly as in with_url_canon
-    slow = with_url_canon(df.filter(F.coalesce(~eligible, F.lit(True))), url_col)
+    slow = with_url_canon(df.filter(F.coalesce(~eligible, F.lit(True))))
     return fast.unionByName(slow)
 
 

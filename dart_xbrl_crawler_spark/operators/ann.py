@@ -9,12 +9,12 @@ for.  The design is the standard IVF layout (Jégou et al., "Product
 Quantization for Nearest Neighbor Search", TPAMI 2011 — the coarse
 quantizer half, no PQ compression):
 
-- **Train** a k-centroid codebook on a BOUNDED deterministic sample
-  collected to the driver (FAISS trains its quantizer the same way —
-  codebook training is O(sample·k·iters) and must not scan the
-  corpus).  Deterministic init (first k sample vectors by vec_id) +
-  fixed Lloyd iterations ⇒ the same codebook on every run/cluster
-  size — no RNG, no seed drift.
+- **Train** a k-centroid codebook on vectors collected to the driver
+  (FAISS trains its quantizer the same way — codebook training is
+  O(sample·k·iters); the caller passes the sample).  Deterministic
+  init (first k sample vectors by vec_id) + fixed Lloyd iterations ⇒
+  the same codebook on every run/cluster size — no RNG, no seed
+  drift.
 - **Assign** every vector to its nearest centroid with an
   Arrow-vectorized pandas UDF: one numpy matmul per batch (the
   centroid matrix rides the closure, k·dim floats).  Map-only — the
@@ -46,27 +46,20 @@ from pyspark.sql import types as T
 
 
 def train_ivf_codebook(
-    embeddings: DataFrame,
-    k: int = 16,
-    n_iter: int = 5,
-    sample_mod: int = 1,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
+    embeddings: DataFrame, k: int = 16, n_iter: int = 5
 ) -> np.ndarray:
-    """Deterministic k-means codebook from a bounded sample.
-
-    ``sample_mod`` bounds the driver collect: only rows with
-    ``vec_id % sample_mod == 0`` are pulled (set it so the sample is
-    ~10-100k vectors regardless of corpus size — codebook quality
-    saturates far below that).  Init = the k sample vectors with the
-    smallest ids; then ``n_iter`` full Lloyd iterations over the
-    sample in numpy.  Empty clusters keep their previous centroid
-    (standard fix, still deterministic).  Returns (k, dim) float32.
+    """Deterministic k-means codebook over ``embeddings`` (vec_id,
+    embedding), every row with a vec_id collected to the driver — pass
+    a bounded sample (codebook quality saturates at ~10-100k vectors).
+    Init = the k vectors with the smallest ids; then ``n_iter`` full
+    Lloyd iterations in numpy.  Empty clusters keep their previous
+    centroid (standard fix, still deterministic).  Returns (k, dim)
+    float32.
     """
     rows = (
-        embeddings.filter(F.col(id_col) % sample_mod == 0)
-        .select(id_col, emb_col)
-        .orderBy(id_col)
+        embeddings.filter(F.col("vec_id").isNotNull())
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
         .collect()
     )
     if len(rows) < k:
@@ -88,9 +81,7 @@ def train_ivf_codebook(
     return cent
 
 
-def ivf_assign(
-    df: DataFrame, centroids: np.ndarray, emb_col: str = "embedding"
-) -> DataFrame:
+def ivf_assign(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     """Add ``ivf_cluster`` = argmin centroid (squared L2) per row.
 
     One numpy matmul per Arrow batch — the (k, dim) centroid matrix
@@ -110,7 +101,7 @@ def ivf_assign(
             d = -2.0 * (x @ cent.T) + cent_sq[None, :]
             yield pd.Series(d.argmin(axis=1).astype(np.int32))
 
-    return df.withColumn("ivf_cluster", assign(F.col(emb_col)))
+    return df.withColumn("ivf_cluster", assign(F.col("embedding")))
 
 
 def ivf_search(
@@ -119,8 +110,6 @@ def ivf_search(
     query_vec,
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Top-k by cosine among the ``nprobe`` nearest inverted lists.
 
@@ -138,13 +127,13 @@ def ivf_search(
 
     qlit = F.array(*[F.lit(float(v)) for v in q])
     dot = F.aggregate(
-        F.zip_with(F.col(emb_col), qlit, lambda a, b: a * b),
+        F.zip_with(F.col("embedding"), qlit, lambda a, b: a * b),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
     norm = F.sqrt(
         F.aggregate(
-            F.transform(F.col(emb_col), lambda v: v * v),
+            F.transform(F.col("embedding"), lambda v: v * v),
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
@@ -160,7 +149,7 @@ def ivf_search(
     ).alias("cosine")
     return (
         indexed.filter(F.col("ivf_cluster").isin(probes))
-        .select(id_col, "ivf_cluster", F.round(cos, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        .select("vec_id", "ivf_cluster", F.round(cos, 6).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )

@@ -34,12 +34,14 @@ from pyspark.sql import functions as F
 
 __all__ = ["word_freq_table", "train_bpe"]
 
+# a pair seen fewer times than this is not worth a merge
+_MIN_PAIR_COUNT = 2
 
-def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, n) corpus word frequencies — the only corpus-size pass."""
-    w = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != ""
-    )
+
+def word_freq_table(docs: DataFrame) -> DataFrame:
+    """(word, n) word frequencies of ``docs.text`` — the only
+    corpus-size pass."""
+    w = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != "")
     return (
         docs.select(F.explode(w).alias("word"))
         .groupBy("word")
@@ -72,16 +74,11 @@ def _merge_once(words: DataFrame, a: str, b: str) -> DataFrame:
     return words.withColumn("syms", merge_udf("syms"))
 
 
-def train_bpe(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 20,
-    min_pair_count: int = 2,
-) -> list[tuple[str, str, int]]:
-    """Learn ``n_merges`` merges; returns [(left, right, count), ...] in
-    merge order.  Stops early when the best pair drops below
-    ``min_pair_count`` (nothing left worth merging)."""
-    freq = word_freq_table(docs, text_col)
+def train_bpe(docs: DataFrame, n_merges: int = 20) -> list[tuple[str, str, int]]:
+    """Learn ``n_merges`` merges over ``docs.text``; returns [(left,
+    right, count), ...] in merge order.  Stops early when the best pair
+    drops below ``_MIN_PAIR_COUNT`` (nothing left worth merging)."""
+    freq = word_freq_table(docs)
     # F.split keeps trailing empties under limit=-1 — the (?!^) lookahead
     # matches the end-of-string position, so strip empty symbols or a
     # phantom ('x', '') pair pollutes the counts
@@ -112,7 +109,7 @@ def train_bpe(
             .limit(1)
             .collect()
         )
-        if not top or top[0]["cnt"] < min_pair_count:
+        if not top or top[0]["cnt"] < _MIN_PAIR_COUNT:
             break
         a, b, cnt = top[0]["p"]["a"], top[0]["p"]["b"], int(top[0]["cnt"])
         merges.append((a, b, cnt))

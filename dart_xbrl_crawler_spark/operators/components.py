@@ -13,8 +13,8 @@ iterative-Spark shape the reference has no analog for:
   truncates the lineage per round — without it the plan doubles every
   iteration and the driver dies planning round ~15 (the canonical
   iterative-DataFrame pitfall).
-* convergence is an exact count of changed labels; a ``max_iter`` cap
-  bounds pathological chains.
+* convergence is an exact count of changed labels; a cap of
+  ``_MAX_ITER`` rounds bounds pathological chains.
 
 At 10^10-doc scale each round shuffles |edges| messages — the same
 cost class as one LSH band join, and the edge set (near-dup pairs) is
@@ -26,19 +26,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_MAX_ITER = 20
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
-    max_iter: int = 20,
-) -> DataFrame:
-    """pairs(a, b) → (node, component): component = min node id
+
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """pairs(a_id, b_id) → (node, component): component = min node id
     reachable through the undirected pair graph."""
     edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
         .unionByName(
-            pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
+            pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
         )
         .distinct()
         .localCheckpoint(eager=True)
@@ -49,7 +46,7 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(_MAX_ITER):
         msgs = (
             edges.join(labels, edges["u"] == labels["node"])
             .select(F.col("v").alias("node"), "component")

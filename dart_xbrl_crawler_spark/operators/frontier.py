@@ -43,6 +43,9 @@ _FILTER_DEFAULTS = {"seen_filter": "bloom", "n_bloom_shards": 64,
 
 # the states a frontier row can hold
 _STATES = ("queued", "fetched", "failed", "robots_blocked", "expired")
+# the states recrawl re-queues and expire retires
+_RECRAWL_STATES = ("fetched", "failed")
+_EXPIRE_STATES = ("fetched", "failed", "robots_blocked")
 _METRICS_ARROW = to_arrow_schema(CRAWL_METRICS)
 
 
@@ -411,10 +414,6 @@ class FrontierStore:
         round_id: int = 0,
         round_ms: int = 60_000,
         salt_buckets: int = 32,
-        max_per_host: int | None = None,
-        n_partitions: int | None = None,
-        n_hosts_hint: int | None = None,
-        broadcast_robots: bool = True,
     ) -> tuple[str, DataFrame]:
         """Pop a politeness-bounded batch, 'fetch' it (bytes come from
         the pages table — the sandbox stand-in for HTTP), transition
@@ -448,21 +447,13 @@ class FrontierStore:
         # materialize once, and only the rows they read: the pop returns
         # the whole queue, which a round must never cache
         popped = (
-            P.pop_round(
-                queued,
-                robots,
-                round_ms=round_ms,
-                salt_buckets=salt_buckets,
-                max_per_host=max_per_host,
-                n_hosts_hint=n_hosts_hint,
-                broadcast_robots=broadcast_robots,
-            )
+            P.pop_round(queued, robots, round_ms=round_ms, salt_buckets=salt_buckets)
             .filter(F.col("selected") | F.col("robots_blocked"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
 
         selected = popped.filter(F.col("selected"))
-        width = P.fetch_width(selected, n_partitions)
+        width = P.fetch_width(selected)
         fetch_in = P.fetch_partitioning(selected, width)
 
         # fetch = equi-join bytes by canonical url (pages keyed the same
@@ -542,12 +533,7 @@ class FrontierStore:
         return snap, fetched_pages
 
     # -- recrawl / expiry ----------------------------------------------
-    def recrawl(
-        self,
-        spark: SparkSession,
-        before_ts: str,
-        states: tuple[str, ...] = ("fetched", "failed"),
-    ) -> int:
+    def recrawl(self, spark: SparkSession, before_ts: str) -> int:
         """Re-queue rows whose fetch is older than ``before_ts`` — the
         freshness loop every production crawler runs (the reference
         re-downloads nothing, ever).  One O(|frontier|) scan selects the
@@ -558,7 +544,7 @@ class FrontierStore:
         keep deduping while the refetch is pending."""
         frontier = self.table.read(spark)
         stale = frontier.filter(
-            F.col("state").isin(*states)
+            F.col("state").isin(*_RECRAWL_STATES)
             & (F.col("fetch_ts") < F.to_timestamp(F.lit(before_ts)))
         )
         return self._transition(
@@ -600,7 +586,7 @@ class FrontierStore:
         stale = (
             frontier.join(h, "url_hash")
             .filter(
-                F.col("state").isin("fetched", "failed")
+                F.col("state").isin(*_RECRAWL_STATES)
                 & (F.col("fetch_ts") < F.col("_lastmod"))
             )
             .drop("_lastmod")
@@ -609,12 +595,7 @@ class FrontierStore:
             spark, stale, "queued", "recrawl-hints", "recrawl-hints lineage"
         )[1]
 
-    def expire(
-        self,
-        spark: SparkSession,
-        before_ts: str,
-        states: tuple[str, ...] = ("fetched", "failed", "robots_blocked"),
-    ) -> int:
+    def expire(self, spark: SparkSession, before_ts: str) -> int:
         """Retire terminal rows older than ``before_ts`` from the crawl:
         an O(|expired|) delta marks them ``state='expired'`` (a terminal
         tombstone — the row stays for lineage/time-travel) and, on a
@@ -628,7 +609,7 @@ class FrontierStore:
         asymmetry is exactly why the cuckoo variant exists."""
         frontier = self.table.read(spark)
         old = frontier.filter(
-            F.col("state").isin(*states)
+            F.col("state").isin(*_EXPIRE_STATES)
             & (F.col("fetch_ts") < F.to_timestamp(F.lit(before_ts)))
         )
         changed, n = self._transition(
@@ -715,15 +696,10 @@ class FrontierStore:
         run_ts: str,
         max_rounds: int = 5,
         round_ms: int = 60_000,
-        salt_buckets: int = 32,
-        max_per_host: int | None = None,
-        n_partitions: int | None = None,
         discover: bool = True,
         text_out: str | None = None,
         backoff_factor: float | None = None,
         priority_decay: float = 1.0,
-        broadcast_robots: bool = True,
-        respect_nofollow: bool = True,
         drop_traps: bool = True,
         drop_assets: bool = True,
         seeds: DataFrame | None = None,
@@ -743,9 +719,10 @@ class FrontierStore:
         seed's at every depth instead of degenerating to flat 0.0
         (insertion-order popping).
 
-        ``respect_nofollow`` (default on, like CCBot/Nutch) honors the
-        robots html companion during discovery: meta-robots-nofollow
-        pages contribute no links, rel="nofollow" hrefs are dropped.
+        Discovery honors the robots html companion (like CCBot/Nutch):
+        meta-robots-nofollow pages contribute no links, rel="nofollow"
+        hrefs are dropped, and meta-robots-noindex pages stay out of the
+        text sink.
 
         ``drop_traps`` (default on, Heritrix-style) gates discovered
         links through functions.traps.is_trap BEFORE the dedup
@@ -796,20 +773,10 @@ class FrontierStore:
                     # adaptive politeness: scale delays by the failure rates
                     # observed in earlier rounds (per-host metrics chain)
                     robots_rid = P.apply_backoff(
-                        robots, self.host_stats(spark), factor=backoff_factor,
-                        broadcast=broadcast_robots,
+                        robots, self.host_stats(spark), factor=backoff_factor
                     )
                 snap, fetched_pages = self.run_round(
-                    spark,
-                    pages,
-                    robots_rid,
-                    run_ts,
-                    round_id=rid,
-                    round_ms=round_ms,
-                    salt_buckets=salt_buckets,
-                    max_per_host=max_per_host,
-                    n_partitions=n_partitions,
-                    broadcast_robots=broadcast_robots,
+                    spark, pages, robots_rid, run_ts, round_id=rid, round_ms=round_ms
                 )
                 n_fetched = self.last_round.get("fetched", 0)
                 if text_out and n_fetched:
@@ -826,13 +793,9 @@ class FrontierStore:
                     )
                     from ..plans.pipeline import pages_with_meta
 
-                    sink_pages = fetched_pages
-                    if respect_nofollow:
-                        sink_pages = sink_pages.filter(
-                            ~meta_robots_flags(
-                                decode_permissive(F.col("html"))
-                            )["noindex"]
-                        )
+                    sink_pages = fetched_pages.filter(
+                        ~meta_robots_flags(decode_permissive(F.col("html")))["noindex"]
+                    )
                     sink_pages = pages_with_meta(
                         sink_pages.select("url", "html"), seeds
                     )
@@ -849,7 +812,7 @@ class FrontierStore:
                             "url", "url_canon", "host", "priority", "html"
                         ),
                         carry=("priority",),
-                        respect_nofollow=respect_nofollow,
+                        respect_nofollow=True,
                     )
                     # sitemap/feed pages are discovery channels too: their
                     # <loc>/<link> entries join the edge set with the SAME

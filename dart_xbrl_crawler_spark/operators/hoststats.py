@@ -18,7 +18,7 @@ but every web-scale crawl runs:
 
 * **Quality rollup** — per-host aggregate of document-quality signals
   (doc count, mean length, short-doc fraction, language spread).  A
-  host whose corpus is mostly sub-``short_chars`` fragments gets a
+  host whose corpus is mostly sub-200-character fragments gets a
   frontier priority penalty (``priority_penalty`` column, ready to
   join onto FrontierStore.insert batches).  Pure groupBy aggregation:
   exact-integer sums with ONE final division, so the result is
@@ -30,6 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# a doc shorter than this is a fragment; a host of mostly fragments
+# loses this much frontier priority
+_SHORT_CHARS = 200
+_PENALTY = 2.0
+
 
 def mirror_host_pairs(
     df: DataFrame,
@@ -37,14 +42,13 @@ def mirror_host_pairs(
     sig_col: str = "content_sig",
     *,
     min_shared: int = 2,
-    min_jaccard: float = 0.0,
     max_hosts_per_sig: int = 64,
 ) -> DataFrame:
     """Host pairs ranked by content overlap.
 
     Returns (host_a, host_b, n_shared, n_a, n_b, jaccard) with
-    host_a < host_b, filtered to ``n_shared >= min_shared`` and
-    ``jaccard >= min_jaccard``; jaccard = shared / (n_a + n_b - shared)
+    host_a < host_b, filtered to ``n_shared >= min_shared``;
+    jaccard = shared / (n_a + n_b - shared)
     over DISTINCT signatures, rounded to 4 places (exact-integer
     inputs, one division → deterministic across engines).
     """
@@ -86,10 +90,7 @@ def mirror_host_pairs(
                 4,
             ),
         )
-        .filter(
-            (F.col("n_shared") >= min_shared)
-            & (F.col("jaccard") >= min_jaccard)
-        )
+        .filter(F.col("n_shared") >= min_shared)
     )
     return out.select(
         "host_a", "host_b",
@@ -103,23 +104,21 @@ def mirror_host_pairs(
 def host_quality_rollup(
     df: DataFrame,
     host_col: str = "host",
-    text_col: str = "text",
     lang_col: str | None = "lang",
     *,
-    short_chars: int = 200,
     demote_short_frac: float = 0.5,
-    penalty: float = 2.0,
 ) -> DataFrame:
     """Per-host quality aggregate feeding frontier priority.
 
     Returns (host, n_docs, mean_chars, short_frac, n_langs,
-    priority_penalty): ``priority_penalty`` is ``-penalty`` when more
-    than ``demote_short_frac`` of the host's docs are shorter than
-    ``short_chars`` characters, else 0.0 — join it onto a discovery
-    batch and add to ``priority`` before FrontierStore.insert.
+    priority_penalty) over ``df.text``: ``priority_penalty`` is
+    ``-_PENALTY`` when more than ``demote_short_frac`` of the host's
+    docs are shorter than ``_SHORT_CHARS`` characters, else 0.0 — join
+    it onto a discovery batch and add to ``priority`` before
+    FrontierStore.insert.
     """
-    n_chars = F.length(F.col(text_col))
-    short = F.when(n_chars < short_chars, 1).otherwise(0)
+    n_chars = F.length(F.col("text"))
+    short = F.when(n_chars < _SHORT_CHARS, 1).otherwise(0)
     agg = [
         F.count("*").cast("long").alias("n_docs"),
         F.sum(n_chars).alias("_sum_chars"),
@@ -139,7 +138,7 @@ def host_quality_rollup(
             "priority_penalty",
             F.when(
                 F.col("_n_short") / F.col("n_docs") > demote_short_frac,
-                F.lit(-penalty),
+                F.lit(-_PENALTY),
             ).otherwise(F.lit(0.0)),
         )
         .drop("_sum_chars", "_n_short")

@@ -36,22 +36,22 @@ _MAGIC = {
 }
 
 
-def sniff_media(df: DataFrame, binary_col: str = "html") -> DataFrame:
+def sniff_media(df: DataFrame) -> DataFrame:
     """Magic-byte media typing, all built-in expressions (no UDF):
-    hex-prefix dispatch on the binary column."""
-    prefix = F.hex(F.expr(f"substring({binary_col}, 1, 4)"))
+    hex-prefix dispatch on the binary ``html`` column."""
+    prefix = F.hex(F.expr("substring(html, 1, 4)"))
     mt = F.lit(None).cast("string")
     for magic, typ in _MAGIC.items():
         mt = F.when(prefix.startswith(magic.hex().upper()), typ).otherwise(mt)
     # RIFF is a container family: bytes 9-12 discriminate WAVE vs AVI
-    riff_kind = F.hex(F.expr(f"substring({binary_col}, 9, 4)"))
+    riff_kind = F.hex(F.expr("substring(html, 9, 4)"))
     mt = F.when(
         prefix.startswith(b"RIFF".hex().upper())
         & riff_kind.startswith(b"AVI ".hex().upper()),
         "video/x-msvideo",
     ).otherwise(mt)
     return df.withColumn("media_type", mt).withColumn(
-        "n_bytes", F.octet_length(F.col(binary_col)).cast("long")
+        "n_bytes", F.octet_length(F.col("html")).cast("long")
     )
 
 
@@ -666,14 +666,14 @@ PHASH_OUT = T.StructType(
 )
 
 
-def extract_phash(df: DataFrame, binary_col: str = "html") -> DataFrame:
+def extract_phash(df: DataFrame) -> DataFrame:
     """(url, media_type, phash): REAL decode (PNG/JPEG/GIF) → pHash.
     Non-image rows filtered JVM-side before Arrow; undecodable
     payloads yield null (error path is data)."""
     src = (
-        sniff_media(df, binary_col)
+        sniff_media(df)
         .filter(F.col("media_type").isin("image/png", "image/jpeg", "image/gif"))
-        .select("url", binary_col, "media_type")
+        .select("url", "html", "media_type")
     )
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -681,7 +681,7 @@ def extract_phash(df: DataFrame, binary_col: str = "html") -> DataFrame:
                "image/gif": decode_gif}
         for pdf in it:
             hashes = []
-            for payload, mt in zip(pdf[binary_col], pdf["media_type"]):
+            for payload, mt in zip(pdf["html"], pdf["media_type"]):
                 px = dec[mt](bytes(payload) if payload is not None else b"")
                 hashes.append(None if px is None else phash64(px))
             yield pd.DataFrame(
@@ -692,30 +692,31 @@ def extract_phash(df: DataFrame, binary_col: str = "html") -> DataFrame:
     return src.mapInPandas(run, schema=PHASH_OUT)
 
 
-def phash_near_dup_pairs(
-    hashed: DataFrame, max_hamming: int = 10, n_bands: int = 4
-) -> DataFrame:
+_PHASH_BANDS = 4
+
+
+def phash_near_dup_pairs(hashed: DataFrame, max_hamming: int = 10) -> DataFrame:
     """(url_a, url_b, hamming) for image pairs — the SimHash pigeonhole
-    construction over pHash keys: split 64 bits into ``n_bands`` bands;
+    construction over pHash keys: split 64 bits into ``_PHASH_BANDS``
+    bands;
     candidates come from a banded EQUALITY join (never an all-pairs
     distance), then one xor+bit_count confirms exactly.  Pure Catalyst
     after the hash extraction.
 
     Recall contract (NB): a band collision is GUARANTEED only for
-    pairs with hamming ≤ n_bands − 1 (pigeonhole); with the defaults
-    (4 bands of 16 bits, max_hamming=10) pairs whose 4–10 differing
-    bits spread across all four bands are best-effort — near-identical
-    images (hamming ≤ 3) are always found, looser matches may be
-    missed.  For guaranteed recall at radius r, call with
-    n_bands ≥ r + 1 (e.g. 11 bands for r=10; 64/11-bit bands still
-    join on equality)."""
+    pairs with hamming ≤ bands − 1 (pigeonhole); with 4 bands of 16
+    bits and max_hamming=10, pairs whose 4–10 differing bits spread
+    across all four bands are best-effort — near-identical images
+    (hamming ≤ 3) are always found, looser matches may be missed.
+    Guaranteed recall at radius r needs ≥ r + 1 bands (e.g. 11 bands
+    for r=10; 64/11-bit bands still join on equality)."""
     from ..plans.catalog_text import banded_pairs, hamming_distance
 
-    width = 64 // n_bands
+    width = 64 // _PHASH_BANDS
     mask = (1 << width) - 1
     keys = [
         F.shiftrightunsigned(F.col("phash"), i * width).bitwiseAND(F.lit(mask))
-        for i in range(n_bands)
+        for i in range(_PHASH_BANDS)
     ]
     h = hashed.filter(F.col("phash").isNotNull()).select("url", "phash")
     return banded_pairs(h, "url", "phash", keys, hamming_distance, max_hamming).select(

@@ -20,11 +20,15 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DEFAULT_CRAWL_DELAY_MS = 1000
+# the product token robots.txt groups are matched against
+USER_AGENT = "dart-xbrl-crawler"
+# adaptive backoff never slows a host by more than this factor
+_BACKOFF_MAX_MULTIPLIER = 16.0
 
 # ---------------------------------------------------------------------
 # robots.txt parsing (REP, RFC 9309): user-agent groups, multiple
@@ -53,7 +57,7 @@ ROBOTS_RULES_SCHEMA = T.StructType(
     ]
 )
 
-# Extended rules dim emitted by robots_rules_from_txt: each rule carries
+# Wildcard rules dim emitted by robots_rules_from_txt: each rule carries
 # the literal prefix up to the first wildcard (cheap Catalyst prefilter),
 # an anchored Java regex when the raw rule used RFC 9309 '*'/'$' special
 # characters (null otherwise — the common case never pays a regex), and
@@ -98,7 +102,7 @@ def _rule_to_match(path_rule: str) -> tuple[str, str | None]:
 
 
 def parse_robots_txt(
-    text: str, user_agent: str = "dart-xbrl-crawler"
+    text: str, user_agent: str
 ) -> tuple[list[tuple[str, bool]], int | None]:
     """robots.txt body → ([(path_prefix, allow)], crawl_delay_ms|None).
 
@@ -164,22 +168,19 @@ def parse_robots_txt(
     return best[1], delay_ms
 
 
-def robots_rules_from_txt(
-    spark: SparkSession,
-    robots_txt: DataFrame,
-    user_agent: str = "dart-xbrl-crawler",
-) -> DataFrame:
+def robots_rules_from_txt(robots_txt: DataFrame) -> DataFrame:
     """(host, robots_txt) → rules dim matching ROBOTS_RULES_WILD_SCHEMA
     (literal prefix + optional anchored regex for '*'/'$' rules + raw
-    rule length for precedence).  Tiny-dim path: parsing runs in a
-    pandas UDF batch; the result is broadcast by apply_robots."""
+    rule length for precedence), with the groups for ``USER_AGENT``.
+    Tiny-dim path: parsing runs in a pandas UDF batch; the result is
+    broadcast by apply_robots."""
     import pandas as pd
 
     def parse(it):
         for pdf in it:
             hosts, rules_col, delays = [], [], []
             for host, txt in zip(pdf["host"], pdf["robots_txt"]):
-                rules, delay = parse_robots_txt(txt or "", user_agent)
+                rules, delay = parse_robots_txt(txt or "", USER_AGENT)
                 hosts.append(host)
                 structs = []
                 for p, a in rules:
@@ -239,27 +240,24 @@ def _normalize_rules(rules_col, rules_type: T.ArrayType):
     )
 
 
-def apply_robots(
-    frontier: DataFrame, robots: DataFrame, broadcast_robots: bool = True
-) -> DataFrame:
+def apply_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     """Mark rows blocked by robots rules; adds ``robots_blocked`` and
-    ``crawl_delay_ms``.
+    ``crawl_delay_ms``.  The join broadcasts the dim: one row per host,
+    orders of magnitude smaller than the frontier (a dim too big to
+    broadcast would need a cardinality gate like pop_round's host
+    counts).
 
-    ``broadcast_robots`` (default True) forces a broadcast join — right
-    for the common case of a dim orders of magnitude smaller than the
-    frontier.  Pass False when the dim itself is web-scale (10^7-10^8
-    hosts × rules arrays): a forced broadcast of that would OOM the
-    driver, while the plain equality join shuffles only the dim side
-    against the frontier's existing distribution (AQE picks the
-    strategy, including its own broadcast if the dim turns out small).
-
-    Accepts either dim shape:
-      * parsed-rules dim (host, rules array<struct<prefix,allow>>,
-        crawl_delay_ms) from robots_rules_from_txt — full REP
-        longest-match semantics;
-      * legacy single-prefix dim (host, disallow_prefix,
-        crawl_delay_ms) — treated as one Disallow rule."""
-    side = F.broadcast if broadcast_robots else (lambda df: df)
+    Accepts three dim shapes:
+      * wildcard rules (host, rules array<struct<prefix, pattern,
+        allow, rlen>>, crawl_delay_ms) — ROBOTS_RULES_WILD_SCHEMA, from
+        robots_rules_from_txt (the CLI's ``--robots`` given robots.txt
+        bodies): full RFC 9309 longest-match semantics with '*'/'$';
+      * plain rules (host, rules array<struct<prefix, allow>>,
+        crawl_delay_ms) — ROBOTS_RULES_SCHEMA, the rules table
+        q44_robots_eval builds: longest-match over literal prefixes;
+      * single-prefix (host, disallow_prefix, crawl_delay_ms) — the
+        ROBOTS input schema (fixtures, perfbench, the driver contract):
+        treated as one Disallow rule."""
     path = F.parse_url(F.col("url_canon"), F.lit("PATH"))
     if "rules" in robots.columns:
         rules_type = robots.schema["rules"].dataType
@@ -270,7 +268,7 @@ def apply_robots(
                 "crawl_delay_ms"
             ),
         )
-        joined = frontier.join(side(dim), "host", "left")
+        joined = frontier.join(F.broadcast(dim), "host", "left")
         blocked = F.when(
             F.col("rules").isNotNull(), _eval_rules(path)
         ).otherwise(F.lit(False))
@@ -285,7 +283,7 @@ def apply_robots(
             "crawl_delay_ms"
         ),
     )
-    joined = frontier.join(side(rules), "host", "left")
+    joined = frontier.join(F.broadcast(rules), "host", "left")
     blocked = F.col("disallow_prefix").isNotNull() & path.startswith(
         F.col("disallow_prefix")
     )
@@ -298,11 +296,7 @@ def apply_robots(
 
 
 def apply_backoff(
-    robots: DataFrame,
-    host_stats: DataFrame,
-    factor: float = 4.0,
-    max_multiplier: float = 16.0,
-    broadcast: bool = True,
+    robots: DataFrame, host_stats: DataFrame, factor: float = 4.0
 ) -> DataFrame:
     """Adaptive politeness: scale each host's crawl delay by its
     observed failure rate — delay × (1 + factor·fail_rate), capped.
@@ -317,22 +311,19 @@ def apply_backoff(
     the default delay without a robots row) are appended with null
     rules and the default delay so backoff covers every observed host —
     a left join into robots alone would silently exempt them.  Both
-    legs stay broadcast-friendly: a full-outer join can't broadcast-
-    hash, so this is left-join + anti-join-union instead.  Pass
-    ``broadcast=False`` when the dims are themselves web-scale (10^8
-    hosts) — the joins fall back to shuffle joins under AQE."""
-    side = F.broadcast if broadcast else (lambda df: df)
+    legs broadcast: a full-outer join can't broadcast-hash, so this is
+    left-join + anti-join-union instead."""
     stats = host_stats.select("host", "fail_rate")
     mult = F.least(
         F.lit(1.0) + F.lit(factor) * F.coalesce("fail_rate", F.lit(0.0)),
-        F.lit(max_multiplier),
+        F.lit(_BACKOFF_MAX_MULTIPLIER),
     )
     base_delay = F.coalesce(
         F.col("crawl_delay_ms"), F.lit(DEFAULT_CRAWL_DELAY_MS)
     )
-    known = robots.join(side(stats), "host", "left")
+    known = robots.join(F.broadcast(stats), "host", "left")
     missing = stats.join(
-        side(robots.select("host")), "host", "left_anti"
+        F.broadcast(robots.select("host")), "host", "left_anti"
     )
     for field in robots.schema.fields:
         if field.name in ("host", "crawl_delay_ms"):
@@ -355,11 +346,9 @@ def pop_round(
     robots: DataFrame,
     round_ms: int = 60_000,
     salt_buckets: int = 32,
-    max_per_host: int | None = None,
     exact_rank_max: int = 100_000,
     broadcast_hosts_max: int = 262_144,
     n_hosts_hint: int | None = None,
-    broadcast_robots: bool = True,
 ) -> DataFrame:
     """Select this round's fetch set.
 
@@ -369,15 +358,12 @@ def pop_round(
     repartition by (host, partition_salt) for the fetch stage.  Every
     input row comes back, most with neither flag set: a caller that
     keeps the output should keep only the flagged rows, the round's
-    O(|round|) share of the queue.  ``broadcast_robots=False`` for a
-    web-scale rules dim (see apply_robots).
+    O(|round|) share of the queue.
 
     Without ``n_hosts_hint`` the host counts run as one eager
     checkpoint whose rows are counted in that same job.
     """
-    gated = apply_robots(
-        frontier, robots, broadcast_robots=broadcast_robots
-    ).withColumn(
+    gated = apply_robots(frontier, robots).withColumn(
         "partition_salt",
         F.pmod(F.col("url_hash"), F.lit(salt_buckets)).cast("int"),
     )
@@ -387,8 +373,6 @@ def pop_round(
     budget = F.floor(
         F.lit(round_ms) / F.greatest(F.lit(1), F.col("crawl_delay_ms"))
     )
-    if max_per_host is not None:
-        budget = F.least(budget, F.lit(max_per_host))
     gated = gated.withColumn("_budget", budget)
 
     # Per-host candidate counts: hosts whose whole queue fits the budget

@@ -26,6 +26,9 @@ def periodic_pred():
 
 
 _RANK_BUCKET = 1 << 14  # corps per cumsum bucket
+# the reference takes the first 5 disclosures of each corp's page 1
+# (≤100 rows, dart_api_manager.py:241-243,513)
+_PER_CORP_CAP = 5
 
 
 def date_window(
@@ -51,10 +54,7 @@ def date_window(
 
 
 def reference_schedule(
-    seeds: DataFrame,
-    per_corp_cap: int = 5,
-    page_size: int = 100,
-    window: tuple[str, str] | None = None,
+    seeds: DataFrame, window: tuple[str, str] | None = None
 ) -> DataFrame:
     """seeds → (rcept_no, corp_code, rcept_dt, visit_rank), in the
     reference's exact visit order (corp-major, date-desc, capped).
@@ -90,7 +90,7 @@ def reference_schedule(
     )
     capped = (
         periodic.withColumn("disc_rank", F.row_number().over(w))
-        .filter(F.col("disc_rank") <= min(per_corp_cap, page_size))
+        .filter(F.col("disc_rank") <= _PER_CORP_CAP)
     )
 
     # per-corp capped counts → cumulative offsets (two-level cumsum)
@@ -127,15 +127,12 @@ def reference_schedule(
 
 
 def seeds_to_frontier(
-    seeds: DataFrame,
-    run_ts_col=None,
-    per_corp_cap: int = 5,
-    window: tuple[str, str] | None = None,
+    seeds: DataFrame, window: tuple[str, str] | None = None
 ) -> DataFrame:
     """Expand the seed list into frontier rows: DART fetch URLs with
     priority = -visit_rank (higher priority pops first), so the
     politeness window reproduces the reference order within each host."""
-    sched = reference_schedule(seeds, per_corp_cap=per_corp_cap, window=window)
+    sched = reference_schedule(seeds, window=window)
     urls = sched.select(
         F.concat(
             F.lit("https://dart.fss.or.kr/api/fnlttXbrl.xml?rcept_no="),

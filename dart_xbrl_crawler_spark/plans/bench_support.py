@@ -111,7 +111,7 @@ def synth_pages(spark: SparkSession, n_docs: int, n_parts: int) -> DataFrame:
     )
 
 
-def _batch_urls(spark: SparkSession, n_urls: int, n_parts: int = 64):
+def _batch_urls(spark: SparkSession, n_urls: int):
     """Deterministic skewed url batch (60% on the giant host), generated
     inline — spark.range + JVM expressions, no I/O.  FIXED partition
     count, independent of cores: the scaling comparison must vary only
@@ -119,7 +119,7 @@ def _batch_urls(spark: SparkSession, n_urls: int, n_parts: int = 64):
     quadruples the number of sub-second tasks at 4N and the
     single-threaded DAGScheduler becomes the bottleneck (measured as 4N
     anti-scaling)."""
-    base = spark.range(n_urls, numPartitions=n_parts)
+    base = spark.range(n_urls, numPartitions=64)
     url = F.concat(
         F.lit("https://"),
         F.when(F.col("id") % 10 < 6, F.lit("DART.FSS.OR.KR")).otherwise(
@@ -285,7 +285,7 @@ class CrawlBench:
         )
         return popped.filter(F.col("selected")).count()
 
-    def pop_probe_job(self, n: int = 500_000) -> int:
+    def pop_probe_job(self) -> int:
         """Per-stage CONSTANTS probe: the identical pop_round plan on a
         frontier small enough that stage constants (AQE waves, counts
         broadcast, task scheduling) dominate — 500 k keeps the giant
@@ -297,7 +297,7 @@ class CrawlBench:
         from ..operators import politeness as P
 
         popped = P.pop_round(
-            self._pop_frontier(n),
+            self._pop_frontier(500_000),
             self.robots,
             round_ms=200_000,
             salt_buckets=64,

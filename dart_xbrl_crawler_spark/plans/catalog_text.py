@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .catalog import ORACLE, Q, _dsum, _t, query
@@ -341,10 +341,11 @@ def hamming_distance(a: F.Column, b: F.Column) -> F.Column:
 # =====================================================================
 N_MINHASH = 32
 N_BANDS = 8
+_SHINGLE_WORDS = 5
 
 
-def _exploded_shingles(d: DataFrame, k: int = 5) -> DataFrame:
-    """(doc_id, sh): distinct word-k-gram shingles, one row each.
+def _exploded_shingles(d: DataFrame) -> DataFrame:
+    """(doc_id, sh): distinct word-5-gram shingles, one row each.
     Relational form — the shingle expression is built ONCE, then
     exploded; the 32 minhash functions become 32 MIN aggregates over
     these rows (map-side partial aggregation for free).  A nested
@@ -353,8 +354,10 @@ def _exploded_shingles(d: DataFrame, k: int = 5) -> DataFrame:
     toks = F.filter(F.split("text", " "), lambda x: x != "")
     shingles = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+            F.sequence(
+                F.lit(1), F.greatest(F.size(toks) - (_SHINGLE_WORDS - 1), F.lit(1))
+            ),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, _SHINGLE_WORDS)),
         )
     )
     return d.select("doc_id", F.explode(shingles).alias("sh"))
@@ -440,7 +443,7 @@ def simhash_signatures(
     return per_doc.select("doc_id", sim.alias("simhash16"))
 
 
-def simhash_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
+def simhash_pairs(sigs: DataFrame) -> DataFrame:
     """(a_id, b_id, hamming) near-dup pairs from simhash signatures.
 
     Pigeonhole banding: split the 16 bits into 4 bands of 4; any pair
@@ -451,9 +454,7 @@ def simhash_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
         F.shiftright(F.col("simhash16"), b * 4).bitwiseAND(F.lit(0xF))
         for b in range(SIMHASH_BANDS)
     ]
-    return banded_pairs(
-        sigs, "doc_id", "simhash16", keys, hamming_distance, max_hamming
-    )
+    return banded_pairs(sigs, "doc_id", "simhash16", keys, hamming_distance, 3)
 
 
 @query("q31_simhash", None)
@@ -474,6 +475,11 @@ def q43(spark, sf):
 # ANN via LSH bucketing (rows-only): random-hyperplane sign bits →
 # bucket join vs the brute-force scan path
 # =====================================================================
+# 8 sign bits → 256 buckets; the testdata embeddings are 64 wide
+_LSH_PLANES = 8
+_EMB_DIM = 64
+
+
 def _lsh_planes(n_planes: int, dim: int) -> list[list[float]]:
     """Deterministic DECORRELATED hyperplanes.  (A smooth family like
     sin(a·p + b·i) yields nearly-parallel planes — measured recall 0.0
@@ -490,19 +496,14 @@ def _lsh_planes(n_planes: int, dim: int) -> list[list[float]]:
     ]
 
 
-def ann_sign_lsh(
-    e: DataFrame,
-    n_planes: int = 8,
-    probe_radius: int = 2,
-    k: int = 10,
-) -> DataFrame:
-    """Approximate top-k cosine neighbors of the min-vec_id query vector
-    via sign-LSH bucketing + multi-probe.
+def ann_sign_lsh(e: DataFrame) -> DataFrame:
+    """Approximate top-10 cosine neighbors of the min-vec_id query
+    vector via sign-LSH bucketing + multi-probe.
 
-    Scale path: each vector hashes to one of 2^n_planes buckets (a
-    single Catalyst expression — no UDF); only vectors in the query's
-    bucket or its hamming ≤ probe_radius neighbors are scored.  radius 2
-    probes 1+n+n(n-1)/2 of 2^n buckets (37/256 at n=8).  Multi-probe is
+    Scale path: each vector hashes to one of 2^8 buckets (a single
+    Catalyst expression — no UDF); only vectors in the query's bucket
+    or its hamming ≤ 2 neighbors are scored: 1+n+n(n-1)/2 of 2^n
+    buckets (37/256 at n=8).  Multi-probe is
     load-bearing: a true neighbor that sits near any hyperplane flips
     that sign bit, so the exact bucket alone has a recall cliff.
     Recall is corpus-dependent: this engine's test corpus has top-10
@@ -511,7 +512,7 @@ def ann_sign_lsh(
     (cosine ≥ 0.9) the same index recalls ≥ 0.8 (planted-pair test)."""
     qrow = e.orderBy("vec_id").select("vec_id", "embedding").first()
     qv = [float(x) for x in qrow["embedding"]]
-    planes = _lsh_planes(n_planes, len(qv))
+    planes = _lsh_planes(_LSH_PLANES, len(qv))
 
     def sign_bits(col):
         bits = []
@@ -536,15 +537,10 @@ def ann_sign_lsh(
         if sum(x * w for x, w in zip(qv, plane)) >= 0:
             q_bucket += 2**p
 
-    probes = {q_bucket}
-    if probe_radius >= 1:
-        probes |= {q_bucket ^ (1 << p) for p in range(n_planes)}
-    if probe_radius >= 2:
-        probes |= {
-            q_bucket ^ (1 << p) ^ (1 << r)
-            for p in range(n_planes)
-            for r in range(p + 1, n_planes)
-        }
+    flips = [1 << p for p in range(_LSH_PLANES)]
+    probes = {q_bucket} | {q_bucket ^ f for f in flips} | {
+        q_bucket ^ f ^ g for i, f in enumerate(flips) for g in flips[i + 1:]
+    }
     bucketed = e.withColumn("bucket", sign_bits(F.col("embedding")))
     cand = bucketed.filter(
         F.col("bucket").isin(sorted(probes))
@@ -558,7 +554,7 @@ def ann_sign_lsh(
             F.round(_cosine(F.col("embedding"), qv_col), 4).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-        .limit(k)
+        .limit(10)
     )
 
 
@@ -1040,13 +1036,13 @@ def q48(spark, sf):
 # (bit tricks over the 8 sign bits).  No hashes involved — q33 was
 # rows-only simply because nobody had written the SQL.
 # =====================================================================
-def _q49_sql(n_planes: int = 8, dim: int = 64) -> str:
-    planes = _lsh_planes(n_planes, dim)
+def _q49_sql() -> str:
+    planes = _lsh_planes(_LSH_PLANES, _EMB_DIM)
     plane_rows = ",\n        ".join(
         # repr() round-trips doubles exactly — a rounded literal could
         # flip a near-zero dot's sign and change bucket membership
         f"({p}, [{', '.join(repr(w) for w in planes[p])}])"
-        for p in range(n_planes)
+        for p in range(_LSH_PLANES)
     )
     return f"""
     WITH planes(p, w) AS (VALUES

@@ -38,10 +38,16 @@ from ..functions.charset import decode_html
 
 __all__ = ["lang_guess_col", "repetition_cols", "gopher_quality_cols", "curate"]
 
+# a curated doc has at most this many words
+_MAX_WORDS = 1_000_000
+# a language's trigram profile must score at least this, else 'unk'
+_MIN_NGRAM_SCORE = 2
 
-def lang_guess_col(text: str = "text"):
-    """Stopword-vote language guess (the q25 heuristic, reusable)."""
-    padded = F.concat(F.lit(" "), F.col(text), F.lit(" "))
+
+def lang_guess_col():
+    """Stopword-vote language guess over ``text`` (the q25 heuristic,
+    reusable)."""
+    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
     return (
         F.when(padded.like("% the %"), F.lit("en"))
         .when(padded.like("% der %") | padded.like("% und %"), F.lit("de"))
@@ -50,10 +56,10 @@ def lang_guess_col(text: str = "text"):
     )
 
 
-def repetition_cols(text: str = "text"):
-    """(n_words, dup_line_frac, top_bigram_frac) — the q55 map-only
-    Gopher signals as reusable columns."""
-    w = F.filter(F.split(F.trim(F.col(text)), r"\s+"), lambda x: x != "")
+def repetition_cols():
+    """(n_words, dup_line_frac, top_bigram_frac) of ``text`` — the q55
+    map-only Gopher signals as reusable columns."""
+    w = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != "")
     n = F.size(w)
     lines = F.when(
         n >= 1,
@@ -90,11 +96,9 @@ def repetition_cols(text: str = "text"):
 def curate(
     pages: DataFrame,
     min_words: int = 5,
-    max_words: int = 1_000_000,
     max_dup_line_frac: float = 0.3,
     max_top_bigram_frac: float = 0.2,
     sample_thresholds: dict[str, str] | None = None,
-    strip_markup_decoded: bool = True,
     redact: bool = False,
     host_short_frac: float | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -103,9 +107,9 @@ def curate(
     ``pages`` carries the input contract (url, warc_ts, html, text,
     lang); ``sample_thresholds`` maps lang → md5 hex prefix threshold
     (q58 semantics: keep iff md5(url) < threshold; default keeps
-    everything).  ``strip_markup_decoded`` runs the WET tag-strip over
-    rows decoded from html (rows arriving with text are trusted as
-    already extracted and never restripped).  ``redact`` (a policy
+    everything).  Rows decoded from html run the WET tag-strip (rows
+    arriving with text are trusted as already extracted and never
+    restripped).  ``redact`` (a policy
     choice, so opt-in) scrubs emails/IPv4/+phones to tags on the FINAL
     surviving rows — after dedup, so md5-identity still keys on source
     text and only kept rows pay the pass.  ``host_short_frac`` (opt-in,
@@ -125,11 +129,9 @@ def curate(
     needs = pages.filter(~has_text).drop("text")
     # union unconditionally: an empty `needs` side costs nothing at run
     # time, and probing it here (isEmpty) would scan the input twice
-    from_html = decode_html(needs)
-    if strip_markup_decoded:
-        from ..functions.wet import strip_markup
+    from ..functions.wet import strip_markup
 
-        from_html = from_html.withColumn("text", strip_markup("text"))
+    from_html = decode_html(needs).withColumn("text", strip_markup("text"))
     decoded = ready.unionByName(from_html, allowMissingColumns=False)
 
     # 2-3. language + quality, all map-only
@@ -143,7 +145,7 @@ def curate(
     )
     quality_ok = (
         (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words)
+        & (F.col("n_words") <= _MAX_WORDS)
         & (F.col("dup_line_frac") <= max_dup_line_frac)
         & (F.col("top_bigram_frac") <= max_top_bigram_frac)
     )
@@ -219,7 +221,7 @@ def curate(
     return curated, stats
 
 
-def gopher_quality_cols(text: str = "text"):
+def gopher_quality_cols():
     """The remaining Gopher (Rae et al. 2021, table A1) word-level
     quality signals as map-only columns — complements repetition_cols:
 
@@ -231,10 +233,11 @@ def gopher_quality_cols(text: str = "text"):
     * n_stopwords — how many of the Gopher probe stopwords (the, be,
       to, of, and, that, have, with) appear (Gopher: ≥2)
 
-    All expressible in ANSI SQL (array logic, no regex backrefs), so
-    the DuckDB oracle runs the identical rules.
+    All over ``text``, expressible in ANSI SQL (array logic, no regex
+    backrefs), so the DuckDB oracle runs the identical rules.
     """
-    w = F.filter(F.split(F.trim(F.col(text)), r"\s+"), lambda x: x != "")
+    text = F.col("text")
+    w = F.filter(F.split(F.trim(text), r"\s+"), lambda x: x != "")
     n = F.size(w)
     total_len = F.aggregate(
         w, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
@@ -246,19 +249,19 @@ def gopher_quality_cols(text: str = "text"):
     alpha_frac = F.when(n == 0, F.lit(0.0)).otherwise(
         F.round(alpha / n.cast("double"), 4)
     )
-    hashes = F.length(F.col(text)) - F.length(
-        F.regexp_replace(F.col(text), r"#", "")
+    hashes = F.length(text) - F.length(
+        F.regexp_replace(text, r"#", "")
     )
     # '…' plus literal '...' both count as ellipsis marks
     ell = (
-        F.length(F.col(text))
-        - F.length(F.regexp_replace(F.col(text), "…", ""))
-    ) + F.size(F.split(F.col(text), r"\.\.\.", -1)) - 1
+        F.length(text)
+        - F.length(F.regexp_replace(text, "…", ""))
+    ) + F.size(F.split(text, r"\.\.\.", -1)) - 1
     symbol_frac = F.when(n == 0, F.lit(0.0)).otherwise(
         F.round((hashes + ell) / n.cast("double"), 4)
     )
     stops = ("the", "be", "to", "of", "and", "that", "have", "with")
-    padded = F.concat(F.lit(" "), F.lower(F.col(text)), F.lit(" "))
+    padded = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
     n_stop = None
     for s in stops:
         c = F.when(padded.like(f"% {s} %"), 1).otherwise(0)
@@ -285,12 +288,12 @@ _TRIGRAM_PROFILES = {
 }
 
 
-def lang_id_ngram_cols(text: str = "text", min_score: int = 2):
+def lang_id_ngram_cols():
     """Character-n-gram language ID (the SURVEY brief's 'n-gram
     heuristic', distinct from the q25 stopword vote): per language,
     count how many of its profile trigrams OCCUR in the lowercased
-    text; predict the max with a fixed precedence tie-break
-    (en > de > fr), 'unk' below ``min_score``.
+    ``text``; predict the max with a fixed precedence tie-break
+    (en > de > fr), 'unk' below ``_MIN_NGRAM_SCORE``.
 
     Shape: pure Catalyst — 48 ``instr`` probes folded per row, no
     explode, no shuffle, identical logic in ANSI SQL.  A rank-order
@@ -298,7 +301,7 @@ def lang_id_ngram_cols(text: str = "text", min_score: int = 2):
     one window per doc; presence voting keeps lang-ID map-only at
     100 TB and is right for the coarse en/de/fr/unk split the
     curation pipeline consumes."""
-    low = F.lower(F.col(text))
+    low = F.lower(F.col("text"))
     scores = {}
     for lang, grams in _TRIGRAM_PROFILES.items():
         s = None
@@ -309,7 +312,7 @@ def lang_id_ngram_cols(text: str = "text", min_score: int = 2):
     se, sd, sf = scores["en"], scores["de"], scores["fr"]
     best = F.greatest(se, sd, sf)
     lang = (
-        F.when(best < min_score, F.lit("unk"))
+        F.when(best < _MIN_NGRAM_SCORE, F.lit("unk"))
         .when((se >= sd) & (se >= sf), F.lit("en"))
         .when(sd >= sf, F.lit("de"))
         .otherwise(F.lit("fr"))

@@ -18,9 +18,22 @@ hidden partitioning expressed through Spark's bucketed-table catalog);
 the layout is a field of its manifest entry, so one MergeTable serves
 both and a store reopens without being told which it is.
 
-Swap point: ``IcebergMergeTable`` below gates on the Spark catalog
-having Iceberg support; when the jar is present it takes over with the
-same API (append/overwrite/commit semantics mapping to real snapshots).
+Swap point: a real Iceberg catalog replaces ``MergeTable`` behind the
+same five calls FrontierStore makes, with no other change:
+
+* ``commit_base(df)`` → ``df.writeTo(tbl).using("iceberg")``
+  ``.createOrReplace()``, partitioned by ``bucket(N, key)`` for the
+  bucketed layout;
+* ``commit_delta(spark, df)`` → ``MERGE INTO tbl USING df ON key``
+  (update matched, insert unmatched) — the O(|round|)-bytes commit
+  then comes from the format itself;
+* ``read(spark)`` → ``spark.table(tbl)``;
+* ``snapshots()`` → the ``tbl.snapshots`` metadata table;
+* ``rollback_to(id)`` → the ``system.rollback_to_snapshot`` procedure.
+
+Retention (``compact``/``expire_keep_last``) maps onto Iceberg's own
+snapshot expiry.  It needs the Iceberg Spark runtime jar and a
+configured catalog, neither of which this package ships.
 """
 
 from __future__ import annotations
@@ -257,8 +270,8 @@ class MergeTable:
     A bucketed base is an external table whose catalog entry is
     re-registered from the manifest in a later session; retention GC
     deletes snapshot dirs by path.  On a shared Hive/Glue metastore,
-    point ``path`` at storage this table exclusively owns; the Iceberg
-    path (IcebergMergeTable below) delegates GC to the catalog instead.
+    point ``path`` at storage this table exclusively owns (an Iceberg
+    catalog would own GC instead — see the module docstring).
     """
 
     def __init__(
@@ -397,116 +410,3 @@ class MergeTable:
             for root, _, files in os.walk(d)
             for f in files
         )
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is on the classpath (not in this
-    sandbox; on a real cluster pass --packages org.apache.iceberg:…)."""
-    try:
-        spark._jvm.org.apache.iceberg.Table  # type: ignore[union-attr]
-        return True
-    except Exception:
-        return False
-
-
-class IcebergMergeTable:
-    """The MergeTable contract on a REAL Iceberg catalog — the design
-    point the parquet emulation above stands in for.  Requires the
-    Iceberg Spark runtime jar plus a configured catalog, e.g.::
-
-        --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:…
-        --conf spark.sql.catalog.ice=org.apache.iceberg.spark.SparkCatalog
-        --conf spark.sql.catalog.ice.type=hadoop
-        --conf spark.sql.catalog.ice.warehouse=/path/wh
-
-    Mapping (same API as MergeTable so FrontierStore can swap in):
-      commit_base  → createOrReplace (new snapshot, full image)
-      commit_delta → MERGE INTO on the key (upsert; Iceberg writes
-                     only changed data files — the O(|round|) bytes
-                     property comes from the format itself)
-      read         → spark.table (current snapshot)
-      snapshots    → the table's ``.snapshots`` metadata table
-      rollback_to  → system.rollback_to_snapshot procedure
-    Bucketed layout: ``bucket(N, key)`` hidden partitioning at create,
-    so merge-on-read and key joins reuse the layout (the analog of
-    MergeTable's ``n_buckets`` base) without a catalog bucket spec.
-
-    Exercised by tests/test_checkpoint.py::test_iceberg_merge_table
-    when SPARK_GRAFT_ICEBERG=1 (skipped cleanly in this sandbox)."""
-
-    _IDENT_RE = None  # compiled lazily; class-level to share
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        ident: str,
-        key: str = "url_hash",
-        n_buckets: int | None = None,
-    ):
-        if not iceberg_available(spark):
-            raise RuntimeError("Iceberg runtime not on the classpath")
-        import re
-
-        # ident/key are interpolated into SQL text (MERGE INTO has no
-        # parameter binding for table names) — restrict them to plain
-        # dotted identifiers so a caller can't smuggle SQL through them
-        if IcebergMergeTable._IDENT_RE is None:
-            IcebergMergeTable._IDENT_RE = re.compile(
-                r"^[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*$"
-            )
-        for label, value in (("ident", ident), ("key", key)):
-            if not IcebergMergeTable._IDENT_RE.match(value):
-                raise ValueError(f"invalid {label!r}: {value!r}")
-        self.spark = spark
-        self.ident = ident
-        self.key = key
-        self.n_buckets = n_buckets
-        # per-instance source-view name: a session-global "_ice_delta_src"
-        # let concurrent tables in one session clobber each other's views
-        self._src_view = f"_ice_delta_src_{id(self):x}"
-
-    def commit_base(self, df: DataFrame, note: str = "") -> str:
-        w = df.writeTo(self.ident).using("iceberg")
-        if self.n_buckets:
-            w = w.partitionedBy(F.bucket(self.n_buckets, self.key))
-        w.createOrReplace()
-        return str(self._current_snapshot_id())
-
-    def commit_delta(self, spark: SparkSession, df: DataFrame, note: str = "") -> str:
-        df.createOrReplaceTempView(self._src_view)
-        try:
-            spark.sql(
-                f"MERGE INTO {self.ident} t USING {self._src_view} s "
-                f"ON t.{self.key} = s.{self.key} "
-                "WHEN MATCHED THEN UPDATE SET * "
-                "WHEN NOT MATCHED THEN INSERT *"
-            )
-        finally:
-            spark.catalog.dropTempView(self._src_view)
-        return str(self._current_snapshot_id())
-
-    def read(self, spark: SparkSession | None = None) -> DataFrame:
-        return (spark or self.spark).table(self.ident)
-
-    def snapshots(self) -> list[dict]:
-        rows = self.spark.sql(
-            f"SELECT snapshot_id, operation FROM {self.ident}.snapshots "
-            "ORDER BY committed_at"
-        ).collect()
-        return [
-            {"id": str(r["snapshot_id"]), "kind": r["operation"]} for r in rows
-        ]
-
-    def rollback_to(self, snapshot_id: str) -> None:
-        catalog = self.ident.split(".", 1)[0]
-        self.spark.sql(
-            f"CALL {catalog}.system.rollback_to_snapshot"
-            f"('{self.ident.split('.', 1)[1]}', {int(snapshot_id)})"
-        )
-
-    def _current_snapshot_id(self) -> int:
-        row = self.spark.sql(
-            f"SELECT snapshot_id FROM {self.ident}.snapshots "
-            "ORDER BY committed_at DESC LIMIT 1"
-        ).first()
-        return int(row["snapshot_id"])

@@ -1,6 +1,6 @@
 """Snapshot-checkpointed tables: crash safety, merge-on-read and
 compaction on both base layouts (plain parquet and bucketed), snapshot
-expiry, catalog loss, and the Iceberg swap point."""
+expiry and catalog loss."""
 
 from __future__ import annotations
 
@@ -271,32 +271,3 @@ def test_cobucketed_join_has_no_exchange(spark, tmp_path):
     assert "Exchange" not in plan2, plan2
     assert anti.count() == 5_000
 
-
-# --------------------------------------------- real Iceberg path (opt)
-def test_iceberg_merge_table(spark):
-    """Maps commit_base/commit_delta/read/rollback onto a REAL Iceberg
-    table.  Needs the Iceberg Spark runtime jar + an 'ice' catalog
-    (see IcebergMergeTable docstring) — run with SPARK_GRAFT_ICEBERG=1
-    on a cluster that has them; skipped cleanly without them."""
-    from dart_xbrl_crawler_spark.sources.checkpoint import (
-        IcebergMergeTable,
-        iceberg_available,
-    )
-
-    if os.environ.get("SPARK_GRAFT_ICEBERG") != "1":
-        pytest.skip("SPARK_GRAFT_ICEBERG not set")
-    if not iceberg_available(spark):
-        pytest.skip("Iceberg runtime jar not on the classpath")
-
-    t = IcebergMergeTable(spark, "ice.db.frontier_t", key="k")
-    base = spark.range(100).select(F.col("id").alias("k"), F.lit("a").alias("v"))
-    snap0 = t.commit_base(base)
-    t.commit_delta(
-        spark,
-        spark.range(5).select(F.col("id").alias("k"), F.lit("b").alias("v")),
-    )
-    rows = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert len(rows) == 100 and rows[0] == "b" and rows[50] == "a"
-    assert len(t.snapshots()) == 2
-    t.rollback_to(snap0)
-    assert {r["v"] for r in t.read(spark).collect()} == {"a"}

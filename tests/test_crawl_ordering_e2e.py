@@ -16,7 +16,8 @@ def test_multi_round_visit_order_matches_reference(spark, fixture_bundle, tmp_pa
     pages, seeds, corp_map, robots = fixture_bundle
     pages_df = spark.createDataFrame(pages, schema=PAGES)
     seeds_df = spark.createDataFrame(seeds, schema=SEEDS)
-    # single-host frontier (all DART urls) with a per-round cap of 3
+    # single-host frontier (all DART urls); a 1 ms crawl delay and a
+    # 3 ms round give it a per-round budget of 3
     robots_df = spark.createDataFrame(
         [("dart.fss.or.kr", None, 1)], schema=ROBOTS
     )
@@ -34,8 +35,7 @@ def test_multi_round_visit_order_matches_reference(spark, fixture_bundle, tmp_pa
             robots_df,
             fixtures.RUN_TS,
             round_id=rnd,
-            round_ms=60_000,
-            max_per_host=3,
+            round_ms=3,
         )
         # within a round, visit order = priority desc (priority encodes
         # the reference visit rank)

@@ -1,4 +1,6 @@
-"""Every engine definition is reached from a path the program runs.
+"""Every engine definition is reached from a path the program runs,
+every defaulted engine parameter is set by one, and every engine import
+is used.
 
 A pure-AST name closure over the top-level definitions of
 ``dart_xbrl_crawler_spark/``; no Spark starts.  The roots are the CLI,
@@ -8,7 +10,8 @@ module-level statements that run at import.  A name reaches every
 top-level definition of that name in any module, and an identifier
 inside a string literal counts as a name (``bench.py`` embeds code in
 strings); docstrings do not.  What the closure leaves unreached must be
-on ``KEEP``, each entry with the reason it stays.
+on ``KEEP``, each entry with the reason it stays.  The parameter rule
+and its ``PARAMS_KEEP`` list are described above ``PARAMS_KEEP``.
 """
 
 from __future__ import annotations
@@ -34,13 +37,6 @@ KEEP = {
     "operators.dedup": {"probe_seen"},
     # the input schemas tests and the verify recipe build tables with
     "schemas": {"PAGES", "ROBOTS"},
-    # robots.txt → the wildcard rules table apply_robots gates on
-    "operators.politeness": {
-        "robots_rules_from_txt", "parse_robots_txt", "_rule_to_match",
-        "ROBOTS_RULES_WILD_SCHEMA",
-    },
-    # the MergeTable contract on a real Iceberg catalog (opt-in test)
-    "sources.checkpoint": {"IcebergMergeTable", "iceberg_available"},
 }
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -122,9 +118,8 @@ def scan() -> tuple[dict[str, set[str]], set[str], set[str]]:
     return defs, queries, roots
 
 
-def unreached(defs: dict[str, set[str]], queries: set[str], roots: set[str]) -> list[str]:
-    """The definitions of ``scan()``'s result that no root reaches and
-    ``KEEP`` does not hold."""
+def reached(defs: dict[str, set[str]], queries: set[str], roots: set[str]) -> set[str]:
+    """The definitions of ``scan()``'s result that a root reaches."""
     by_name: dict[str, list[str]] = {}
     for key in defs:
         by_name.setdefault(key.rsplit(".", 1)[1], []).append(key)
@@ -135,13 +130,19 @@ def unreached(defs: dict[str, set[str]], queries: set[str], roots: set[str]) -> 
         if key not in seen:
             seen.add(key)
             todo += [k for n in defs[key] for k in by_name.get(n, [])]
-    out = []
-    for key in sorted(set(defs) - seen):
-        mod, name = key.rsplit(".", 1)
-        keep = KEEP.get(mod, ())
-        if keep != "*" and name not in keep:
-            out.append(key)
-    return out
+    return seen
+
+
+def _kept(mod: str, name: str) -> bool:
+    keep = KEEP.get(mod, ())
+    return keep == "*" or name in keep
+
+
+def unreached(defs: dict[str, set[str]], queries: set[str], roots: set[str]) -> list[str]:
+    """The definitions of ``scan()``'s result that no root reaches and
+    ``KEEP`` does not hold."""
+    seen = reached(defs, queries, roots)
+    return [key for key in sorted(set(defs) - seen) if not _kept(*key.rsplit(".", 1))]
 
 
 def test_every_engine_definition_is_reached():
@@ -155,3 +156,239 @@ def test_every_engine_definition_is_reached():
         "engine definitions that no root reaches (delete them, or wire "
         "them into a path the program runs):\n  " + "\n  ".join(missing)
     )
+
+
+# -- parameters -------------------------------------------------------------
+#
+# A defaulted parameter is a knob only if something sets it.  It is set
+# when a call from a root, or from engine code a root reaches, passes it
+# by position or keyword.  Calls match by name; a class call is a call
+# of its ``__init__``.  Passing the caller's own defaulted parameter on
+# (``f(x=x)``) sets the callee's only if the caller's is set, resolved
+# transitively.  Code embedded in a string (``bench.py``'s driver
+# script) is scanned as code.  ``**f()`` sets the keys of the dict
+# literal ``f`` returns; any other ``*``/``**`` into an engine callee
+# fails, so it can never exempt a callee silently.
+# Parameters of ``KEEP`` definitions are exempt, and so is
+# ``cli.main(argv)``.  Every other defaulted parameter that nothing sets
+# must be a constant, or be on PARAMS_KEEP with the reason it stays.
+PARAMS_KEEP = {
+    # a test sets each to reach a branch that needs web-scale input
+    # otherwise: the quota regime and the shuffle join of host counts
+    "operators.politeness.pop_round(exact_rank_max)": "quota regime at test scale",
+    "operators.politeness.pop_round(broadcast_hosts_max)": "host-count shuffle join",
+    # the shuffle anti-join over a confirmed set too big to broadcast
+    "operators.dedup.dedup_urls(broadcast_max_rows)": "confirmed-set shuffle join",
+    # a fetch width that grows with the selected set
+    "operators.politeness.fetch_partitioning(target_rows_per_task)": "fetch width growth",
+    "operators.politeness.fetch_width(target_rows_per_task)": "fetch width growth",
+    # the frequent-signature guard of the mirror self-join
+    "operators.hoststats.mirror_host_pairs(max_hosts_per_sig)": "frequent-sig guard",
+    # folding the metrics chains, and GC of old seen-filter images
+    "operators.frontier.FrontierStore(metrics_compact_every)": "metrics-chain fold",
+    "operators.frontier.FrontierStore(filter_keep_last)": "filter-image GC",
+    # deployment settings of the frontier table: the bucketed base (the
+    # 10^10-row layout) and snapshot retention
+    "operators.frontier.FrontierStore(n_buckets)": "bucketed-base layout",
+    "operators.frontier.FrontierStore(expire_keep_last)": "snapshot retention",
+    "sources.checkpoint.MergeTable(n_buckets)": "bucketed-base layout",
+    "sources.checkpoint.MergeTable(expire_keep_last)": "snapshot retention",
+    # the parsers share one (body, aux) signature and are called only
+    # through the _REGISTRY table, whose call passes aux but is not a
+    # call by name the scan can match
+    "doc_parsers._parse_mini(aux)": "uniform parser signature",
+    "doc_parsers._parse_xbrl_xml(aux)": "uniform parser signature",
+}
+_FNS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _params(fn: ast.AST, method: bool) -> tuple[list[str], set[str]]:
+    """(positional parameter names, ``self``/``cls`` dropped; the
+    defaulted ones)."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args]
+    if method and not any(getattr(d, "id", None) == "staticmethod"
+                          for d in fn.decorator_list):
+        pos = pos[1:]
+    defaulted = set(pos[len(pos) - len(a.defaults):])
+    defaulted |= {p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+    return pos, defaulted
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def _dict_keys(fn: ast.AST) -> set[str] | None:
+    """The keys of the dict literal every ``return`` of ``fn`` gives."""
+    rets = [n.value for n in ast.walk(fn) if isinstance(n, ast.Return)]
+    if not rets or not all(isinstance(r, ast.Dict) for r in rets):
+        return None
+    keys = [k for r in rets for k in r.keys]
+    if not all(isinstance(k, ast.Constant) and isinstance(k.value, str) for k in keys):
+        return None
+    return {k.value for k in keys}
+
+
+def _embedded(node: ast.AST, docs: set[int]) -> list[ast.AST]:
+    """The code that string literals under ``node`` parse as."""
+    out = []
+    for n in ast.walk(node):
+        if isinstance(n, ast.JoinedStr):
+            text = "".join(v.value if isinstance(v, ast.Constant) else "_"
+                           for v in n.values)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docs:
+            text = n.value
+        else:
+            continue
+        if "(" not in text:
+            continue
+        try:
+            out.append(ast.parse(text))
+        except (SyntaxError, ValueError):
+            pass
+    return out
+
+
+def unset_params() -> tuple[set[str], list[str], int]:
+    """→ (defaulted engine parameters nothing sets, as ``mod.fn(param)``;
+    the ``*``/``**`` calls into engine callees that the scan cannot
+    resolve; the number of defaulted engine parameters)."""
+    defs, queries, roots = scan()
+    live = reached(defs, queries, roots)
+    funcs: dict[str, list[tuple[str, list[str], set[str]]]] = {}
+    dict_fns: dict[str, set[str]] = {}
+    checked: set[str] = set()
+    # (scope node, caller's defaulted parameter → its key)
+    scopes: list[tuple[ast.AST, dict[str, str]]] = []
+    trees = []  # every parsed file, alive so the docstring ids stay unique
+    docs: set[int] = set()
+    for f in ROOT_FILES:
+        if PKG not in f.parents:
+            tree = ast.parse(f.read_text())
+            trees.append(tree)
+            docs |= _docstrings(tree)
+            scopes.append((tree, {}))
+            for n in ast.walk(tree):
+                if isinstance(n, _FNS) and (keys := _dict_keys(n)) is not None:
+                    dict_fns[n.name] = keys
+    for f in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(f.read_text())
+        trees.append(tree)
+        docs |= _docstrings(tree)
+        mod = ".".join(f.relative_to(PKG).with_suffix("").parts)
+        is_root = f == PKG / "cli.py"
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            names = _targets(stmt) or [None]
+            live_stmt = is_root or any(
+                n is None or f"{mod}.{n}" in live for n in names)
+            if isinstance(stmt, ast.ClassDef):
+                members = [(m, f"{stmt.name}.{getattr(m, 'name', '')}", True)
+                           for m in stmt.body]
+            else:
+                members = [(stmt, getattr(stmt, "name", ""), False)]
+            for node, qual, method in members:
+                if not isinstance(node, _FNS):
+                    if live_stmt:
+                        scopes.append((node, {}))
+                    continue
+                pos, dflt = _params(node, method)
+                init = method and node.name == "__init__"
+                label = f"{mod}.{qual.rsplit('.', 1)[0] if init else qual}"
+                keys = {p: f"{label}({p})" for p in dflt}
+                call_name = stmt.name if init else node.name
+                funcs.setdefault(call_name, []).append((label, pos, dflt))
+                if (k := _dict_keys(node)) is not None:
+                    dict_fns[node.name] = k
+                if not _kept(mod, stmt.name) and f"{mod}.{qual}" != "cli.main":
+                    checked |= set(keys.values())
+                if live_stmt:
+                    scopes.append((node, keys))
+    sets: set[str] = set()
+    fwd: list[tuple[str, str]] = []
+    bad: list[str] = []
+
+    def record(cands, name, value, caller):
+        for label, _, dflt in cands:
+            if name in dflt:
+                key = f"{label}({name})"
+                if isinstance(value, ast.Name) and value.id in caller:
+                    fwd.append((key, caller[value.id]))
+                else:
+                    sets.add(key)
+
+    todo = list(scopes)
+    while todo:
+        node, caller = todo.pop()
+        todo += [(t, {}) for t in _embedded(node, docs)]
+        for call in ast.walk(node):
+            if not isinstance(call, ast.Call) or _callee(call) not in funcs:
+                continue
+            cands = funcs[_callee(call)]
+            for i, arg in enumerate(call.args):
+                if isinstance(arg, ast.Starred):
+                    bad.append(f"*{ast.unparse(arg.value)} into {_callee(call)}")
+                    break
+                for c in cands:
+                    if i < len(c[1]):
+                        record([c], c[1][i], arg, caller)
+            for kw in call.keywords:
+                if kw.arg is not None:
+                    record(cands, kw.arg, kw.value, caller)
+                elif isinstance(kw.value, ast.Call) and _callee(kw.value) in dict_fns:
+                    for k in dict_fns[_callee(kw.value)]:
+                        record(cands, k, None, caller)
+                else:
+                    bad.append(f"**{ast.unparse(kw.value)} into {_callee(call)}")
+    grew = True
+    while grew:
+        new = {key for key, via in fwd if via in sets} - sets
+        sets |= new
+        grew = bool(new)
+    return checked - sets, bad, len(checked)
+
+
+def test_every_engine_parameter_is_set_or_constant():
+    unset, bad, n_params = unset_params()
+    # the scan is not vacuous: perfbench's **self._round_args() and
+    # bench.py's embedded driver script both set parameters
+    assert n_params >= 80
+    assert "operators.frontier.FrontierStore.run_round(salt_buckets)" not in unset
+    assert "plans.bench_support.extract_job(limit)" not in unset
+    missing = sorted(unset - set(PARAMS_KEEP))
+    assert not missing, (
+        "defaulted engine parameters that no root sets (make each a "
+        "constant, or add it to PARAMS_KEEP with its reason):\n  "
+        + "\n  ".join(missing)
+    )
+    assert not bad, (
+        "*/** arguments into engine callees that the scan cannot resolve "
+        "(pass the parameters by name):\n  " + "\n  ".join(bad)
+    )
+    stale = sorted(set(PARAMS_KEEP) - unset)
+    assert not stale, "PARAMS_KEEP entries that a caller now sets:\n  " + "\n  ".join(stale)
+
+
+def test_every_engine_import_is_used():
+    """Each name an engine module imports is referenced in it (a name in
+    ``__all__`` counts)."""
+    unused = []
+    for f in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(f.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for n in ast.walk(tree):
+            if (isinstance(n, ast.Assign) and any(getattr(t, "id", None) == "__all__"
+                                                   for t in n.targets)):
+                used |= {e.value for e in n.value.elts}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and n.module == "__future__":
+                continue
+            if isinstance(n, (ast.Import, ast.ImportFrom)):
+                for a in n.names:
+                    name = a.asname or a.name.split(".")[0]
+                    if name not in used:
+                        unused.append(f"{f.relative_to(REPO)}:{n.lineno} {name}")
+    assert not unused, "unused imports in engine modules:\n  " + "\n  ".join(unused)

@@ -55,7 +55,7 @@ def test_robots_rules_longest_match_evaluation(spark):
     txt_df = spark.createDataFrame(
         pd.DataFrame({"host": ["h.example"], "robots_txt": [ROBOTS_TXT]})
     )
-    rules_dim = P.robots_rules_from_txt(spark, txt_df)
+    rules_dim = P.robots_rules_from_txt(txt_df)
     urls = [
         ("https://h.example/private/secret", True),    # /private disallow
         ("https://h.example/private/public/x", False), # longer Allow wins
@@ -86,6 +86,45 @@ def test_robots_rules_longest_match_evaluation(spark):
     }
     assert delays["h.example"] == 250
     assert delays["unlisted.example"] == P.DEFAULT_CRAWL_DELAY_MS
+
+
+def test_cli_fetch_parses_robots_txt(spark, tmp_path, monkeypatch):
+    """``fetch --robots`` given robots.txt bodies (host, robots_txt)
+    gates the round on the parsed wildcard rules: ``Disallow: /*.pdf$``
+    blocks the .pdf url and leaves the .pdfx url to be fetched."""
+    from dart_xbrl_crawler_spark import cli
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    # reuse the test session; the CLI normally owns (and stops) its own
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    pdf, pdfx, page = (f"https://w.example/{p}" for p in ("doc.pdf", "doc.pdfx", "a.html"))
+    urls = [pdf, pdfx, page]
+    paths = {k: str(tmp_path / k) for k in ("seeds", "pages", "robots", "store")}
+    spark.createDataFrame(
+        pd.DataFrame({"url": urls, "priority": [0.0] * len(urls)})
+    ).write.parquet(paths["seeds"])
+    spark.createDataFrame(
+        pd.DataFrame({
+            "url": urls,
+            "html": [b"<html>p</html>"] * len(urls),
+            "warc_ts": [pd.Timestamp("2026-01-01")] * len(urls),
+        }),
+        schema="url string, html binary, warc_ts timestamp",
+    ).write.parquet(paths["pages"])
+    spark.createDataFrame(
+        pd.DataFrame({"host": ["w.example"],
+                      "robots_txt": ["User-agent: *\nDisallow: /*.pdf$\n"]})
+    ).write.parquet(paths["robots"])
+
+    for argv in (["bootstrap", "--seeds", paths["seeds"]],
+                 ["fetch", "--pages", paths["pages"], "--robots", paths["robots"]]):
+        assert cli.main(["--run-ts", RUN_TS, *argv, "--store", paths["store"]]) == 0
+    states = {
+        r["url"]: r["state"]
+        for r in FrontierStore(paths["store"]).table.read(spark).collect()
+    }
+    assert states == {pdf: "robots_blocked", pdfx: "fetched", page: "fetched"}
 
 
 # ---------------------------------------------------------------------
@@ -121,7 +160,7 @@ def test_delta_commit_bytes_scale_with_round(spark, tmp_path):
     for rid in range(3):
         snap, fetched = store.run_round(
             spark, pages, robots, RUN_TS, round_id=rid, round_ms=1000,
-            salt_buckets=4, n_partitions=4,
+            salt_buckets=4,
         )
         delta_bytes.append(store.table.snapshot_bytes(snap))
     # every round's snapshot is a small fraction of the base image

@@ -19,12 +19,12 @@ def _plan(df) -> str:
 # --------------------------------------------------- crawl-delay clamp
 def test_parse_robots_crawl_delay_zero_clamped():
     rules, delay = P.parse_robots_txt(
-        "User-agent: *\nDisallow: /x\nCrawl-delay: 0\n"
+        "User-agent: *\nDisallow: /x\nCrawl-delay: 0\n", P.USER_AGENT
     )
     assert delay == 1  # 0 → 1 ms floor, never a zero divisor
-    _, neg = P.parse_robots_txt("User-agent: *\nCrawl-delay: -3\n")
+    _, neg = P.parse_robots_txt("User-agent: *\nCrawl-delay: -3\n", P.USER_AGENT)
     assert neg == 1
-    _, frac = P.parse_robots_txt("User-agent: *\nCrawl-delay: 0.0004\n")
+    _, frac = P.parse_robots_txt("User-agent: *\nCrawl-delay: 0.0004\n", P.USER_AGENT)
     assert frac == 1
 
 
@@ -69,7 +69,7 @@ def test_wildcard_rules_evaluation(spark):
         "Allow: /private-open/data\n"
     )
     rules_dim = P.robots_rules_from_txt(
-        spark, spark.createDataFrame(pd.DataFrame({"host": ["w.example"], "robots_txt": [txt]}))
+        spark.createDataFrame(pd.DataFrame({"host": ["w.example"], "robots_txt": [txt]}))
     )
     from dart_xbrl_crawler_spark.functions.urls import with_url_canon
 

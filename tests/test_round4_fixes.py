@@ -318,13 +318,11 @@ def test_decode_png_all_filters_roundtrip():
     assert decode_png(b"not a png") is None
 
 
-# ------------------------------- web-scale dims: no forced broadcast
-def test_robots_and_backoff_no_forced_broadcast(spark):
-    """With broadcast gating OFF (a 10^7+-host dim would OOM the driver
-    if force-broadcast), the plans contain no BroadcastExchange that
-    Catalyst didn't choose itself — verified under a disabled
-    auto-broadcast threshold, where the robots join must appear as a
-    shuffle join."""
+# ------------------------------------------- robots/backoff dims broadcast
+def test_robots_and_backoff_dims_broadcast(spark):
+    """The robots and backoff joins broadcast their dim even with
+    Catalyst's auto-broadcast off, and the pop over them keeps its
+    budget semantics."""
     from dart_xbrl_crawler_spark.functions.urls import with_url_canon
 
     frontier = with_url_canon(
@@ -347,23 +345,16 @@ def test_robots_and_backoff_no_forced_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         plan_g = P.apply_robots(
-            frontier, robots, broadcast_robots=False
+            frontier, robots
         )._jdf.queryExecution().executedPlan().toString()
         plan_b = P.apply_backoff(
-            robots, stats, broadcast=False
+            robots, stats
         )._jdf.queryExecution().executedPlan().toString()
-        out = P.pop_round(
-            frontier, robots, round_ms=1000, broadcast_robots=False
-        )
+        out = P.pop_round(frontier, robots, round_ms=1000)
         n_sel = out.filter(F.col("selected")).count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-    assert "BroadcastExchange" not in plan_g, plan_g
-    assert "BroadcastExchange" not in plan_b, plan_b
-    # semantics unchanged: budget 1000/10=100 ≥ all queues → all pop
+    assert "BroadcastExchange" in plan_g, plan_g
+    assert "BroadcastExchange" in plan_b, plan_b
+    # budget 1000/10=100 ≥ all queues → all pop
     assert n_sel == 40
-    # default path still broadcasts (the common small-dim case)
-    plan_default = P.apply_robots(
-        frontier, robots
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" in plan_default

@@ -553,11 +553,3 @@ def test_recrawl_covers_failed_rows(spark, tmp_path):
     n = store.recrawl(spark, "2026-02-01 00:00:00")
     assert n == 2  # the FAILED row requeues along with the fetched one
     assert store.state_counts(spark) == {"queued": 2}
-    # failed-only retry: refetch, then requeue just the failures
-    store.run_round(
-        spark, pages, robots, "2026-03-01 00:00:00", round_id=1,
-        round_ms=100_000,
-    )
-    n2 = store.recrawl(spark, "2026-04-01 00:00:00", states=("failed",))
-    assert n2 == 1
-    assert store.state_counts(spark) == {"fetched": 1, "queued": 1}
