@@ -50,13 +50,16 @@ def entry(spark: SparkSession) -> DataFrame:
         schema="host string, disallow_prefix string, crawl_delay_ms long",
     )
     popped = P.pop_round(frontier, robots, round_ms=60_000, salt_buckets=16)
+    # the pop returns only the round's rows: candidates are the frontier's
+    flags = popped.groupBy("host").agg(
+        F.sum(F.col("selected").cast("int")).alias("n_selected"),
+        F.sum(F.col("robots_blocked").cast("int")).alias("n_robots_blocked"),
+    )
     return (
-        popped.groupBy("host")
-        .agg(
-            F.count("*").alias("n_candidates"),
-            F.sum(F.col("selected").cast("int")).alias("n_selected"),
-            F.sum(F.col("robots_blocked").cast("int")).alias("n_robots_blocked"),
-        )
+        frontier.groupBy("host")
+        .agg(F.count("*").alias("n_candidates"))
+        .join(flags, "host", "left")
+        .fillna(0, subset=["n_selected", "n_robots_blocked"])
         .orderBy("host")
     )
 

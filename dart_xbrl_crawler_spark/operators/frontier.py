@@ -444,13 +444,10 @@ class FrontierStore:
         queued = frontier.filter(F.col("state") == "queued")
 
         # popped feeds two consumers (fetch set, robots transitions) →
-        # materialize once, and only the rows they read: the pop returns
-        # the whole queue, which a round must never cache
-        popped = (
-            P.pop_round(queued, robots, round_ms=round_ms, salt_buckets=salt_buckets)
-            .filter(F.col("selected") | F.col("robots_blocked"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        # materialize once; it holds only the round's rows
+        popped = P.pop_round(
+            queued, robots, round_ms=round_ms, salt_buckets=salt_buckets
+        ).persist(StorageLevel.MEMORY_AND_DISK)
 
         selected = popped.filter(F.col("selected"))
         width = P.fetch_width(selected)

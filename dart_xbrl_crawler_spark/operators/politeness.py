@@ -7,20 +7,28 @@ wall-clock throttling in one process.  Distributed, the budget becomes
 *data*: each crawl round grants every host
 ``round_ms / crawl_delay_ms`` fetch slots; candidate URLs rank within
 their host (priority desc, discovered_ts, url_hash — explicit
-tie-breaks) and only ``rank <= budget`` rows are popped.
+tie-breaks) and only ``rank <= budget`` rows are popped.  The pop
+returns only the rows that leave the queue this round (selected or
+robots-blocked); ``host_rank`` is a selected row's rank in its host's
+queue.
 
 Skew: one giant host (dart.fss.or.kr, ≥60% of the frontier) would pin
-one task.  The *budget* must be host-global (computed pre-salt via the
-window), but the *fetch work* is salted: ``salt = pmod(url_hash, S)``
-and a ``repartition(host, salt)`` spreads the giant host over S tasks.
-AQE skew-join handles residual imbalance (session.py enables it).
+one task.  The ranking is bounded by a literal (the largest budget the
+robots dim admits), so each input partition ships at most that many
+rows per host to the host's ranking task; a frontier with more input
+partitions than salt buckets first cuts each (host, salt) bucket to
+the same bound, ``salt = pmod(url_hash, S)``.  The *fetch work* is
+salted too: a ``repartition(host, salt)`` spreads the giant host over
+S tasks.  AQE skew-join handles residual imbalance (session.py enables
+it).
 """
 
 from __future__ import annotations
 
+import math
 import re
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -244,8 +252,7 @@ def apply_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     """Mark rows blocked by robots rules; adds ``robots_blocked`` and
     ``crawl_delay_ms``.  The join broadcasts the dim: one row per host,
     orders of magnitude smaller than the frontier (a dim too big to
-    broadcast would need a cardinality gate like pop_round's host
-    counts).
+    broadcast would need a cardinality gate).
 
     Accepts three dim shapes:
       * wildcard rules (host, rules array<struct<prefix, pattern,
@@ -347,21 +354,43 @@ def pop_round(
     round_ms: int = 60_000,
     salt_buckets: int = 32,
     exact_rank_max: int = 100_000,
-    broadcast_hosts_max: int = 262_144,
-    n_hosts_hint: int | None = None,
 ) -> DataFrame:
     """Select this round's fetch set.
 
-    Returns the frontier columns + ``robots_blocked`` + ``host_rank`` +
-    ``selected`` + ``partition_salt`` so the caller can transition
-    states (selected → fetch; robots_blocked → terminal) and
-    repartition by (host, partition_salt) for the fetch stage.  Every
-    input row comes back, most with neither flag set: a caller that
-    keeps the output should keep only the flagged rows, the round's
-    O(|round|) share of the queue.
+    Returns only the rows that leave the queue this round: the selected
+    rows and the robots-blocked ones, each with the frontier columns +
+    ``robots_blocked`` + ``crawl_delay_ms`` + ``partition_salt`` +
+    ``selected`` + ``host_rank``, so the caller can transition states
+    (selected → fetch; robots_blocked → terminal) and repartition by
+    (host, partition_salt) for the fetch stage.  A row that stays
+    queued does not come back.
 
-    Without ``n_hosts_hint`` the host counts run as one eager
-    checkpoint whose rows are counted in that same job.
+    ``host_rank`` is a selected row's rank in its host's queue (priority
+    desc, discovered_ts, url_hash), 1 for the host's first pop.  It is
+    null on robots-blocked rows, and on the rows the quota regime below
+    selects without a host-wide rank.
+
+    One scan, one broadcast of the dim, one ``row_number`` window per
+    host bounded by a literal: K, the largest budget the dim admits,
+    caps every host's budget, so ``rank ≤ K`` lets Spark plant a
+    map-side WindowGroupLimit before the Exchange and at most K rows
+    per host and input partition are shuffled.  A frontier of more
+    input partitions than ``salt_buckets`` first keeps each (host,
+    partition_salt) bucket's top K the same way: the top K of a host
+    is within the top K of each of its buckets, so the host's ranking
+    task then gets at most K·salt_buckets rows, never K·partitions.
+
+    Quota regime, planned only when K exceeds ``exact_rank_max``:
+    ranking a queue that large host-wide would funnel it into one task,
+    and a politeness budget of that magnitude is a capacity bound, not
+    an ordering contract.  The candidates of the hosts whose budget is
+    above the default's are counted (dim hosts only, a broadcast-sized
+    set); a counted host whose queue fits its budget pops it whole,
+    unranked.  A host whose budget exceeds ``exact_rank_max`` and whose
+    queue does not fit splits its budget over its salt buckets
+    (⌊budget/S⌋ each, one more for buckets < budget % S), each popping
+    its top rows by bucket rank; with hash-uniform salting that is the
+    whole budget, and never more.  Every other host is ranked as above.
     """
     gated = apply_robots(frontier, robots).withColumn(
         "partition_salt",
@@ -374,135 +403,95 @@ def pop_round(
         F.lit(round_ms) / F.greatest(F.lit(1), F.col("crawl_delay_ms"))
     )
     gated = gated.withColumn("_budget", budget)
-
-    # Per-host candidate counts: hosts whose whole queue fits the budget
-    # (the common case, including under-filled giant hosts) BYPASS
-    # ranking entirely — Amdahl's law otherwise pins the round on the
-    # one task that sorts the giant host.  counts is one row per host —
-    # a few thousand at DART shape but up to 10^8 on the open web, so
-    # the broadcast is GATED on the true cardinality: the aggregate is
-    # materialized once (localCheckpoint truncates the lineage so the
-    # join reuses the same blocks; cleanup rides the ContextCleaner),
-    # its rows counted by an observation on that checkpoint's own job,
-    # and only broadcast when it fits — otherwise a plain shuffle join
-    # with AQE skew-split takes over instead of OOMing the driver on a
-    # forced 10^8-row broadcast.
-    counts = (
-        gated.filter(~F.col("robots_blocked"))
-        .groupBy("host")
-        .agg(F.count("*").alias("_n_cand"))
-    )
-    if n_hosts_hint is not None:
-        # caller-supplied cardinality bound: zero extra jobs — straight
-        # broadcast when it fits, straight shuffle join when it doesn't
-        counts_side = (
-            F.broadcast(counts) if n_hosts_hint <= broadcast_hosts_max else counts
-        )
-    else:
-        hosts = Observation()
-        counts = counts.observe(hosts, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        counts_side = (
-            F.broadcast(counts) if hosts.get["n"] <= broadcast_hosts_max else counts
-        )
-    gated = gated.join(counts_side, "host", "left").withColumn(
-        "_n_cand", F.coalesce("_n_cand", F.lit(0))
-    )
-    over = F.col("_n_cand") > F.col("_budget")
-
-    # The frame splits BEFORE any window — windows only ever touch
-    # over-budget hosts' candidates:
-    #   bypass branch — under-budget hosts (and every robots-blocked
-    #   row): no ranking work at all.  host_rank is null here: a rank
-    #   was never computed (the old salt-bucket pseudo-rank was
-    #   misleading), and nothing downstream consumes it.
-    #   ranked branch — phase 1: window over (host, salt): any row in
-    #   the true global top-k of its host has <k rows above it, hence
-    #   <k above it in its own salt bucket → salt-rank ≤ k.  Skew-free
-    #   (salt spreads the giant host over `salt_buckets` tasks) and
-    #   cuts survivors to ≤ budget·salt_buckets per host.
-    #   phase 2 — exact window over (host) on phase-1 survivors only, a
-    #   linear continuation of the same pipeline (no join-back, no
-    #   full-frame re-sort).  A when()-guarded window over the full
-    #   frame instead would sort every bypass host's whole queue into
-    #   one task (the giant host = one straggler; measured as the
-    #   8→32-core anti-scaling culprit).
-    #   quota branch — over-budget hosts whose budget EXCEEDS
-    #   exact_rank_max: ranking millions of rows per host would funnel
-    #   the phase-2 sort into one task however it's expressed (k-sized
-    #   sorts don't salt).  A politeness budget is a capacity bound,
-    #   not an exact-order contract at that magnitude, so each salt
-    #   bucket gets an equal slot quota (⌊budget/S⌋, remainder spread
-    #   one-per-bucket to salts < budget%S — deterministic), selection
-    #   is bucket-local rank ≤ quota, and host_rank stays null (no
-    #   global rank was computed).  With hash-uniform salting every
-    #   bucket holds ≥ quota candidates whenever n_cand exceeds the
-    #   budget by the multinomial deviation, so the host pops exactly
-    #   its budget; the constraint ≤ budget holds unconditionally.
-    null_rank = F.lit(None).cast("int")
-    bypass = gated.filter(~over | F.col("robots_blocked")).select(
-        *gated.columns,
-        (~F.col("robots_blocked")).alias("selected"),
-        null_rank.alias("host_rank"),
-    )
-
-    cand = gated.filter(over & ~F.col("robots_blocked"))
+    cols = [c for c in gated.columns if c not in ("_budget", "disallow_prefix")]
+    blocked = F.col("robots_blocked")
     order = [
         F.col("priority").desc(),
         F.col("discovered_ts").asc(),
         F.col("url_hash").asc(),
     ]
-    w1 = Window.partitionBy("host", "partition_salt").orderBy(*order)
 
-    # Regime split BEFORE the window, not after: quota_mode is constant
-    # per host (budget derives from the host's crawl delay) and w1
-    # partitions by (host, salt), so filtering whole hosts out ahead of
-    # the window leaves _rn1 for the remaining hosts unchanged — while
-    # each branch's window Exchange now carries only its own regime's
-    # rows.  The previous shape filtered AFTER the window (the regime
-    # predicate is not a partition-key column, so Catalyst cannot push
-    # it below the Window) and therefore shuffled+sorted the full
-    # candidate set once per branch — with one giant quota-regime host
-    # that was two redundant full sorts of ~60% of the frontier.
+    k = _max_budget(robots, round_ms)
+    # a robots-blocked row ranks alone in its window partition (url_hash
+    # is the frontier's key), so the bound passes it through unranked
+    alone = F.when(blocked, F.col("url_hash"))
+    bound = F.col("_rn") <= F.lit(max(1, min(k, exact_rank_max)))
+    fits = blocked | (F.col("_rn") <= F.col("_budget"))
+    width = _scan_width(frontier)
+    phase1 = width is None or width > salt_buckets
+
+    def top(df: DataFrame, *keys: str) -> DataFrame:
+        w = Window.partitionBy(*keys, alone).orderBy(*order)
+        return df.withColumn("_rn", F.row_number().over(w)).filter(bound & fits)
+
+    def ranked(df: DataFrame) -> DataFrame:
+        if phase1:
+            df = top(df, "host", "partition_salt").drop("_rn")
+        return top(df, "host").select(
+            *cols,
+            (~blocked).alias("selected"),
+            F.when(~blocked, F.col("_rn")).cast("int").alias("host_rank"),
+        )
+
+    if k <= exact_rank_max:
+        return ranked(gated)
+
+    # quota regime: count the queues of the hosts whose budget is above
+    # the default's.  Only dim hosts have one, so unless the default
+    # budget is itself above exact_rank_max (then every host is counted)
+    # the counts are a broadcast-sized set that covers every quota host.
+    cand = gated.filter(~blocked)
+    default_budget = _budget_of(round_ms, DEFAULT_CRAWL_DELAY_MS)
+    dim_only = default_budget <= exact_rank_max
+    if dim_only:
+        cand = cand.filter(F.col("_budget") > F.lit(default_budget))
+    counts = cand.groupBy("host").agg(F.count("*").alias("_n"))
+    counted = gated.join(F.broadcast(counts) if dim_only else counts, "host", "left")
+    whole = F.coalesce(F.col("_n") <= F.col("_budget"), F.lit(False))
     quota_mode = F.col("_budget") > F.lit(exact_rank_max)
+    unranked = [
+        F.lit(True).alias("selected"),
+        F.lit(None).cast("int").alias("host_rank"),
+    ]
+    whole_rows = counted.filter(~blocked & whole).select(*cols, *unranked)
     s = F.lit(salt_buckets)
     quota = F.floor(F.col("_budget") / s) + F.when(
         F.col("partition_salt") < F.pmod(F.col("_budget"), s), F.lit(1)
     ).otherwise(F.lit(0))
+    w1 = Window.partitionBy("host", "partition_salt").orderBy(*order)
     quota_rows = (
-        cand.filter(quota_mode)
-        .withColumn("_rn1", F.row_number().over(w1))
-        .select(
-            *gated.columns,
-            (F.col("_rn1") <= quota).alias("selected"),
-            null_rank.alias("host_rank"),
-        )
+        counted.filter(~blocked & ~whole & quota_mode)
+        .withColumn("_rn", F.row_number().over(w1))
+        .filter(F.col("_rn") <= quota)
+        .select(*cols, *unranked)
     )
-
-    exact = cand.filter(~quota_mode).withColumn("_rn1", F.row_number().over(w1))
-    losers = exact.filter(F.col("_rn1") > F.col("_budget")).select(
-        *gated.columns,
-        F.lit(False).alias("selected"),
-        null_rank.alias("host_rank"),
-    )
-    w2 = Window.partitionBy("host").orderBy(*order)
-    surv = (
-        exact.filter(F.col("_rn1") <= F.col("_budget"))
-        .withColumn("_rn2", F.row_number().over(w2))
-        .select(
-            *gated.columns,
-            (F.col("_rn2") <= F.col("_budget")).alias("selected"),
-            F.col("_rn2").cast("int").alias("host_rank"),
-        )
-    )
-
     return (
-        bypass.unionByName(quota_rows)
-        .unionByName(losers)
-        .unionByName(surv)
-        .drop("_n_cand", "_budget", "disallow_prefix")
+        ranked(counted.filter(blocked | ~(whole | quota_mode)))
+        .unionByName(whole_rows)
+        .unionByName(quota_rows)
     )
+
+
+def _budget_of(round_ms: int, crawl_delay_ms: int) -> int:
+    """A host's round budget, as pop_round's ``_budget`` column computes it."""
+    return math.floor(round_ms / max(1, crawl_delay_ms))
+
+
+def _max_budget(robots: DataFrame, round_ms: int) -> int:
+    """The largest budget the dim admits; a host outside it gets the
+    default delay.  The dim is broadcast-sized: its delays are collected."""
+    delays = [d for (d,) in robots.select("crawl_delay_ms").collect() if d is not None]
+    return _budget_of(round_ms, min(delays + [DEFAULT_CRAWL_DELAY_MS]))
+
+
+def _scan_width(df: DataFrame) -> int | None:
+    """``df``'s partition count when no shuffle or broadcast sits below
+    it (a file scan or a cache: listing them runs no job); None when
+    only running the adaptive plan would tell."""
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return None
+    return df._jdf.rdd().getNumPartitions()
 
 
 def fetch_partitioning(

@@ -177,15 +177,16 @@ class CrawlBench:
             None, self.seen, "bloom", n_shards=64, expected_keys=n_urls // 10
         ).persist(self._lvl)
         self.bloom.count()
-        # small-host delay 5 ms: budget 40 k keeps the 211 small hosts
-        # in the BYPASS regime up to a 20 M-row pop frontier (they hold
-        # 0.4/211 of it), so the measured pop work is the skew path —
-        # the giant host's salted per-bucket quota ranking — plus the
-        # bypass scan, at every campaign quantum.  At 10 ms the small
-        # hosts crossed into the exact two-phase regime between the
-        # 8 M and 16 M quanta, so different campaign quanta measured
-        # different code paths (and the 16 M+ w2 sort made in-session
-        # memory pressure, 66→171 s trial drift at 24 M).
+        # small-host delay 5 ms: budget 40 k covers each of the 211
+        # small hosts' queues up to a 20 M-row pop frontier (they hold
+        # 0.4/211 of it), so they pop whole and unranked, and the
+        # measured pop work is the skew path — the giant host's salted
+        # per-bucket quota ranking — plus that scan, at every campaign
+        # quantum.  At 10 ms the small hosts' queues outgrew their
+        # budget between the 8 M and 16 M quanta, so different campaign
+        # quanta measured different code paths (and the 16 M+ host-wide
+        # sort made in-session memory pressure, 66→171 s trial drift at
+        # 24 M).
         self.robots = spark.createDataFrame(
             [("dart.fss.or.kr", None, 1)]
             + [(f"host{k}.example", None, 5) for k in range(211)],
@@ -232,9 +233,9 @@ class CrawlBench:
     # and V ≈ 58 s per 8 M rows idle, so 8 M rows reads 0.65-0.84
     # efficiency depending on the co-tenant window while 16 M doubles
     # the variable term.  16 M is also the ceiling: past ~20 M the
-    # small hosts leave the bypass regime (see robots above) and the
-    # added w2 sorts push the session into memory-pressure territory
-    # (measured 66→171 s trial drift at 24 M).
+    # small hosts' queues outgrow their budget (see robots above) and
+    # the added host-wide sorts push the session into memory-pressure
+    # territory (measured 66→171 s trial drift at 24 M).
     POP_MULT = 4
 
     def _pop_frontier(self, n: int | None = None):
@@ -271,9 +272,10 @@ class CrawlBench:
         delay → budget 200k ≪ its queue) lands in the salted QUOTA
         regime — the skew path whose parallel per-bucket ranking is the
         round's real distributed work.  A huge round budget would let
-        every host bypass ranking, and a small frontier would leave the
-        job dominated by per-stage scheduling constants (measured: flat
-        ~5-9 s at any core count → anti-scaling artifacts)."""
+        every host pop its whole queue unranked, and a small frontier
+        would leave the job dominated by per-stage scheduling constants
+        (measured: flat ~5-9 s at any core count → anti-scaling
+        artifacts)."""
         from ..operators import politeness as P
 
         popped = P.pop_round(
@@ -281,7 +283,6 @@ class CrawlBench:
             self.robots,
             round_ms=200_000,
             salt_buckets=64,
-            n_hosts_hint=212,  # known synthetic host set → no count job
         )
         return popped.filter(F.col("selected")).count()
 
@@ -301,7 +302,6 @@ class CrawlBench:
             self.robots,
             round_ms=200_000,
             salt_buckets=64,
-            n_hosts_hint=212,
         )
         return popped.filter(F.col("selected")).count()
 

@@ -115,6 +115,9 @@ def get_spark(
         # /root/reference/xbrl_processor.py:274)
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # a rank bound up to pop_round's exact_rank_max still plants the
+        # map-side WindowGroupLimit (Spark's default stops at 1 000)
+        .config("spark.sql.optimizer.windowGroupLimitThreshold", "100000")
         # bucketed tables (co-located joins) land here, not in cwd
         .config(
             "spark.sql.warehouse.dir",

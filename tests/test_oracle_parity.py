@@ -81,7 +81,22 @@ def test_rows_only_queries_run(spark):
         assert n >= 0
 
 
-def test_entry_smoke(spark):
+def test_entry_smoke(spark, monkeypatch):
+    from dart_xbrl_crawler_spark.operators import politeness as P
+
+    frontiers = []
+    pop = P.pop_round
+
+    def recording_pop(frontier, *args, **kwargs):
+        frontiers.append(frontier)
+        return pop(frontier, *args, **kwargs)
+
+    monkeypatch.setattr(P, "pop_round", recording_pop)
     df = E.entry(spark)
     assert df.count() > 0
     assert "n_selected" in df.columns
+    # every frontier row is a candidate of its host, though the pop
+    # returns only the round's rows
+    (frontier,) = frontiers
+    n_candidates = sum(r["n_candidates"] for r in df.collect())
+    assert n_candidates == frontier.count()

@@ -174,9 +174,8 @@ def test_every_engine_definition_is_reached():
 # must be a constant, or be on PARAMS_KEEP with the reason it stays.
 PARAMS_KEEP = {
     # a test sets each to reach a branch that needs web-scale input
-    # otherwise: the quota regime and the shuffle join of host counts
+    # otherwise: the quota regime
     "operators.politeness.pop_round(exact_rank_max)": "quota regime at test scale",
-    "operators.politeness.pop_round(broadcast_hosts_max)": "host-count shuffle join",
     # the shuffle anti-join over a confirmed set too big to broadcast
     "operators.dedup.dedup_urls(broadcast_max_rows)": "confirmed-set shuffle join",
     # a fetch width that grows with the selected set

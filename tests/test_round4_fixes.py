@@ -316,45 +316,3 @@ def test_decode_png_all_filters_roundtrip():
     # out-of-envelope inputs → None, not an exception
     assert decode_png(b"\x89PNG\r\n\x1a\njunk") is None
     assert decode_png(b"not a png") is None
-
-
-# ------------------------------------------- robots/backoff dims broadcast
-def test_robots_and_backoff_dims_broadcast(spark):
-    """The robots and backoff joins broadcast their dim even with
-    Catalyst's auto-broadcast off, and the pop over them keeps its
-    budget semantics."""
-    from dart_xbrl_crawler_spark.functions.urls import with_url_canon
-
-    frontier = with_url_canon(
-        spark.createDataFrame(
-            pd.DataFrame({"url": [f"https://h{i % 7}.ex/p{i}" for i in range(40)]})
-        )
-    ).select(
-        "*",
-        F.lit(0.0).alias("priority"),
-        F.to_timestamp(F.lit(RUN_TS)).alias("discovered_ts"),
-    )
-    robots = spark.createDataFrame(
-        [(f"h{k}.ex", None, 10) for k in range(7)],
-        schema="host string, disallow_prefix string, crawl_delay_ms long",
-    )
-    stats = spark.createDataFrame(
-        pd.DataFrame({"host": [f"h{k}.ex" for k in range(7)], "fail_rate": [0.5] * 7})
-    )
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan_g = P.apply_robots(
-            frontier, robots
-        )._jdf.queryExecution().executedPlan().toString()
-        plan_b = P.apply_backoff(
-            robots, stats
-        )._jdf.queryExecution().executedPlan().toString()
-        out = P.pop_round(frontier, robots, round_ms=1000)
-        n_sel = out.filter(F.col("selected")).count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-    assert "BroadcastExchange" in plan_g, plan_g
-    assert "BroadcastExchange" in plan_b, plan_b
-    # budget 1000/10=100 ≥ all queues → all pop
-    assert n_sel == 40
