@@ -15,12 +15,11 @@ queue.
 Skew: one giant host (dart.fss.or.kr, ≥60% of the frontier) would pin
 one task.  The ranking is bounded by a literal (the largest budget the
 robots dim admits), so each input partition ships at most that many
-rows per host to the host's ranking task; a frontier with more input
-partitions than salt buckets first cuts each (host, salt) bucket to
-the same bound, ``salt = pmod(url_hash, S)``.  The *fetch work* is
-salted too: a ``repartition(host, salt)`` spreads the giant host over
-S tasks.  AQE skew-join handles residual imbalance (session.py enables
-it).
+rows per host to the host's ranking task.  The *fetch work* is salted:
+``salt = pmod(url_hash, S)`` and a ``repartition(host, salt)`` spreads
+the giant host over S tasks; the quota regime (a budget above
+``EXACT_RANK_MAX``) ranks per (host, salt) bucket.  AQE skew-join
+handles residual imbalance (session.py enables it).
 """
 
 from __future__ import annotations
@@ -33,6 +32,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DEFAULT_CRAWL_DELAY_MS = 1000
+# pop_round ranks a host's queue exactly up to this budget; get_spark
+# raises Spark's windowGroupLimitThreshold to it, so a rank bound this
+# large still plants the map-side WindowGroupLimit
+EXACT_RANK_MAX = 100_000
 # the product token robots.txt groups are matched against
 USER_AGENT = "dart-xbrl-crawler"
 # adaptive backoff never slows a host by more than this factor
@@ -353,7 +356,7 @@ def pop_round(
     robots: DataFrame,
     round_ms: int = 60_000,
     salt_buckets: int = 32,
-    exact_rank_max: int = 100_000,
+    exact_rank_max: int = EXACT_RANK_MAX,
 ) -> DataFrame:
     """Select this round's fetch set.
 
@@ -373,12 +376,12 @@ def pop_round(
     One scan, one broadcast of the dim, one ``row_number`` window per
     host bounded by a literal: K, the largest budget the dim admits,
     caps every host's budget, so ``rank ≤ K`` lets Spark plant a
-    map-side WindowGroupLimit before the Exchange and at most K rows
-    per host and input partition are shuffled.  A frontier of more
-    input partitions than ``salt_buckets`` first keeps each (host,
-    partition_salt) bucket's top K the same way: the top K of a host
-    is within the top K of each of its buckets, so the host's ranking
-    task then gets at most K·salt_buckets rows, never K·partitions.
+    map-side WindowGroupLimit before the one Exchange and at most K
+    rows per host and input partition are shuffled.  A host's ranking
+    task gets at most K times the input partitions.  No salted
+    (host, partition_salt) pre-ranking runs: on a 128-partition,
+    4 M-row frontier and on rounds over pending deltas it cost more
+    CPU than the one Exchange it would bound (see CHANGES.md).
 
     Quota regime, planned only when K exceeds ``exact_rank_max``:
     ranking a queue that large host-wide would funnel it into one task,
@@ -417,17 +420,11 @@ def pop_round(
     alone = F.when(blocked, F.col("url_hash"))
     bound = F.col("_rn") <= F.lit(max(1, min(k, exact_rank_max)))
     fits = blocked | (F.col("_rn") <= F.col("_budget"))
-    width = _scan_width(frontier)
-    phase1 = width is None or width > salt_buckets
-
-    def top(df: DataFrame, *keys: str) -> DataFrame:
-        w = Window.partitionBy(*keys, alone).orderBy(*order)
-        return df.withColumn("_rn", F.row_number().over(w)).filter(bound & fits)
 
     def ranked(df: DataFrame) -> DataFrame:
-        if phase1:
-            df = top(df, "host", "partition_salt").drop("_rn")
-        return top(df, "host").select(
+        w = Window.partitionBy("host", alone).orderBy(*order)
+        ranks = df.withColumn("_rn", F.row_number().over(w))
+        return ranks.filter(bound & fits).select(
             *cols,
             (~blocked).alias("selected"),
             F.when(~blocked, F.col("_rn")).cast("int").alias("host_rank"),
@@ -478,20 +475,14 @@ def _budget_of(round_ms: int, crawl_delay_ms: int) -> int:
 
 
 def _max_budget(robots: DataFrame, round_ms: int) -> int:
-    """The largest budget the dim admits; a host outside it gets the
-    default delay.  The dim is broadcast-sized: its delays are collected."""
-    delays = [d for (d,) in robots.select("crawl_delay_ms").collect() if d is not None]
-    return _budget_of(round_ms, min(delays + [DEFAULT_CRAWL_DELAY_MS]))
-
-
-def _scan_width(df: DataFrame) -> int | None:
-    """``df``'s partition count when no shuffle or broadcast sits below
-    it (a file scan or a cache: listing them runs no job); None when
-    only running the adaptive plan would tell."""
-    qe = df._jdf.queryExecution()
-    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
-        return None
-    return df._jdf.rdd().getNumPartitions()
+    """The largest budget the dim admits; a host outside it, or a dim
+    row without a delay, gets the default delay.  One aggregate in one
+    task (the dim is broadcast-sized; one partition needs no Exchange,
+    so it is one job): only the dim's smallest delay reaches the driver."""
+    (least,) = robots.coalesce(1).agg(F.min("crawl_delay_ms")).first()
+    if least is None or least > DEFAULT_CRAWL_DELAY_MS:
+        least = DEFAULT_CRAWL_DELAY_MS
+    return _budget_of(round_ms, least)
 
 
 def fetch_partitioning(

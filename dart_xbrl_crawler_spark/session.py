@@ -31,6 +31,8 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+from .operators.politeness import EXACT_RANK_MAX
+
 # Arrow batch size: the extract UDF carries a BINARY html column; keep
 # batches small enough that a batch of zipped payloads stays well under
 # executor memory even at 100 TB scale (payloads up to ~10 MB each).
@@ -115,9 +117,9 @@ def get_spark(
         # /root/reference/xbrl_processor.py:274)
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # a rank bound up to pop_round's exact_rank_max still plants the
+        # a rank bound up to pop_round's exact budget still plants the
         # map-side WindowGroupLimit (Spark's default stops at 1 000)
-        .config("spark.sql.optimizer.windowGroupLimitThreshold", "100000")
+        .config("spark.sql.optimizer.windowGroupLimitThreshold", str(EXACT_RANK_MAX))
         # bucketed tables (co-located joins) land here, not in cwd
         .config(
             "spark.sql.warehouse.dir",

@@ -383,7 +383,7 @@ def test_bootstrap_and_round_job_count(spark, fixture_bundle, tmp_path, count_jo
 
     _, n_jobs = count_jobs(bootstrap_and_round)
     assert store.table._latest_base()["note"] == "auto-compact after round=1"
-    assert n_jobs == 31
+    assert n_jobs == 32
     # a bloom store's insert runs no resurrection count (cuckoo only)
     new = spark.createDataFrame(
         [("https://new.example/a", 1.0), ("https://new.example/b", 1.0)],

@@ -224,16 +224,16 @@ def _oracle_pop(pdf: pd.DataFrame, exact_rank_max: int) -> dict:
     return want
 
 
-@pytest.mark.parametrize("exact_rank_max", [100_000, 5])
+@pytest.mark.parametrize("exact_rank_max", [P.EXACT_RANK_MAX, 5])
 @pytest.mark.parametrize("partitions", [2, 16])
 def test_pop_round_matches_pandas_oracle(spark, partitions, exact_rank_max):
     """The pop returns exactly the round's rows, with the selected set,
     the robots-blocked set and host_rank of a per-host recomputation:
-    with fewer input partitions than salt buckets (one ranking
-    Exchange) and with more (the salted phase first), at the default
-    exact_rank_max and with a quota regime: big.x splits its budget over
-    its salt buckets, while zero.x and few.x, whose queues fit their
-    budgets, pop them whole."""
+    with fewer input partitions than salt buckets and with more (one
+    ranking Exchange either way), at the default exact_rank_max and
+    with a quota regime: big.x splits its budget over its salt buckets,
+    while zero.x and few.x, whose queues fit their budgets, pop them
+    whole."""
     pdf = _oracle_frontier()
     frontier = spark.createDataFrame(pdf).repartition(partitions).localCheckpoint()
     robots = spark.createDataFrame(
@@ -246,9 +246,8 @@ def test_pop_round_matches_pandas_oracle(spark, partitions, exact_rank_max):
         salt_buckets=_SALTS,
         exact_rank_max=exact_rank_max,
     )
-    if exact_rank_max == 100_000:  # the plan before it runs: one shape
-        n_exchanges = _plan(popped).count("Exchange hashpartitioning")
-        assert n_exchanges == (2 if partitions > _SALTS else 1)
+    if exact_rank_max == P.EXACT_RANK_MAX:  # the plan before it runs: one shape
+        assert _plan(popped).count("Exchange hashpartitioning") == 1
     got = {
         r["url_hash"]: (r["selected"], r["robots_blocked"], r["host_rank"])
         for r in popped.collect()
@@ -262,11 +261,17 @@ def _small_frontier(spark):
     return spark.createDataFrame(pdf).repartition(2).localCheckpoint()
 
 
-def test_pop_plan_is_one_bounded_window_exchange(spark):
+@pytest.mark.parametrize(
+    "delay_ms, round_ms",
+    # bound 10; bound 5 000, above Spark's default windowGroupLimitThreshold
+    [(100, _ROUND_MS), (1, 5_000)],
+    ids=["bound10", "bound5000"],
+)
+def test_pop_plan_is_one_bounded_window_exchange(spark, delay_ms, round_ms):
     """Exact regime: the pop's plan has one Exchange, a map-side
     WindowGroupLimit below it, and no aggregate over the frontier."""
-    robots = spark.createDataFrame([("big.x", None, 100)], schema=DIM)
-    plan = _plan(P.pop_round(_small_frontier(spark), robots, round_ms=_ROUND_MS))
+    robots = spark.createDataFrame([("big.x", None, delay_ms)], schema=DIM)
+    plan = _plan(P.pop_round(_small_frontier(spark), robots, round_ms=round_ms))
     lines = plan.splitlines()
     exchanges = [i for i, l in enumerate(lines) if "Exchange hashpartitioning" in l]
     assert len(exchanges) == 1, plan
