@@ -504,6 +504,9 @@ def attach_corp_name(facts: DataFrame, corp_map: DataFrame) -> DataFrame:
     pinned min-name dedup, never a nondeterministic dropDuplicates."""
     from ..sources.corp_map import normalize_corp_map
 
+    # both dims are broadcast whole: read the map in one task per dim
+    # (a list-built map is otherwise decoded by one Python task per slice)
+    corp_map = corp_map.coalesce(1)
     dim = normalize_corp_map(corp_map).select(
         F.col("dart_corp_code").alias("corp_code"),
         F.col("dart_corp").alias("corp_name"),

@@ -768,13 +768,22 @@ class FrontierStore:
                 robots_rid = robots
                 if backoff_factor is not None and rid > 0:
                     # adaptive politeness: scale delays by the failure rates
-                    # observed in earlier rounds (per-host metrics chain)
+                    # observed in earlier rounds (per-host metrics chain).
+                    # The pop reads the dim twice (its K aggregate and its
+                    # broadcast): persisted, the chain is read once
                     robots_rid = P.apply_backoff(
                         robots, self.host_stats(spark), factor=backoff_factor
+                    ).persist(StorageLevel.MEMORY_AND_DISK)
+                try:
+                    snap, fetched_pages = self.run_round(
+                        spark, pages, robots_rid, run_ts, round_id=rid,
+                        round_ms=round_ms,
                     )
-                snap, fetched_pages = self.run_round(
-                    spark, pages, robots_rid, run_ts, round_id=rid, round_ms=round_ms
-                )
+                finally:
+                    if robots_rid is not robots:
+                        # only the pop reads it; the round's caches
+                        # hold what it produced
+                        robots_rid.unpersist()
                 n_fetched = self.last_round.get("fetched", 0)
                 if text_out and n_fetched:
                     # crawl → extract in one loop (the reference's

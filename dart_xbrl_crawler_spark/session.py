@@ -18,6 +18,17 @@ Frames read from parquet are decoded in the JVM and start no worker.
 So the setting is off; the price is that a failing UDF shows the full
 worker traceback (its exception type and message are unchanged).
 
+The pool runs the engine's daemon (``daemon.py``), not
+``pyspark.daemon``.  Each Python task cost 0.13-0.35 s of worker CPU
+before it touched a row: the worker calls ``importlib.invalidate_caches()``
+per task, and on CPython 3.11 each of the 14-16 ``zipimporter``s cached
+for ``pyspark.zip`` (first on every worker's path) re-reads the
+archive's central directory.  The engine's daemon re-reads an archive
+only when its mtime or size changed.  It must be importable on the
+workers: the package root goes on ``spark.executorEnv.PYTHONPATH``, the
+same requirement the UDFs already have (cloudpickle pickles them by
+reference).
+
 Driver heap: ``SPARK_DRIVER_MEM`` if set, else half the machine's
 memory, at most 48g.  A heap allowed to grow past the machine's memory
 is collected so lazily that a long-lived local JVM outgrows the machine
@@ -37,6 +48,8 @@ from .operators.politeness import EXACT_RANK_MAX
 # batches small enough that a batch of zipped payloads stays well under
 # executor memory even at 100 TB scale (payloads up to ~10 MB each).
 _ARROW_MAX_RECORDS = "2048"
+# the directory that holds this package: on the workers' path for the daemon
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _local_dir() -> str:
@@ -107,6 +120,10 @@ def get_spark(
         .config(
             "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false"
         )
+        # the engine's daemon: no per-task re-read of pyspark.zip, and
+        # importable on workers whatever the JVM's working directory
+        .config("spark.python.daemon.module", f"{__package__}.daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.memory", _driver_mem())
         .config("spark.ui.enabled", "false")
         # no \r progress spam on stdout: harness output is parsed from

@@ -510,6 +510,68 @@ def test_run_crawl_releases_fetch_cache(spark, tmp_path):
     assert store._prev_fetched is None  # last round's cache released
 
 
+def test_backoff_round_reads_host_metrics_once(spark, tmp_path, monkeypatch):
+    """A backoff round's robots dim is persisted: the pop's K aggregate
+    and its robots broadcast share one read of the ``_host_metrics``
+    chain, and the dim is released with the round.  Each per-host stats
+    row the dim reads passes a counting filter; the round must count as
+    many as one evaluation of the same dim."""
+    seeds = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": [f"https://{h}.example/{i}" for h in ("ok", "bad") for i in range(4)],
+                "priority": [0.0] * 8,
+            }
+        )
+    )
+    pages = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": [f"https://ok.example/{i}" for i in range(4)],
+                "html": [b"<html>ok</html>"] * 4,
+                "warc_ts": [pd.Timestamp("2026-01-01")] * 4,
+            }
+        ),
+        schema="url string, html binary, warc_ts timestamp",
+    )
+    robots = spark.createDataFrame(
+        [("ok.example", None, 100), ("bad.example", None, 100)], schema=ROBOTS
+    )
+    store = FrontierStore(str(tmp_path / "bo"), n_bloom_shards=4)
+    store.bootstrap(seeds, RUN_TS)
+
+    reads = spark.sparkContext.accumulator(0)
+    # nondeterministic: the optimizer neither copies nor moves the filter
+    tick = F.udf(lambda _: reads.add(1) or True, "boolean").asNondeterministic()
+    stats: list = []
+    host_stats = store.host_stats
+
+    def counted(spark_):
+        stats.append(host_stats(spark_).filter(tick("host")))
+        return stats[-1]
+
+    monkeypatch.setattr(store, "host_stats", counted)
+    dims: list = []
+    apply_backoff = P.apply_backoff
+
+    def kept(*args, **kwargs):
+        dims.append(apply_backoff(*args, **kwargs))
+        return dims[-1]
+
+    monkeypatch.setattr(P, "apply_backoff", kept)
+    # budget 2 of each host's 4 urls: round 1 pops with the backoff dim
+    out = store.run_crawl(
+        spark, pages, robots, RUN_TS, max_rounds=2, round_ms=200,
+        discover=False, backoff_factor=4.0,
+    )
+    assert [r["fetched"] for r in out] == [2, 2]
+    assert len(dims) == 1 and not dims[0].is_cached  # released
+    in_round = reads.value
+    assert len(stats) == 1 and in_round > 0
+    apply_backoff(robots, stats[0], factor=4.0).collect()
+    assert in_round == reads.value - in_round
+
+
 def test_run_crawl_text_out_carries_seed_meta(spark, fixture_bundle, tmp_path):
     """run_crawl(seeds=...) extracts each fetched XBRL ZIP with its seed's
     report_nm/rcept_dt: text and parse verdict equal the oracle's, where

@@ -1,4 +1,5 @@
-"""The session factory: one Python worker pool per SparkSession."""
+"""The session factory: one Python worker pool per SparkSession, run by
+the engine's worker daemon."""
 
 from __future__ import annotations
 
@@ -35,15 +36,19 @@ def _cmdline(pid: int) -> list[str]:
 
 
 def _worker_daemons() -> list[int]:
-    """The ``pyspark.daemon`` processes the session's JVM forked."""
+    """The engine's worker daemons (``python -m
+    dart_xbrl_crawler_spark.daemon``) the session's JVM forked."""
     jvm = SparkContext._gateway.proc.pid
-    return [p for p in _children(jvm) if "pyspark.daemon" in _cmdline(p)]
+    return [
+        p for p in _children(jvm)
+        if "dart_xbrl_crawler_spark.daemon" in _cmdline(p)
+    ]
 
 
 def test_sql_and_rdd_runners_share_one_worker_daemon(spark):
     """A pandas UDF (SQL runner) and a DataFrame built from a local list
-    (decoded by the RDD runner) run on the same ``pyspark.daemon``: the
-    JVM forks exactly one."""
+    (decoded by the RDD runner) run on the same worker daemon: the JVM
+    forks exactly one."""
 
     @F.pandas_udf("long")
     def plus_one(s: pd.Series) -> pd.Series:
@@ -64,3 +69,22 @@ def test_flagship_entry_runs_on_one_worker_daemon(spark):
     assert E.entry(spark).collect()
     daemons = _worker_daemons()
     assert len(daemons) == 1, daemons
+
+
+def test_pandas_udf_worker_runs_the_engine_invalidate_caches(spark):
+    """The worker that runs a pandas UDF was forked from the engine's
+    daemon, so the per-task ``importlib.invalidate_caches()`` reaches the
+    engine's stamped zip-directory check, not the stock re-read."""
+    from dart_xbrl_crawler_spark import daemon
+
+    @F.pandas_udf("string")
+    def invalidator(s: pd.Series) -> pd.Series:
+        import zipimport
+
+        fn = zipimport.zipimporter.invalidate_caches
+        return s.map(lambda _: f"{fn.__code__.co_filename}:{fn.__name__}")
+
+    (got,) = {r[0] for r in spark.range(4).select(invalidator("id")).collect()}
+    want = daemon.invalidate_caches.__code__
+    assert got == f"{want.co_filename}:invalidate_caches"
+    assert len(_worker_daemons()) == 1
