@@ -164,11 +164,7 @@ def dedup_urls(
     Why not joins: the SortMergeJoin-anti formulation cost two full
     sorts of the 5M-row sides and anti-scaled 1.4× going 8→32 cores;
     flagged-semi-join-then-anti spent its time in driver broadcast
-    jobs.  A frontier base stored bucketed (MergeTable ``n_buckets``)
-    does not remove this plan's one union-shuffle: Spark buckets by a
-    Murmur3 hash of url_hash, while the cogroup groups by ``_shard_of``
-    (pmod(url_hash, n_shards)), so the tagged hashes — bare int64s plus
-    a flag — are repartitioned by shard whatever the stored layout."""
+    jobs."""
     tagged = (
         frontier.select("url_hash", F.lit(False).alias("is_seen"))
         .unionByName(seen.select("url_hash", F.lit(True).alias("is_seen")))

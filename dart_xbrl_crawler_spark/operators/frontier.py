@@ -131,20 +131,15 @@ class FrontierStore:
         expected_keys: int | None = None,
         compact_every: int = 16,
         expire_keep_last: int | None = None,
-        n_buckets: int | None = None,
         metrics_compact_every: int = 64,
         seen_filter: str | None = None,
         filter_keep_last: int = 4,
     ):
-        # n_buckets: store new frontier bases bucketed by url_hash (the
-        # 10^10-row layout); None keeps the latest base's layout, so a
-        # reopen needs no layout argument
         self.table = MergeTable(
             path,
             key="url_hash",
             compact_every=compact_every,
             expire_keep_last=expire_keep_last,
-            n_buckets=n_buckets,
         )
         self.table_path = path
         self.host_metrics = SnapshotTable(path + "_host_metrics")
@@ -279,11 +274,10 @@ class FrontierStore:
     def _commit_insert_metrics(
         self, spark: SparkSession, fresh: DataFrame, n_fresh: int, n_dup: int
     ) -> None:
-        """Lineage rows for an admission that resurrects nothing
-        (bootstrap): the ``n_fresh`` rows of ``fresh`` that entered, all
-        'queued', + one 'deduped' counter (a lineage state, not a table
-        state — duplicates are counted, never inserted).  The counts
-        are the caller's; no Spark job runs."""
+        """Bootstrap's lineage commit under the signature
+        ``perfbench/workloads.py`` calls it by (its traced decomposition
+        of bootstrap); ``spark`` and ``fresh`` are not read.  Bootstrap
+        itself calls ``_commit_lineage``."""
         self._commit_lineage(
             -1, {"queued": n_fresh, "deduped": n_dup}, "insert lineage"
         )
@@ -304,13 +298,15 @@ class FrontierStore:
             self._commit_bloom_batch(
                 spark, frontier.select("url_hash"), "bootstrap"
             )
-            # the base write counts the rows it admits (all queued)
+            # the base write counts the rows it admits (all queued);
+            # 'deduped' is a lineage state, not a table state
             admitted = Observation()
             snap = self.table.commit_base(
                 _observe_states(frontier, admitted), note="bootstrap"
             )
-            self._commit_insert_metrics(
-                spark, frontier, admitted.get["queued"], 0
+            self._commit_lineage(
+                -1, {"queued": admitted.get["queued"], "deduped": 0},
+                "insert lineage",
             )
             return snap
         finally:
@@ -557,14 +553,9 @@ class FrontierStore:
         Shape: canonicalize the hint urls (one Arrow batch over
         O(|hints|) rows), one equality join on url_hash against the
         frontier, flip rows whose fetch predates the advertised
-        lastmod.  The commit is an O(|stale|) delta.  With a bucketed
-        base (``n_buckets``) and no deltas pending, the join leaves the
-        base in place (its buckets are a Murmur3 hash of url_hash) and
-        shuffles only the hint side; with deltas pending the merged
-        frontier is a union and shuffles like a parquet base.  Lastmod
-        accepts both W3C forms (date-only and full ISO 8601);
-        unparseable hints are dropped, surfaced by the returned count
-        only."""
+        lastmod.  The commit is an O(|stale|) delta.  Lastmod accepts
+        both W3C forms (date-only and full ISO 8601); unparseable hints
+        are dropped, surfaced by the returned count only."""
         lastmod_ts = F.coalesce(
             F.try_to_timestamp(F.col("lastmod")),
             F.try_to_timestamp(

@@ -137,7 +137,8 @@ def get_spark(
         # a rank bound up to pop_round's exact budget still plants the
         # map-side WindowGroupLimit (Spark's default stops at 1 000)
         .config("spark.sql.optimizer.windowGroupLimitThreshold", str(EXACT_RANK_MAX))
-        # bucketed tables (co-located joins) land here, not in cwd
+        # the session catalog creates its warehouse dir on first use (a
+        # temp view or a tableExists call is enough); keep it out of cwd
         .config(
             "spark.sql.warehouse.dir",
             os.path.join(tempfile.gettempdir(), "spark_warehouse"),

@@ -12,18 +12,13 @@ in this environment, so the same contract is implemented directly:
   committed),
 * resume = read latest snapshot (or any pinned snapshot-id).
 
-A snapshot is plain parquet or, when committed with ``bucket_by``, an
-external bucketed table at the same dir (Iceberg's ``bucket(N, key)``
-hidden partitioning expressed through Spark's bucketed-table catalog);
-the layout is a field of its manifest entry, so one MergeTable serves
-both and a store reopens without being told which it is.
+Every snapshot is a plain parquet directory, named by its id.
 
 Swap point: a real Iceberg catalog replaces ``MergeTable`` behind the
 same five calls FrontierStore makes, with no other change:
 
 * ``commit_base(df)`` → ``df.writeTo(tbl).using("iceberg")``
-  ``.createOrReplace()``, partitioned by ``bucket(N, key)`` for the
-  bucketed layout;
+  ``.createOrReplace()``;
 * ``commit_delta(spark, df)`` → ``MERGE INTO tbl USING df ON key``
   (update matched, insert unmatched) — the O(|round|)-bytes commit
   then comes from the format itself;
@@ -39,7 +34,6 @@ configured catalog, neither of which this package ships.
 from __future__ import annotations
 
 import functools
-import hashlib
 import json
 import os
 import shutil
@@ -51,13 +45,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
-
-
-def _catalog_name(snap_dir: str) -> str:
-    """Catalog name of a bucketed snapshot dir: a hash of its absolute
-    path, so no two stores (or snapshots) can share an entry."""
-    digest = hashlib.sha256(os.path.abspath(snap_dir).encode()).hexdigest()
-    return f"snap_{digest[:24]}"
 
 
 def _reader(spark: SparkSession, entries: list[dict]):
@@ -92,45 +79,21 @@ class SnapshotTable:
         snaps = self.snapshots()
         return snaps[-1]["id"] if snaps else None
 
-    def commit(
-        self,
-        df: DataFrame,
-        note: str = "",
-        kind: str = "base",
-        bucket_by: tuple[str, int] | None = None,
-    ) -> str:
+    def commit(self, df: DataFrame, note: str = "", kind: str = "base") -> str:
         """Write df as a new immutable snapshot; atomically publish it.
         ``kind`` is "base" (full table image) or "delta" (changed rows
-        only — see MergeTable); ``bucket_by=(key, n_buckets)`` writes it
-        bucketed.  Returns the snapshot id."""
+        only — see MergeTable).  Returns the snapshot id."""
         snaps = self.snapshots()
-        entry = self._write(df, snaps, note, kind, bucket_by)
+        entry = self._write(df, snaps, note, kind)
         self._publish(snaps + [entry])
         return entry["id"]
 
-    def _write(
-        self,
-        df: DataFrame,
-        snaps: list[dict],
-        note: str,
-        kind: str,
-        bucket_by: tuple[str, int] | None = None,
-    ) -> dict:
+    def _write(self, df: DataFrame, snaps: list[dict], note: str, kind: str) -> dict:
         """Write df as the snapshot after ``snaps``; returns its
         manifest entry (not yet published)."""
         entry = self._entry(snaps, df.schema, note, kind)
-        loc = os.path.join(self.path, entry["id"])
-        if bucket_by is None:
-            df.write.mode("overwrite").parquet(loc)
-            return entry
-        # EXTERNAL table at the snapshot dir: without Hive support the
-        # catalog entry dies with the session, so the entry records the
-        # bucket spec read() re-registers it from
-        key, n_buckets = bucket_by
-        (df.write.mode("overwrite").bucketBy(n_buckets, key).sortBy(key)
-         .option("path", os.path.abspath(loc)).format("parquet")
-         .saveAsTable(_catalog_name(loc)))
-        return {**entry, "bucket_key": key, "buckets": n_buckets}
+        df.write.mode("overwrite").parquet(os.path.join(self.path, entry["id"]))
+        return entry
 
     def _entry(self, snaps: list[dict], schema, note: str, kind: str) -> dict:
         """The manifest entry of the snapshot after ``snaps``."""
@@ -172,22 +135,7 @@ class SnapshotTable:
         entry = next((s for s in snaps if s["id"] == snapshot_id), None)
         if entry is None:
             raise KeyError(f"unknown snapshot {snapshot_id}")
-        loc = os.path.join(self.path, snapshot_id)
-        if "buckets" not in entry:
-            return _reader(spark, [entry]).parquet(loc)
-        name = _catalog_name(loc)
-        if not spark.catalog.tableExists(name):
-            # a later session: re-register from the manifest.  The
-            # CLUSTERED BY spec must match the writer's exactly, or Spark
-            # treats the files as unbucketed and shuffles every join
-            key = entry["bucket_key"]
-            spark.sql(
-                f"CREATE TABLE {name} ({entry['schema_ddl']}) USING parquet "
-                f"CLUSTERED BY ({key}) SORTED BY ({key} ASC) "
-                f"INTO {entry['buckets']} BUCKETS "
-                f"LOCATION '{os.path.abspath(loc)}'"
-            )
-        return spark.table(name)
+        return _reader(spark, [entry]).parquet(os.path.join(self.path, snapshot_id))
 
     def read_all(self, spark: SparkSession) -> DataFrame:
         """Union of EVERY committed snapshot (append-only chains like
@@ -237,16 +185,10 @@ class SnapshotTable:
 
     def _gc_orphans(self) -> list[str]:
         live = {s["id"] for s in self.snapshots()}
-        spark = SparkSession.getActiveSession()
         removed = []
         for d in os.listdir(self.path):
             if d.startswith("snap-") and d not in live:
-                loc = os.path.join(self.path, d)
-                # a bucketed dir's catalog entry goes before its files
-                name = _catalog_name(loc)
-                if spark is not None and spark.catalog.tableExists(name):
-                    spark.sql(f"DROP TABLE {name}")
-                shutil.rmtree(loc, ignore_errors=True)
+                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
                 removed.append(d)
         return removed
 
@@ -261,16 +203,10 @@ class MergeTable:
     frontier, so the round commit must write O(|round|) bytes, not
     O(|frontier|).  read() is ``base LEFT ANTI latest-delta keys ∪
     latest-delta rows``: a delta side under the broadcast threshold is
-    broadcast, and with ``n_buckets`` — the base stored bucketed and
-    sorted by the key (Iceberg ``bucket(N, key)`` hidden partitioning)
-    — a shuffle join leaves the base in place too, so only the pending
-    deltas move.  Compaction folds deltas back into a new base every
-    ``compact_every`` deltas to bound read amplification.
-
-    A bucketed base is an external table whose catalog entry is
-    re-registered from the manifest in a later session; retention GC
-    deletes snapshot dirs by path.  On a shared Hive/Glue metastore,
-    point ``path`` at storage this table exclusively owns (an Iceberg
+    broadcast, and then only the pending deltas move.  Compaction folds
+    deltas back into a new base every ``compact_every`` deltas to bound
+    read amplification.  Retention GC deletes snapshot dirs by path, so
+    ``path`` must be storage this table exclusively owns (an Iceberg
     catalog would own GC instead — see the module docstring).
     """
 
@@ -280,23 +216,16 @@ class MergeTable:
         key: str = "url_hash",
         compact_every: int = 16,
         expire_keep_last: int | None = None,
-        n_buckets: int | None = None,
     ):
         self.table = SnapshotTable(path)
         self.key = key
         self.compact_every = compact_every
         # retention applied after each auto-compaction; None = keep all
         self.expire_keep_last = expire_keep_last
-        # bucket count of new bases; None = the latest base's layout
-        self.n_buckets = n_buckets
 
     # -- commits ---------------------------------------------------------
     def commit_base(self, df: DataFrame, note: str = "") -> str:
-        n_buckets = self.n_buckets
-        if n_buckets is None:
-            n_buckets = (self._latest_base() or {}).get("buckets")
-        bucket_by = (self.key, n_buckets) if n_buckets else None
-        return self.table.commit(df, note=note, kind="base", bucket_by=bucket_by)
+        return self.table.commit(df, note=note, kind="base")
 
     def commit_delta(self, spark: SparkSession, df: DataFrame, note: str = "") -> str:
         """Append changed/new FULL rows (same schema as base); last

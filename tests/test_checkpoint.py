@@ -1,38 +1,16 @@
 """Snapshot-checkpointed tables: crash safety, merge-on-read and
-compaction on both base layouts (plain parquet and bucketed), snapshot
-expiry and catalog loss."""
+compaction, snapshot expiry, and the frontier's delta commits
+(O(|round|) bytes per round)."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
-from dart_xbrl_crawler_spark.sources.checkpoint import (
-    MergeTable,
-    SnapshotTable,
-    _catalog_name,
-)
+from dart_xbrl_crawler_spark.sources.checkpoint import MergeTable, SnapshotTable
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _shuffle_join_plan(spark, df) -> str:
-    """Executed plan of ``df`` under a forced shuffle join (broadcast
-    disabled), the strategy planned at 10^10-row scale."""
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        return _plan(df)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-
-
-def _base_dir(mt: MergeTable) -> str:
-    return os.path.join(mt.table.path, mt._latest_base()["id"])
+RUN_TS = "2026-01-16 00:00:00"
 
 
 # ------------------------------------------------------- crash safety
@@ -77,9 +55,8 @@ def test_snapshot_read_takes_schema_from_manifest(spark, tmp_path, count_jobs):
 
 
 # -------------------------------------------- merge-on-read + compaction
-@pytest.mark.parametrize("n_buckets", [None, 8])
-def test_merge_table_compaction(spark, tmp_path, n_buckets):
-    mt = MergeTable(str(tmp_path / "m"), key="k", compact_every=3, n_buckets=n_buckets)
+def test_merge_table_compaction(spark, tmp_path):
+    mt = MergeTable(str(tmp_path / "m"), key="k", compact_every=3)
     base = spark.createDataFrame([(i, "a") for i in range(10)], "k long, v string")
     mt.commit_base(base)
     want = {i: "a" for i in range(10)}
@@ -102,7 +79,6 @@ def test_merge_table_compaction(spark, tmp_path, n_buckets):
     assert got == want  # last-wins applied
     kinds = [s.get("kind") for s in mt.table.snapshots()]
     assert kinds.count("base") >= 2  # compaction produced a new base
-    assert mt._latest_base().get("buckets") == n_buckets  # layout kept
 
 
 # --------------------------------------- retention / expiry / orphan GC
@@ -156,118 +132,68 @@ def test_expire_never_drops_reachable_state(spark, tmp_path):
     assert mt.read(spark).collect()[0]["v"] == "v4"
 
 
-# ------------------------------------------------------- bucketed base
-def test_bucketed_merge_table_last_wins_and_no_base_shuffle(spark, tmp_path):
-    bt = MergeTable(str(tmp_path / "b"), key="k", n_buckets=8, compact_every=100)
-    base = spark.createDataFrame([(i, "a") for i in range(500)], "k long, v string")
-    bt.commit_base(base, note="base")
-    bt.commit_delta(
-        spark, spark.createDataFrame([(i, "b") for i in range(50)], "k long, v string")
-    )
-    bt.commit_delta(
-        spark,
-        spark.createDataFrame([(0, "c"), (600, "new")], "k long, v string"),
-    )
-    merged = bt.read(spark)
-    rows = {r["k"]: r["v"] for r in merged.collect()}
-    assert len(rows) == 501
-    assert rows[0] == "c" and rows[1] == "b" and rows[499] == "a" and rows[600] == "new"
-    # plan shape under a forced shuffle join: the base scan keeps its
-    # bucket layout and is never re-shuffled — every Exchange in the
-    # plan belongs to the small delta subtree (union of delta scans
-    # → groupBy, → join-side distribution).
-    plan = _shuffle_join_plan(spark, bt.read(spark))
-    assert "Bucketed: true" in plan
-    table = _catalog_name(_base_dir(bt))
-    base_scan = [
-        ln for ln in plan.splitlines() if table in ln and "Scan parquet" in ln
-    ]
-    assert base_scan, plan
-    n_exchange = plan.count("Exchange hashpartitioning")
-    assert n_exchange <= 2, plan
+# ---------------------------------------------------------------------
+# delta commits: bytes per round ∝ |round|, not |frontier|
+# ---------------------------------------------------------------------
 
-    # compaction folds into a fresh bucketed base and drops old tables
-    bt.compact(spark, expire_keep_last=1)
-    assert bt._deltas_since_base() == []
-    assert bt._latest_base()["buckets"] == 8
-    rows2 = {r["k"]: r["v"] for r in bt.read(spark).collect()}
-    assert rows2 == rows
+def test_delta_commit_bytes_scale_with_round(spark, tmp_path):
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    store = FrontierStore(str(tmp_path / "frontier"), n_bloom_shards=8)
+    n = 20_000
+    urls = spark.range(n).select(
+        F.concat(
+            F.lit("https://h"), (F.col("id") % 7).cast("string"),
+            F.lit(".example/p/"), F.col("id").cast("string"),
+        ).alias("url"),
+        F.lit(0.0).alias("priority"),
+    )
+    store.bootstrap(urls, RUN_TS)
+    snaps = store.table.table.snapshots()
+    base_id = snaps[-1]["id"]
+    base_bytes = store.table.snapshot_bytes(base_id)
+
+    # rounds fetch ~70 rows each (7 hosts × budget 10)
+    robots = spark.createDataFrame(
+        [(f"h{k}.example", None, 100) for k in range(7)],
+        schema="host string, disallow_prefix string, crawl_delay_ms long",
+    )
+    pages = urls.select(
+        "url", F.lit(b"<!doctype html><p>x</p>").alias("html")
+    ).withColumn("warc_ts", F.to_timestamp(F.lit(RUN_TS)))
+    delta_bytes = []
+    for rid in range(3):
+        snap, fetched = store.run_round(
+            spark, pages, robots, RUN_TS, round_id=rid, round_ms=1000,
+            salt_buckets=4,
+        )
+        delta_bytes.append(store.table.snapshot_bytes(snap))
+    # every round's snapshot is a small fraction of the base image
+    for b in delta_bytes:
+        assert b < base_bytes / 5, (delta_bytes, base_bytes)
+    # state is correct after merging deltas
+    counts = store.state_counts(spark)
+    assert counts.get("fetched", 0) == 3 * 70
+    assert counts["queued"] == n - 3 * 70
+    # each round popped DIFFERENT urls (queued-only filter works)
+    assert fetched.count() == 70
 
 
-def test_bucketed_base_survives_catalog_loss(spark, tmp_path):
-    """Without Hive support the catalog is in-memory per session: a new
-    process sees the manifest but no table entry.  The base is external
-    (data under the store path) and read() re-registers it from the
-    manifest — simulate the new session by dropping the catalog entry
-    and prove read() still reconstructs, WITHOUT re-shuffling the base."""
-    t = MergeTable(str(tmp_path / "bm"), key="k", n_buckets=8)
-    base = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+def test_delta_resume_after_unpublished_write(spark, tmp_path):
+    """A crashed round (delta written but never published) must be
+    invisible to readers — resume sees the previous state."""
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+
+    store = FrontierStore(str(tmp_path / "f2"), n_bloom_shards=8)
+    urls = spark.range(100).select(
+        F.concat(F.lit("https://x.example/"), F.col("id").cast("string")).alias("url"),
+        F.lit(0.0).alias("priority"),
     )
-    t.commit_base(base, note="b0")
-    t.commit_delta(
-        spark,
-        spark.range(5).select(
-            F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
-        ),
-        note="d0",
-    )
-    before = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    # simulate a fresh session: the in-memory catalog entry is gone
-    spark.sql(f"DROP TABLE IF EXISTS {_catalog_name(_base_dir(t))}")
-    t2 = MergeTable(str(tmp_path / "bm"), key="k")  # no layout argument
-    after = {r["k"]: r["v"] for r in t2.read(spark).collect()}
+    store.bootstrap(urls, RUN_TS)
+    before = store.state_counts(spark)
+    # simulate a crash: write a snapshot dir WITHOUT publishing it
+    import os
+    crash_dir = os.path.join(store.table.table.path, "snap-999999-deadbeef")
+    store.table.table.read(spark).limit(5).write.parquet(crash_dir)
+    after = store.state_counts(spark)
     assert after == before
-    assert after[3] == -1 and after[50] == 100
-    # the re-registered base still carries its bucket spec: under a
-    # forced shuffle join (the 10^10-row strategy) the base scan keeps
-    # its bucket layout — every Exchange belongs to the delta subtree
-    plan = _shuffle_join_plan(spark, t2.read(spark))
-    assert "Bucketed: true" in plan
-    assert plan.count("Exchange hashpartitioning") <= 2, plan
-
-
-def test_bucketed_compact_removes_superseded_base_dirs(spark, tmp_path):
-    t = MergeTable(str(tmp_path / "bc"), key="k", n_buckets=4)
-    t.commit_base(
-        spark.range(50).select(F.col("id").alias("k"), F.lit(1).alias("v")),
-        note="b0",
-    )
-    old_loc = _base_dir(t)
-    t.commit_delta(
-        spark,
-        spark.range(3).select(F.col("id").alias("k"), F.lit(2).alias("v")),
-        note="d",
-    )
-    t.compact(spark, expire_keep_last=1)
-    assert [s["kind"] for s in t.snapshots()] == ["base"]
-    assert not os.path.exists(old_loc)  # superseded base data deleted
-    assert not spark.catalog.tableExists(_catalog_name(old_loc))
-    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got[0] == 2 and got[10] == 1 and len(got) == 50
-
-
-def test_cobucketed_join_has_no_exchange(spark, tmp_path):
-    """Two bases bucketed on the same key with the same bucket count
-    join with NO Exchange — the shuffle is paid once at write time (the
-    100 TB frontier⋈seen pattern)."""
-    a = MergeTable(str(tmp_path / "frontier"), n_buckets=8)
-    a.commit_base(spark.range(10_000).select(
-        F.col("id").alias("url_hash"), (F.col("id") % 7).alias("state_a")
-    ))
-    b = MergeTable(str(tmp_path / "seen"), n_buckets=8)
-    b.commit_base(spark.range(5_000).select(
-        F.col("id").alias("url_hash"), (F.col("id") % 3).alias("state_b")
-    ))
-
-    joined = a.read(spark).join(b.read(spark), "url_hash")
-    plan = _shuffle_join_plan(spark, joined)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan, plan
-    assert joined.count() == 5_000
-    # anti-join (URL-seen) over the same layout: also shuffle-free
-    anti = a.read(spark).join(b.read(spark), "url_hash", "left_anti")
-    plan2 = _shuffle_join_plan(spark, anti)
-    assert "Exchange" not in plan2, plan2
-    assert anti.count() == 5_000
-

@@ -1,5 +1,5 @@
-"""Frontier machinery: canonicalization properties, politeness
-budgets, crawl-ordering reproduction, kill-and-resume, and the
+"""Frontier machinery: canonicalization properties, the split
+canonicalizer's equivalence to the UDF one, politeness budgets, crawl-ordering reproduction, kill-and-resume, and the
 FrontierStore lifecycle — admission, lineage counters, transitions
 under cache loss, fetch-cache release and metrics-chain folding."""
 
@@ -14,7 +14,12 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from dart_xbrl_crawler_spark import fixtures, oracle
-from dart_xbrl_crawler_spark.functions.urls import canonicalize_one, with_url_canon
+from dart_xbrl_crawler_spark.functions.urls import (
+    _FAST_URL_RE,
+    canonicalize_one,
+    with_url_canon,
+    with_url_canon_split,
+)
 from dart_xbrl_crawler_spark.operators import politeness as P
 from dart_xbrl_crawler_spark.operators import scheduler as S
 from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
@@ -91,6 +96,130 @@ def test_with_url_canon_spark(spark, fixture_bundle):
     n_urls = df.count()
     n_hashes = df.select("url_hash").distinct().count()
     assert n_hashes <= n_urls - 3
+
+
+# with_url_canon_split (Catalyst fast path + UDF fallback) must produce
+# exactly with_url_canon's values on every input — eligible, ineligible
+# and adversarial spellings.
+# Mixed corpus: bench-shaped, fixture trap spellings, general-path
+# oddities (userinfo, %-escapes, ipv6, whitespace, multi-'=', odd
+# ports, queries without paths, empty paths, fragments with '#').
+ADVERSARIAL_URLS = [
+    "https://DART.FSS.OR.KR/api/doc?b=3&a=17#frag",
+    "https://host7.example/api/doc?b=0&a=100",
+    "http://h.example:80/",
+    "https://h.example:443/p?x=",
+    "https://h.example:8080/p?x=",
+    "https://h.example:080/p",
+    "https://h.example",
+    "https://h.example#frag",
+    "https://h.example?x=1",  # query without path → general parser
+    "https://H.example/p?a=b=c",  # '=' in value → general parser
+    "https://h.example/p?a=%20x",  # percent escape
+    "https://h.example/p%20x/y",  # percent in path
+    "https://h.example/p?b=2&a=1&b=0",
+    "https://user:pw@h.example/p",  # userinfo
+    "https://h.example:bad/p",  # invalid port
+    "https://h.example/p?&&a=1&",
+    "https://h.example/p?a",
+    "https://h.example/p?",
+    "https://h.example/p#a#b?c",  # '#' and '?' inside fragment
+    "  https://h.example/p  ",  # whitespace → strip in general path
+    "https://h.example/pa th",  # space in path
+    "ftp://h.example:80/p",  # non-http scheme keeps :80
+    "HtTpS://UPPER.HOST:443/Path/UPPER?Z=9&a=1",
+    "https://[2001:db8::1]/p",  # ipv6
+    "https://h.example/p?a-x=c&a=b",  # '-' in key sorts before '='
+    "https://h.example/p?a=2&a=10",  # value tie-break is lexicographic
+    "no-scheme-at-all",
+    "://missing.scheme/p",
+    "https://h.example/p?~x=.&_y=-",
+    "https://h.example/a//b///c",
+    "https://h.example/p?k" + "&k=" ,  # duplicate key w/ and w/o '='
+    "https://h.example/p\n",  # Java '$' matches before a final '\n'
+    "https://h.example/p\r\n",
+]
+
+
+def test_split_matches_udf_on_adversarial(spark):
+    df = spark.createDataFrame(
+        pd.DataFrame({"url": ADVERSARIAL_URLS, "tag": range(len(ADVERSARIAL_URLS))}),
+        schema="url string, tag long",
+    )
+    got = {
+        r["tag"]: (r["url_canon"], r["host"], r["url_hash"])
+        for r in with_url_canon_split(df).collect()
+    }
+    assert len(got) == len(ADVERSARIAL_URLS)
+    for i, u in enumerate(ADVERSARIAL_URLS):
+        c, h = canonicalize_one(u)
+        assert got[i][0] == c, f"url_canon mismatch for {u!r}: {got[i][0]!r} != {c!r}"
+        assert got[i][1] == h, f"host mismatch for {u!r}"
+
+
+def test_split_matches_udf_on_generated_corpus(spark):
+    """Bench-shaped + randomized generated corpus through both paths."""
+    n = 2000
+    base = spark.range(n)
+    url = F.concat(
+        F.lit("https://"),
+        F.when(F.col("id") % 10 < 6, F.lit("DART.FSS.OR.KR")).otherwise(
+            F.concat(F.lit("host"), (F.col("id") % 211).cast("string"), F.lit(".example"))
+        ),
+        F.lit("/api/doc?b="),
+        (F.col("id") % 7).cast("string"),
+        F.lit("&a="),
+        F.col("id").cast("string"),
+        F.when(F.col("id") % 3 == 0, "#frag").otherwise(""),
+    )
+    df = base.select(F.col("id").alias("tag"), url.alias("url"))
+    a = {
+        r["tag"]: (r["url_canon"], r["host"], r["url_hash"])
+        for r in with_url_canon_split(df).collect()
+    }
+    b = {
+        r["tag"]: (r["url_canon"], r["host"], r["url_hash"])
+        for r in with_url_canon(df).collect()
+    }
+    assert a == b
+
+
+def test_fast_regex_is_subset_of_python_fast_path():
+    """Every URL the Catalyst gate accepts must be one canonicalize_one
+    handles on its own fast path (no urllib fallback) — the Catalyst
+    expressions replicate exactly that branch.  (NB the spec is
+    canonicalize_one itself: its string-compare port check keeps
+    ':080' while urllib would drop it; the Catalyst path matches
+    canonicalize_one, as test_split_matches_udf_* pin value-level.)"""
+    import re
+    from unittest import mock
+
+    rx = re.compile(_FAST_URL_RE.replace(r"\z", r"\Z"))  # python spells \z \Z
+    from dart_xbrl_crawler_spark.functions import urls as U
+
+    for u in ADVERSARIAL_URLS:
+        if rx.match(u):
+            with mock.patch.object(
+                U, "_canonicalize_general",
+                side_effect=AssertionError(f"general path hit for {u!r}"),
+            ):
+                canonicalize_one(u)
+
+
+def test_split_matches_udf_on_null_url(spark):
+    """A NULL url must meet the same fate in both canonicalizers, not
+    vanish from the split's two filtered branches."""
+    df = spark.createDataFrame(
+        [("https://h.example/p", 0), (None, 1)], schema="url string, tag long"
+    )
+
+    def outcome(fn):
+        try:
+            return {r["tag"]: tuple(r) for r in fn(df).collect()}
+        except Exception as e:  # the UDF's kernel rejects None
+            return type(e).__name__
+
+    assert outcome(with_url_canon_split) == outcome(with_url_canon)
 
 
 # ---------------------------------------------------------- politeness
@@ -218,78 +347,6 @@ def test_frontier_rounds_and_resume(spark, fixture_bundle, tmp_path):
     mdf = store.metrics.read(spark)
     states = {r["state"] for r in mdf.select("state").distinct().collect()}
     assert "fetched" in states
-
-
-# ------------------------------------------------ bucketed base layout
-def test_frontier_store_bucketed_storage_e2e(spark, fixture_bundle, tmp_path):
-    """FrontierStore on bucketed storage reproduces the parquet-backed
-    behavior across bootstrap + rounds."""
-    from dart_xbrl_crawler_spark.operators.scheduler import seeds_to_frontier
-
-    pages, seeds, _, robots = fixture_bundle
-    seeds_df = spark.createDataFrame(seeds, schema=SEEDS)
-    pages_df = spark.createDataFrame(pages, schema=PAGES)
-    robots_df = spark.createDataFrame(robots, schema=ROBOTS)
-
-    stores = {}
-    for n_buckets in (None, 8):
-        store = FrontierStore(
-            str(tmp_path / str(n_buckets)), n_bloom_shards=8, n_buckets=n_buckets,
-        )
-        store.bootstrap(seeds_to_frontier(seeds_df), fixtures.RUN_TS)
-        for rid in range(2):
-            store.run_round(
-                spark, pages_df, robots_df, fixtures.RUN_TS, round_id=rid,
-                round_ms=120_000,
-            )
-        stores[n_buckets] = store
-    assert stores[None].state_counts(spark) == stores[8].state_counts(spark)
-
-
-def test_bucketed_stores_never_share_tables(spark, tmp_path):
-    """Two bucketed stores whose paths differ only in '/' vs '_' each
-    read back only their own urls."""
-    stores = {}
-    for path, host, n in ((tmp_path / "a" / "b", "a.example", 5),
-                          (tmp_path / "a_b", "b.example", 7)):
-        store = FrontierStore(str(path), n_bloom_shards=8, n_buckets=8)
-        urls = [f"https://{host}/p{i}" for i in range(n)]
-        store.bootstrap(
-            spark.createDataFrame(pd.DataFrame({"url": urls, "priority": [0.0] * n})),
-            RUN_TS,
-        )
-        stores[host] = (store, n)
-    for host, (store, n) in stores.items():
-        got = [r["host"] for r in store.table.read(spark).select("host").collect()]
-        assert got == [host] * n
-
-
-def test_bucketed_store_reopens_without_layout_argument(spark, fixture_bundle, tmp_path):
-    """The CLI opens every store as FrontierStore(path): a bucketed
-    store reopens, counts and runs a round without being told its
-    layout, and its compacted base stays bucketed."""
-    from dart_xbrl_crawler_spark.operators.scheduler import seeds_to_frontier
-
-    pages, seeds, _, robots = fixture_bundle
-    path = str(tmp_path / "f")
-    store = FrontierStore(path, n_bloom_shards=8, n_buckets=8)
-    store.bootstrap(
-        seeds_to_frontier(spark.createDataFrame(seeds, schema=SEEDS)), RUN_TS
-    )
-    counts = store.state_counts(spark)
-
-    reopened = FrontierStore(path, compact_every=0)  # compacts every round
-    assert reopened.state_counts(spark) == counts
-    reopened.run_round(
-        spark, spark.createDataFrame(pages, schema=PAGES),
-        spark.createDataFrame(robots, schema=ROBOTS), RUN_TS, round_id=1,
-        round_ms=120_000,
-    )
-    base = reopened.table._latest_base()
-    assert base["note"] == "auto-compact after round=1"
-    assert base["buckets"] == 8 and base["bucket_key"] == "url_hash"
-    after = reopened.state_counts(spark)
-    assert sum(after.values()) == sum(counts.values()) and after != counts
 
 
 # ------------------------------------- lineage metrics from deltas

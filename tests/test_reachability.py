@@ -1,6 +1,6 @@
 """Every engine definition is reached from a path the program runs,
-every defaulted engine parameter is set by one, and every engine import
-is used.
+every defaulted engine parameter is set by one, every engine parameter
+is read, and every engine import is used.
 
 A pure-AST name closure over the top-level definitions of
 ``dart_xbrl_crawler_spark/``; no Spark starts.  The roots are the CLI,
@@ -11,7 +11,8 @@ top-level definition of that name in any module, and an identifier
 inside a string literal counts as a name (``bench.py`` embeds code in
 strings); docstrings do not.  What the closure leaves unreached must be
 on ``KEEP``, each entry with the reason it stays.  The parameter rule
-and its ``PARAMS_KEEP`` list are described above ``PARAMS_KEEP``.
+and its ``PARAMS_KEEP`` list are described above ``PARAMS_KEEP``, the
+read rule above ``PARAMS_UNREAD``.
 """
 
 from __future__ import annotations
@@ -186,11 +187,8 @@ PARAMS_KEEP = {
     # folding the metrics chains, and GC of old seen-filter images
     "operators.frontier.FrontierStore(metrics_compact_every)": "metrics-chain fold",
     "operators.frontier.FrontierStore(filter_keep_last)": "filter-image GC",
-    # deployment settings of the frontier table: the bucketed base (the
-    # 10^10-row layout) and snapshot retention
-    "operators.frontier.FrontierStore(n_buckets)": "bucketed-base layout",
+    # a deployment setting of the frontier table: snapshot retention
     "operators.frontier.FrontierStore(expire_keep_last)": "snapshot retention",
-    "sources.checkpoint.MergeTable(n_buckets)": "bucketed-base layout",
     "sources.checkpoint.MergeTable(expire_keep_last)": "snapshot retention",
     # the parsers share one (body, aux) signature and are called only
     # through the _REGISTRY table, whose call passes aux but is not a
@@ -369,6 +367,67 @@ def test_every_engine_parameter_is_set_or_constant():
     )
     stale = sorted(set(PARAMS_KEEP) - unset)
     assert not stale, "PARAMS_KEEP entries that a caller now sets:\n  " + "\n  ".join(stale)
+
+
+# Every parameter of an engine function, method, nested function or
+# lambda is read (loaded by name) in its body; ``self``/``cls`` are
+# exempt.  An unread parameter is dead, unless a caller fixes the
+# signature: those are on PARAMS_UNREAD with the reason.
+PARAMS_UNREAD = {
+    # the parsers share one (body, aux) signature and are called only
+    # through the _REGISTRY table
+    "doc_parsers._parse_mini(aux)": "uniform parser signature",
+    # perfbench/gen.py passes the kernel's arguments by position
+    "oracle.extract_facts_rowwise(url)": "positional caller",
+    # perfbench/workloads.py's traced bootstrap calls it by position
+    "operators.frontier.FrontierStore._commit_insert_metrics(spark)": "positional caller",
+    "operators.frontier.FrontierStore._commit_insert_metrics(fresh)": "positional caller",
+}
+
+
+def unread_params() -> tuple[set[str], int]:
+    """→ (engine parameters their body never reads, as
+    ``mod.qualname(param)``; the number of engine parameters)."""
+    unread: set[str] = set()
+    n_params = 0
+
+    def visit(node: ast.AST, prefix: str) -> None:
+        nonlocal n_params
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, f"{prefix}{child.name}.")
+            elif isinstance(child, (*_FNS, ast.Lambda)):
+                a = child.args
+                params = [p.arg for p in (*a.posonlyargs, *a.args, *a.kwonlyargs,
+                                          a.vararg, a.kwarg)
+                          if p is not None and p.arg not in ("self", "cls")]
+                body = child.body if isinstance(child.body, list) else [child.body]
+                loads = {n.id for stmt in body for n in ast.walk(stmt)
+                         if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+                name = f"{prefix}{getattr(child, 'name', '<lambda>')}"
+                n_params += len(params)
+                unread.update(f"{name}({p})" for p in params if p not in loads)
+                visit(child, f"{name}.")
+            else:
+                visit(child, prefix)
+
+    for f in sorted(PKG.rglob("*.py")):
+        visit(ast.parse(f.read_text()),
+              ".".join(f.relative_to(PKG).with_suffix("").parts) + ".")
+    return unread, n_params
+
+
+def test_every_engine_parameter_is_read():
+    unread, n_params = unread_params()
+    assert n_params >= 500  # the scan is not vacuous
+    missing = sorted(unread - set(PARAMS_UNREAD))
+    assert not missing, (
+        "engine parameters their body never reads (delete them, or add "
+        "them to PARAMS_UNREAD with the reason the signature stays):\n  "
+        + "\n  ".join(missing)
+    )
+    stale = sorted(set(PARAMS_UNREAD) - unread)
+    assert not stale, "PARAMS_UNREAD entries now read or gone:\n  " + "\n  ".join(stale)
 
 
 def test_every_engine_import_is_used():
