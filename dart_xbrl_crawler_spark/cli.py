@@ -15,10 +15,11 @@ Subcommands (each one pure DataFrame job over the frontier store):
       insert newly-discovered urls (bloom + exact dedup)
   fetch --pages <parquet> --robots <parquet> --store <dir> [--round-ms N]
       one politeness-bounded crawl round; prints lineage counts.
-      --robots is either a rules table (host, disallow_prefix |
-      rules, crawl_delay_ms) or robots.txt bodies (host, robots_txt),
-      which are parsed per RFC 9309 ('*'/'$' wildcards, longest match,
-      crawl-delay); the columns tell which
+      --robots is robots.txt bodies (host, robots_txt), parsed per RFC
+      9309 ('*'/'$' wildcards, longest match, crawl-delay), single
+      prefixes (host, disallow_prefix, crawl_delay_ms) or a rules table
+      (politeness.ROBOTS_RULES_SCHEMA); the engine lifts each into that
+      one rules dim
   crawl --pages <parquet> --robots <parquet> --store <dir> [--max-rounds N]
       [--text-out <dir> --seeds <parquet>] [--backoff-factor F]
       [--priority-decay D] [--no-discover]
@@ -56,24 +57,16 @@ import json
 import sys
 
 from .operators.frontier import FrontierStore
-from .operators.politeness import robots_rules_from_txt
 from .operators.scheduler import seeds_to_frontier
 from .plans import pipeline
 from .schemas import SEEDS
 from .session import get_spark
 
 RUN_TS_DEFAULT = "2026-01-16 00:00:00"
-ROBOTS_HELP = ("parquet of robots rules (host, disallow_prefix | rules, "
-               "crawl_delay_ms) or of robots.txt bodies (host, robots_txt)")
-
-
-def _read_robots(spark, path: str):
-    """The robots dim ``--robots`` names: robots.txt bodies are parsed
-    into wildcard rules, a rules table passes through as is."""
-    robots = spark.read.parquet(path)
-    if "robots_txt" in robots.columns:
-        robots = robots_rules_from_txt(robots)
-    return robots
+ROBOTS_HELP = ("parquet of robots.txt bodies (host, robots_txt), of "
+               "single prefixes (host, disallow_prefix, crawl_delay_ms) or "
+               "of rules (host, rules array<struct<prefix, pattern, allow, "
+               "rlen>>, crawl_delay_ms)")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -225,7 +218,7 @@ def main(argv: list[str] | None = None) -> int:
         snap, fetched = store.run_round(
             spark,
             spark.read.parquet(args.pages),
-            _read_robots(spark, args.robots),
+            spark.read.parquet(args.robots),
             args.run_ts,
             round_id=args.round_id,
             round_ms=args.round_ms,
@@ -247,7 +240,7 @@ def main(argv: list[str] | None = None) -> int:
         rounds = store.run_crawl(
             spark,
             spark.read.parquet(args.pages),
-            _read_robots(spark, args.robots),
+            spark.read.parquet(args.robots),
             args.run_ts,
             max_rounds=args.max_rounds,
             round_ms=args.round_ms,

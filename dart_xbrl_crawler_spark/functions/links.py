@@ -122,6 +122,29 @@ def resolve_href(href: Column, scheme: Column, host: Column, base_dir: Column):
     )
 
 
+def _page_base(pages: DataFrame, carry: tuple[str, ...] = ()):
+    """The page side of link resolution: (src, scheme, host, base_dir).
+    ``src`` holds the page's url, url_canon, host, ``carry`` and html
+    columns, canonicalized only when url_canon is missing; the others
+    are the page url's scheme, host and base directory (its path up to
+    and including the final '/'), the resolve_href inputs."""
+    from .urls import with_url_canon
+
+    keep = [c for c in ("url", "url_canon", "host") if c in pages.columns]
+    src = pages.select(*keep, *carry, "html")
+    if "url_canon" not in src.columns:
+        # fetched pages already carry url_canon/host — don't re-run the
+        # canonicalizer python stage over them
+        src = with_url_canon(src)
+    scheme = F.regexp_extract(F.col("url_canon"), r"^([a-z][a-z0-9+.-]*):", 1)
+    path = F.coalesce(
+        F.parse_url(F.col("url_canon"), F.lit("PATH")), F.lit("/")
+    )
+    base_dir = F.regexp_extract(path, r"^(.*/)", 1)
+    base_dir = F.when(base_dir == "", F.lit("/")).otherwise(base_dir)
+    return src, scheme, F.col("host"), base_dir
+
+
 def extract_links(
     pages: DataFrame,
     carry: tuple[str, ...] = (),
@@ -139,25 +162,8 @@ def extract_links(
     carries ``nofollow`` contributes no links, and an href whose
     anchor carries ``rel="…nofollow…"`` is dropped (every copy of
     that href string on the page — the conservative reading)."""
-    from .urls import with_url_canon
-
-    keep = [
-        c for c in ("url", "url_canon", "host") if c in pages.columns
-    ] + list(carry) + ["html"]
-    src = pages.select(*keep)
-    if "url_canon" not in src.columns:
-        # fetched pages already carry url_canon/host — don't re-run the
-        # canonicalizer python stage over them
-        src = with_url_canon(src)
+    src, scheme, host, base_dir = _page_base(pages, carry)
     html_text = decode_permissive(F.col("html"))
-    scheme = F.regexp_extract(F.col("url_canon"), r"^([a-z][a-z0-9+.-]*):", 1)
-    host = F.col("host")
-    path = F.coalesce(
-        F.parse_url(F.col("url_canon"), F.lit("PATH")), F.lit("/")
-    )
-    # base directory: path up to and including the final '/'
-    base_dir = F.regexp_extract(path, r"^(.*/)", 1)
-    base_dir = F.when(base_dir == "", F.lit("/")).otherwise(base_dir)
 
     hrefs = F.concat(
         *[
@@ -375,20 +381,8 @@ def extract_anchor_texts(pages: DataFrame) -> DataFrame:
     web-search and LLM pretraining pipelines aggregate per TARGET url:
     what the web calls a page).  Downstream: groupBy(link) — an
     equality-keyed shuffle, never a cross join."""
-    from .urls import with_url_canon
-
-    keep = [c for c in ("url", "url_canon", "host") if c in pages.columns]
-    src = pages.select(*keep, "html")
-    if "url_canon" not in src.columns:
-        src = with_url_canon(src)
+    src, scheme, host, base_dir = _page_base(pages)
     html_text = decode_permissive(F.col("html"))
-    scheme = F.regexp_extract(F.col("url_canon"), r"^([a-z][a-z0-9+.-]*):", 1)
-    host = F.col("host")
-    path = F.coalesce(
-        F.parse_url(F.col("url_canon"), F.lit("PATH")), F.lit("/")
-    )
-    base_dir = F.regexp_extract(path, r"^(.*/)", 1)
-    base_dir = F.when(base_dir == "", F.lit("/")).otherwise(base_dir)
 
     elems = F.regexp_extract_all(html_text, F.lit(_ANCHOR_RE), F.lit(1))
     pairs = F.filter(

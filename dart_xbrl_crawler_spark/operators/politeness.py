@@ -49,31 +49,14 @@ _BACKOFF_MAX_MULTIPLIER = 16.0
 # (dart_api_manager.py:298-326, 44-46).
 # ---------------------------------------------------------------------
 
+# The one robots dim inside the engine: per host, its rules and crawl
+# delay.  Each rule carries the literal prefix up to the first wildcard
+# (cheap Catalyst prefilter), an anchored Java regex when the raw rule
+# used RFC 9309 '*'/'$' special characters (null otherwise — the common
+# case never pays a regex), and the raw rule's length for
+# most-specific-match precedence.  robots_dim lifts every accepted
+# robots input into it.
 ROBOTS_RULES_SCHEMA = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField(
-            "rules",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("prefix", T.StringType(), False),
-                        T.StructField("allow", T.BooleanType(), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-        T.StructField("crawl_delay_ms", T.LongType(), True),
-    ]
-)
-
-# Wildcard rules dim emitted by robots_rules_from_txt: each rule carries
-# the literal prefix up to the first wildcard (cheap Catalyst prefilter),
-# an anchored Java regex when the raw rule used RFC 9309 '*'/'$' special
-# characters (null otherwise — the common case never pays a regex), and
-# the raw rule's octet length for most-specific-match precedence.
-ROBOTS_RULES_WILD_SCHEMA = T.StructType(
     [
         T.StructField("host", T.StringType(), False),
         T.StructField(
@@ -88,7 +71,7 @@ ROBOTS_RULES_WILD_SCHEMA = T.StructType(
                     ]
                 )
             ),
-            False,
+            True,
         ),
         T.StructField("crawl_delay_ms", T.LongType(), True),
     ]
@@ -180,11 +163,12 @@ def parse_robots_txt(
 
 
 def robots_rules_from_txt(robots_txt: DataFrame) -> DataFrame:
-    """(host, robots_txt) → rules dim matching ROBOTS_RULES_WILD_SCHEMA
-    (literal prefix + optional anchored regex for '*'/'$' rules + raw
-    rule length for precedence), with the groups for ``USER_AGENT``.
-    Tiny-dim path: parsing runs in a pandas UDF batch; the result is
-    broadcast by apply_robots."""
+    """(host, robots_txt) → the ROBOTS_RULES_SCHEMA dim, from the groups
+    for ``USER_AGENT``: each rule as its literal prefix, an anchored
+    regex for '*'/'$' rules and the raw rule's length for precedence.
+    robots_dim calls it for robots.txt bodies.  Tiny-dim path: parsing
+    runs in a pandas UDF batch; the result is broadcast by
+    apply_robots."""
     import pandas as pd
 
     def parse(it):
@@ -210,16 +194,16 @@ def robots_rules_from_txt(robots_txt: DataFrame) -> DataFrame:
                 {"host": hosts, "rules": rules_col, "crawl_delay_ms": delays}
             )
 
-    return robots_txt.mapInPandas(parse, schema=ROBOTS_RULES_WILD_SCHEMA)
+    return robots_txt.mapInPandas(parse, schema=ROBOTS_RULES_SCHEMA)
 
 
 def _eval_rules(path):
     """Longest-match REP evaluation as ONE Catalyst expression over the
     broadcast rules array — no row multiplication, no UDF.  Struct
     max-ordering on (rule_length, allow) makes Allow win exact-length
-    ties, per Google/RFC-9309 semantics.  Rules are normalized structs
-    (prefix, pattern, allow, rlen): the literal prefix prefilters cheap,
-    the regex (only present for '*'/'$' rules) decides wildcard rules."""
+    ties, per Google/RFC-9309 semantics.  The literal prefix prefilters
+    cheap, the regex (only present for '*'/'$' rules) decides wildcard
+    rules.  No rules, or none matching, is False."""
     matched = F.filter(
         F.col("rules"),
         lambda r: path.startswith(r["prefix"])
@@ -234,74 +218,64 @@ def _eval_rules(path):
     return F.when(best.isNotNull(), ~best["allow"]).otherwise(F.lit(False))
 
 
-def _normalize_rules(rules_col, rules_type: T.ArrayType):
-    """Lift a plain (prefix, allow) rules array into the wildcard-aware
-    (prefix, pattern, allow, rlen) shape so one evaluator serves both."""
-    names = rules_type.elementType.names  # type: ignore[union-attr]
-    if "pattern" in names:
-        return rules_col
-    return F.transform(
-        rules_col,
-        lambda r: F.struct(
-            r["prefix"].alias("prefix"),
-            F.lit(None).cast("string").alias("pattern"),
-            r["allow"].alias("allow"),
-            F.length(r["prefix"]).cast("int").alias("rlen"),
-        ),
+def robots_dim(robots: DataFrame) -> DataFrame:
+    """Lift a robots input into the ROBOTS_RULES_SCHEMA dim, the one
+    shape apply_robots, apply_backoff and pop_round evaluate:
+
+      * robots.txt bodies (host, robots_txt) are parsed by
+        robots_rules_from_txt (RFC 9309 '*'/'$' wildcards, longest
+        match, crawl-delay);
+      * the ROBOTS single-prefix schema (host, disallow_prefix,
+        crawl_delay_ms) of fixtures, perfbench and the driver contract:
+        a prefix becomes one Disallow rule with a null pattern, a null
+        prefix null rules;
+      * a table already in the rules shape passes through.
+
+    A projection: it starts no job.  A rules column whose structs lack
+    ``pattern`` or ``rlen`` raises ValueError."""
+    if "robots_txt" in robots.columns:
+        return robots_rules_from_txt(robots)
+    if "rules" in robots.columns:
+        element = getattr(robots.schema["rules"].dataType, "elementType", None)
+        if not {"pattern", "rlen"} <= set(getattr(element, "names", ())):
+            raise ValueError(
+                "robots rules must be "
+                f"{ROBOTS_RULES_SCHEMA.simpleString()}, got "
+                f"{robots.schema.simpleString()}"
+            )
+        return robots.select("host", "rules", "crawl_delay_ms")
+    prefix = F.col("disallow_prefix")
+    rule = F.struct(
+        prefix.alias("prefix"),
+        F.lit(None).cast("string").alias("pattern"),
+        F.lit(False).alias("allow"),
+        F.length(prefix).alias("rlen"),
+    )
+    return robots.select(
+        "host",
+        F.when(prefix.isNotNull(), F.array(rule)).alias("rules"),
+        "crawl_delay_ms",
     )
 
 
 def apply_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     """Mark rows blocked by robots rules; adds ``robots_blocked`` and
-    ``crawl_delay_ms``.  The join broadcasts the dim: one row per host,
-    orders of magnitude smaller than the frontier (a dim too big to
-    broadcast would need a cardinality gate).
-
-    Accepts three dim shapes:
-      * wildcard rules (host, rules array<struct<prefix, pattern,
-        allow, rlen>>, crawl_delay_ms) — ROBOTS_RULES_WILD_SCHEMA, from
-        robots_rules_from_txt (the CLI's ``--robots`` given robots.txt
-        bodies): full RFC 9309 longest-match semantics with '*'/'$';
-      * plain rules (host, rules array<struct<prefix, allow>>,
-        crawl_delay_ms) — ROBOTS_RULES_SCHEMA, the rules table
-        q44_robots_eval builds: longest-match over literal prefixes;
-      * single-prefix (host, disallow_prefix, crawl_delay_ms) — the
-        ROBOTS input schema (fixtures, perfbench, the driver contract):
-        treated as one Disallow rule."""
+    ``crawl_delay_ms``.  ``robots`` is any input robots_dim lifts:
+    robots.txt bodies, the ROBOTS single-prefix schema or a
+    ROBOTS_RULES_SCHEMA table; one evaluator applies full RFC 9309
+    longest-match semantics to all of them.  The join broadcasts the
+    dim: one row per host, orders of magnitude smaller than the
+    frontier (a dim too big to broadcast would need a cardinality
+    gate).  A host outside the dim is allowed, at the default delay."""
     path = F.parse_url(F.col("url_canon"), F.lit("PATH"))
-    if "rules" in robots.columns:
-        rules_type = robots.schema["rules"].dataType
-        dim = robots.select(
-            "host",
-            _normalize_rules(F.col("rules"), rules_type).alias("rules"),
-            F.coalesce("crawl_delay_ms", F.lit(DEFAULT_CRAWL_DELAY_MS)).alias(
-                "crawl_delay_ms"
-            ),
-        )
-        joined = frontier.join(F.broadcast(dim), "host", "left")
-        blocked = F.when(
-            F.col("rules").isNotNull(), _eval_rules(path)
-        ).otherwise(F.lit(False))
-        return joined.withColumn("robots_blocked", blocked).withColumn(
+    joined = frontier.join(F.broadcast(robots_dim(robots)), "host", "left")
+    return (
+        joined.withColumn("robots_blocked", _eval_rules(path))
+        .withColumn(
             "crawl_delay_ms",
             F.coalesce("crawl_delay_ms", F.lit(DEFAULT_CRAWL_DELAY_MS)),
-        ).drop("rules")
-    rules = robots.select(
-        "host",
-        "disallow_prefix",
-        F.coalesce("crawl_delay_ms", F.lit(DEFAULT_CRAWL_DELAY_MS)).alias(
-            "crawl_delay_ms"
-        ),
-    )
-    joined = frontier.join(F.broadcast(rules), "host", "left")
-    blocked = F.col("disallow_prefix").isNotNull() & path.startswith(
-        F.col("disallow_prefix")
-    )
-    return joined.withColumn(
-        "robots_blocked", F.coalesce(blocked, F.lit(False))
-    ).withColumn(
-        "crawl_delay_ms",
-        F.coalesce("crawl_delay_ms", F.lit(DEFAULT_CRAWL_DELAY_MS)),
+        )
+        .drop("rules")
     )
 
 
@@ -314,15 +288,16 @@ def apply_backoff(
     host keeps its robots/default delay exactly.  host_stats comes from
     FrontierStore.host_stats (the per-host metrics chain — never a
     frontier scan); the reference has no analog (its single loop simply
-    sleeps a constant).  Returns a robots dim of the same shape with
-    adjusted crawl_delay_ms, so it drops into pop_round unchanged.
+    sleeps a constant).  Returns the robots input lifted by robots_dim,
+    with adjusted crawl_delay_ms, so it drops into pop_round unchanged.
 
     Failing hosts OUTSIDE the robots dim (newly discovered hosts get
     the default delay without a robots row) are appended with null
-    rules and the default delay so backoff covers every observed host —
-    a left join into robots alone would silently exempt them.  Both
-    legs broadcast: a full-outer join can't broadcast-hash, so this is
-    left-join + anti-join-union instead."""
+    rules and delay (base_delay reads it as the default), so backoff
+    covers every observed host — a left join into robots alone would
+    silently exempt them.  Both legs broadcast: a full-outer join can't
+    broadcast-hash, so this is left-join + anti-join-union instead."""
+    robots = robots_dim(robots)
     stats = host_stats.select("host", "fail_rate")
     mult = F.least(
         F.lit(1.0) + F.lit(factor) * F.coalesce("fail_rate", F.lit(0.0)),
@@ -334,16 +309,11 @@ def apply_backoff(
     known = robots.join(F.broadcast(stats), "host", "left")
     missing = stats.join(
         F.broadcast(robots.select("host")), "host", "left_anti"
+    ).select(
+        "host",
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in ROBOTS_RULES_SCHEMA[1:]],
+        "fail_rate",
     )
-    for field in robots.schema.fields:
-        if field.name in ("host", "crawl_delay_ms"):
-            continue
-        missing = missing.withColumn(
-            field.name, F.lit(None).cast(field.dataType)
-        )
-    missing = missing.withColumn(
-        "crawl_delay_ms", F.lit(DEFAULT_CRAWL_DELAY_MS).cast("long")
-    ).select(*known.columns)
     return (
         known.unionByName(missing)
         .withColumn("crawl_delay_ms", F.ceil(base_delay * mult).cast("long"))
@@ -395,6 +365,7 @@ def pop_round(
     its top rows by bucket rank; with hash-uniform salting that is the
     whole budget, and never more.  Every other host is ranked as above.
     """
+    robots = robots_dim(robots)
     gated = apply_robots(frontier, robots).withColumn(
         "partition_salt",
         F.pmod(F.col("url_hash"), F.lit(salt_buckets)).cast("int"),
@@ -406,7 +377,7 @@ def pop_round(
         F.lit(round_ms) / F.greatest(F.lit(1), F.col("crawl_delay_ms"))
     )
     gated = gated.withColumn("_budget", budget)
-    cols = [c for c in gated.columns if c not in ("_budget", "disallow_prefix")]
+    cols = [c for c in gated.columns if c != "_budget"]
     blocked = F.col("robots_blocked")
     order = [
         F.col("priority").desc(),

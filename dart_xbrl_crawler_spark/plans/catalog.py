@@ -61,17 +61,9 @@ def query(name: str, sql: str | None):
     """,
 )
 def q01(spark, sf):
-    # lineitem ships as ONE parquet row group, so the scan cannot split
-    # and the (slow, exact) decimal partial aggregation would run in a
-    # single task whatever maxPartitionBytes says — spread it first.
-    # Exact decimal sums are partitioning-independent, and the shipdate
-    # filter still pushes to the scan through the repartition
-    # (plan-asserted in test_plan_quality).
-    par = spark.sparkContext.defaultParallelism
     li = _t(spark, sf, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .repartition(par)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             _dsum(F.col("l_quantity")).alias("sum_qty"),
@@ -704,9 +696,12 @@ def q44(spark, sf):
     ).distinct()
     rules = spark.createDataFrame(
         [
-            ("h0.ex", [("/p1", False), ("/p1/1", True), ("/p3", False)], None),
-            ("h1.ex", [("/", False)], None),
-            ("h2.ex", [("/p2", False), ("/p2/", True)], None),
+            (host, [(p, None, allow, len(p)) for p, allow in rs], None)
+            for host, rs in (
+                ("h0.ex", [("/p1", False), ("/p1/1", True), ("/p3", False)]),
+                ("h1.ex", [("/", False)]),
+                ("h2.ex", [("/p2", False), ("/p2/", True)]),
+            )
         ],
         schema=ROBOTS_RULES_SCHEMA,
     )

@@ -2,7 +2,9 @@
 including AVI-vs-WAV discrimination of RIFF payloads.
 
 The AVI fixture is built by an independent test-side muxer
-(spec-derived: the Microsoft AVI RIFF form)."""
+(spec-derived: the Microsoft AVI RIFF form).  PNG pixel decode
+(``operators.multimodal.decode_png``) round-trips a test-side encoder
+over every filter type."""
 
 from __future__ import annotations
 
@@ -99,3 +101,90 @@ def test_sniff_discriminates_avi_from_wav(spark):
         for r in sniff_media(df).select("url", "media_type").collect()
     }
     assert got == {"u1": "video/x-msvideo", "u2": "audio/wav"}
+
+
+# ----------------------------------------------- real PNG pixel decode
+def _png_encode(px, filters, color_type=2, palette=None):
+    """Minimal test-side PNG encoder with a CHOSEN filter per row —
+    independent inverse of the engine's unfilter, so round-tripping
+    exercises every filter path (0=None 1=Sub 2=Up 3=Average 4=Paeth)."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    h, w, c = px.shape if px.ndim == 3 else (*px.shape, 1)
+    arr = px.reshape(h, w * c).astype(np.int32)
+    stride = w * c
+    raw = bytearray()
+    prev = np.zeros(stride, dtype=np.int32)
+    for y, ftype in zip(range(h), filters):
+        row = arr[y]
+        enc = np.zeros(stride, dtype=np.int32)
+        for i in range(stride):
+            a = row[i - c] if i >= c else 0
+            b = prev[i]
+            cc = prev[i - c] if i >= c else 0
+            if ftype == 0:
+                pred = 0
+            elif ftype == 1:
+                pred = a
+            elif ftype == 2:
+                pred = b
+            elif ftype == 3:
+                pred = (a + b) >> 1
+            else:
+                p = a + b - cc
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
+                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
+            enc[i] = (row[i] - pred) & 0xFF
+        raw.append(ftype)
+        raw += bytes(enc.astype(np.uint8))
+        prev = row
+
+    def chunk(ctype, body):
+        return (
+            struct.pack(">I", len(body))
+            + ctype
+            + body
+            + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
+        )
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
+    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+    if palette is not None:
+        out += chunk(b"PLTE", bytes(palette))
+    out += chunk(b"IDAT", zlib.compress(bytes(raw)))
+    out += chunk(b"IEND", b"")
+    return out
+
+
+def test_decode_png_all_filters_roundtrip():
+    import numpy as np
+
+    from dart_xbrl_crawler_spark.operators.multimodal import decode_png
+
+    rng = np.random.RandomState(7)
+    px = rng.randint(0, 256, size=(5, 6, 3), dtype=np.uint8)
+    # one row per filter type, incl. a repeat
+    payload = _png_encode(px, filters=[0, 1, 2, 3, 4])
+    got = decode_png(payload)
+    assert got is not None and got.shape == (5, 6, 3)
+    assert np.array_equal(got, px)
+    # grayscale (color type 0)
+    g = rng.randint(0, 256, size=(4, 4), dtype=np.uint8)
+    got_g = decode_png(_png_encode(g.reshape(4, 4, 1), [4, 3, 2, 1], color_type=0))
+    assert np.array_equal(got_g[:, :, 0], g)
+    # RGBA (color type 6)
+    a = rng.randint(0, 256, size=(3, 3, 4), dtype=np.uint8)
+    got_a = decode_png(_png_encode(a, [1, 4, 3], color_type=6))
+    assert np.array_equal(got_a, a)
+    # palette (color type 3): indices 0..3 → RGB triples
+    idx = np.array([[0, 1], [2, 3]], dtype=np.uint8).reshape(2, 2, 1)
+    pal = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 9, 9, 9])
+    got_p = decode_png(_png_encode(idx, [0, 0], color_type=3, palette=pal))
+    assert got_p.shape == (2, 2, 3)
+    assert list(got_p[0, 0]) == [255, 0, 0] and list(got_p[1, 1]) == [9, 9, 9]
+    # out-of-envelope inputs → None, not an exception
+    assert decode_png(b"\x89PNG\r\n\x1a\njunk") is None
+    assert decode_png(b"not a png") is None

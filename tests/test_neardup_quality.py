@@ -14,6 +14,8 @@ Planted-duplicate fixtures with KNOWN ground truth:
   * banded_pairs (the one LSH self-join kernel): exactly the all-pairs
     hamming ≤ 3 set on random 16-bit signatures; the rows-only queries
     built on it (q30/q31/q43/q75) pinned by digest; plan-shape guards.
+  * connected components over near-dup pairs: planted clusters,
+    including a 5-node chain.
 """
 
 from __future__ import annotations
@@ -263,3 +265,24 @@ def test_simhash_pairs_filters_before_pair_dedup(spark):
         s = line.strip().lstrip("+-: ")
         if s.startswith(("Deduplicate", "Aggregate")):
             assert "a_sig" not in s and "b_sig" not in s, s
+
+
+# ------------------------------- connected components / dedup clusters
+def test_connected_components_planted_clusters(spark):
+    from dart_xbrl_crawler_spark.operators.components import connected_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (21, 20), (30, 31), (31, 32), (32, 33),
+         (33, 34)],  # incl. a 5-node chain (propagation depth > 1)
+        "a_id long, b_id long",
+    )
+    comp = {
+        r["node"]: r["component"]
+        for r in connected_components(pairs).collect()
+    }
+    assert comp == {
+        1: 1, 2: 1, 3: 1,
+        10: 10, 11: 10,
+        20: 20, 21: 20,
+        30: 30, 31: 30, 32: 30, 33: 30, 34: 30,
+    }

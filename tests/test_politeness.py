@@ -1,11 +1,14 @@
 """Politeness pop (``operators.politeness.pop_round``): budgets, robots
 gating, the ranking plan's shape, and a differential check of the
 selected set, the robots-blocked set and ``host_rank`` against a pandas
-recomputation; robots.txt parsing and its longest-match evaluation."""
+recomputation; robots.txt parsing, RFC 9309 wildcard rules and their
+longest-match evaluation, the lifted single-prefix dim against a
+``startswith`` reference on hostile inputs, and adaptive backoff."""
 
 from __future__ import annotations
 
 import datetime
+import re
 
 import pandas as pd
 import pytest
@@ -415,3 +418,227 @@ def test_cli_fetch_parses_robots_txt(spark, tmp_path, monkeypatch):
         for r in FrontierStore(paths["store"]).table.read(spark).collect()
     }
     assert states == {pdf: "robots_blocked", pdfx: "fetched", page: "fetched"}
+
+
+# ---------------------------------------- robots.txt rules and backoff
+def test_parse_robots_crawl_delay_zero_clamped():
+    rules, delay = P.parse_robots_txt(
+        "User-agent: *\nDisallow: /x\nCrawl-delay: 0\n", P.USER_AGENT
+    )
+    assert delay == 1  # 0 → 1 ms floor, never a zero divisor
+    _, neg = P.parse_robots_txt("User-agent: *\nCrawl-delay: -3\n", P.USER_AGENT)
+    assert neg == 1
+    _, frac = P.parse_robots_txt("User-agent: *\nCrawl-delay: 0.0004\n", P.USER_AGENT)
+    assert frac == 1
+
+
+def test_rule_to_match_translation():
+    assert P._rule_to_match("/plain") == ("/plain", None)
+    prefix, rx = P._rule_to_match("/*.pdf$")
+    assert prefix == "/" and rx == "^/.*\\.pdf$"
+    prefix2, rx2 = P._rule_to_match("/a/*/b")
+    assert prefix2 == "/a/" and rx2 == "^/a/.*/b"
+    # '$' not at the end is a literal
+    assert P._rule_to_match("/a$b") == ("/a$b", None) or P._rule_to_match(
+        "/a$b"
+    )[1] is None
+
+
+def test_wildcard_rules_evaluation(spark):
+    txt = (
+        "User-agent: *\n"
+        "Disallow: /*.pdf$\n"
+        "Disallow: /private*/data\n"
+        "Allow: /private-open/data\n"
+    )
+    rules_dim = P.robots_rules_from_txt(
+        spark.createDataFrame(pd.DataFrame({"host": ["w.example"], "robots_txt": [txt]}))
+    )
+    from dart_xbrl_crawler_spark.functions.urls import with_url_canon
+
+    cases = {
+        "https://w.example/doc.pdf": True,       # *.pdf$ matches
+        "https://w.example/doc.pdfx": False,     # $ anchors the end
+        "https://w.example/a/doc.pdf": True,     # * spans directories
+        "https://w.example/private1/data": True,
+        "https://w.example/private-open/data": False,  # longer Allow wins
+        "https://w.example/open/doc.txt": False,
+    }
+    frontier = with_url_canon(
+        spark.createDataFrame(pd.DataFrame({"url": list(cases)}))
+    )
+    got = {
+        r["url"]: r["robots_blocked"]
+        for r in P.apply_robots(frontier, rules_dim).collect()
+    }
+    assert got == cases
+
+
+def test_host_stats_and_backoff(spark, fixture_bundle, tmp_path):
+    """Failure-rate backoff: hosts whose fetches error slow down by
+    delay x (1 + factor*fail_rate); clean hosts keep their delay."""
+    from dart_xbrl_crawler_spark import fixtures
+    from dart_xbrl_crawler_spark.operators.frontier import FrontierStore
+    from dart_xbrl_crawler_spark.schemas import PAGES, ROBOTS
+
+    # seeds on two hosts; pages exist only for ok.example → the other
+    # host's fetches all fail
+    seeds = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": [
+                    "https://ok.example/1", "https://ok.example/2",
+                    "https://bad.example/1", "https://bad.example/2",
+                ],
+                "priority": [0.0] * 4,
+            }
+        )
+    )
+    pages = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": ["https://ok.example/1", "https://ok.example/2"],
+                "html": [b"<html>1</html>", b"<html>2</html>"],
+                "warc_ts": pd.to_datetime(["2026-01-01"] * 2),
+            }
+        ),
+        schema="url string, html binary, warc_ts timestamp",
+    )
+    robots = spark.createDataFrame(
+        [("ok.example", None, 100), ("bad.example", None, 100)],
+        schema="host string, disallow_prefix string, crawl_delay_ms long",
+    )
+    store = FrontierStore(str(tmp_path / "b"), n_bloom_shards=8)
+    store.bootstrap(seeds, fixtures.RUN_TS)
+    store.run_round(spark, pages, robots, fixtures.RUN_TS, round_id=0)
+    stats = {r["host"]: r for r in store.host_stats(spark).collect()}
+    assert stats["ok.example"]["fail_rate"] == 0.0
+    assert stats["bad.example"]["fail_rate"] == 1.0
+    assert stats["bad.example"]["n_failed"] == 2
+
+    adjusted = {
+        r["host"]: r["crawl_delay_ms"]
+        for r in P.apply_backoff(
+            robots, store.host_stats(spark), factor=4.0
+        ).collect()
+    }
+    assert adjusted["ok.example"] == 100      # clean host unchanged
+    assert adjusted["bad.example"] == 500     # 100 * (1 + 4*1.0)
+
+
+def test_backoff_applies_to_hosts_missing_from_robots(spark):
+    """A host absent from the robots dim (newly discovered → default
+    delay) that fails every fetch must still get backed off — the dim
+    gains a row with the default delay scaled by its fail rate."""
+    robots = spark.createDataFrame(
+        [("known.example", None, 100)],
+        schema="host string, disallow_prefix string, crawl_delay_ms long",
+    )
+    stats = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "host": ["known.example", "rogue.example"],
+                "fail_rate": [0.0, 1.0],
+            }
+        )
+    )
+    out = {
+        r["host"]: r["crawl_delay_ms"]
+        for r in P.apply_backoff(robots, stats, factor=4.0).collect()
+    }
+    assert out["known.example"] == 100  # clean host: delay unchanged
+    # rogue host appears with default delay × (1 + 4·1.0) = 5×
+    assert out["rogue.example"] == P.DEFAULT_CRAWL_DELAY_MS * 5
+    # and the dim still drops into pop_round unchanged
+    from dart_xbrl_crawler_spark.functions.urls import with_url_canon
+
+    frontier = with_url_canon(
+        spark.createDataFrame(
+            pd.DataFrame({"url": [f"https://rogue.example/p{i}" for i in range(8)]})
+        )
+    ).select(
+        "*",
+        F.lit(0.0).alias("priority"),
+        F.to_timestamp(F.lit(RUN_TS)).alias("discovered_ts"),
+    )
+    popped = P.pop_round(
+        frontier, P.apply_backoff(robots, stats, factor=4.0), round_ms=20_000
+    )
+    # budget 20000 / 5000 = 4 of 8 — the backoff actually bites
+    assert popped.filter(F.col("selected")).count() == 4
+
+
+# -------------------------- lifted single-prefix dim vs startswith reference
+# hostile pieces of a rule prefix or a url path: regex metacharacters,
+# %-escapes, non-ASCII text.  A raw backslash or a '%' that starts no
+# escape is not a legal URI path (parse_url raises on it under ANSI), so
+# a path carries those escaped while a prefix carries them raw.
+_PIECES = ["", "/", "*", "$", ".", "(", "%2F", "%E4%B8%AD", "中文", "ü", "a", "b/"]
+_LONG = "/" + "x" * 2047  # a 2 KB prefix
+_ILLEGAL_IN_PATH = re.compile(r"\\|%(?![0-9A-Fa-f]{2})")
+
+
+def _hostile(rng, in_path: bool) -> str:
+    pieces = _PIECES + (["%25", "%5C"] if in_path else ["%", "\\"])
+    return "/" + "".join(rng.choice(pieces) for _ in range(rng.randint(0, 5)))
+
+
+def test_lifted_single_prefix_dim_matches_startswith_reference(spark):
+    """apply_robots over the ROBOTS single-prefix schema, which
+    robots_dim lifts into one Disallow rule per host for _eval_rules,
+    blocks exactly the rows that ``path.startswith(prefix)`` blocks, on
+    seeded hostile prefixes and paths: empty, '/', regex
+    metacharacters, %-escapes, non-ASCII text, a 2 KB string, a null
+    prefix, a host outside the dim and a url whose parsed path is null.
+    A rules table in the retired two-field (prefix, allow) shape is
+    rejected."""
+    import random
+
+    rng = random.Random(9309)
+    prefixes = ["", "/", "*", "$", ".", "(", "\\", "%", "/%E4", "/中", _LONG, None]
+    prefixes += [_hostile(rng, in_path=False) for _ in range(20)]
+    dim, rows = [], []
+    for i, prefix in enumerate(prefixes):
+        host = f"h{i}.x"
+        dim.append((host, prefix, 100 + i))
+        paths = [_hostile(rng, in_path=True) for _ in range(6)]
+        paths += [_LONG, _LONG + "y", _LONG[:2000], "/中文/ü", "/a*$.("]
+        if prefix and prefix.startswith("/"):
+            # paths that start with the prefix, or with a cut of it
+            cands = [prefix, prefix + _hostile(rng, in_path=True), prefix[:-1]]
+            paths += [p for p in cands if p and not _ILLEGAL_IN_PATH.search(p)]
+        rows += [(host, f"https://{host}{p}") for p in paths]
+        rows.append((host, f"urn:{host}"))  # opaque: parsed path is null
+    rows += [("nodim.x", "https://nodim.x/"), ("nodim.x", "https://nodim.x/p")]
+    frontier = spark.createDataFrame(
+        [(h, u, n) for n, (h, u) in enumerate(rows)],
+        "host string, url_canon string, url_hash long",
+    )
+    robots = spark.createDataFrame(dim, schema=DIM)
+    got = P.apply_robots(frontier, robots).select(
+        "url_hash",
+        F.parse_url("url_canon", F.lit("PATH")).alias("path"),
+        "robots_blocked",
+        "crawl_delay_ms",
+    )
+    by_host = {h: (p, d) for h, p, d in dim}
+    verdicts = []
+    for r in got.collect():
+        host, _ = rows[r["url_hash"]]
+        prefix, delay = by_host.get(host, (None, P.DEFAULT_CRAWL_DELAY_MS))
+        path = r["path"]
+        want = prefix is not None and path is not None and path.startswith(prefix)
+        assert r["robots_blocked"] is want, (host, prefix, path)
+        assert r["crawl_delay_ms"] == delay
+        verdicts.append((path is None, want))
+    assert len(verdicts) == len(rows)
+    assert sum(null for null, _ in verdicts) == len(prefixes)  # the urn: rows
+    assert {want for _, want in verdicts} == {True, False}
+
+    two_field = spark.createDataFrame(
+        [("h0.x", [("/p", False)], None)],
+        "host string, rules array<struct<prefix:string,allow:boolean>>, "
+        "crawl_delay_ms long",
+    )
+    with pytest.raises(ValueError, match="pattern"):
+        P.apply_robots(frontier, two_field)

@@ -1500,7 +1500,7 @@ def test_phash_near_dup_pairs_spark(spark):
         phash64,
         phash_near_dup_pairs,
     )
-    from tests.test_round4_fixes import _png_encode
+    from tests.test_multimodal import _png_encode
 
     jpg = _jpeg_encode(np.random.default_rng(17).integers(
         0, 256, size=(16, 16, 3), dtype=np.uint8))
